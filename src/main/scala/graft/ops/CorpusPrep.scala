@@ -1366,8 +1366,9 @@ object CorpusPrep {
     import s.implicits._
     val words = Tables.spread(Tables.documents(s, dir))
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val localMax = s.conf.getOption("spark.graft.bpe.localTokenThreshold")
-      .map(_.toLong).getOrElse(1000000L)
+    val localMax = graft.util.NumericOption.long(
+      "spark.graft.bpe.localTokenThreshold",
+      s.conf.getOption("spark.graft.bpe.localTokenThreshold"), 1000000L, min = 0L)
     // one bounded sizing action (the boruvkaMsf adaptivity pattern): the
     // first stats pass / the collect would scan the corpus once anyway
     val nTok0 = words.agg(coalesce(sum(size(col("w"))), lit(0L)))

@@ -1,6 +1,6 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.diff.Reconcile
 import graft.model.Schemas
@@ -19,14 +19,15 @@ import graft.source.BlazeSource
   * SURVEY.md §4), writes are partition-parallel instead of single-writer,
   * and the whole classification happens in one distributed join.
   *
-  * Execution-count discipline (the 100 TB concern): the classified relation
-  * is computed ONCE and persisted (memory-and-disk, spillable), then read
-  * four times — one counting job plus the three write jobs. Without the
-  * persist, each of those jobs would re-run the source scan and the join
-  * from scratch (6× reads of the corpus), and — worse — any count taken
-  * after the writes would observe the target the writes just mutated and
-  * report garbage. All counts here are taken from the persisted
-  * classification BEFORE the first write executes.
+  * Execution-count discipline of the legacy fallback ([[syncOne]]): the
+  * classified relation is computed ONCE and persisted (memory-and-disk,
+  * spillable), then read four times — one counting job plus the three
+  * `foreachPartition` write jobs. Without the persist, each of those jobs
+  * would re-run the source scan and the join from scratch, and a later
+  * write job would classify against the target the earlier ones just
+  * mutated. All its counts are taken from the persisted classification
+  * BEFORE the first write executes. The default path, [[syncOneV2]],
+  * needs none of this: it runs one Spark action per type.
   */
 object SyncPipeline {
 
@@ -69,8 +70,9 @@ object SyncPipeline {
           .as("action"))
   }
 
-  /** One type's sync. `snapshot` is the target's (pk_id, resource_id,
-    * version_id) projection (never the JSONB payload — §4; see
+  /** One type's sync through the legacy `foreachPartition` writers.
+    * `snapshot` is the target's (pk_id, resource_id, version_id)
+    * projection (never the JSONB payload — §4; see
     * [[graft.source.Snapshot]] for the production JDBC reader);
     * `targetCount` reads the post-write count.
     */
@@ -81,8 +83,17 @@ object SyncPipeline {
               connect: () => (String => Unit, () => Unit),
               targetCount: String => Long,
               batchSize: Int = JdbcUpsert.DefaultBatchSize,
-              dialect: JdbcUpsert.Dialect = JdbcUpsert.Postgres): SyncResult =
-    syncCore(resourceType, resources, snapshot, targetCount) { (classified, table) =>
+              dialect: JdbcUpsert.Dialect = JdbcUpsert.Postgres): SyncResult = {
+    val table = Schemas.tableName(resourceType)
+    val classified = classifyWithPayloads(sourceVersions(resources), snapshot)
+      .persist()
+    try {
+      // One aggregation job materializes the cache AND yields every count
+      // the result needs — before any write mutates the live target.
+      val byAction = classified.groupBy("action").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        .withDefaultValue(0L)
+
       def only(action: String) = classified.filter(col("action") === action)
       JdbcUpsert.insertPartitions(
         only(Reconcile.Insert).select("resource"), table, connect, batchSize,
@@ -94,65 +105,72 @@ object SyncPipeline {
       JdbcUpsert.deletePartitions(
         only(Reconcile.Delete).select(col("pk_id").cast("int").as("pk_id")),
         table, connect, batchSize, dialect)
-    }
 
-  /** One type's sync through the DECLARATIVE V2 write path: the whole
-    * classified diff goes down in ONE `graft-jdbc-upsert` write (all
-    * three actions applied per partition inside one task transaction,
-    * riding Spark's V2 commit/abort protocol) instead of three
-    * `foreachPartition` jobs. `writeOptions` reaches the sink's
-    * connector (`url`/`dialect`/`connector`/`batchsize`).
+      result(resourceType, byAction, targetCount(table))
+    } finally {
+      classified.unpersist()
+      ()
+    }
+  }
+
+  /** One type's sync through the DECLARATIVE V2 write path, as ONE Spark
+    * action: the whole classified diff goes down in one
+    * `graft-jdbc-upsert` write (all three actions applied per partition
+    * inside one task transaction, riding Spark's V2 commit/abort
+    * protocol). `writeOptions` reaches the sink's connector
+    * (`url`/`dialect`/`connector`/`batchsize`).
+    *
+    * The per-action counts ride that write: the classified relation is
+    * observed (`Dataset.observe`, a fresh [[Observation]] per call) before
+    * the noops are filtered out, and the counts are read after `save()`
+    * returns. Two guarantees make this equal to counting first:
+    *
+    *  - The snapshot is read before any write. The full-outer join
+    *    shuffles both sides, so the snapshot scan finishes in a
+    *    shuffle-map stage before the first write task starts, and a
+    *    retried write task re-reads that shuffle output. (Losing it with
+    *    an executor re-runs the scan, as losing the legacy cache does.)
+    *  - Counts are applied once per partition. The observed-metrics node
+    *    sits in the write's result stage, with no exchange between it and
+    *    the write, and Spark applies a result task's accumulator updates
+    *    once per partition, even when the task is retried.
+    *
+    * `DerbyE2ESpec` pins both placements on the executed plan. Scale
+    * bound: the driver holds four longs per type and no rows.
     */
   def syncOneV2(spark: SparkSession,
                 resourceType: String,
                 resources: DataFrame,
                 snapshot: DataFrame,
                 writeOptions: Map[String, String],
-                targetCount: String => Long): SyncResult =
-    syncCore(resourceType, resources, snapshot, targetCount) { (classified, table) =>
-      classified.filter(col("action") =!= Reconcile.Noop)
-        .select(col("action"), col("pk_id").cast("int").as("pk_id"),
-          col("resource"))
-        .write.format("graft-jdbc-upsert")
-        .options(writeOptions)
-        .option("table", table)
-        .mode("append")
-        .save()
-    }
-
-  /** Shared classify → count → write → reconcile skeleton: counts are
-    * taken from the persisted classification BEFORE any write mutates
-    * the live target (the execution-count discipline in the object
-    * scaladoc), then `writeClassified` applies the diff.
-    */
-  private def syncCore(resourceType: String,
-                       resources: DataFrame,
-                       snapshot: DataFrame,
-                       targetCount: String => Long)(
-                       writeClassified: (DataFrame, String) => Unit): SyncResult = {
+                targetCount: String => Long): SyncResult = {
     val table = Schemas.tableName(resourceType)
-    val classified = classifyWithPayloads(sourceVersions(resources), snapshot)
-      .persist()
-    try {
-      // One aggregation job materializes the cache AND yields every count
-      // the result needs — before any write mutates the live target.
-      val byAction = classified.groupBy("action").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        .withDefaultValue(0L)
-      val nIns = byAction(Reconcile.Insert)
-      val nUpd = byAction(Reconcile.Update)
-      val nDel = byAction(Reconcile.Delete)
-      // every valid source row is exactly one of insert/update/noop
-      val srcTotal = nIns + nUpd + byAction(Reconcile.Noop)
+    val counts = Observation()
+    // count_if is 0, never NULL, over empty input
+    val actions = Seq(Reconcile.Insert, Reconcile.Update, Reconcile.Delete,
+      Reconcile.Noop).map(a => count_if(col("action") === a).as(a))
+    classifyWithPayloads(sourceVersions(resources), snapshot)
+      .observe(counts, actions.head, actions.tail: _*)
+      .filter(col("action") =!= Reconcile.Noop)
+      .select(col("action"), col("pk_id").cast("int").as("pk_id"),
+        col("resource"))
+      .write.format("graft-jdbc-upsert")
+      .options(writeOptions)
+      .option("table", table)
+      .mode("append")
+      .save()
+    val byAction = counts.get.map { case (a, n) => a -> n.asInstanceOf[Long] }
+    result(resourceType, byAction, targetCount(table))
+  }
 
-      writeClassified(classified, table)
-
-      SyncResult(resourceType, inserts = nIns, updates = nUpd, deletes = nDel,
-        sourceTotal = srcTotal, targetAfter = targetCount(table))
-    } finally {
-      classified.unpersist()
-      ()
-    }
+  private def result(resourceType: String, byAction: Map[String, Long],
+                     targetAfter: Long): SyncResult = {
+    val n = byAction.withDefaultValue(0L)
+    // every valid source row is exactly one of insert/update/noop
+    SyncResult(resourceType, inserts = n(Reconcile.Insert),
+      updates = n(Reconcile.Update), deletes = n(Reconcile.Delete),
+      sourceTotal = n(Reconcile.Insert) + n(Reconcile.Update) + n(Reconcile.Noop),
+      targetAfter = targetAfter)
   }
 
   /** All four types sequentially (reference `src/main.rs:319-326`; Spark

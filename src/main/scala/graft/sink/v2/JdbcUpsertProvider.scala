@@ -111,20 +111,26 @@ private[v2] class UpsertTable(props: Map[String, String])
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    // parsed once on the driver: a bad value fails the write before any
+    // task starts, naming the key
+    val batchSize = graft.util.NumericOption.int("batchsize",
+      props.get("batchsize"), JdbcUpsert.DefaultBatchSize, min = 1)
     new WriteBuilder with SupportsTruncate {
       private var doTruncate = false
       override def truncate(): WriteBuilder = { doTruncate = true; this }
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new UpsertBatchWrite(props, info.schema(), doTruncate)
+          new UpsertBatchWrite(props, info.schema(), doTruncate, batchSize)
       }
     }
+  }
 }
 
 private[v2] class UpsertBatchWrite(props: Map[String, String],
                                    inputSchema: StructType,
-                                   doTruncate: Boolean) extends BatchWrite {
+                                   doTruncate: Boolean,
+                                   batchSize: Int) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     if (doTruncate) {
@@ -135,7 +141,7 @@ private[v2] class UpsertBatchWrite(props: Map[String, String],
         .connect(props)
       try exec(s"DELETE FROM ${props("table")}") finally close()
     }
-    new UpsertDataWriterFactory(props, inputSchema)
+    new UpsertDataWriterFactory(props, inputSchema, batchSize)
   }
 
   // Attempt atomicity lives in each task's transaction (commit/abort on
@@ -149,19 +155,20 @@ private[v2] case class UpsertCommit(inserts: Long, updates: Long,
                                     deletes: Long) extends WriterCommitMessage
 
 private[v2] class UpsertDataWriterFactory(props: Map[String, String],
-                                          inputSchema: StructType)
+                                          inputSchema: StructType,
+                                          batchSize: Int)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new UpsertDataWriter(props, inputSchema)
+    new UpsertDataWriter(props, inputSchema, batchSize)
 }
 
 private[v2] class UpsertDataWriter(props: Map[String, String],
-                                   inputSchema: StructType)
+                                   inputSchema: StructType,
+                                   batchSize: Int)
   extends DataWriter[InternalRow] {
 
   private val table = props("table")
   private val dialect = JdbcUpsertProvider.dialectFor(props)
-  private val batchSize = props.getOrElse("batchsize", "10000").toInt
   private val aIdx = inputSchema.fieldIndex("action")
   private val pIdx = inputSchema.fieldIndex("pk_id")
   private val rIdx = inputSchema.fieldIndex("resource")

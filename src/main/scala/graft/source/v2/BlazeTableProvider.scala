@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.NumericOption
+
 /** Executor-side page fetch for the DSv2 source: implementations must be
   * zero-arg-constructible (instantiated by class name on each executor).
   * Production: an HTTP client; tests/offline: fixture maps.
@@ -129,6 +131,15 @@ object BlazeTableProvider {
 private[v2] class BlazeTable(props: Map[String, String])
   extends Table with SupportsRead {
 
+  // numeric options are parsed here, on the driver at `load()`: a bad
+  // value fails the read before any request, naming the key
+  private val pageSize =
+    NumericOption.int("pagesize", props.get("pagesize"), 5000, min = 1)
+  private val retryAttempts =
+    NumericOption.int("retries", props.get("retries"), 3, min = 1)
+  private val retryBackoffMs =
+    NumericOption.long("retrybackoffms", props.get("retrybackoffms"), 200L, min = 0L)
+
   override def name(): String =
     s"blaze:${props.getOrElse("resourcetype", "?")}"
   override def schema(): StructType = BlazeTableProvider.schema
@@ -140,11 +151,8 @@ private[v2] class BlazeTable(props: Map[String, String])
       with SupportsPushDownAggregates with SupportsPushDownLimit {
       private val baseUrl = props("baseurl")
       private val resourceType = props("resourcetype")
-      private val pageSize = props.getOrElse("pagesize", "5000").toInt
       private val fetcherClass =
         props.getOrElse("fetcher", classOf[HttpPageFetcher].getName)
-      private val retryAttempts = props.getOrElse("retries", "3").toInt
-      private val retryBackoffMs = props.getOrElse("retrybackoffms", "200").toLong
       private var countPushed = false
       private var pushedLimit: Option[Int] = None
 
@@ -184,8 +192,15 @@ private[v2] class BlazeTable(props: Map[String, String])
           (if (countPushed) " PushedAggregates: [COUNT(*)]" else "") +
           pushedLimit.map(l => s" PushedLimit: $l").getOrElse("")
 
-      override def planInputPartitions(): Array[InputPartition] = {
-        // driver-side: one _count=0 probe, zero resource rows transferred
+      override def planInputPartitions(): Array[InputPartition] = partitions
+
+      /** Planned once per Scan (this object is also the Scan, and every
+        * push happens before `build()`): Spark asks a scan for its
+        * partitions more than once per action, and each plan costs a
+        * driver-side `_count=0` probe — one round trip to the server,
+        * zero resource rows transferred.
+        */
+      private lazy val partitions: Array[InputPartition] = {
         val probe = BlazeTableProvider.fetchWithRetry(
           BlazeTableProvider.makeFetcher(fetcherClass),
           s"$baseUrl/fhir/$resourceType?_count=0", retryAttempts, retryBackoffMs)

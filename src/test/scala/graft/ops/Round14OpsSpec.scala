@@ -41,6 +41,18 @@ class Round14OpsSpec extends AnyFunSuite {
     finally spark.conf.unset(Thresh)
   }
 
+  test("q322: a bad localTokenThreshold fails at construction, naming the key") {
+    Seq("1e6", "-1").foreach { bad =>
+      spark.conf.set(Thresh, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          graft.SparkEntry.queries("q322_bpe_train")(spark, sfDir))
+        assert(e.getMessage.contains(Thresh) && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+      } finally spark.conf.unset(Thresh)
+    }
+  }
+
   test("q322: NULL-rule no-op rounds identical on both paths") {
     val s = spark
     import s.implicits._

@@ -1,7 +1,18 @@
 package graft.runtime
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, RowDataSourceScanExec,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.sink.JdbcUpsert
@@ -179,6 +190,12 @@ class ConcurrentDerbyConnector extends graft.sink.v2.UpsertConnector {
   }
 }
 
+/** A search server with no resources of any type. */
+class EmptyFetcher extends graft.source.v2.PageFetcher {
+  override def fetch(url: String): String =
+    """{"resourceType":"Bundle","type":"searchset","total":0}"""
+}
+
 class DerbyE2ESpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -306,6 +323,149 @@ class DerbyE2ESpec extends AnyFunSuite {
     assert(patient.inserts === 0 && patient.updates === 1 && patient.deletes === 1,
       s"one V2 healing run must fix both corruptions: $patient")
     assert(patient.reconciled)
+  }
+
+  /** One Patient sync through the V2 path against the Derby mirror. */
+  private def syncPatientV2(fetcher: String = classOf[graft.source.v2.FixtureFetcher].getName,
+                            options: Map[String, String] = Map.empty) =
+    SyncPipeline.syncOneV2(spark, "Patient",
+      SyncPipeline.blazeV2Source(spark, "http://fixture", 10, fetcher)("Patient"),
+      DerbyTarget.snapshot(spark)("patient"),
+      Map("connector" -> classOf[GatedDerbyConnector].getName, "dialect" -> "ansi") ++ options,
+      DerbyTarget.count)
+
+  /** Every SQL execution `body` runs, after it has run. The listener bus is
+    * FIFO: once a marker execution started after `body` has been
+    * delivered, so has every execution `body` started.
+    */
+  private def executionsOf[A](body: => A): (A, Seq[QueryExecution]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { seen.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { seen.add(qe); () }
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      val marker = s"marker_${System.nanoTime()}"
+      spark.range(1).select(lit(1).as(marker)).collect()
+      def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(isMarker), "the listener bus never delivered the marker")
+      (out, seen.asScala.toSeq.filterNot(isMarker))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Children of a physical node, including the stages AQE hides behind
+    * leaf nodes.
+    */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case other => other.children
+  }
+
+  /** The nodes from `p` down to the first descendant matching `target`. */
+  private def pathTo(p: SparkPlan)(target: SparkPlan => Boolean): Option[List[SparkPlan]] =
+    if (target(p)) Some(List(p))
+    else kids(p).iterator.flatMap(pathTo(_)(target)).nextOption().map(p :: _)
+
+  /** A stage boundary below the result stage (AQE also wraps the result
+    * stage itself in a `QueryStageExec`, which is no boundary).
+    */
+  private def isExchange(p: SparkPlan) =
+    p.isInstanceOf[Exchange] || p.isInstanceOf[ExchangeQueryStageExec]
+
+  /** A Patient mirror that needs one insert (r3 dropped), one update (r5
+    * stale), one delete (an alien row) and 21 noops.
+    */
+  private def corruptedMirror(): Unit = {
+    DerbyTarget.reset()
+    syncPatientV2()
+    val byJson = DerbyTarget.rows("patient")
+    val dropId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r3"""") => id }.get
+    val staleId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r5"""") => id }.get
+    DerbyTarget.execute(s"DELETE FROM patient WHERE id = $dropId")
+    DerbyTarget.execute(s"UPDATE patient SET resource = " +
+      s"'{\"id\":\"r5\",\"meta\":{\"versionId\":\"999\"}}' WHERE id = $staleId")
+    DerbyTarget.execute(
+      "INSERT INTO patient (resource) VALUES ('{\"id\":\"zzz\",\"meta\":{\"versionId\":\"1\"}}')")
+  }
+
+  test("V2 sync is ONE SQL execution per type; the counts ride the write") {
+    corruptedMirror()
+    val (r, executions) = executionsOf(syncPatientV2())
+    assert(r === SyncPipeline.SyncResult("Patient", inserts = 1, updates = 1, deletes = 1,
+      sourceTotal = 23, targetAfter = 23))
+    assert(executions.size === 1,
+      s"expected the write alone, got ${executions.map(_.executedPlan.nodeName)}")
+  }
+
+  test("V2 sync plan: snapshot read before any write, counts in the write's result stage") {
+    corruptedMirror()
+    val (_, Seq(write)) = executionsOf(syncPatientV2())
+    val plan = write.executedPlan
+    assert(pathTo(plan)(_.isInstanceOf[InMemoryTableScanLike]).isEmpty, "nothing is cached")
+    // the observed counts: no exchange between the metrics node and the
+    // V2 write, so they are applied once per result partition
+    val toMetrics = pathTo(plan)(_.isInstanceOf[V2TableWriteExec])
+      .flatMap(w => pathTo(w.last)(_.isInstanceOf[CollectMetricsExec]))
+    assert(toMetrics.isDefined, s"no write -> metrics path in\n$plan")
+    assert(!toMetrics.get.exists(isExchange), s"an exchange splits write and metrics:\n$plan")
+    assert(toMetrics.get.collect { case a: AdaptiveSparkPlanExec => a.isFinalPlan }
+      .forall(identity))
+    // the snapshot scan finishes in a shuffle-map stage before the join
+    // (and with it the first write task) runs
+    val join = pathTo(plan)(_.isInstanceOf[BaseJoinExec]).map(_.last)
+    assert(join.isDefined, s"no join in\n$plan")
+    val toSnapshot = pathTo(join.get)(_.isInstanceOf[RowDataSourceScanExec])
+    assert(toSnapshot.isDefined, s"no JDBC snapshot scan under the join:\n$plan")
+    assert(toSnapshot.get.exists(isExchange), s"the snapshot scan feeds the join directly:\n$plan")
+  }
+
+  test("V2 sync failure leaves the mirror unchanged; the next call reports full counts") {
+    DerbyTarget.reset()
+    // batchsize 2: the failing connector dies on the second INSERT, after
+    // the first executed inside the open transaction. At this size AQE
+    // coalesces the post-shuffle partitions, so the write is one task and
+    // its abort rolls back everything.
+    val e = intercept[Exception](syncPatientV2(options = Map(
+      "connector" -> classOf[FailingDerbyConnector].getName, "batchsize" -> "2")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
+    assert(DerbyTarget.count("patient") === 0L, "the failed write must roll back")
+    val r = syncPatientV2()
+    assert(r === SyncPipeline.SyncResult("Patient", inserts = 23, updates = 0, deletes = 0,
+      sourceTotal = 23, targetAfter = 23))
+    assert(r.reconciled)
+  }
+
+  test("V2 sync of a type with no source resources and an empty mirror is all zeros") {
+    DerbyTarget.reset()
+    val r = syncPatientV2(fetcher = classOf[EmptyFetcher].getName)
+    assert(r === SyncPipeline.SyncResult("Patient", 0, 0, 0, 0, 0))
+    assert(r.reconciled)
+  }
+
+  test("a bad sink batchsize fails on the driver, naming the key") {
+    DerbyTarget.reset()
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = Seq(("insert", Option.empty[Int], """{"id":"b1"}"""))
+      .toDF("action", "pk_id", "resource")
+    Seq("ten", "0").foreach { bad =>
+      val e = intercept[IllegalArgumentException](rows.write.format("graft-jdbc-upsert")
+        .option("table", "patient")
+        .option("connector", classOf[GatedDerbyConnector].getName)
+        .option("dialect", "ansi")
+        .option("batchsize", bad)
+        .mode("append")
+        .save())
+      assert(e.getMessage.contains("'batchsize'") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+    assert(DerbyTarget.count("patient") === 0L)
   }
 
   test("V2 truncate-and-append mode: overwrite rebuilds the table from scratch") {

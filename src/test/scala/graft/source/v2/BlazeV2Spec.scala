@@ -121,8 +121,32 @@ class BlazeV2Spec extends AnyFunSuite {
     RecordingFetcher.urls.clear()
     assert(recordingDf.count() === 23)
     val fetched = RecordingFetcher.urls.toArray(Array.empty[String]).toSeq
-    assert(fetched.nonEmpty && fetched.forall(_.contains("_count=0")),
-      s"count() must only issue _count=0 probes, got: $fetched")
+    assert(fetched.size == 1 && fetched.forall(_.contains("_count=0")),
+      s"count() must send exactly one _count=0 probe, got: $fetched")
+  }
+
+  test("a page scan sends exactly one _count=0 probe") {
+    RecordingFetcher.urls.clear()
+    assert(recordingDf.collect().length === 23)
+    val probes = RecordingFetcher.urls.toArray(Array.empty[String]).toSeq
+      .filter(_.contains("_count=0"))
+    assert(probes.size === 1, s"a page scan must probe once, got: $probes")
+  }
+
+  Seq("pageSize" -> Seq("ten", "0"), "retries" -> Seq("2.5", "0"),
+      "retryBackoffMs" -> Seq("soon", "-1")).foreach { case (key, bad) =>
+    test(s"a bad '$key' fails at load on the driver, naming the key") {
+      bad.foreach { v =>
+        val e = intercept[IllegalArgumentException](spark.read.format("blaze")
+          .option("baseUrl", "http://fixture")
+          .option("resourceType", "Patient")
+          .option("fetcher", classOf[RecordingFetcher].getName)
+          .option(key, v)
+          .load())
+        assert(e.getMessage.contains(s"'${key.toLowerCase}'") &&
+          e.getMessage.contains(s"'$v'"), e.getMessage)
+      }
+    }
   }
 
   test("limit pushdown plans only the contributing pages") {
@@ -149,8 +173,7 @@ class BlazeV2Spec extends AnyFunSuite {
     assert(df.collect().length === 23)
     // every PAGE url was attempted exactly `failures + 1` times — the
     // retries happened inside the reader (a Spark task retry would re-run
-    // the whole partition: more attempts). The _count=0 probe is excluded:
-    // Spark calls planInputPartitions more than once per action.
+    // the whole partition: more attempts). The _count=0 probe is excluded.
     import scala.jdk.CollectionConverters._
     val pageCounts = FlakyFetcher.attempts.asScala
       .collect { case (url, n) if url.contains("_getpagesoffset") => n.intValue }
