@@ -1311,12 +1311,21 @@ object CorpusPrep {
         when(i < size(w), element_at(w, i + lit(1)))
           .otherwise(lit(null).cast("string")).as("b")))
 
+  /** Code-point string order — the UTF-8 byte order of Spark's binary
+    * collation and of DuckDB. `String.compareTo` compares UTF-16 code
+    * units instead, which sorts supplementary-plane characters (surrogate
+    * pairs, 0xD800-0xDFFF) below U+E000-U+FFFF.
+    */
+  private val CodePointOrder: Ordering[String] =
+    (x, y) => java.util.Arrays.compare(x.codePoints.toArray, y.codePoints.toArray)
+
   /** Driver-local BPE training kernel (the plain-Scala replay of the
     * distributed loop, algorithm-identical to Round13OpsSpec's
     * expectation): per round, count A ≠ B adjacent pairs, pick the
-    * (count desc, pair asc) argmax, apply the closed-form rewrite, and
-    * record (rule, n_tokens, vocab). Pair-exhausted rounds degrade to
-    * NULL-rule no-ops exactly like both engines' dataflow forms.
+    * (count desc, pair asc in [[CodePointOrder]]) argmax, apply the
+    * closed-form rewrite, and record (rule, n_tokens, vocab).
+    * Pair-exhausted rounds degrade to NULL-rule no-ops exactly like both
+    * engines' dataflow forms.
     */
   private[graft] def bpeTrainLocal(docs0: Array[Array[String]],
       merges: Int): Seq[(Option[(String, String, Long)], Long, Long)] = {
@@ -1337,7 +1346,8 @@ object CorpusPrep {
         if (counts.isEmpty) None
         else {
           val mx = counts.valuesIterator.max
-          val (pa, pb) = counts.iterator.filter(_._2 == mx).map(_._1).min
+          val (pa, pb) = counts.iterator.filter(_._2 == mx).map(_._1)
+            .min(Ordering.Tuple2(CodePointOrder, CodePointOrder))
           Some((pa, pb, mx))
         }
       rule.foreach { case (pa, pb, _) =>

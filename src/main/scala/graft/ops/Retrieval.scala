@@ -190,19 +190,16 @@ object Retrieval {
     * λ=0.7 — the de-duplicating re-rank that keeps a near-identical
     * second copy of the best hit from wasting a result slot (and, in a
     * training pipeline, keeps retrieved context sets diverse). Greedy MMR
-    * is inherently sequential in k, so the implementation makes the
-    * sequence EXPLICIT and everything else data-parallel: 5 rounds, each
-    * one equi-join (penalty = max sim to the selected set, a bounded
-    * groupBy-max over the persisted 380-pair-per-query candidate-sim
-    * relation), an anti-join to drop picked candidates, and a struct-max
-    * argmax per query — never a window, never a collect, all queries
-    * advance in the same round concurrently. Determinism: relevance and
-    * sims are quantized to BIGINT millionths BEFORE the λ-combination
-    * (`7·rel_q − 3·sim_q`, integers end-to-end — the q112 discipline),
-    * ties broken by smallest doc_id via lexicographic struct-max; rounds
-    * truncate lineage eagerly (the selected set is referenced twice per
-    * round — [[graft.util.Lineage]]) and the oracle's rounds are
-    * `AS MATERIALIZED` for the same reason.
+    * is inherently sequential in k: the candidates and their
+    * 380-pair-per-query sim relation are built data-parallel, then the 5
+    * rounds (penalty = max sim to the selected set, argmax per query) run
+    * on the driver ([[mmrGreedy]]) over one collect of each relation, at
+    * most [[MmrMaxRows]] rows; every query advances in the same round.
+    * Determinism: relevance and sims are quantized to BIGINT millionths
+    * BEFORE the λ-combination (`7·rel_q − 3·sim_q`, integers end-to-end —
+    * the q112 discipline), ties broken by smallest doc_id; the oracle's
+    * rounds are `AS MATERIALIZED` (each round's selected set is referenced
+    * twice).
     */
   /** Candidate-pair cosine sims (query_id, ca, cb, sim_q) for a
     * per-query candidate relation — MMR's penalty input, bounded at
@@ -223,13 +220,19 @@ object Retrieval {
           expr("CAST(round(round(cosine_sim(va, vb), 6) * 1e6) AS BIGINT)")
             .as("sim_q")))
 
+  /** Driver-side row bound of [[mmrGreedy]]'s collected relations: ≤5
+    * queries × 20 candidates, squared for the directed pairs (1 900).
+    */
+  private[ops] val MmrMaxRows = 2000
+
   /** Greedy MMR rounds shared by q276 (dense candidates, k=5) and q295
     * (fused candidates, k=3). r14 (guide §2.4): the rounds run on the
     * DRIVER over the collected candidate/pair relations — both are
     * bounded BY CONSTRUCTION (≤5 literal queries × per-query top-k
     * candidates, and that squared for the pairs), the same boundedness
     * class PlanSpec's cartesian sweep admits, so this is a ≤2000-row
-    * collect at ANY corpus scale — replacing k eager truncation actions
+    * collect at ANY corpus scale (a relation above [[MmrMaxRows]] fails
+    * the call, naming the bound) — replacing k eager truncation actions
     * plus a penalty join + anti-join + argmax aggregation per round
     * (the r13 doc records that deferring those truncations lazily
     * regressed 7.9 → 138 s; removing the distributed rounds outright is
@@ -240,7 +243,7 @@ object Retrieval {
     * quanta, argmax tie-break (score, −doc_id) = the former struct-max.
     * Returns (query_id, doc_id, score_q, r).
     */
-  private def mmrGreedy(cand: DataFrame, sims: DataFrame, k: Int): DataFrame = {
+  private[ops] def mmrGreedy(cand: DataFrame, sims: DataFrame, k: Int): DataFrame = {
     val s = cand.sparkSession
     import s.implicits._
     val cd = cand.select(col("query_id").cast("long"),
@@ -249,6 +252,9 @@ object Retrieval {
     val sm = sims.select(col("query_id").cast("long"), col("ca").cast("long"),
         col("cb").cast("long"), col("sim_q").cast("long"))
       .as[(Long, Long, Long, Long)].collect()
+    require(cd.length <= MmrMaxRows && sm.length <= MmrMaxRows,
+      s"mmrGreedy: ${cd.length} candidates / ${sm.length} pairs exceed the " +
+        s"$MmrMaxRows-row driver bound")
     val byQ = cd.groupBy(_._1)
     val simIdx = sm.groupBy(t => (t._1, t._2))
     val picks = scala.collection.mutable.ArrayBuffer
@@ -352,7 +358,8 @@ object Retrieval {
     * composed job pays each expensive build exactly once per session
     * (pinned by SharedRelationSpec). Same exact-integer discipline as
     * q280 (10⁻¹² rank units, 85/100 damping by BIGINT floor-division);
-    * the seed count is a 1-row broadcast, never a collect of data rows.
+    * the MMR picks run on the driver over ≤[[MmrMaxRows]] collected rows
+    * ([[mmrGreedy]]), and the seed count is a 1-row broadcast.
     */
   private val q295: Q = (s, dir) => {
     val S = 1000000000000L

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.diff.Reconcile
 import graft.model.Schemas
-import graft.sink.JdbcUpsert
+import graft.sink.v2.JdbcUpsertProvider
 import graft.source.BlazeSource
 
 /** The reference's core dataflow EP3 (`src/main.rs:176-300`) as one Spark
@@ -18,16 +18,6 @@ import graft.source.BlazeSource
   * memory (its BTreeMap, `src/main.rs:49-75`, is the scalability ceiling —
   * SURVEY.md §4), writes are partition-parallel instead of single-writer,
   * and the whole classification happens in one distributed join.
-  *
-  * Execution-count discipline of the legacy fallback ([[syncOne]]): the
-  * classified relation is computed ONCE and persisted (memory-and-disk,
-  * spillable), then read four times — one counting job plus the three
-  * `foreachPartition` write jobs. Without the persist, each of those jobs
-  * would re-run the source scan and the join from scratch, and a later
-  * write job would classify against the target the earlier ones just
-  * mutated. All its counts are taken from the persisted classification
-  * BEFORE the first write executes. The default path, [[syncOneV2]],
-  * needs none of this: it runs one Spark action per type.
   */
 object SyncPipeline {
 
@@ -70,55 +60,15 @@ object SyncPipeline {
           .as("action"))
   }
 
-  /** One type's sync through the legacy `foreachPartition` writers.
-    * `snapshot` is the target's (pk_id, resource_id, version_id)
-    * projection (never the JSONB payload — §4; see
-    * [[graft.source.Snapshot]] for the production JDBC reader);
-    * `targetCount` reads the post-write count.
-    */
-  def syncOne(spark: SparkSession,
-              resourceType: String,
-              resources: DataFrame,
-              snapshot: DataFrame,
-              connect: () => (String => Unit, () => Unit),
-              targetCount: String => Long,
-              batchSize: Int = JdbcUpsert.DefaultBatchSize,
-              dialect: JdbcUpsert.Dialect = JdbcUpsert.Postgres): SyncResult = {
-    val table = Schemas.tableName(resourceType)
-    val classified = classifyWithPayloads(sourceVersions(resources), snapshot)
-      .persist()
-    try {
-      // One aggregation job materializes the cache AND yields every count
-      // the result needs — before any write mutates the live target.
-      val byAction = classified.groupBy("action").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        .withDefaultValue(0L)
-
-      def only(action: String) = classified.filter(col("action") === action)
-      JdbcUpsert.insertPartitions(
-        only(Reconcile.Insert).select("resource"), table, connect, batchSize,
-        dialect)
-      JdbcUpsert.updatePartitions(
-        only(Reconcile.Update)
-          .select(col("pk_id").cast("int").as("pk_id"), col("resource")),
-        table, connect, batchSize, dialect)
-      JdbcUpsert.deletePartitions(
-        only(Reconcile.Delete).select(col("pk_id").cast("int").as("pk_id")),
-        table, connect, batchSize, dialect)
-
-      result(resourceType, byAction, targetCount(table))
-    } finally {
-      classified.unpersist()
-      ()
-    }
-  }
-
-  /** One type's sync through the DECLARATIVE V2 write path, as ONE Spark
-    * action: the whole classified diff goes down in one
-    * `graft-jdbc-upsert` write (all three actions applied per partition
-    * inside one task transaction, riding Spark's V2 commit/abort
-    * protocol). `writeOptions` reaches the sink's connector
-    * (`url`/`dialect`/`connector`/`batchsize`).
+  /** One type's sync as ONE Spark action: the whole classified diff goes
+    * down in one `graft-jdbc-upsert` write ([[JdbcUpsertProvider.append]]:
+    * all three actions applied per partition inside one task transaction,
+    * riding Spark's V2 commit/abort protocol). `snapshot` is the target's
+    * (pk_id, resource_id, version_id) projection (never the JSONB payload
+    * — §4; [[graft.source.Snapshot]] is the production JDBC reader);
+    * `writeOptions` reaches the sink's connector
+    * (`url`/`dialect`/`connector`/`batchsize`); `targetCount` reads the
+    * post-write count.
     *
     * The per-action counts ride that write: the classified relation is
     * observed (`Dataset.observe`, a fresh [[Observation]] per call) before
@@ -129,7 +79,7 @@ object SyncPipeline {
     *    shuffles both sides, so the snapshot scan finishes in a
     *    shuffle-map stage before the first write task starts, and a
     *    retried write task re-reads that shuffle output. (Losing it with
-    *    an executor re-runs the scan, as losing the legacy cache does.)
+    *    an executor re-runs the scan.)
     *  - Counts are applied once per partition. The observed-metrics node
     *    sits in the write's result stage, with no exchange between it and
     *    the write, and Spark applies a result task's accumulator updates
@@ -149,16 +99,10 @@ object SyncPipeline {
     // count_if is 0, never NULL, over empty input
     val actions = Seq(Reconcile.Insert, Reconcile.Update, Reconcile.Delete,
       Reconcile.Noop).map(a => count_if(col("action") === a).as(a))
-    classifyWithPayloads(sourceVersions(resources), snapshot)
-      .observe(counts, actions.head, actions.tail: _*)
-      .filter(col("action") =!= Reconcile.Noop)
-      .select(col("action"), col("pk_id").cast("int").as("pk_id"),
-        col("resource"))
-      .write.format("graft-jdbc-upsert")
-      .options(writeOptions)
-      .option("table", table)
-      .mode("append")
-      .save()
+    JdbcUpsertProvider.append(
+      classifyWithPayloads(sourceVersions(resources), snapshot)
+        .observe(counts, actions.head, actions.tail: _*),
+      table, writeOptions)
     val byAction = counts.get.map { case (a, n) => a -> n.asInstanceOf[Long] }
     result(resourceType, byAction, targetCount(table))
   }
@@ -179,12 +123,10 @@ object SyncPipeline {
     * so the scan itself is pluggable — see [[blazeV2Source]] (the scale
     * default) and [[blazeDriverSource]] (parity/fixture path).
     *
-    * DEFAULT write path (round-9): the declarative DSv2 sink
-    * ([[syncOneV2]]) — one V2 write per type under Spark's commit/abort
-    * protocol, e2e-proven on Derby (sync/heal/truncate/task-abort,
-    * `DerbyE2ESpec`) and on the PG-semantics store (`SyncE2ESpec`). The
-    * imperative `foreachPartition` writers remain as the explicit
-    * fallback, [[runSyncLegacy]].
+    * Each type is one [[syncOneV2]] call: one `graft-jdbc-upsert` write
+    * under Spark's commit/abort protocol, e2e-proven on Derby
+    * (sync/heal/truncate/task-abort, `DerbyE2ESpec`) and on the
+    * PG-semantics store (`SyncE2ESpec`).
     *
     * Keying contract: `sourceFor` receives the RESOURCE TYPE (it names a
     * search URL); `snapshotFor` and `targetCount` receive the mirror
@@ -201,21 +143,6 @@ object SyncPipeline {
     Schemas.resourceTypes.map { t =>
       syncOneV2(spark, t, sourceFor(t), snapshotFor(Schemas.tableName(t)),
         writeOptions, targetCount)
-    }
-
-  /** Explicit fallback: the imperative `foreachPartition` write path
-    * (three statement jobs per type). Same classify/count/reconcile
-    * skeleton; kept for deployments that need a custom statement
-    * transport the V2 connector model can't express.
-    */
-  def runSyncLegacy(spark: SparkSession,
-                    sourceFor: String => DataFrame,
-                    snapshotFor: String => DataFrame,
-                    connect: () => (String => Unit, () => Unit),
-                    targetCount: String => Long): Seq[SyncResult] =
-    Schemas.resourceTypes.map { t =>
-      syncOne(spark, t, sourceFor(t), snapshotFor(Schemas.tableName(t)),
-        connect, targetCount)
     }
 
   /** Scale-path source factory: the DSv2 `blaze` format — one

@@ -1,29 +1,25 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, Row}
-
-/** JDBC mirror-table sink: the reference's three write paths (O7 UPDATE
-  * `src/main.rs:78-97`, O8 INSERT `src/main.rs:100-117`, O9 DELETE
-  * `src/main.rs:120-138`) plus DDL (O14 `src/db_utils.rs:84-144`),
-  * re-expressed for executor-parallel writes.
+/** Statement text and DDL for the JDBC mirror tables: the reference's
+  * three write statements (O7 UPDATE `src/main.rs:78-97`, O8 INSERT
+  * `src/main.rs:100-117`, O9 DELETE `src/main.rs:120-138`) and its DDL
+  * (O14 `src/db_utils.rs:84-144`). The one write path that issues them is
+  * the `graft-jdbc-upsert` DSv2 sink ([[graft.sink.v2.JdbcUpsertProvider]]).
   *
   * Design:
-  *  - Spark's JDBC writer has no UPDATE/DELETE, so each classified
-  *    partition drives its own statements via `foreachPartition` — N
-  *    partitions write concurrently where the reference is single-writer
-  *    sequential (`src/main.rs:250-257`).
-  *  - Statement *text* generation is pure and separated from transport
-  *    (`exec: String => Unit` injected), so the batching/quoting logic is
-  *    unit-tested without a database and production passes a JDBC
-  *    connection closure.
-  *  - Batching: `batchSize` rows per statement (reference default 10 000,
-  *    `src/main.rs:359`), tail flushed (reference `src/main.rs:271-277`).
+  *  - Text generation is pure: a [[Dialect]] maps a batch of rows to one
+  *    statement string, so quoting and statement shape are unit-tested
+  *    without a database, and the sink's connector owns the transport.
+  *  - One statement per batch of up to `batchsize` rows (reference
+  *    default 10 000, [[DefaultBatchSize]], `src/main.rs:359`).
   *  - Idempotence contract preserved (SURVEY.md §7.4): the diff is
   *    self-healing on re-run, so partial failure needs no 2PC — re-running
   *    the sync converges (reference behaves identically).
   *  - Dollar-quoting: the reference wraps JSON in `$$...$$`
-  *    (`src/main.rs:82,104`); we escape any embedded `$$` so the quoting
-  *    cannot be broken by payload content.
+  *    (`src/main.rs:82,104`); we extend the tag until the payload cannot
+  *    break the quoting ([[dollarQuote]]).
+  *  - DDL: [[ddl]] is the reference's PostgreSQL schema verbatim;
+  *    [[Ansi.ddl]] is its Derby twin for the real-JDBC e2e suite.
   */
 object JdbcUpsert {
 
@@ -34,17 +30,20 @@ object JdbcUpsert {
     * [[Ansi]] is standard-SQL text (doubled-quote string literals,
     * CASE-based UPDATE) that embedded Derby — the one real JDBC engine
     * on the Spark classpath — executes, so the e2e suite can drive the
-    * ACTUAL partition writers over a genuine driver
-    * (`DerbyE2ESpec`). Serializable: dialects ride the
-    * `foreachPartition` closures to executors.
+    * ACTUAL sink writers over a genuine driver (`DerbyE2ESpec`).
     */
-  sealed trait Dialect extends Serializable {
+  sealed trait Dialect {
     def insertSql(table: String, resources: Seq[String]): String
     def updateSql(table: String, items: Seq[(Int, String)]): String
     def deleteSql(table: String, ids: Seq[Int]): String =
       s"DELETE FROM $table WHERE id IN (${ids.mkString(", ")})"
   }
 
+  /** INSERT `INSERT INTO {t} (resource) VALUES ($$json$$), …`
+    * (`src/main.rs:107-111`); UPDATE an inline-VALUES inner join
+    * (`src/main.rs:85-90`); DELETE `… WHERE id IN (…)`
+    * (`src/main.rs:127-131`).
+    */
   case object Postgres extends Dialect {
     def insertSql(table: String, resources: Seq[String]): String =
       s"INSERT INTO $table (resource) VALUES " +
@@ -88,109 +87,6 @@ object JdbcUpsert {
     while (json.contains(s"$$$tag$$")) tag += "g"
     s"$$$tag$$$json$$$tag$$"
   }
-
-  /** `INSERT INTO {t} (resource) VALUES ($$json$$), …` —
-    * reference `src/main.rs:107-111`.
-    */
-  def insertSql(table: String, resources: Seq[String]): String =
-    Postgres.insertSql(table, resources)
-
-  /** `UPDATE {t} SET resource = data.resource::jsonb FROM (VALUES …) AS
-    * data(id, resource) WHERE data.id = {t}.id` — reference
-    * `src/main.rs:85-90` (an inline-VALUES inner join).
-    */
-  def updateSql(table: String, items: Seq[(Int, String)]): String =
-    Postgres.updateSql(table, items)
-
-  /** `DELETE FROM {t} WHERE id IN (…)` — reference `src/main.rs:127-131`. */
-  def deleteSql(table: String, ids: Seq[Int]): String =
-    Postgres.deleteSql(table, ids)
-
-  /** Chunk an iterator into `batchSize` groups and execute one statement
-    * per chunk (reference's counter-and-flush dance, `src/main.rs:188-190,
-    * 250-257, 271-277`, collapsed to `grouped`).
-    */
-  def writeBatched[T](rows: Iterator[T], batchSize: Int,
-                      toSql: Seq[T] => String, exec: String => Unit): Long = {
-    var n = 0L
-    rows.grouped(batchSize).foreach { chunk =>
-      exec(toSql(chunk))
-      n += chunk.size
-    }
-    n
-  }
-
-  /** Run one non-empty partition's statements inside ONE transaction.
-    * Spark re-runs failed tasks, and a re-run of a partition that had
-    * already applied some batches would double-write (the reference never
-    * faces this: it is single-writer sequential, `src/main.rs:250-257`).
-    * Wrapping the partition in BEGIN…COMMIT makes each task ATTEMPT
-    * atomic: an attempt that dies mid-write closes its connection without
-    * COMMIT, PostgreSQL rolls the open transaction back, and the retry
-    * starts from nothing. Empty partitions (common after the action
-    * filter) never even open a connection.
-    *
-    * Scope, honestly stated: this is attempt-level atomicity, NOT full
-    * exactly-once. Two LIVE attempts of one partition (speculative
-    * execution, or a zombie task whose executor the driver gave up on)
-    * can both reach COMMIT, and a COMMIT whose ack is lost re-runs on
-    * retry — there is no output-commit coordination for JDBC. A sync
-    * deployment therefore runs with speculation off (Spark's default)
-    * and relies on the nightly reconcile's count MISMATCH to surface the
-    * rare double-commit; at-least-once + attempt atomicity + detection
-    * is the standard JDBC-sink posture.
-    */
-  private def transactionalPartition[T](rows: Iterator[T],
-      connect: () => (String => Unit, () => Unit))(
-      body: (Iterator[T], String => Unit) => Unit): Unit =
-    if (rows.hasNext) {
-      val (exec, close) = connect()
-      try { exec("BEGIN"); body(rows, exec); exec("COMMIT") }
-      finally close()
-    }
-
-  /** Executor-parallel INSERT of classified insert rows
-    * (`resource` string column). `connect` runs once per non-empty
-    * partition (connection reuse within a partition = the reference's
-    * pooling, `src/db_utils.rs:14-15`, without the driver bottleneck);
-    * each partition's batches commit atomically (task-retry safety).
-    */
-  def insertPartitions(inserts: DataFrame, table: String,
-                       connect: () => (String => Unit, () => Unit),
-                       batchSize: Int = DefaultBatchSize,
-                       dialect: Dialect = Postgres): Unit =
-    inserts.select("resource").foreachPartition { (rows: Iterator[Row]) =>
-      transactionalPartition(rows, connect) { (rs, exec) =>
-        writeBatched(rs.map(_.getString(0)), batchSize,
-          (c: Seq[String]) => dialect.insertSql(table, c), exec); ()
-      }
-    }
-
-  /** Executor-parallel UPDATE of classified update rows
-    * (`pk_id: int, resource: string`).
-    */
-  def updatePartitions(updates: DataFrame, table: String,
-                       connect: () => (String => Unit, () => Unit),
-                       batchSize: Int = DefaultBatchSize,
-                       dialect: Dialect = Postgres): Unit =
-    updates.select("pk_id", "resource").foreachPartition { (rows: Iterator[Row]) =>
-      transactionalPartition(rows, connect) { (rs, exec) =>
-        writeBatched(rs.map(r => (r.getInt(0), r.getString(1))), batchSize,
-          (c: Seq[(Int, String)]) => dialect.updateSql(table, c), exec); ()
-      }
-    }
-
-  /** Executor-parallel DELETE of classified delete pk ids. */
-  def deletePartitions(deletes: DataFrame, table: String,
-                       connect: () => (String => Unit, () => Unit),
-                       batchSize: Int = DefaultBatchSize,
-                       dialect: Dialect = Postgres): Unit =
-    deletes.select("pk_id").foreachPartition { (rows: Iterator[Row]) =>
-      transactionalPartition(rows, connect) { (rs, exec) =>
-        writeBatched(rs.map(_.getInt(0)), batchSize,
-          (c: Seq[Int]) => dialect.deleteSql(table, c), exec); ()
-      }
-    }
 
   /** DDL for one mirror table + audit trigger — reference
     * `src/db_utils.rs:88-134`, emitted verbatim so an existing PostgreSQL

@@ -5,22 +5,24 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.diff.Reconcile
 import graft.sink.JdbcUpsert
 
 /** Executor-side connection factory for the V2 writer: zero-arg-
   * constructible (instantiated by class name on each executor, the
-  * [[graft.source.v2.PageFetcher]] pattern). Returns the same
-  * `(exec, close)` statement transport the `foreachPartition` sink uses
-  * — "BEGIN"/"COMMIT" open and commit the transaction; close without
-  * COMMIT must discard it.
+  * [[graft.source.v2.PageFetcher]] pattern). Returns an `(exec, close)`
+  * statement transport — "BEGIN"/"COMMIT" open and commit the
+  * transaction; close without COMMIT must discard it.
   */
 trait UpsertConnector extends Serializable {
   def connect(options: Map[String, String]): (String => Unit, () => Unit)
@@ -53,9 +55,9 @@ class DriverManagerConnector extends UpsertConnector {
   * transaction per task attempt, riding Spark's V2 commit protocol:
   * `commit()` flushes tails and commits, `abort()` (task failure /
   * speculation loser) closes without commit so the engine rolls the
-  * attempt back — the same attempt-atomicity contract as the
-  * `foreachPartition` path, now enforced by the framework rather than a
-  * try/finally.
+  * attempt back ([[UpsertDataWriter]] states the guarantee's scope).
+  * It is the engine's one JDBC write path: the batch sync and the CDC
+  * stream both reach it through [[JdbcUpsertProvider.append]].
   *
   * Modes: `append` applies the classified actions;
   * `overwrite` (SaveMode.Overwrite → truncate-and-append, via
@@ -91,6 +93,22 @@ object JdbcUpsertProvider {
     StructField("action", StringType),
     StructField("pk_id", IntegerType),
     StructField("resource", StringType)))
+
+  /** Apply a classified diff (`action`, `pk_id`, `resource`; noop rows
+    * allowed) to `table` in one `graft-jdbc-upsert` append: noops are
+    * filtered out and the rest is projected onto [[schema]]. One Spark
+    * action; `options` reaches the connector.
+    */
+  def append(classified: DataFrame, table: String,
+             options: Map[String, String]): Unit =
+    classified.filter(col("action") =!= Reconcile.Noop)
+      .select(col("action"), col("pk_id").cast("int").as("pk_id"),
+        col("resource"))
+      .write.format("graft-jdbc-upsert")
+      .options(options)
+      .option("table", table)
+      .mode("append")
+      .save()
 
   def makeConnector(className: String): UpsertConnector =
     Class.forName(className).getDeclaredConstructor().newInstance()
@@ -162,6 +180,27 @@ private[v2] class UpsertDataWriterFactory(props: Map[String, String],
     new UpsertDataWriter(props, inputSchema, batchSize)
 }
 
+/** One task attempt's writer: buffers each action up to `batchSize` rows
+  * per statement and runs every statement of the attempt inside ONE
+  * transaction, opened at the first row (an empty partition never opens a
+  * connection). Spark re-runs failed tasks, and a re-run of a partition
+  * that had already applied some batches would double-write (the
+  * reference never faces this: it is single-writer sequential,
+  * `src/main.rs:250-257`). The transaction makes each task ATTEMPT
+  * atomic: an attempt that dies mid-write is aborted and closes its
+  * connection without COMMIT, the engine rolls the open transaction back,
+  * and the retry starts from nothing.
+  *
+  * Scope, honestly stated: this is attempt-level atomicity, NOT full
+  * exactly-once. Two LIVE attempts of one partition (speculative
+  * execution, or a zombie task whose executor the driver gave up on)
+  * can both reach COMMIT, and a COMMIT whose ack is lost re-runs on
+  * retry — there is no output-commit coordination for JDBC. A sync
+  * deployment therefore runs with speculation off (Spark's default)
+  * and relies on the nightly reconcile's count MISMATCH to surface the
+  * rare double-commit; at-least-once + attempt atomicity + detection
+  * is the standard JDBC-sink posture.
+  */
 private[v2] class UpsertDataWriter(props: Map[String, String],
                                    inputSchema: StructType,
                                    batchSize: Int)
@@ -179,7 +218,7 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
   private var nIns = 0L; private var nUpd = 0L; private var nDel = 0L
 
   // connection opened lazily at the first row — an empty partition never
-  // touches the database (same contract as transactionalPartition)
+  // touches the database
   private var conn: Option[(String => Unit, () => Unit)] = None
   private def exec(sql: String): Unit = {
     val c = conn.getOrElse {

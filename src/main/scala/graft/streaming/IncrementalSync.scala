@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.diff.Reconcile
+import graft.sink.v2.JdbcUpsertProvider
 
 /** Continuous sync: the reference's daily full reconciliation
   * (`/root/reference/src/main.rs:159-175`, EP3) recast as a Structured
@@ -14,9 +15,9 @@ import graft.diff.Reconcile
   *  1. latest-per-key reduction (one batch may carry several versions of
   *     one resource; only the newest is applied),
   *  2. left join against the CURRENT target snapshot → classify,
-  *  3. the injected applier writes the insert/update/delete partitions
-  *     (production: the [[graft.sink.JdbcUpsert]] writers, same as
-  *     [[graft.runtime.SyncPipeline.syncOne]]).
+  *  3. the injected applier writes the inserts, updates and deletes
+  *     (production: [[applyJdbc]], the same `graft-jdbc-upsert` write as
+  *     [[graft.runtime.SyncPipeline.syncOneV2]]).
   *
   * CDC semantics differ from the full diff on purpose: absence from a
   * batch means "unchanged", never "deleted" — deletes must be explicit
@@ -67,30 +68,23 @@ object IncrementalSync {
           .as("action"))
   }
 
-  /** Production applier: route one micro-batch's classified changes into
-    * the [[graft.sink.JdbcUpsert]] partition writers — the same three
-    * statement shapes the reference issues (`src/main.rs:78-138`), now per
-    * micro-batch instead of per daily run. Pass the result as `apply` to
-    * [[run]].
+  /** Production applier: one micro-batch's classified changes go down in
+    * ONE `graft-jdbc-upsert` append ([[JdbcUpsertProvider.append]]) — the
+    * same three statement shapes the reference issues
+    * (`src/main.rs:78-138`), now per micro-batch instead of per daily run,
+    * each task's statements in one transaction. `writeOptions` reaches the
+    * sink (`url`/`dialect`/`connector`/`batchsize`); a bad `batchsize`
+    * fails on the driver. Pass the result as `apply` to [[run]].
+    *
+    * The snapshot is read before any write: the snapshot side reaches the
+    * join through an Exchange (a shuffle, or a broadcast when it is
+    * small), so its scan completes before the write's result stage runs
+    * and the batch never classifies against rows it is writing. Nothing
+    * is cached: the driver holds no rows.
     */
-  def applyJdbc(table: String,
-                connect: () => (String => Unit, () => Unit),
-                batchSize: Int = graft.sink.JdbcUpsert.DefaultBatchSize)
-  : DataFrame => Unit = { classified =>
-    val c = classified.persist()
-    try {
-      def only(action: String) = c.filter(col("action") === action)
-      graft.sink.JdbcUpsert.insertPartitions(
-        only(Reconcile.Insert).select("resource"), table, connect, batchSize)
-      graft.sink.JdbcUpsert.updatePartitions(
-        only(Reconcile.Update)
-          .select(col("pk_id").cast("int").as("pk_id"), col("resource")),
-        table, connect, batchSize)
-      graft.sink.JdbcUpsert.deletePartitions(
-        only(Reconcile.Delete).select(col("pk_id").cast("int").as("pk_id")),
-        table, connect, batchSize)
-    } finally { c.unpersist(); () }
-  }
+  def applyJdbc(table: String, writeOptions: Map[String, String])
+  : DataFrame => Unit =
+    JdbcUpsertProvider.append(_, table, writeOptions)
 
   /** Start the continuous sync. `snapshotFor` re-reads the live target
     * each micro-batch (it mutates between batches); `apply` receives the

@@ -33,8 +33,9 @@ object Lineage {
   // never compare equal.
   @volatile private var lastCheckpointDir: Option[String] = None
 
-  /** True when the last [[truncate]] call took the reliable-checkpoint
-    * path — observable hook for the cluster-safety spec.
+  /** True when the last [[truncate]] or [[truncateLazy]] call took the
+    * reliable-checkpoint path — observable hook for the cluster-safety
+    * spec.
     */
   @volatile private[graft] var lastWasReliable: Boolean = false
 
@@ -61,25 +62,12 @@ object Lineage {
     * `spark.graft.checkpointDir` is set (there the materializing action
     * pays the write-through re-computation, as eager truncation does).
     */
-  def truncateLazy(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(dir) =>
-        Lineage.synchronized {
-          if (!lastCheckpointDir.contains(dir)) {
-            spark.sparkContext.setCheckpointDir(dir)
-            lastCheckpointDir = Some(dir)
-          }
-        }
-        lastWasReliable = true
-        df.checkpoint(eager = false)
-      case None =>
-        lastWasReliable = false
-        df.localCheckpoint(eager = false)
-    }
-  }
+  def truncateLazy(df: DataFrame): DataFrame = checkpoint(df, eager = false)
 
-  def truncate(df: DataFrame): DataFrame = {
+  /** EAGER truncation: one job materializes `df` now, then the plan is cut. */
+  def truncate(df: DataFrame): DataFrame = checkpoint(df, eager = true)
+
+  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) =>
@@ -90,10 +78,10 @@ object Lineage {
           }
         }
         lastWasReliable = true
-        df.checkpoint(eager = true)
+        df.checkpoint(eager)
       case None =>
         lastWasReliable = false
-        df.localCheckpoint(eager = true)
+        df.localCheckpoint(eager)
     }
   }
 }

@@ -11,9 +11,10 @@ import graft.SparkTestSession
   * loop runs. The driver's correctness SFs (0.001/0.01) always take the
   * local path, so the DISTRIBUTED loop would be oracle-untested without
   * these pins: threshold 0 forces it, and its output must be
-  * value-identical to the local kernel — on the real sf0.001 corpus and
-  * on a crafted pair-exhausting corpus that exercises the NULL-rule
-  * no-op rounds both engines must degrade to identically.
+  * value-identical to the local kernel — on the real sf0.001 corpus, on
+  * a crafted pair-exhausting corpus that exercises the NULL-rule no-op
+  * rounds both engines must degrade to identically, and on a non-BMP
+  * corpus whose count tie only code-point order breaks the same way.
   */
 class Round14OpsSpec extends AnyFunSuite {
 
@@ -33,12 +34,49 @@ class Round14OpsSpec extends AnyFunSuite {
     r
   }
 
+  /** q322 over a crafted `documents` corpus on the local path, pinned
+    * equal to the distributed loop (threshold 0); returns the local rows.
+    */
+  private def bothPathsAgree(docs: Seq[(Long, String)]) = {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-r14-bpe").toString
+    docs.toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    val local = runQ322(dir)
+    spark.conf.set(Thresh, "0")
+    try assert(runQ322(dir) === local)
+    finally spark.conf.unset(Thresh)
+    local
+  }
+
   test("q322: distributed loop (threshold 0) ≡ local kernel on sf0.001") {
     val local = runQ322(sfDir)
     assert(local.size === 32)
     spark.conf.set(Thresh, "0")
     try assert(runQ322(sfDir) === local)
     finally spark.conf.unset(Thresh)
+  }
+
+  test("q322: non-BMP count ties break in code-point order on both paths") {
+    // (x, ｡) and (x, 😀) tie on count 1: code-point order (U+FF61 <
+    // U+1F600) picks (x, ｡); UTF-16 order (0xFF61 > 0xD83D) would pick (x, 😀)
+    val local = bothPathsAgree(Seq((1L, "x ｡"), (2L, "x 😀")))
+    assert((local.head._2, local.head._3) === (("x", "｡")))
+  }
+
+  test("mmrGreedy fails loudly above its driver row bound") {
+    val s = spark
+    import s.implicits._
+    val n = Retrieval.MmrMaxRows + 1
+    val big = (1 to n).map(i => (1L, i.toLong, 1L)).toDF("query_id", "doc_id", "rel_q")
+    val noSims = Seq.empty[(Long, Long, Long, Long)].toDF("query_id", "ca", "cb", "sim_q")
+    val e1 = intercept[IllegalArgumentException](Retrieval.mmrGreedy(big, noSims, 5))
+    assert(e1.getMessage.contains(s"${Retrieval.MmrMaxRows}-row"), e1.getMessage)
+    val bigSims = (1 to n).map(i => (1L, 1L, i.toLong, 1L)).toDF("query_id", "ca", "cb", "sim_q")
+    val e2 = intercept[IllegalArgumentException](
+      Retrieval.mmrGreedy(big.limit(3), bigSims, 5))
+    assert(e2.getMessage.contains(s"${Retrieval.MmrMaxRows}-row"), e2.getMessage)
   }
 
   test("q322: a bad localTokenThreshold fails at construction, naming the key") {
@@ -54,24 +92,14 @@ class Round14OpsSpec extends AnyFunSuite {
   }
 
   test("q322: NULL-rule no-op rounds identical on both paths") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-r14-bpe")
-      .toString
     // few distinct A ≠ B pairs: merges exhaust well before the 32-round
     // budget, so most rounds are NULL-rule no-ops on both paths
-    Seq((1L, "a b a b"), (2L, "b c"), (3L, "c c c"))
-      .toDF("doc_id", "text").write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    val local = runQ322(dir)
+    val local = bothPathsAgree(Seq((1L, "a b a b"), (2L, "b c"), (3L, "c c c")))
     assert(local.size === 32)
     assert(local.exists(_._2 == null),
       "crafted corpus must exhaust its pairs inside the budget")
     // accounting must carry through the no-op rounds unchanged
     val lastReal = local.lastIndexWhere(_._2 != null)
     assert(local.drop(lastReal).map(t => (t._5, t._6)).distinct.size === 1)
-    spark.conf.set(Thresh, "0")
-    try assert(runQ322(dir) === local)
-    finally spark.conf.unset(Thresh)
   }
 }

@@ -1,26 +1,21 @@
 package graft.runtime
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, RowDataSourceScanExec,
-  SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec,
-  QueryStageExec}
+import org.apache.spark.sql.execution.{CollectMetricsExec, RowDataSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
-import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.ExecutedPlans.{executionsOf, isExchange, pathTo}
 import graft.sink.JdbcUpsert
 import graft.source.Snapshot
 
 /** The sync e2e against a REAL JDBC engine: embedded Derby (on the Spark
   * classpath) behind the genuine `java.sql` driver — real connections,
-  * real transactions, real executor-side `foreachPartition` writes
+  * real transactions, real executor-side `graft-jdbc-upsert` writes
   * through the [[JdbcUpsert.Ansi]] dialect, and the snapshot read back
   * through `spark.read.format("jdbc")`. Complements `SyncE2ESpec`, which
   * pins the PostgreSQL statement TEXT by interpreting it: here the text
@@ -37,7 +32,7 @@ object DerbyTarget {
   // behavior family) — a Derby limitation, not a sink property
   // (PostgreSQL sequences are non-transactional). The writer
   // transactions are therefore serialized CLIENT-side by [[txGate]]:
-  // the sink still runs its real foreachPartition tasks, each driving a
+  // the sink still runs its real write tasks, each driving a
   // real connection/transaction — they just enter commit scope one at a
   // time, which is all a single-writer embedded engine supports anyway.
   // Concurrent-writer semantics are SyncE2ESpec's job (its PG-semantics
@@ -70,8 +65,8 @@ object DerbyTarget {
       }
   }
 
-  /** Real-JDBC connect closure for the partition writers: BEGIN/COMMIT
-    * from `transactionalPartition` map to autocommit-off/commit; close
+  /** Real-JDBC transport for the sink's task writers: the writer's
+    * BEGIN/COMMIT map to autocommit-off/commit; close
     * rolls back any open transaction first (what a dropped PG connection
     * does server-side — embedded Derby instead refuses to close
     * mid-transaction, so the rollback is explicit).
@@ -121,8 +116,8 @@ object DerbyTarget {
 }
 
 /** V2-writer connector over the Derby target (zero-arg, class-name
-  * instantiated): routes through DerbyTarget.connect so writer
-  * transactions pass the same txGate as the foreachPartition path.
+  * instantiated): routes through DerbyTarget.connect so every writer
+  * transaction passes the txGate.
   */
 class GatedDerbyConnector extends graft.sink.v2.UpsertConnector {
   override def connect(options: Map[String, String]): (String => Unit, () => Unit) =
@@ -200,16 +195,19 @@ class DerbyE2ESpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
 
+  /** Sink options of the gated Derby writer. */
+  private val gated =
+    Map("connector" -> classOf[GatedDerbyConnector].getName, "dialect" -> "ansi")
+
   private def sync() = {
     // the Ansi dialect rides each writer; everything else is the same
     // production pipeline SyncE2ESpec drives
     graft.model.Schemas.resourceTypes.map { t =>
-      SyncPipeline.syncOne(spark, t,
+      SyncPipeline.syncOneV2(spark, t,
         SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
           classOf[graft.source.v2.FixtureFetcher].getName)(t),
         DerbyTarget.snapshot(spark)(graft.model.Schemas.tableName(t)),
-        () => DerbyTarget.connect(), DerbyTarget.count,
-        dialect = JdbcUpsert.Ansi)
+        gated, DerbyTarget.count)
     }
   }
 
@@ -259,123 +257,14 @@ class DerbyE2ESpec extends AnyFunSuite {
     }
   }
 
-  test("a mid-partition failure rolls back in the real engine; the retry writes exactly once") {
-    DerbyTarget.reset()
-    val spark2 = spark
-    import spark2.implicits._
-    val rows = (0 until 8).map(i => s"""{"id":"x$i","meta":{"versionId":"1"}}""")
-      .toDF("resource").coalesce(1)
-    // batchSize 2 -> four INSERT statements in the one partition; the
-    // connection dies on the third, AFTER two statements already executed
-    // inside the open Derby transaction
-    val failing = () => {
-      val (exec, close) = DerbyTarget.connect()
-      var stmts = 0
-      ((s: String) => {
-        if (s != "BEGIN" && s != "COMMIT") {
-          stmts += 1
-          if (stmts == 3) throw new RuntimeException("connection lost mid-partition")
-        }
-        exec(s)
-      }, close)
-    }
-    val e = intercept[Exception] {
-      JdbcUpsert.insertPartitions(rows, "patient", failing,
-        batchSize = 2, dialect = JdbcUpsert.Ansi)
-    }
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.getMessage.contains("connection lost")), e)
-    assert(DerbyTarget.count("patient") === 0L,
-      "Derby must roll the uncommitted batches back with the failed attempt")
-    JdbcUpsert.insertPartitions(rows, "patient", () => DerbyTarget.connect(),
-      batchSize = 2, dialect = JdbcUpsert.Ansi)
-    assert(DerbyTarget.count("patient") === 8L, "exactly one copy after retry")
-  }
-
-  test("V2 write path over real JDBC: sync -> no-op -> heal through one declarative write") {
-    DerbyTarget.reset()
-    def syncV2() = graft.model.Schemas.resourceTypes.map { t =>
-      SyncPipeline.syncOneV2(spark, t,
-        SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
-          classOf[graft.source.v2.FixtureFetcher].getName)(t),
-        DerbyTarget.snapshot(spark)(graft.model.Schemas.tableName(t)),
-        Map("connector" -> classOf[GatedDerbyConnector].getName,
-          "dialect" -> "ansi"),
-        DerbyTarget.count)
-    }
-    val first = syncV2()
-    first.foreach { r =>
-      assert(r.inserts === 23 && r.updates === 0 && r.deletes === 0, r)
-      assert(r.reconciled, s"post-write count must equal source: $r")
-    }
-    val second = syncV2()
-    second.foreach { r =>
-      assert(r.inserts === 0 && r.updates === 0 && r.deletes === 0, r)
-    }
-    val byJson = DerbyTarget.rows("patient")
-    val staleId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r5"""") => id }.get
-    DerbyTarget.execute(s"UPDATE patient SET resource = " +
-      s"'{\"id\":\"r5\",\"meta\":{\"versionId\":\"999\"}}' WHERE id = $staleId")
-    DerbyTarget.execute(
-      "INSERT INTO patient (resource) VALUES ('{\"id\":\"zzz\",\"meta\":{\"versionId\":\"1\"}}')")
-    val heal = syncV2()
-    val patient = heal.find(_.resourceType == "Patient").get
-    assert(patient.inserts === 0 && patient.updates === 1 && patient.deletes === 1,
-      s"one V2 healing run must fix both corruptions: $patient")
-    assert(patient.reconciled)
-  }
-
   /** One Patient sync through the V2 path against the Derby mirror. */
   private def syncPatientV2(fetcher: String = classOf[graft.source.v2.FixtureFetcher].getName,
                             options: Map[String, String] = Map.empty) =
     SyncPipeline.syncOneV2(spark, "Patient",
       SyncPipeline.blazeV2Source(spark, "http://fixture", 10, fetcher)("Patient"),
       DerbyTarget.snapshot(spark)("patient"),
-      Map("connector" -> classOf[GatedDerbyConnector].getName, "dialect" -> "ansi") ++ options,
+      gated ++ options,
       DerbyTarget.count)
-
-  /** Every SQL execution `body` runs, after it has run. The listener bus is
-    * FIFO: once a marker execution started after `body` has been
-    * delivered, so has every execution `body` started.
-    */
-  private def executionsOf[A](body: => A): (A, Seq[QueryExecution]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { seen.add(qe); () }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { seen.add(qe); () }
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val out = body
-      val marker = s"marker_${System.nanoTime()}"
-      spark.range(1).select(lit(1).as(marker)).collect()
-      def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.asScala.exists(isMarker), "the listener bus never delivered the marker")
-      (out, seen.asScala.toSeq.filterNot(isMarker))
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  /** Children of a physical node, including the stages AQE hides behind
-    * leaf nodes.
-    */
-  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case q: QueryStageExec => Seq(q.plan)
-    case other => other.children
-  }
-
-  /** The nodes from `p` down to the first descendant matching `target`. */
-  private def pathTo(p: SparkPlan)(target: SparkPlan => Boolean): Option[List[SparkPlan]] =
-    if (target(p)) Some(List(p))
-    else kids(p).iterator.flatMap(pathTo(_)(target)).nextOption().map(p :: _)
-
-  /** A stage boundary below the result stage (AQE also wraps the result
-    * stage itself in a `QueryStageExec`, which is no boundary).
-    */
-  private def isExchange(p: SparkPlan) =
-    p.isInstanceOf[Exchange] || p.isInstanceOf[ExchangeQueryStageExec]
 
   /** A Patient mirror that needs one insert (r3 dropped), one update (r5
     * stale), one delete (an alien row) and 21 noops.
@@ -395,7 +284,7 @@ class DerbyE2ESpec extends AnyFunSuite {
 
   test("V2 sync is ONE SQL execution per type; the counts ride the write") {
     corruptedMirror()
-    val (r, executions) = executionsOf(syncPatientV2())
+    val (r, executions) = executionsOf(spark)(syncPatientV2())
     assert(r === SyncPipeline.SyncResult("Patient", inserts = 1, updates = 1, deletes = 1,
       sourceTotal = 23, targetAfter = 23))
     assert(executions.size === 1,
@@ -404,7 +293,7 @@ class DerbyE2ESpec extends AnyFunSuite {
 
   test("V2 sync plan: snapshot read before any write, counts in the write's result stage") {
     corruptedMirror()
-    val (_, Seq(write)) = executionsOf(syncPatientV2())
+    val (_, Seq(write)) = executionsOf(spark)(syncPatientV2())
     val plan = write.executedPlan
     assert(pathTo(plan)(_.isInstanceOf[InMemoryTableScanLike]).isEmpty, "nothing is cached")
     // the observed counts: no exchange between the metrics node and the
@@ -512,6 +401,14 @@ class DerbyE2ESpec extends AnyFunSuite {
       .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
     assert(DerbyTarget.count("patient") === 0L,
       "the executed batch must roll back when the V2 task aborts")
+    // the retry: the same rows through a healthy connector land once
+    rows.write.format("graft-jdbc-upsert")
+      .option("table", "patient")
+      .options(gated)
+      .option("batchsize", "2")
+      .mode("append")
+      .save()
+    assert(DerbyTarget.count("patient") === 8L, "exactly one copy after retry")
   }
 
   test("genuinely CONCURRENT partition writers commit independently (V2, real engine)") {
@@ -554,9 +451,19 @@ class DerbyE2ESpec extends AnyFunSuite {
     DerbyTarget.reset()
     val spark2 = spark
     import spark2.implicits._
-    val tricky = """{"id":"q1","meta":{"versionId":"1"},"note":"it's a 'quoted' $value$"}"""
-    JdbcUpsert.insertPartitions(Seq(tricky).toDF("resource"), "patient",
-      () => DerbyTarget.connect(), dialect = JdbcUpsert.Ansi)
-    assert(DerbyTarget.rows("patient").values.toSeq === Seq(tricky))
+    def tricky(id: String) = s"""{"id":"$id","meta":{"versionId":"1"},"note":"it's a 'quoted' $$value$$"}"""
+    DerbyTarget.execute("""INSERT INTO patient (resource) VALUES ('{"id":"q2"}')""")
+    val pk = DerbyTarget.rows("patient").keys.head
+    // one insert and one update, both carrying the hostile payload
+    Seq(("insert", Option.empty[Int], tricky("q1")), ("update", Some(pk), tricky("q2")))
+      .toDF("action", "pk_id", "resource")
+      .write.format("graft-jdbc-upsert")
+      .option("table", "patient")
+      .options(gated)
+      .mode("append")
+      .save()
+    val rows = DerbyTarget.rows("patient")
+    assert(rows(pk) === tricky("q2"))
+    assert(rows.values.toSet === Set(tricky("q1"), tricky("q2")))
   }
 }

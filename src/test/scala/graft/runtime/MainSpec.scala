@@ -6,10 +6,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.source.BlazeSource
 
 /** Wiring tests for the composed daemon (reference `src/main.rs:343-411`)
-  * and the sync pipeline's execution-count discipline.
+  * and the default four-type sync.
   */
 class MainSpec extends AnyFunSuite {
 
@@ -131,30 +130,6 @@ class MainSpec extends AnyFunSuite {
     assert(e.getMessage.contains("connection to Blaze"))
   }
 
-  // ---- execution-count discipline ----
-
-  test("syncOne scans the source exactly once (persisted classification, pre-write counts)") {
-    val spark2 = spark
-    import spark2.implicits._
-    val acc = spark.sparkContext.longAccumulator("source-scans")
-    val raw = BlazeSource.parsePages(spark,
-      Seq(bundle(Seq(res("a", 1), res("b", 2), res("c", 3)))))
-    // every evaluation of the source relation bumps the accumulator once per row
-    val counted = raw.as[String].map { r => acc.add(1); r }.toDF("resource")
-
-    val snapshot = spark.createDataFrame(Seq(
-      (10, "b", 1L), (12, "d", 9L))).toDF("pk_id", "resource_id", "version_id")
-    StmtCollector.clear()
-    val result = SyncPipeline.syncOne(spark, "Patient", counted, snapshot,
-      () => ((s: String) => StmtCollector.add(s), () => ()), _ => 3L)
-
-    assert(result.inserts === 2 && result.updates === 1 && result.deletes === 1)
-    assert(result.sourceTotal === 3 && result.reconciled)
-    // 3 rows, 1 evaluation — without the persist the count job and the
-    // three write jobs would each re-run the scan (≥4 evaluations)
-    assert(acc.value === 3L)
-  }
-
   test("runSync over the DSv2 blaze source: executor-side pages feed all four types") {
     StmtCollector.clear()
     val results = SyncPipeline.runSync(spark,
@@ -171,18 +146,6 @@ class MainSpec extends AnyFunSuite {
     assert(stmts.contains("BEGIN") && stmts.contains("COMMIT"))
     assert(Schemas4.types.forall(t =>
       stmts.exists(_.startsWith(s"INSERT INTO ${t.toLowerCase}"))))
-  }
-
-  test("runSyncLegacy (explicit fallback) still drives the foreachPartition writers") {
-    StmtCollector.clear()
-    val results = SyncPipeline.runSyncLegacy(spark,
-      sourceFor = SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
-        classOf[graft.source.v2.FixtureFetcher].getName),
-      snapshotFor = _ => emptySnapshot,
-      connect = () => ((s: String) => StmtCollector.add(s), () => ()),
-      targetCount = _ => 23L)
-    assert(results.size === 4)
-    assert(results.forall(r => r.inserts === 23 && r.deletes === 0 && r.reconciled))
   }
 }
 

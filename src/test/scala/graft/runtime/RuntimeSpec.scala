@@ -7,7 +7,7 @@ import graft.SparkTestSession
 import graft.sink.JdbcUpsert
 import graft.source.BlazeSource
 
-/** JVM-static statement sink for local-mode foreachPartition tests. */
+/** JVM-static statement sink for local-mode sink tests. */
 object StmtCollector {
   private val buf = scala.collection.mutable.Buffer[String]()
   def add(s: String): Unit = buf.synchronized { buf += s; () }
@@ -68,12 +68,12 @@ class RuntimeSpec extends AnyFunSuite {
   // ---- JdbcUpsert SQL + batching ----
 
   test("insert/update/delete SQL match the reference's statement shapes") {
-    assert(JdbcUpsert.insertSql("patient", Seq("""{"a":1}""")) ===
+    assert(JdbcUpsert.Postgres.insertSql("patient", Seq("""{"a":1}""")) ===
       """INSERT INTO patient (resource) VALUES ($${"a":1}$$)""")
-    assert(JdbcUpsert.updateSql("patient", Seq((7, """{"a":1}"""))) ===
+    assert(JdbcUpsert.Postgres.updateSql("patient", Seq((7, """{"a":1}"""))) ===
       """UPDATE patient SET resource = data.resource::jsonb FROM (VALUES """ +
         """(7, $${"a":1}$$)) AS data(id, resource) WHERE data.id = patient.id""")
-    assert(JdbcUpsert.deleteSql("patient", Seq(1, 2, 3)) ===
+    assert(JdbcUpsert.Postgres.deleteSql("patient", Seq(1, 2, 3)) ===
       "DELETE FROM patient WHERE id IN (1, 2, 3)")
   }
 
@@ -91,12 +91,21 @@ class RuntimeSpec extends AnyFunSuite {
     assert(!hostile.contains(tag))
   }
 
-  test("writeBatched chunks at batchSize and flushes the tail") {
-    val stmts = scala.collection.mutable.Buffer[String]()
-    val n = JdbcUpsert.writeBatched((1 to 25).iterator, 10,
-      (c: Seq[Int]) => s"batch:${c.size}", stmts += _)
-    assert(n === 25)
-    assert(stmts.toSeq === Seq("batch:10", "batch:10", "batch:5"))
+  test("V2 writer chunks at batchsize and flushes the tail") {
+    val spark2 = spark
+    import spark2.implicits._
+    StmtCollector.clear()
+    (1 to 25).map(i => ("insert", Option.empty[Int], s"""{"id":"w$i"}"""))
+      .toDF("action", "pk_id", "resource").coalesce(1)
+      .write.format("graft-jdbc-upsert")
+      .option("table", "patient")
+      .option("connector", classOf[StmtCollectorConnector].getName)
+      .option("batchsize", "10")
+      .mode("append")
+      .save()
+    val rowsPerInsert = StmtCollector.snapshot().filter(_.startsWith("INSERT"))
+      .map(_.split("\\), \\(").length)
+    assert(rowsPerInsert === Seq(10, 10, 5))
   }
 
   test("ddl matches the reference schema: NOT NULL audit columns, trigger name") {
@@ -163,26 +172,31 @@ class RuntimeSpec extends AnyFunSuite {
 
   // ---- End-to-end sync against an in-memory fake target ----
 
-  test("syncOne classifies and writes; counts reconcile") {
+  test("syncOneV2 classifies and writes; one source scan; counts reconcile") {
+    val spark2 = spark
+    import spark2.implicits._
     // target snapshot: b@1 (stale), c@3 (current), d@9 (absent from source)
     val snapshot = spark.createDataFrame(Seq(
       (10, "b", 1L), (11, "c", 3L), (12, "d", 9L)
     )).toDF("pk_id", "resource_id", "version_id")
 
-    // source: a@1 (new), b@2 (changed), c@3 (noop)
+    // source: a@1 (new), b@2 (changed), c@3 (noop); every evaluation of
+    // the source relation bumps the accumulator once per row
+    val acc = spark.sparkContext.longAccumulator("source-scans")
     val body = bundle(Seq(res("a", 1), res("b", 2), res("c", 3)), None)
     val resources = BlazeSource.parsePages(spark, Seq(body))
+      .as[String].map { r => acc.add(1); r }.toDF("resource")
 
-    // foreachPartition closures are serialized into tasks even in local
-    // mode — collect through a JVM-static sink, not a captured buffer.
+    // the writer runs in tasks — collect through a JVM-static sink
     StmtCollector.clear()
-    val connect = () => ((s: String) => StmtCollector.add(s), () => ())
     // fake target row count after sync: 3 existing + 1 insert - 1 delete
-    val result = SyncPipeline.syncOne(spark, "Patient", resources, snapshot,
-      connect, _ => 3L)
+    val result = SyncPipeline.syncOneV2(spark, "Patient", resources, snapshot,
+      Map("connector" -> classOf[StmtCollectorConnector].getName), _ => 3L)
 
     assert(result.inserts === 1 && result.updates === 1 && result.deletes === 1)
     assert(result.sourceTotal === 3 && result.reconciled)
+    // 3 rows, 1 evaluation: the counts ride the write, no second scan
+    assert(acc.value === 3L)
     val all = StmtCollector.snapshot().mkString("\n")
     assert(all.contains("INSERT INTO patient"))
     assert(all.contains("\"id\":\"a\""))

@@ -233,74 +233,4 @@ class SyncE2ESpec extends AnyFunSuite {
         s"post-heal sync must be a no-op: $r")
     }
   }
-
-  test("legacy foreachPartition path: sync -> no-op re-sync -> heal, unchanged semantics") {
-    PgLiteStore.clear()
-    // the explicit fallback (pre-round-9 default) must keep the exact
-    // same classify/write/heal semantics as the V2 default above
-    def syncLegacy() = SyncPipeline.runSyncLegacy(spark,
-      sourceFor = SyncPipeline.blazeV2Source(spark, "http://fixture", 10,
-        classOf[graft.source.v2.FixtureFetcher].getName),
-      snapshotFor = PgLiteStore.snapshot(spark),
-      connect = () => PgLiteStore.connect(),
-      targetCount = PgLiteStore.count)
-
-    val first = syncLegacy()
-    assert(first.size === 4)
-    first.foreach { r =>
-      assert(r.inserts === 23 && r.updates === 0 && r.deletes === 0, r)
-      assert(r.reconciled, s"post-write count must equal source: $r")
-    }
-    val second = syncLegacy()
-    second.foreach { r =>
-      assert(r.inserts === 0 && r.updates === 0 && r.deletes === 0,
-        s"second legacy sync must be a no-op: $r")
-    }
-    // same three-way corruption as the V2 default path
-    val byJson = PgLiteStore.rows("patient")
-    val dropId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r3"""") => id }.get
-    val staleId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r5"""") => id }.get
-    PgLiteStore.delete("patient", dropId)
-    PgLiteStore.replace("patient", staleId,
-      """{"id":"r5","meta":{"versionId":"999"},"resourceType":"Patient"}""")
-    PgLiteStore.put("patient",
-      """{"id":"zzz","meta":{"versionId":"1"},"resourceType":"Patient"}""")
-    val heal = syncLegacy()
-    val patient = heal.find(_.resourceType == "Patient").get
-    assert(patient.inserts === 1 && patient.updates === 1 && patient.deletes === 1,
-      s"one legacy healing run must fix all three corruptions: $patient")
-    assert(patient.reconciled)
-  }
-
-  test("a mid-partition failure commits nothing; the retry writes exactly once") {
-    PgLiteStore.clear()
-    val spark2 = spark
-    import spark2.implicits._
-    val rows = (0 until 8).map(i => s"""{"id":"x$i","meta":{"versionId":"1"}}""")
-      .toDF("resource").coalesce(1)
-    // batchSize 2 → four INSERT statements in the one partition; the
-    // connection dies on the third, AFTER two statements already executed
-    val failing = () => {
-      val (exec, close) = PgLiteStore.connect()
-      var stmts = 0
-      ((s: String) => {
-        if (s != "BEGIN" && s != "COMMIT") {
-          stmts += 1
-          if (stmts == 3) throw new RuntimeException("connection lost mid-partition")
-        }
-        exec(s)
-      }, close)
-    }
-    val e = intercept[Exception] {
-      graft.sink.JdbcUpsert.insertPartitions(rows, "patient", failing, batchSize = 2)
-    }
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(_.getMessage.contains("connection lost")), e)
-    assert(PgLiteStore.count("patient") === 0L,
-      "the already-executed batches must roll back with the failed attempt")
-    // the "retry" (here: a fresh run, as Spark's task retry would issue)
-    graft.sink.JdbcUpsert.insertPartitions(rows, "patient",
-      () => PgLiteStore.connect(), batchSize = 2)
-    assert(PgLiteStore.count("patient") === 8L, "exactly one copy after retry")
-  }
 }

@@ -1,9 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.ExecutedPlans.{executionsOf, isExchange, pathTo}
+import graft.runtime.{PgLiteConnector, PgLiteStore, StmtCollector, StmtCollectorConnector}
 
 /** End-to-end CDC sync over MemoryStream: inserts, version-gated updates,
   * tombstone deletes, within-batch version races, and idempotent replay —
@@ -91,30 +95,68 @@ class IncrementalSyncSpec extends AnyFunSuite {
   test("applyJdbc routes a micro-batch into the three JDBC statement shapes") {
     val spark2 = spark
     import spark2.implicits._
-    graft.runtime.StmtCollector.clear()
-    val connect = () => ((s: String) => graft.runtime.StmtCollector.add(s), () => ())
-    val snapshot = Seq((7, "upd", 1L), (8, "del", 1L))
+    StmtCollector.clear()
+    val snapshot = Seq((7, "upd", 1L), (8, "del", 1L), (9, "same", 1L))
       .toDF("pk_id", "resource_id", "version_id")
     val batch = Seq(
       ("new", 1L, "payload-new"),
       ("upd", 2L, "payload-upd"),
-      ("del", 2L, null.asInstanceOf[String]))
+      ("del", 2L, null.asInstanceOf[String]),
+      ("same", 1L, "payload-noop"))
       .toDF("resource_id", "version_id", "resource")
-    IncrementalSync.applyJdbc("patient", connect)(
-      IncrementalSync.classifyCdc(batch, snapshot))
-    val stmts = graft.runtime.StmtCollector.snapshot()
+    val apply = IncrementalSync.applyJdbc("patient",
+      Map("connector" -> classOf[StmtCollectorConnector].getName))
+    val (_, executions) = executionsOf(spark)(
+      apply(IncrementalSync.classifyCdc(batch, snapshot)))
+    // one micro-batch, one SQL execution: the graft-jdbc-upsert append
+    assert(executions.size === 1,
+      s"expected the write alone, got ${executions.map(_.executedPlan.nodeName)}")
+    // the snapshot is read before any write: its scan reaches the join
+    // through an Exchange (shuffle or broadcast)
+    val plan = executions.head.executedPlan
+    val join = pathTo(plan)(_.isInstanceOf[BaseJoinExec]).map(_.last)
+    assert(join.isDefined, s"no join in\n$plan")
+    val right = join.get.asInstanceOf[BaseJoinExec].right
+    val toSnapshot = pathTo(right)(_.isInstanceOf[LocalTableScanExec])
+    assert(toSnapshot.isDefined, s"no snapshot scan on the join's build side:\n$plan")
+    assert(toSnapshot.get.exists(isExchange), s"the snapshot scan feeds the join directly:\n$plan")
+    val stmts = StmtCollector.snapshot()
     assert(stmts.exists(s => s.startsWith("INSERT INTO patient") &&
       s.contains("payload-new")), stmts.mkString("\n"))
     assert(stmts.exists(s => s.startsWith("UPDATE patient") &&
       s.contains("payload-upd") && s.contains("(7,")), stmts.mkString("\n"))
     assert(stmts.exists(s => s.startsWith("DELETE FROM patient") &&
       s.contains("8")), stmts.mkString("\n"))
-    // each non-empty partition wraps its batches in BEGIN…COMMIT (the
-    // sink's task-retry atomicity); the data statements stay 1:1 per action
+    // each writing task wraps its statements in BEGIN…COMMIT (the sink's
+    // task-retry atomicity); the data statements stay 1:1 per action
     val data = stmts.filterNot(s => s == "BEGIN" || s == "COMMIT")
     assert(data.size === 3, s"exactly one data statement per action: $stmts")
     assert(stmts.count(_ == "BEGIN") === stmts.count(_ == "COMMIT"),
       s"unbalanced transactions: $stmts")
+  }
+
+  test("a live stream applies each micro-batch through applyJdbc") {
+    val spark2 = spark
+    import spark2.implicits._
+    PgLiteStore.clear()
+    def json(id: String, v: Long) = s"""{"id":"$id","meta":{"versionId":"$v"}}"""
+    val input = MemoryStream[Change](spark2)
+    val ckpt = java.nio.file.Files.createTempDirectory("incsync-v2").toString
+    // each micro-batch classifies against the live store, then writes it
+    val q = IncrementalSync.run(input.toDF(), ckpt,
+      s => PgLiteStore.snapshot(s)("patient"),
+      IncrementalSync.applyJdbc("patient",
+        Map("connector" -> classOf[PgLiteConnector].getName)))
+    try {
+      input.addData(Change("a", 1L, json("a", 1)), Change("b", 1L, json("b", 1)))
+      q.processAllAvailable()
+      assert(PgLiteStore.rows("patient").values.toSet === Set(json("a", 1), json("b", 1)))
+      // update a, tombstone b, insert c
+      input.addData(Change("a", 2L, json("a", 2)), Change("b", 2L, null),
+        Change("c", 1L, json("c", 1)))
+      q.processAllAvailable()
+      assert(PgLiteStore.rows("patient").values.toSet === Set(json("a", 2), json("c", 1)))
+    } finally q.stop()
   }
 
   test("Trigger.AvailableNow drains pending changes and terminates (daily-cron CDC mode)") {
