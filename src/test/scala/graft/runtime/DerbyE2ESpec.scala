@@ -257,6 +257,55 @@ class DerbyE2ESpec extends AnyFunSuite {
     }
   }
 
+  test("a mid-partition failure rolls back in the real engine; the retry writes exactly once") {
+    DerbyTarget.reset()
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = (0 until 8).map(i => ("insert", Option.empty[Int],
+        s"""{"id":"x$i","meta":{"versionId":"1"}}"""))
+      .toDF("action", "pk_id", "resource").coalesce(1)
+    def write(connector: String) = rows.write.format("graft-jdbc-upsert")
+      .option("table", "patient")
+      .options(gated)
+      .option("connector", connector)
+      .option("batchsize", "2")
+      .mode("append")
+      .save()
+    // batchsize 2 -> four INSERT statements in the one partition; the
+    // connection dies on the second, AFTER the first already executed
+    // inside the open Derby transaction
+    val e = intercept[Exception](write(classOf[FailingDerbyConnector].getName))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
+    assert(DerbyTarget.count("patient") === 0L,
+      "Derby must roll the uncommitted batches back with the failed attempt")
+    write(classOf[GatedDerbyConnector].getName)
+    assert(DerbyTarget.count("patient") === 8L, "exactly one copy after retry")
+    assert(DerbyTarget.rows("patient").values.toSet ===
+      (0 until 8).map(i => s"""{"id":"x$i","meta":{"versionId":"1"}}""").toSet)
+  }
+
+  test("V2 write path over real JDBC: sync -> no-op -> heal through one declarative write") {
+    DerbyTarget.reset()
+    sync().foreach { r =>
+      assert(r.inserts === 23 && r.updates === 0 && r.deletes === 0, r)
+      assert(r.reconciled, s"post-write count must equal source: $r")
+    }
+    sync().foreach { r =>
+      assert(r.inserts === 0 && r.updates === 0 && r.deletes === 0, r)
+    }
+    val byJson = DerbyTarget.rows("patient")
+    val staleId = byJson.collectFirst { case (id, j) if j.contains(""""id":"r5"""") => id }.get
+    DerbyTarget.execute(s"UPDATE patient SET resource = " +
+      s"'{\"id\":\"r5\",\"meta\":{\"versionId\":\"999\"}}' WHERE id = $staleId")
+    DerbyTarget.execute(
+      "INSERT INTO patient (resource) VALUES ('{\"id\":\"zzz\",\"meta\":{\"versionId\":\"1\"}}')")
+    val patient = sync().find(_.resourceType == "Patient").get
+    assert(patient.inserts === 0 && patient.updates === 1 && patient.deletes === 1,
+      s"one V2 healing run must fix both corruptions: $patient")
+    assert(patient.reconciled)
+  }
+
   /** One Patient sync through the V2 path against the Derby mirror. */
   private def syncPatientV2(fetcher: String = classOf[graft.source.v2.FixtureFetcher].getName,
                             options: Map[String, String] = Map.empty) =
@@ -401,14 +450,6 @@ class DerbyE2ESpec extends AnyFunSuite {
       .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
     assert(DerbyTarget.count("patient") === 0L,
       "the executed batch must roll back when the V2 task aborts")
-    // the retry: the same rows through a healthy connector land once
-    rows.write.format("graft-jdbc-upsert")
-      .option("table", "patient")
-      .options(gated)
-      .option("batchsize", "2")
-      .mode("append")
-      .save()
-    assert(DerbyTarget.count("patient") === 8L, "exactly one copy after retry")
   }
 
   test("genuinely CONCURRENT partition writers commit independently (V2, real engine)") {

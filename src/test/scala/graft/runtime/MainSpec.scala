@@ -6,6 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.source.BlazeSource
 
 /** Wiring tests for the composed daemon (reference `src/main.rs:343-411`)
   * and the default four-type sync.
@@ -128,6 +129,28 @@ class MainSpec extends AnyFunSuite {
         sleep = _ => ())
     }
     assert(e.getMessage.contains("connection to Blaze"))
+  }
+
+  test("syncOneV2 scans the source exactly once (the counts ride the write)") {
+    val spark2 = spark
+    import spark2.implicits._
+    val acc = spark.sparkContext.longAccumulator("source-scans")
+    val raw = BlazeSource.parsePages(spark,
+      Seq(bundle(Seq(res("a", 1), res("b", 2), res("c", 3)))))
+    // every evaluation of the source relation bumps the accumulator once per row
+    val counted = raw.as[String].map { r => acc.add(1); r }.toDF("resource")
+
+    val snapshot = spark.createDataFrame(Seq(
+      (10, "b", 1L), (12, "d", 9L))).toDF("pk_id", "resource_id", "version_id")
+    StmtCollector.clear()
+    val result = SyncPipeline.syncOneV2(spark, "Patient", counted, snapshot,
+      Map("connector" -> classOf[StmtCollectorConnector].getName), _ => 3L)
+
+    assert(result.inserts === 2 && result.updates === 1 && result.deletes === 1)
+    assert(result.sourceTotal === 3 && result.reconciled)
+    // 3 rows, 1 evaluation: the counts are observed on the write's own
+    // plan, so no count job re-runs the scan
+    assert(acc.value === 3L)
   }
 
   test("runSync over the DSv2 blaze source: executor-side pages feed all four types") {

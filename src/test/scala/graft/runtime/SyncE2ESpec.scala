@@ -162,6 +162,23 @@ class PgLiteConnector extends graft.sink.v2.UpsertConnector {
     PgLiteStore.connect()
 }
 
+/** Dies on its 3rd real statement, AFTER two already executed inside the
+  * open transaction.
+  */
+class FailingPgLiteConnector extends graft.sink.v2.UpsertConnector {
+  override def connect(options: Map[String, String]): (String => Unit, () => Unit) = {
+    val (exec, close) = PgLiteStore.connect()
+    var stmts = 0
+    ((s: String) => {
+      if (s != "BEGIN" && s != "COMMIT") {
+        stmts += 1
+        if (stmts == 3) throw new RuntimeException("connection lost mid-partition")
+      }
+      exec(s)
+    }, close)
+  }
+}
+
 /** End-to-end self-healing contract (reference `src/main.rs:159-175`):
   * sync into an empty target, prove the SECOND run is a no-op, corrupt
   * the target three ways (drop a row, stale a version, add an alien
@@ -232,5 +249,30 @@ class SyncE2ESpec extends AnyFunSuite {
       assert(r.inserts === 0 && r.updates === 0 && r.deletes === 0,
         s"post-heal sync must be a no-op: $r")
     }
+  }
+
+  test("a mid-partition failure commits nothing; the retry writes exactly once") {
+    PgLiteStore.clear()
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = (0 until 8).map(i => ("insert", Option.empty[Int],
+        s"""{"id":"x$i","meta":{"versionId":"1"}}"""))
+      .toDF("action", "pk_id", "resource").coalesce(1)
+    def write(connector: String) = rows.write.format("graft-jdbc-upsert")
+      .option("table", "patient")
+      .option("connector", connector)
+      .option("batchsize", "2")
+      .mode("append")
+      .save()
+    // batchsize 2 -> four INSERT statements in the one partition; the
+    // connection dies on the third, AFTER two statements already executed
+    val e = intercept[Exception](write(classOf[FailingPgLiteConnector].getName))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("connection lost")), e)
+    assert(PgLiteStore.count("patient") === 0L,
+      "the already-executed batches must roll back with the failed attempt")
+    // the "retry" (here: a fresh write, as Spark's task retry would issue)
+    write(classOf[PgLiteConnector].getName)
+    assert(PgLiteStore.count("patient") === 8L, "exactly one copy after retry")
   }
 }
