@@ -159,6 +159,9 @@ object Behavioral {
       .select(col("user_id"), expr(graft.util.SqlArith.floorDiv("unix_micros(ts)", 86400000000L)).as("day"))
       .groupBy("user_id").agg(min("day").as("day"))
     firstDay.groupBy("day").agg(count(lit(1)).as("n_new"))
+      // unpartitioned window: one task holds the whole input, which has
+      // one row per distinct event day (365 per year of data), whatever
+      // the number of events or users
       .withColumn("cum_users",
         sum("n_new").over(Window.orderBy("day")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1103,6 +1106,9 @@ object Behavioral {
     val days = users.groupBy("d")
       .agg(count(lit(1)).as("n_leave"),
         sum(when(!col("censored"), 1L).otherwise(0L)).as("n_churn"))
+    // both windows below are unpartitioned: one task holds all of `days`,
+    // which has one row per distinct lifetime d in days — at most the
+    // day span of the events table plus one, whatever the user count
     val w = Window.orderBy("d")
       .rowsBetween(Window.unboundedPreceding, -1)
     days.crossJoin(broadcast(total))

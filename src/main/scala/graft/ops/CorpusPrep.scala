@@ -1374,7 +1374,11 @@ object CorpusPrep {
 
   private val q322: Q = (s, dir) => {
     import s.implicits._
+    // a NULL text has no tokens (DuckDB's string_split(NULL) adds none);
+    // unfiltered, the local kernel throws on it and the distributed
+    // stats pass counts a phantom NULL token
     val words = Tables.spread(Tables.documents(s, dir))
+      .where(col("text").isNotNull)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
     val localMax = graft.util.NumericOption.long(
       "spark.graft.bpe.localTokenThreshold",

@@ -3492,6 +3492,8 @@ object Similarity {
     */
   private[ops] def boruvkaMsf(und0: DataFrame,
       maxRounds: Int = BoruvkaRounds): DataFrame = {
+    val threshold = graft.util.NumericOption.long("spark.graft.msf.localEdgeThreshold",
+      und0.sparkSession.conf.getOption("spark.graft.msf.localEdgeThreshold"), 250000L, min = 0L)
     val und = graft.util.QueryCaches.tracked(und0)
     // ADAPTIVE small-graph path (r13 optimization; the exact philosophy
     // [[TextDedup.connectedComponents]] ships and the round-12 verdict
@@ -3505,8 +3507,6 @@ object Similarity {
     // above it the distributed Borůvka loop scales unbounded. The count
     // is one bounded job against the tracked cache the first round would
     // otherwise materialize.
-    val threshold = und.sparkSession.conf
-      .get("spark.graft.msf.localEdgeThreshold", "250000").toLong
     if (threshold > 0 && und.count() <= threshold) {
       val edges = und.select(col("a"), col("b"), col("dist_q")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

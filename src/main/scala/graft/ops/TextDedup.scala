@@ -1426,6 +1426,8 @@ object TextDedup {
     */
   private[graft] def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val threshold = graft.util.NumericOption.long("spark.graft.cc.localEdgeThreshold",
+      edges.sparkSession.conf.getOption("spark.graft.cc.localEdgeThreshold"), 250000L, min = 0L)
     // The edge relation is consumed twice by symmetrization; persist so an
     // expensive upstream (e.g. the full LSH pipeline) runs once, not twice.
     val e = edges.persist(MEMORY_AND_DISK)
@@ -1437,8 +1439,6 @@ object TextDedup {
     // two boxed longs) plus ~80 B/node in the union-find map — the 250k
     // default keeps the transient under ~50 MB, comparable to a broadcast
     // side. Above the threshold the distributed loop scales unbounded.
-    val threshold = e.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", "250000").toLong
     val edgeCount = e.count()
     if (edgeCount <= threshold) {
       val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))

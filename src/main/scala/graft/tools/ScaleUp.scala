@@ -50,8 +50,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def tbl(name: String): DataFrame =
-      spark.read.parquet(s"$srcDir/$name.parquet")
+    def tbl(name: String): DataFrame = graft.source.Tables.load(spark, srcDir, name)
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dstDir/$name.parquet")
 

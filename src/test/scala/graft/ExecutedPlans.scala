@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec,
@@ -10,10 +11,34 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Test probes over the SQL executions an action runs and their executed
-  * physical plans (AQE stages included).
+/** Test probes over the Spark jobs and SQL executions a call runs, and
+  * their executed physical plans (AQE stages included).
   */
 object ExecutedPlans {
+
+  /** The number of Spark jobs `body` starts, after it has run. The
+    * listener bus is FIFO: once a marker job started after `body` has
+    * been delivered, so has every job `body` started.
+    */
+  def jobsOf[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val Marker = "graft.test.marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(Option(e.properties.getProperty(Marker)).getOrElse("")); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      spark.sparkContext.setLocalProperty(Marker, "end")
+      try spark.range(1).collect() finally spark.sparkContext.setLocalProperty(Marker, null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("end"), "the listener bus never delivered the marker")
+      (out, jobs.size - 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   /** Every SQL execution `body` runs, after it has run. The listener bus is
     * FIFO: once a marker execution started after `body` has been

@@ -102,35 +102,19 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("truncateLazy with a checkpoint dir: no job at call time, reliable files after an action") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-lazy").toString
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.add(Option(e.properties.getProperty("graft.test.marker")).getOrElse("")); ()
-      }
-    }
     spark.conf.set("spark.graft.checkpointDir", dir)
-    spark.sparkContext.addSparkListener(listener)
     try {
       graft.util.Lineage.lastWasReliable = false
-      val cut = graft.util.Lineage.truncateLazy(spark.range(100).toDF("id"))
+      val (cut, jobs) = graft.ExecutedPlans.jobsOf(spark)(
+        graft.util.Lineage.truncateLazy(spark.range(100).toDF("id")))
       assert(graft.util.Lineage.lastWasReliable)
-      // a marker job after the call: the listener bus is FIFO, so once it
-      // arrives every job the call started has arrived before it
-      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
-      try spark.range(1).collect() finally
-        spark.sparkContext.setLocalProperty("graft.test.marker", null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains("1") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.toArray.toSeq === Seq("1"), "truncateLazy must not run a job")
+      assert(jobs === 0, "truncateLazy must not run a job")
       assert(cut.count() === 100L)
       val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       val nFiles = try stream.filter(java.nio.file.Files.isRegularFile(_)).count()
                    finally stream.close()
       assert(nFiles > 0, s"expected reliable checkpoint files under $dir")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.unset("spark.graft.checkpointDir")
-    }
+    } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
   test("q233/q237 iterative rounds checkpoint RELIABLY when spark.graft.checkpointDir is set") {

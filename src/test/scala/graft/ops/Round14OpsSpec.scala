@@ -13,8 +13,9 @@ import graft.SparkTestSession
   * these pins: threshold 0 forces it, and its output must be
   * value-identical to the local kernel — on the real sf0.001 corpus, on
   * a crafted pair-exhausting corpus that exercises the NULL-rule no-op
-  * rounds both engines must degrade to identically, and on a non-BMP
-  * corpus whose count tie only code-point order breaks the same way.
+  * rounds both engines must degrade to identically, on a non-BMP
+  * corpus whose count tie only code-point order breaks the same way, and
+  * on a corpus with a NULL-text document, which must count no tokens.
   */
 class Round14OpsSpec extends AnyFunSuite {
 
@@ -88,6 +89,33 @@ class Round14OpsSpec extends AnyFunSuite {
         assert(e.getMessage.contains(Thresh) && e.getMessage.contains(s"'$bad'"),
           e.getMessage)
       } finally spark.conf.unset(Thresh)
+    }
+  }
+
+  test("q322: a NULL-text document adds no tokens on either path") {
+    // DuckDB's string_split(NULL) yields no tokens; the local kernel must
+    // not throw on it and the distributed pass must not count it
+    val docs = Seq((1L, "a b a b"), (2L, "b c"))
+    assert(bothPathsAgree(docs :+ ((3L, null))) === bothPathsAgree(docs))
+  }
+
+  test("a bad localEdgeThreshold fails before any job, naming the key") {
+    val s = spark
+    import s.implicits._
+    val und = Seq((1L, 2L, 1L)).toDF("a", "b", "dist_q")
+    val kernels = Seq[(String, () => Any)](
+      "spark.graft.cc.localEdgeThreshold" ->
+        (() => TextDedup.connectedComponents(und.select("a", "b"))),
+      "spark.graft.msf.localEdgeThreshold" -> (() => Similarity.boruvkaMsf(und)))
+    for ((key, run) <- kernels; bad <- Seq("2.5e5", "-1")) {
+      spark.conf.set(key, bad)
+      try {
+        val (e, jobs) = graft.ExecutedPlans.jobsOf(spark)(
+          intercept[IllegalArgumentException](run()))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+        assert(jobs === 0)
+      } finally spark.conf.unset(key)
     }
   }
 
