@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.NumericOption
 
 /** Benchmark entrypoint. Protocol (VERDICT round-1 item 4 — measurement
   * hygiene on a noisy shared host, see also `graft.tools.Probe`):
@@ -21,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   *    deflate) the total.
   */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
+  /** The middle sample; the mean of the two middle ones for an even count. */
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
@@ -47,18 +49,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // saveAsTable targets (GramPostings) must never land in the repo cwd
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val reps = timedPasses()
+    val spark = GraftSession.local(GraftSession.cores(default = 32))
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val names = SparkEntry.queries.keys.toSeq
@@ -195,6 +187,28 @@ object Bench {
   private[graft] def warmupFraction(reps: Int): Double =
     if (reps <= 1) 0.7 else 0.4
 
+  /** Timed whole-suite passes: `SPARK_GRAFT_BENCH_REPS`, default 3. Zero
+    * passes would report a total of 0 with every query failed, so any
+    * value below 1 fails naming the key.
+    */
+  private[graft] def timedPasses(env: Map[String, String] = sys.env): Int =
+    NumericOption.int("SPARK_GRAFT_BENCH_REPS", env.get("SPARK_GRAFT_BENCH_REPS"), 3, min = 1)
+
+  /** JSON string escaping — backslash, quote, and the entire control range
+    * (an exception message or builder-authored SQL can carry any byte; a
+    * stray control char must not corrupt the one-line protocol or the
+    * oracle file `Verify` writes).
+    */
+  private[graft] def esc(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
   private[graft] def summaryLine(results: Map[String, Double],
                                  errors: collection.Map[String, String],
                                  reps: Int, sfDir: String,
@@ -204,18 +218,6 @@ object Bench {
     val qs = headline.flatMap(k => results.get(k).map(v => s"\"$k\":${ms3(v)}"))
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    // Full JSON string escaping — backslash, quote, and the entire control
-    // range (an exception message can carry any byte; a stray control char
-    // must not corrupt the one-line protocol).
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errJson =
       if (errors.isEmpty) ""
       else {

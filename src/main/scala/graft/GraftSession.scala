@@ -1,45 +1,65 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.NumericOption
 
-/** Standard session factory for the graft engine.
+/** The one session factory of the engine: every entry point in `src/main`
+  * and `src/test` gets its `SparkSession` here (`DocConsistencySpec` fails
+  * on any other `builder()` call), so the settings below cannot drift
+  * between the bench, the correctness dump, the dev tools, the daemon and
+  * the tests.
   *
-  * Tuned for the test rig (single JVM, `local[32]`) but every setting is the
-  * one we would ship to a 1000-executor cluster too: AQE re-plans shuffles at
-  * runtime (skew joins, coalescing), shuffle partitions sized to the
-  * parallelism at hand rather than the 200 default, UTC everywhere.
+  *  - `GraftExtensions` registers `cosine_sim` and `pq_assign`, which
+  *    declared queries call by name;
+  *  - `spark.sql.session.timeZone=UTC`: timestamp parsing, `date_trunc`
+  *    and day windows must not follow the host's zone (`Tables.events`
+  *    reads `ts` as a UTC instant), and the DuckDB oracles assume UTC.
+  *
+  * Nothing else is set: AQE with partition coalescing and skew-join
+  * splitting is on by default in Spark 4.1, and parquet timestamps keep
+  * Spark's default output type.
+  *
+  * Why `InferFiltersFromGenerate` stays enabled: `OPTIMIZATION_r13.md` §1.
   */
 object GraftSession {
-  /** r13 note — `InferFiltersFromGenerate` was excluded session-wide for
-    * one batch and then RE-ENABLED. The rule copies an explode's
-    * generator expression into an inferred `size(e) > 0` filter; filter
-    * pushdown can carry that copy through projections below (re-inlining
-    * `words = split(text)` into every element access — O(len²)/row,
-    * interpreted) and park it under the spread exchange in a 1-task scan
-    * stage — measured 6.9 s → 0.34 s on the lexical postings build with
-    * the rule off. But the same inferred filters are load-bearing
-    * elsewhere: q43's prefix-join pipeline ran ~2× slower AT sf1 without
-    * them (66 s → 105 s whole-suite, 95 s → 163 s A/B). The durable fix
-    * is structural: persist the array-producing relation before exploding
-    * it when the array expression is expensive (the cache is a pushdown
-    * barrier), as [[graft.ops.Retrieval.lexicalTop]] and q299 now do.
+
+  /** Base builder: extensions and UTC, no master. The daemon (`runtime.Main`)
+    * adds its app name and takes the master from `spark-submit`.
     */
-  def builder(appName: String = "graft", cores: Int = 32): SparkSession.Builder =
+  def builder(): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
 
-  def local(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+  /** Single-JVM session on `cores` threads.
+    *
+    *  - shuffle partitions = `cores`: the 200 default would schedule
+    *    mostly-empty tasks at these data sizes;
+    *  - UI off: no port to bind and no listener overhead on timed runs;
+    *  - a per-process warehouse under `/tmp`: `saveAsTable` targets
+    *    (`Bucketing.writeBucketed`, `StreamingLshDedup`) never land in the
+    *    working directory, and concurrent runs never share one;
+    *  - log level `ERROR`: Bench's summary line must stay in the last
+    *    2000 characters of output, clear of Spark warnings.
+    */
+  def local(cores: Int): SparkSession = {
+    val s = builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Core count of a launched main: `SPARK_GRAFT_CPUS`, else the caller's
+    * `default`; a value that is not an integer >= 1 fails naming the key.
+    * The test session does not read it and stays at `local[4]`: the test
+    * runner exports the host's core count, and tiny test jobs would pay
+    * that many tasks per stage.
+    */
+  def cores(default: Int, env: Map[String, String] = sys.env): Int =
+    NumericOption.int("SPARK_GRAFT_CPUS", env.get("SPARK_GRAFT_CPUS"), default, min = 1)
 }

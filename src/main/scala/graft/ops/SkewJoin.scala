@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Salted equi-join for skewed keys (SURVEY-prompt scale toolkit).
   *
-  * AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on in
-  * [[graft.GraftSession]]) splits oversized SORT-MERGE partitions at
-  * runtime and is the first line of defense. Salting is the explicit
-  * fallback for the cases AQE cannot fix — a hot key inside one partition
-  * of a shuffled HASH join, or a skewed aggregation — and the classic
-  * technique a 100 TB pipeline still reaches for:
+  * AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on by
+  * default in Spark, not set by [[graft.GraftSession]]) splits oversized
+  * SORT-MERGE partitions at runtime and is the first line of defense.
+  * Salting is the explicit fallback for the cases AQE cannot fix — a hot
+  * key inside one partition of a shuffled HASH join, or a skewed
+  * aggregation — and the classic technique a 100 TB pipeline still
+  * reaches for:
   *
   *  - left (skewed, large) side: append a random salt in [0, buckets);
   *  - right (smaller) side: replicate each row once per salt value

@@ -108,11 +108,7 @@ object Main {
       case Right(c) => c
       case Left(err) => System.err.println(err); sys.exit(1)
     }
-    val spark = SparkSession.builder()
-      .appName("graft-fhir2sql")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().appName("graft-fhir2sql").getOrCreate()
 
     checkPgConnection(cfg, probe = () => withConnection(cfg)(_ => ())) match {
       case Left(err) => System.err.println(err); sys.exit(1)

@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Steady-state query timer — the dev companion to [[graft.Bench]] for
-  * chasing scale regressions: `Probe <sfDir> <reps> <name> [name...]`
+/** The one query-inspection tool — the dev companion to [[graft.Bench]]
+  * for chasing scale regressions: `Probe <sfDir> <reps> <name> [name...]`
   * builds the same session Bench does, runs each named query once untimed
   * (JIT + code-cache warm), then `reps` timed passes with the shared
   * caches drained between passes, and prints per-query samples + median.
@@ -11,34 +11,46 @@ import org.apache.spark.sql.SparkSession
   * page cache and phase noise into single samples; regressions should be
   * confirmed here (3+ reps, medians) before being chased.
   *
-  * A single query name also prints its `explain("formatted")` plan before
-  * timing (the plan-audit mode). `SPARK_GRAFT_PROBE_NODRAIN=1` skips the
-  * between-rep cache drain: reps then measure the steady state a
-  * long-lived composed session would see (shared relations stay primed)
-  * instead of the drained per-query Bench protocol.
+  * Modes:
+  *  - `reps = 0` prints each query's `explain("formatted")` plan under a
+  *    `===== <name> =====` header and runs no action (the plan-audit mode;
+  *    a builder that runs jobs while it constructs the DataFrame still
+  *    runs them, so the plan is the final one the action would run);
+  *  - `SPARK_GRAFT_PROBE_COUNT=1` adds jobs, stages, tasks and task time
+  *    per timed run, and `SPARK_GRAFT_PROBE_TIMELINE=1` then lists every
+  *    job and stage (the per-stage attribution of a composed query);
+  *  - `SPARK_GRAFT_PROBE_NODRAIN=1` skips the between-rep cache drain:
+  *    reps then measure the steady state a long-lived composed session
+  *    would see (shared relations stay primed) instead of the drained
+  *    per-query Bench protocol.
+  *
+  * Conf experiments go through the launcher, e.g.
+  * `SPARK_GRAFT_EXTRA_OPTS=-Dspark.sql.adaptive.enabled=false
+  * scripts/run_main.sh graft.tools.Probe ...`.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    if (args.length < 3 || args(1).toIntOption.forall(_ < 1)) {
-      System.err.println("usage: Probe <sfDir> <reps>=1 <name> [name...]")
+    if (args.length < 3 || args(1).toIntOption.forall(_ < 0)) {
+      System.err.println("usage: Probe <sfDir> <reps>=0 <name> [name...]")
       sys.exit(64)
     }
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
+    val spark = graft.GraftSession.local(graft.GraftSession.cores(default = 32))
+    if (reps == 0) plans(spark, sfDir, names) else timed(spark, sfDir, reps, names)
+    spark.stop()
+  }
+
+  private def plans(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
+    names.foreach { n =>
+      println(s"===== $n =====")
+      try graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      finally graft.util.QueryCaches.drain()
+    }
+
+  private def timed(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String]): Unit = {
     val drain = !sys.env.get("SPARK_GRAFT_PROBE_NODRAIN").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // saveAsTable targets (GramPostings) must never land in the repo cwd
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // Headless substitute for the Spark UI's Jobs/Stages pages: count the
     // jobs, stages, and tasks each run schedules and sum executor task
     // time. jobs×fixed-scheduling-cost dominating wall-clock identifies
@@ -109,24 +121,16 @@ object Probe {
       }
       r
     }
-    // Upper median for odd reps; mean of the two middle samples for even.
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    if (names.size == 1)
-      graft.SparkEntry.queries(names.head)(spark, sfDir).explain("formatted")
     val counted = sys.env.get("SPARK_GRAFT_PROBE_COUNT").contains("1")
     names.foreach { n =>
       once(n) // warmup
       val rs = (1 to reps).map(_ => if (counted) onceCounted(n) else once(n))
       val ts = rs.map(_._1)
-      println(f"[probe] $n%-28s median=${median(ts)}%8.3f s  rows=${rs.head._2}  samples=${
+      println(f"[probe] $n%-28s median=${graft.Bench.median(ts)}%8.3f s  rows=${rs.head._2}  samples=${
         ts.map(t => f"$t%.3f").mkString(", ")}" + (if (drain) "" else " (nodrain)"))
     }
     graft.Bench.calibrateOnce(spark) // probe JIT warm
-    val calib = median((1 to 3).map(_ => graft.Bench.calibrateOnce(spark)))
+    val calib = graft.Bench.median((1 to 3).map(_ => graft.Bench.calibrateOnce(spark)))
     println(f"[probe] calib: $calib%.3f s")
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic corpus scale-up: replicate an existing test SF `factor`×
@@ -38,17 +38,16 @@ object ScaleUp {
       per: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until factor).map(r => per(base, r)).reduce(_.unionByName(_))
 
+  /** The `<factor>` argument: an integer >= 1 (zero replicas would union
+    * nothing), else it fails naming the argument and the value.
+    */
+  private[graft] def replicas(factor: String): Int =
+    graft.util.NumericOption.int("factor", Some(factor), 1, min = 1)
+
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, factorS) = args
-    val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val factor = replicas(factorS)
+    val spark = graft.GraftSession.local(graft.GraftSession.cores(default = 32))
 
     def tbl(name: String): DataFrame = graft.source.Tables.load(spark, srcDir, name)
     def write(df: DataFrame, name: String): Unit =

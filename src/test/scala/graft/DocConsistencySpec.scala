@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * hand-maintained: README's inventory pointer and SURVEY §8's header
   * must state the actual registry size, and queries/oracleSql must stay
   * key-identical (every declared query has its DuckDB twin). Also pins
-  * `Tables.load` as the one parquet reader of `src/main`.
+  * `Tables.load` as the one parquet reader of `src/main` and
+  * `GraftSession` as the one session factory of `src/main` and `src/test`.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -24,17 +25,30 @@ class DocConsistencySpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
   }
 
+  /** `.scala` files under `roots`, other than `allowed`, whose text matches `re`. */
+  private def sourcesMatching(roots: Seq[String], allowed: String, re: String): Seq[String] =
+    roots.flatMap { r =>
+      val stream = Files.walk(Paths.get(r))
+      try stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !p.endsWith(allowed))
+        .filter(p => re.r.findFirstIn(read(p.toString)).isDefined)
+        .map(_.toString).toSeq
+      finally stream.close()
+    }.sorted
+
   test("src/main reads parquet only through source/Tables.scala") {
     // a loader of its own would skip Tables.load's schema catalog and pay
     // a schema-inference job on every call
-    val root = Paths.get("src/main")
-    val stream = Files.walk(root)
-    val readers = try stream.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/source/Tables.scala"))
-      .filter(p => """read\s*\.\s*parquet\s*\(""".r.findFirstIn(read(p.toString)).isDefined)
-      .map(root.relativize(_).toString).toSeq.sorted
-      finally stream.close()
+    val readers = sourcesMatching(Seq("src/main"), "graft/source/Tables.scala",
+      """read\s*\.\s*parquet\s*\(""")
     assert(readers.isEmpty, s"read.parquet( outside source/Tables.scala: $readers")
+  }
+
+  test("src/main and src/test build sessions only through GraftSession.scala") {
+    // a builder of its own drifts from the factory's settings
+    val builders = sourcesMatching(Seq("src/main", "src/test"), "graft/GraftSession.scala",
+      """SparkSession\s*\.\s*builder\b""")
+    assert(builders.isEmpty, s"session builders outside GraftSession.scala: $builders")
   }
 
   test("README states the registry's actual query count") {

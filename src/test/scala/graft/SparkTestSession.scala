@@ -2,22 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test run (forked JVM). Small core and
-  * shuffle-partition counts keep 6-row test jobs from paying 32-task
-  * scheduling overhead.
+/** One shared session for the whole test run (forked JVM). A fixed
+  * `local[4]` with 4 shuffle partitions, not `SPARK_GRAFT_CPUS`: 6-row test
+  * jobs must not pay one task per host core on every stage.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
