@@ -60,11 +60,13 @@ object Reconcile {
 
   /** Classify source vs target. Expects
     * `source(resource_id, version_id, ...)` and
-    * `target(resource_id, version_id, ...)`; any extra columns are carried
-    * through with `s_`/`t_` disambiguation only where names collide.
+    * `target(resource_id, version_id, ...)`; only those two columns of
+    * each side are read.
     *
-    * Returns one row per distinct resource_id on either side with columns
-    * `(resource_id, src_version, tgt_version, action)`.
+    * Returns one row per distinct resource_id on either side with exactly
+    * the columns `(resource_id, src_version, tgt_version, action)`.
+    * [[graft.runtime.SyncPipeline.classifyWithPayloads]] is the form that
+    * also carries the payloads a write needs.
     */
   def classify(source: DataFrame, target: DataFrame): DataFrame = {
     val s = source.select(

@@ -1258,30 +1258,28 @@ object CorpusPrep {
     * exhausts its A ≠ B pairs before the budget, both engines degrade
     * identically to NULL-rule no-op rounds — never a row-count drift.
     *
-    * Scale shape (r14 restructure, guide §2.4 actions-per-iteration):
-    * ONE distributed aggregation action per round — a single
+    * Scale shape: at or below the fixed [[BpeLocalTokenBound]] total
+    * tokens the whole loop runs in one driver-local kernel
+    * ([[bpeTrainLocal]]) after a single corpus collect. Above it the
+    * distributed loop runs ONE aggregation action per round: a single
     * per-position explode of the corpus (token, next-token-or-null)
-    * feeds pair counts, the argmax rule, the post-merge token total AND
-    * the vocabulary size in the same two-level map-side-combinable
-    * aggregation, so the former separate accounting pass per round is
-    * gone (pass k over corpus state k−1 returns round k−1's accounting
-    * plus round k's rule; 33 passes replace 64). The corpus never pays
-    * a per-round SCHEDULING action: each rewrite (the collected 1-row
-    * rule inlined as literals — the same driver-bounded state the
-    * former broadcast held) is a LAZY lineage truncation
-    * ([[graft.util.Lineage.truncateLazy]]) whose blocks the next stats
-    * pass materializes inside its own job — 32 eager truncation actions
-    * become 0. Below
-    * `spark.graft.bpe.localTokenThreshold` total tokens (default 1M ≈
-    * tens of MB collected — the [[Similarity]] boruvkaMsf /
-    * connectedComponents bounded-hybrid discipline) the whole loop runs
-    * in one driver-local kernel ([[bpeTrainLocal]], the plain-Scala
-    * replay the spec pins against the distributed path) after a single
-    * corpus collect; the distributed loop above the threshold is
-    * unchanged and spec-pinned via threshold 0. The oracle unrolls the
-    * same 32-round fold CTE-for-CTE (q309's unrolled-fold style).
+    * feeds pair counts, the argmax rule, the post-merge token total and
+    * the vocabulary size in one two-level map-side-combinable
+    * aggregation (pass k over corpus state k−1 returns round k−1's
+    * accounting plus round k's rule: 33 passes). Each rewrite (the
+    * collected 1-row rule inlined as literals) is a LAZY lineage
+    * truncation ([[graft.util.Lineage.truncateLazy]]) whose blocks the
+    * next stats pass materializes inside its own job, so rewrites
+    * schedule nothing. Specs pin the two paths equal through
+    * [[q322Distributed]]. The oracle unrolls the same 32-round fold
+    * CTE-for-CTE (q309's unrolled-fold style).
     */
   private val BpeMerges = 32
+
+  /** Largest corpus, in tokens, q322 trains on the driver (tens of MB). */
+  private val BpeLocalTokenBound = 1000000L
+
+  private[graft] type BpeCurve = Seq[(Option[(String, String, Long)], Long, Long)]
 
   /** One closed-form BPE rewrite of token array `w` under rule
     * (`pa`, `pb`) — the same non-overlapping match replacement as the
@@ -1328,7 +1326,7 @@ object CorpusPrep {
     * engines' dataflow forms.
     */
   private[graft] def bpeTrainLocal(docs0: Array[Array[String]],
-      merges: Int): Seq[(Option[(String, String, Long)], Long, Long)] = {
+      merges: Int): BpeCurve = {
     var docs = docs0
     (1 to merges).map { _ =>
       val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
@@ -1372,86 +1370,98 @@ object CorpusPrep {
     }
   }
 
-  private val q322: Q = (s, dir) => {
-    import s.implicits._
-    // a NULL text has no tokens (DuckDB's string_split(NULL) adds none);
-    // unfiltered, the local kernel throws on it and the distributed
-    // stats pass counts a phantom NULL token
-    val words = Tables.spread(Tables.documents(s, dir))
+  // a NULL text has no tokens (DuckDB's string_split(NULL) adds none);
+  // unfiltered, the local kernel throws on it and the distributed stats
+  // pass counts a phantom NULL token
+  private def bpeWords(s: SparkSession, dir: String): DataFrame =
+    Tables.spread(Tables.documents(s, dir))
       .where(col("text").isNotNull)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-    val localMax = graft.util.NumericOption.long(
-      "spark.graft.bpe.localTokenThreshold",
-      s.conf.getOption("spark.graft.bpe.localTokenThreshold"), 1000000L, min = 0L)
-    // one bounded sizing action (the boruvkaMsf adaptivity pattern): the
-    // first stats pass / the collect would scan the corpus once anyway
-    val nTok0 = words.agg(coalesce(sum(size(col("w"))), lit(0L)))
-      .head().getLong(0)
-    val steps: Seq[(Option[(String, String, Long)], Long, Long)] =
-      if (nTok0 <= localMax) {
-        bpeTrainLocal(words.select("w").as[Seq[String]].collect()
-          .map(_.toArray), BpeMerges)
-      } else {
-        // distributed loop: each round's rewrite is a LAZY truncation
-        // ([[graft.util.Lineage.truncateLazy]]) over the previous round
-        // — the plan cuts to a flat LogicalRDD immediately (per-round
-        // caches instead nest the cached plan per level and the
-        // AQE/listener plan strings grow geometrically — measured OOM at
-        // 32 rounds), but nothing schedules: round k's stats pass
-        // materializes round k's blocks inside its own job. The rewrite
-        // MUST read a materialized attribute: folding the collected
-        // rules into one nested expression instead re-evaluates the
-        // whole fold inside every element_at (interpreted higher-order
-        // functions have no common-subexpression elimination —
-        // O(len²·K) per row, measured minutes per pass at sf0.1).
-        var docs = graft.util.Lineage.truncateLazy(words)
-        // pass over corpus state j: ONE action returning round j's
-        // accounting (n_tokens = Σc over all positions, vocab = distinct
-        // first-tokens = |g2 groups|) and round j+1's rule (the argmax
-        // over b-non-null A ≠ B pairs, min(struct(-c, a, b)) = count
-        // desc then pair asc — the same tie-break as before)
-        // explode_OUTER: InferFiltersFromGenerate skips outer generates,
-        // so the position array is built ONCE per row instead of twice
-        // (the inferred size()>0 filter re-evaluates the generator
-        // expression — the r13 lexicalTop pathology in miniature);
-        // equivalent because `w` is never empty (split yields ≥1 token
-        // and a rewrite always keeps the merged token), so the outer
-        // null-row branch never fires.
-        def stats(): org.apache.spark.sql.Row = docs
-          .select(explode_outer(bpePosPairs(col("w"))).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy("a").agg(sum("c").as("ca"),
-            min(when(col("b").isNotNull && col("a") =!= col("b"),
-              struct((-col("c")).as("nc"), col("a"), col("b")))).as("pm"))
-          .agg(min("pm").as("m"), sum("ca").as("n_tokens"),
-            count(lit(1)).as("vocab"))
-          .head()
-        val rules = new Array[Option[(String, String, Long)]](BpeMerges + 1)
-        val acct = new Array[(Long, Long)](BpeMerges + 1)
-        for (k <- 1 to BpeMerges) {
-          val r = stats()
-          acct(k - 1) = (r.getLong(1), r.getLong(2))
-          rules(k) =
-            if (r.isNullAt(0)) None
-            else {
-              val m = r.getStruct(0)
-              Some((m.getString(1), m.getString(2), -m.getLong(0)))
-            }
-          rules(k).foreach { case (pa, pb, _) =>
-            docs = graft.util.Lineage.truncateLazy(docs.select(col("doc_id"),
-              bpeRewriteCol(col("w"), pa, pb).as("w")))
-          }
-        }
-        val last = stats()
-        acct(BpeMerges) = (last.getLong(1), last.getLong(2))
-        (1 to BpeMerges).map(k => (rules(k), acct(k)._1, acct(k)._2))
-      }
+
+  private def bpeCurve(s: SparkSession, steps: BpeCurve): DataFrame = {
+    import s.implicits._
     steps.zipWithIndex.map { case ((rule, nt, vc), i) =>
       (i + 1, rule.map(_._1).orNull, rule.map(_._2).orNull,
         rule.map(r => java.lang.Long.valueOf(r._3)).orNull, nt, vc)
     }.toDF("step", "pa", "pb", "pair_count", "n_tokens_after",
       "vocab_after").orderBy("step")
+  }
+
+  private val q322: Q = (s, dir) => {
+    import s.implicits._
+    val words = bpeWords(s, dir)
+    // one bounded sizing action (the boruvkaMsf adaptivity pattern): the
+    // first stats pass / the collect would scan the corpus once anyway
+    val nTok0 = words.agg(coalesce(sum(size(col("w"))), lit(0L)))
+      .head().getLong(0)
+    bpeCurve(s,
+      if (nTok0 <= BpeLocalTokenBound)
+        bpeTrainLocal(words.select("w").as[Seq[String]].collect()
+          .map(_.toArray), BpeMerges)
+      else bpeTrainDistributed(words))
+  }
+
+  /** q322 through the distributed loop at any size (tests pin it equal to
+    * the local kernel, which the correctness scale factors take).
+    */
+  private[graft] def q322Distributed(s: SparkSession, dir: String): DataFrame =
+    bpeCurve(s, bpeTrainDistributed(bpeWords(s, dir)))
+
+  private def bpeTrainDistributed(words: DataFrame): BpeCurve = {
+    // distributed loop: each round's rewrite is a LAZY truncation
+    // ([[graft.util.Lineage.truncateLazy]]) over the previous round
+    // — the plan cuts to a flat LogicalRDD immediately (per-round
+    // caches instead nest the cached plan per level and the
+    // AQE/listener plan strings grow geometrically — measured OOM at
+    // 32 rounds), but nothing schedules: round k's stats pass
+    // materializes round k's blocks inside its own job. The rewrite
+    // MUST read a materialized attribute: folding the collected
+    // rules into one nested expression instead re-evaluates the
+    // whole fold inside every element_at (interpreted higher-order
+    // functions have no common-subexpression elimination —
+    // O(len²·K) per row, measured minutes per pass at sf0.1).
+    var docs = graft.util.Lineage.truncateLazy(words)
+    // pass over corpus state j: ONE action returning round j's
+    // accounting (n_tokens = Σc over all positions, vocab = distinct
+    // first-tokens = |g2 groups|) and round j+1's rule (the argmax
+    // over b-non-null A ≠ B pairs, min(struct(-c, a, b)) = count
+    // desc then pair asc — the same tie-break as before)
+    // explode_OUTER: InferFiltersFromGenerate skips outer generates,
+    // so the position array is built ONCE per row instead of twice
+    // (the inferred size()>0 filter re-evaluates the generator
+    // expression — the r13 lexicalTop pathology in miniature);
+    // equivalent because `w` is never empty (split yields ≥1 token
+    // and a rewrite always keeps the merged token), so the outer
+    // null-row branch never fires.
+    def stats(): org.apache.spark.sql.Row = docs
+      .select(explode_outer(bpePosPairs(col("w"))).as("p"))
+      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(count(lit(1)).as("c"))
+      .groupBy("a").agg(sum("c").as("ca"),
+        min(when(col("b").isNotNull && col("a") =!= col("b"),
+          struct((-col("c")).as("nc"), col("a"), col("b")))).as("pm"))
+      .agg(min("pm").as("m"), sum("ca").as("n_tokens"),
+        count(lit(1)).as("vocab"))
+      .head()
+    val rules = new Array[Option[(String, String, Long)]](BpeMerges + 1)
+    val acct = new Array[(Long, Long)](BpeMerges + 1)
+    for (k <- 1 to BpeMerges) {
+      val r = stats()
+      acct(k - 1) = (r.getLong(1), r.getLong(2))
+      rules(k) =
+        if (r.isNullAt(0)) None
+        else {
+          val m = r.getStruct(0)
+          Some((m.getString(1), m.getString(2), -m.getLong(0)))
+        }
+      rules(k).foreach { case (pa, pb, _) =>
+        docs = graft.util.Lineage.truncateLazy(docs.select(col("doc_id"),
+          bpeRewriteCol(col("w"), pa, pb).as("w")))
+      }
+    }
+    val last = stats()
+    acct(BpeMerges) = (last.getLong(1), last.getLong(2))
+    (1 to BpeMerges).map(k => (rules(k), acct(k)._1, acct(k)._2))
   }
 
   private val q322Sql: String = {

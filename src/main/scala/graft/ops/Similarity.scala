@@ -3492,46 +3492,32 @@ object Similarity {
     */
   private[ops] def boruvkaMsf(und0: DataFrame,
       maxRounds: Int = BoruvkaRounds): DataFrame = {
-    val threshold = graft.util.NumericOption.long("spark.graft.msf.localEdgeThreshold",
-      und0.sparkSession.conf.getOption("spark.graft.msf.localEdgeThreshold"), 250000L, min = 0L)
     val und = graft.util.QueryCaches.tracked(und0)
-    // ADAPTIVE small-graph path (r13 optimization; the exact philosophy
-    // [[TextDedup.connectedComponents]] ships and the round-12 verdict
-    // graded "broadcast-join philosophy, not a scale trap"): an MSF input
-    // far smaller than the corpus is the common case for the bucketed kNN
-    // edge relations this kernel consumes, and the distributed loop pays
-    // ~5 scheduling actions × ~13 rounds of near-empty jobs to label it.
-    // Below the bounded threshold (~50 MB collected, same sizing argument
-    // as CC's), sort-once Kruskal over a driver-local union-find produces
-    // the IDENTICAL unique MSF (strict total order (dist_q, a, b));
-    // above it the distributed Borůvka loop scales unbounded. The count
-    // is one bounded job against the tracked cache the first round would
-    // otherwise materialize.
-    if (threshold > 0 && und.count() <= threshold) {
+    // ADAPTIVE small-graph path, with CC's fixed bound of
+    // [[graft.util.UnionFind.LocalEdgeBound]] (250 000) edges: the bucketed
+    // kNN inputs are usually far smaller than the corpus, and the
+    // distributed loop pays ~5 scheduling actions × ~13 rounds of
+    // near-empty jobs on them. At or below the bound, sort-once Kruskal
+    // over a driver union-find gives the IDENTICAL unique MSF (strict
+    // total order (dist_q, a, b)); above it Borůvka scales unbounded. The
+    // count materializes the tracked cache the first round would read.
+    if (und.count() <= graft.util.UnionFind.LocalEdgeBound) {
       val edges = und.select(col("a"), col("b"), col("dist_q")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      val kept = edges.sortBy { case (a, b, d) => (d, a, b) }.filter {
-        case (a, b, _) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra == rb) false
-          else {
-            parent.getOrElseUpdate(ra, ra); parent.getOrElseUpdate(rb, rb)
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            true
-          }
-      }
+      val uf = new graft.util.UnionFind
+      val kept = edges.sortBy { case (a, b, d) => (d, a, b) }
+        .filter { case (a, b, _) => uf.union(a, b) }
       val spark = und.sparkSession
       import spark.implicits._
-      return kept.toSeq.toDF("a", "b", "dist_q")
-    }
+      kept.toSeq.toDF("a", "b", "dist_q")
+    } else boruvkaMsfDistributed(und, maxRounds)
+  }
+
+  /** [[boruvkaMsf]]'s Borůvka loop above the local edge bound (tests call
+    * it to pin both paths equal). Reads `und` every round: pass it cached.
+    */
+  private[graft] def boruvkaMsfDistributed(und: DataFrame,
+      maxRounds: Int = BoruvkaRounds): DataFrame = {
     var comp = graft.util.Lineage.truncate(
       und.select(col("a").as("v")).unionByName(und.select(col("b").as("v")))
         .distinct().select(col("v"), col("v").as("c")))

@@ -1426,8 +1426,6 @@ object TextDedup {
     */
   private[graft] def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val threshold = graft.util.NumericOption.long("spark.graft.cc.localEdgeThreshold",
-      edges.sparkSession.conf.getOption("spark.graft.cc.localEdgeThreshold"), 250000L, min = 0L)
     // The edge relation is consumed twice by symmetrization; persist so an
     // expensive upstream (e.g. the full LSH pipeline) runs once, not twice.
     val e = edges.persist(MEMORY_AND_DISK)
@@ -1435,32 +1433,26 @@ object TextDedup {
     // Spark itself collects bounded relations to the driver): a near-dup
     // edge set far smaller than the corpus is the COMMON case, and the
     // iterative loop pays several scheduling rounds of near-empty jobs to
-    // label it. Driver footprint is ~100 B/edge collected (GenericRow +
-    // two boxed longs) plus ~80 B/node in the union-find map — the 250k
-    // default keeps the transient under ~50 MB, comparable to a broadcast
-    // side. Above the threshold the distributed loop scales unbounded.
-    val edgeCount = e.count()
-    if (edgeCount <= threshold) {
+    // label it. At most the fixed [[graft.util.UnionFind.LocalEdgeBound]]
+    // (250 000) edges are collected into a driver union-find; above it the
+    // distributed loop scales unbounded.
+    if (e.count() <= graft.util.UnionFind.LocalEdgeBound) {
       val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
       e.unpersist()
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        // union toward the SMALLER root so the final root IS the min label
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
+      val uf = new graft.util.UnionFind
+      pairs.foreach { case (a, b) => uf.union(a, b) }
       val spark = edges.sparkSession
       import spark.implicits._
-      return parent.keys.toSeq.map(v => (v, find(v))).toDF("doc_id", "label")
-    }
+      uf.labels.toDF("doc_id", "label")
+    } else connectedComponentsDistributed(e, maxIters)
+  }
+
+  /** [[connectedComponents]] above the local edge bound (tests call it to
+    * pin both paths equal). Reads `e` twice and unpersists it on return.
+    */
+  private[graft] def connectedComponentsDistributed(e: DataFrame,
+      maxIters: Int = 20): DataFrame = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sym = e.toDF("src", "dst")
       .union(e.toDF("dst", "src").select("src", "dst"))
       .persist(MEMORY_AND_DISK)

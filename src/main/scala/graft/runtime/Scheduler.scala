@@ -18,7 +18,6 @@ object Scheduler {
     pgPassword: String,
     pgDbName: String,
     pgPort: Int = 5432,
-    pgBatchSize: Int = 10000,
     blazePageResourceCount: Int = 5000,
     blazeNumConnectionAttempts: Int = 20,
     targetTime: LocalTime = LocalTime.of(3, 0))

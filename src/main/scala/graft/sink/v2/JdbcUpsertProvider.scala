@@ -59,11 +59,10 @@ class DriverManagerConnector extends UpsertConnector {
   * It is the engine's one JDBC write path: the batch sync and the CDC
   * stream both reach it through [[JdbcUpsertProvider.append]].
   *
-  * Modes: `append` applies the classified actions;
-  * `overwrite` (SaveMode.Overwrite → truncate-and-append, via
-  * [[SupportsTruncate]]) first issues `DELETE FROM table` once on the
-  * driver — the full-reload path when a mirror must be rebuilt from
-  * scratch rather than diffed.
+  * Mode: `append` only — it applies the classified actions. Spark's
+  * analyzer rejects `overwrite` before any statement runs, because the
+  * table declares no `TRUNCATE` capability: a mirror changes only
+  * through its diff.
   *
   * Options: `table` (required), `dialect` (`postgres` default | `ansi`),
   * `batchsize` (default 10000 = reference `src/main.rs:359`),
@@ -127,19 +126,17 @@ private[v2] class UpsertTable(props: Map[String, String])
   override def name(): String = s"jdbc-upsert:${props.getOrElse("table", "?")}"
   override def schema(): StructType = JdbcUpsertProvider.schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
+    util.EnumSet.of(TableCapability.BATCH_WRITE)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // parsed once on the driver: a bad value fails the write before any
     // task starts, naming the key
     val batchSize = graft.util.NumericOption.int("batchsize",
       props.get("batchsize"), JdbcUpsert.DefaultBatchSize, min = 1)
-    new WriteBuilder with SupportsTruncate {
-      private var doTruncate = false
-      override def truncate(): WriteBuilder = { doTruncate = true; this }
+    new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new UpsertBatchWrite(props, info.schema(), doTruncate, batchSize)
+          new UpsertBatchWrite(props, info.schema(), batchSize)
       }
     }
   }
@@ -147,20 +144,10 @@ private[v2] class UpsertTable(props: Map[String, String])
 
 private[v2] class UpsertBatchWrite(props: Map[String, String],
                                    inputSchema: StructType,
-                                   doTruncate: Boolean,
                                    batchSize: Int) extends BatchWrite {
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    if (doTruncate) {
-      // once, driver-side, before any task writes (truncate-and-append)
-      val (exec, close) = JdbcUpsertProvider
-        .makeConnector(props.getOrElse("connector",
-          classOf[DriverManagerConnector].getName))
-        .connect(props)
-      try exec(s"DELETE FROM ${props("table")}") finally close()
-    }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new UpsertDataWriterFactory(props, inputSchema, batchSize)
-  }
 
   // Attempt atomicity lives in each task's transaction (commit/abort on
   // the writer); there is no cross-task coordinator to run here — the
@@ -169,8 +156,8 @@ private[v2] class UpsertBatchWrite(props: Map[String, String],
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-private[v2] case class UpsertCommit(inserts: Long, updates: Long,
-                                    deletes: Long) extends WriterCommitMessage
+/** Empty: [[UpsertBatchWrite.commit]] reads no task message. */
+private[v2] case object UpsertCommit extends WriterCommitMessage
 
 private[v2] class UpsertDataWriterFactory(props: Map[String, String],
                                           inputSchema: StructType,
@@ -215,7 +202,6 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
   private val ins = ArrayBuffer.empty[String]
   private val upd = ArrayBuffer.empty[(Int, String)]
   private val del = ArrayBuffer.empty[Int]
-  private var nIns = 0L; private var nUpd = 0L; private var nDel = 0L
 
   // connection opened lazily at the first row — an empty partition never
   // touches the database
@@ -234,13 +220,13 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
   override def write(row: InternalRow): Unit = {
     row.getUTF8String(aIdx).toString match {
       case "insert" =>
-        ins += row.getUTF8String(rIdx).toString; nIns += 1
+        ins += row.getUTF8String(rIdx).toString
         if (ins.size >= batchSize) { exec(dialect.insertSql(table, ins.toSeq)); ins.clear() }
       case "update" =>
-        upd += ((row.getInt(pIdx), row.getUTF8String(rIdx).toString)); nUpd += 1
+        upd += ((row.getInt(pIdx), row.getUTF8String(rIdx).toString))
         if (upd.size >= batchSize) { exec(dialect.updateSql(table, upd.toSeq)); upd.clear() }
       case "delete" =>
-        del += row.getInt(pIdx); nDel += 1
+        del += row.getInt(pIdx)
         if (del.size >= batchSize) { exec(dialect.deleteSql(table, del.toSeq)); del.clear() }
       case _ => () // noop rows are accepted and skipped
     }
@@ -252,7 +238,7 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
     if (del.nonEmpty) { exec(dialect.deleteSql(table, del.toSeq)); del.clear() }
     conn.foreach { case (ex, cl) => ex("COMMIT"); cl() }
     conn = None
-    UpsertCommit(nIns, nUpd, nDel)
+    UpsertCommit
   }
 
   /** Task failed (or lost speculation): close WITHOUT commit — the open

@@ -18,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   *    runs them, so the plan is the final one the action would run);
   *  - `SPARK_GRAFT_PROBE_COUNT=1` adds jobs, stages, tasks and task time
   *    per timed run, and `SPARK_GRAFT_PROBE_TIMELINE=1` then lists every
-  *    job and stage (the per-stage attribution of a composed query);
+  *    job and stage (the per-stage attribution of a composed query), each
+  *    job with its driver idle time before it, or `overlap`;
   *  - `SPARK_GRAFT_PROBE_NODRAIN=1` skips the between-rep cache drain:
   *    reps then measure the steady state a long-lived composed session
   *    would see (shared relations stay primed) instead of the drained
@@ -67,17 +68,22 @@ object Probe {
       val names = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        // idle driver time before this job: since the latest job that had
+        // already finished, or none when another job is still running
+        val gap = if (!starts.isEmpty) "overlap"
+          else f"${(if (lastEnd == 0) 0L else j.time - lastEnd) / 1e3}%.2fs"
         starts.put(j.jobId, j.time)
-        val desc = j.stageInfos.map(s =>
-          s"${s.stageId}:${s.name.takeWhile(_ != '\n').take(40)}(${s.numTasks}t)")
-          .mkString(" ")
-        names.put(j.jobId, desc.take(180))
+        val prop = (k: String) => Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        val label = prop("spark.sql.execution.id").map(id => s"sql=$id ").getOrElse("") +
+          prop("spark.job.description").map(d => s"'$d' ").getOrElse("")
+        val stages = j.stageInfos.map(s =>
+          s"${s.stageId}:${s.name.takeWhile(_ != '\n')}(${s.numTasks}t)").mkString(" ")
+        names.put(j.jobId, f"gapBefore=$gap%7s  $label$stages")
       }
       override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
         val t0 = Option(starts.remove(j.jobId)).getOrElse(j.time)
-        val gap = if (lastEnd == 0) 0 else t0 - lastEnd
-        lastEnd = j.time
-        timeline.add(f"job ${j.jobId}%4d  run=${(j.time - t0) / 1e3}%6.2fs  gapBefore=${gap / 1e3}%6.2fs  ${
+        lastEnd = math.max(lastEnd, j.time)
+        timeline.add(f"job ${j.jobId}%4d  run=${(j.time - t0) / 1e3}%6.2fs  ${
           Option(names.remove(j.jobId)).getOrElse("")}")
       }
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

@@ -1,6 +1,6 @@
 package graft.util
 
-/** Driver-side parsing of numeric data-source options and session confs.
+/** Driver-side parsing of numeric data-source options and env vars.
   * A malformed or unusable value fails once, where the option is read on
   * the driver and before any task runs, with a message that names the
   * key — instead of a bare `NumberFormatException` in every executor task.

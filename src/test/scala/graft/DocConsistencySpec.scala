@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   * hand-maintained: README's inventory pointer and SURVEY §8's header
   * must state the actual registry size, and queries/oracleSql must stay
   * key-identical (every declared query has its DuckDB twin). Also pins
-  * `Tables.load` as the one parquet reader of `src/main` and
-  * `GraftSession` as the one session factory of `src/main` and `src/test`.
+  * `Tables.load` as the one parquet reader of `src/main`, `GraftSession`
+  * as the one session factory of `src/main` and `src/test`, and
+  * `Lineage` as the one reader of a `spark.graft.*` conf key.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -49,6 +50,14 @@ class DocConsistencySpec extends AnyFunSuite {
     val builders = sourcesMatching(Seq("src/main", "src/test"), "graft/GraftSession.scala",
       """SparkSession\s*\.\s*builder\b""")
     assert(builders.isEmpty, s"session builders outside GraftSession.scala: $builders")
+  }
+
+  test("src/main names a spark.graft conf key only in util/Lineage.scala") {
+    // the engine's tuning values are constants; the one key is the
+    // deployment's checkpoint directory
+    val keys = sourcesMatching(Seq("src/main"), "graft/util/Lineage.scala",
+      "\"spark\\.graft\\.")
+    assert(keys.isEmpty, s"spark.graft.* conf keys outside util/Lineage.scala: $keys")
   }
 
   test("README states the registry's actual query count") {

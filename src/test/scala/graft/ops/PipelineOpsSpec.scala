@@ -54,15 +54,6 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   // ---- connected components kernel ----
 
-  /** Force the DISTRIBUTED label-propagation path (the adaptive
-    * small-graph threshold would otherwise route these fixtures through
-    * the driver-side union-find).
-    */
-  private def forceDistributed[T](body: => T): T = {
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    try body finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-  }
-
   test("connectedComponents labels chain, triangle, pair, and respects min-id") {
     val spark2 = spark
     import spark2.implicits._
@@ -76,8 +67,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local === expect)
     // distributed label-propagation path must agree exactly
-    val dist = forceDistributed(TextDedup.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val dist = TextDedup.connectedComponentsDistributed(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === expect)
   }
 
@@ -88,7 +79,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-      val got = forceDistributed(TextDedup.connectedComponents(edges))
+      val got = TextDedup.connectedComponentsDistributed(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
       // Reliable checkpoint = RDD data written under the configured dir
@@ -147,9 +138,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       .suchThat { case (a, b) => a != b }
     (0 until 3).foreach { i =>
       val edges = Gen.listOfN(20, edgeGen)(Gen.Parameters.default, Seed(11L + i)).get
-      val got = forceDistributed(
-        TextDedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      val got = TextDedup.connectedComponentsDistributed(edges.toDF("doc_a", "doc_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // brute-force union-find
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -184,7 +174,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = forceDistributed(TextDedup.connectedComponents(edges, maxIters = 10))
+    val got = TextDedup.connectedComponentsDistributed(edges, maxIters = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (0L to 63L).map(_ -> 0L).toMap)
   }
@@ -194,7 +184,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     import spark2.implicits._
     val edges = (0L until 15L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val err = intercept[IllegalStateException] {
-      forceDistributed(TextDedup.connectedComponents(edges, maxIters = 1))
+      TextDedup.connectedComponentsDistributed(edges, maxIters = 1)
     }
     assert(err.getMessage.contains("converge"))
   }

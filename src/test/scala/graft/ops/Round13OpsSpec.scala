@@ -280,19 +280,16 @@ class Round13OpsSpec extends AnyFunSuite {
         (4L, 5L, 101L), (5L, 6L, 3L), (6L, 7L, 102L), (7L, 8L, 4L))
       .toDF("a", "b", "dist_q")
     // pin the DISTRIBUTED loop (the cap guards its rounds); the adaptive
-    // local-Kruskal path below the edge threshold needs no rounds
-    spark.conf.set("spark.graft.msf.localEdgeThreshold", "0")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.boruvkaMsf(und, maxRounds = 2).collect()
-      }
-      assert(e.getMessage.contains("did not converge"))
-      graft.util.QueryCaches.drain()
-      // the default cap labels the same graph fine: a path IS its own MSF
-      val ok = Similarity.boruvkaMsf(und).collect()
-      assert(ok.length === 7)
-      graft.util.QueryCaches.drain()
-    } finally spark.conf.unset("spark.graft.msf.localEdgeThreshold")
+    // local-Kruskal path below the edge bound needs no rounds
+    val e = intercept[IllegalArgumentException] {
+      Similarity.boruvkaMsfDistributed(und, maxRounds = 2).collect()
+    }
+    assert(e.getMessage.contains("did not converge"))
+    graft.util.QueryCaches.drain()
+    // the default cap labels the same graph fine: a path IS its own MSF
+    val ok = Similarity.boruvkaMsfDistributed(und).collect()
+    assert(ok.length === 7)
+    graft.util.QueryCaches.drain()
   }
 
   test("q308 adaptive paths: local Kruskal ≡ distributed Borůvka") {
@@ -305,14 +302,11 @@ class Round13OpsSpec extends AnyFunSuite {
     val local = Similarity.boruvkaMsf(und).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     graft.util.QueryCaches.drain()
-    spark.conf.set("spark.graft.msf.localEdgeThreshold", "0")
-    try {
-      val dist = Similarity.boruvkaMsf(und).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(local === dist)
-      assert(local === Set((1L, 2L, 5L), (2L, 3L, 5L), (3L, 4L, 1L),
-        (10L, 11L, 2L), (10L, 12L, 9L)))
-    } finally spark.conf.unset("spark.graft.msf.localEdgeThreshold")
+    val dist = Similarity.boruvkaMsfDistributed(und).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(local === dist)
+    assert(local === Set((1L, 2L, 5L), (2L, 3L, 5L), (3L, 4L, 1L),
+      (10L, 11L, 2L), (10L, 12L, 9L)))
     graft.util.QueryCaches.drain()
   }
 }

@@ -1,16 +1,17 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** r14 optimization-round pins.
   *
-  * q322's bounded-hybrid split (the boruvkaMsf discipline): below
-  * `spark.graft.bpe.localTokenThreshold` the training loop runs in the
-  * driver-local kernel, above it the distributed single-action-per-round
-  * loop runs. The driver's correctness SFs (0.001/0.01) always take the
-  * local path, so the DISTRIBUTED loop would be oracle-untested without
-  * these pins: threshold 0 forces it, and its output must be
+  * q322's bounded-hybrid split (the boruvkaMsf discipline): up to a fixed
+  * 1M total tokens the training loop runs in the driver-local kernel,
+  * above it the distributed single-action-per-round loop runs. The
+  * driver's correctness SFs (0.001/0.01) always take the local path, so
+  * the DISTRIBUTED loop would be oracle-untested without these pins:
+  * [[CorpusPrep.q322Distributed]] forces it, and its output must be
   * value-identical to the local kernel — on the real sf0.001 corpus, on
   * a crafted pair-exhausting corpus that exercises the NULL-rule no-op
   * rounds both engines must degrade to identically, on a non-BMP
@@ -21,12 +22,12 @@ class Round14OpsSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
-  private val Thresh = "spark.graft.bpe.localTokenThreshold"
+  private val q322 = graft.SparkEntry.queries("q322_bpe_train")
 
-  private def runQ322(dir: String): Seq[(Int, String, String,
+  private def runQ322(dir: String,
+      q: (SparkSession, String) => DataFrame = q322): Seq[(Int, String, String,
       java.lang.Long, Long, Long)] = {
-    val r = graft.SparkEntry.queries("q322_bpe_train")(spark, dir)
-      .collect().map(r => (r.getInt(0),
+    val r = q(spark, dir).collect().map(r => (r.getInt(0),
         if (r.isNullAt(1)) null else r.getString(1),
         if (r.isNullAt(2)) null else r.getString(2),
         if (r.isNullAt(3)) null else java.lang.Long.valueOf(r.getLong(3)),
@@ -36,7 +37,7 @@ class Round14OpsSpec extends AnyFunSuite {
   }
 
   /** q322 over a crafted `documents` corpus on the local path, pinned
-    * equal to the distributed loop (threshold 0); returns the local rows.
+    * equal to the distributed loop; returns the local rows.
     */
   private def bothPathsAgree(docs: Seq[(Long, String)]) = {
     val s = spark
@@ -45,18 +46,14 @@ class Round14OpsSpec extends AnyFunSuite {
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val local = runQ322(dir)
-    spark.conf.set(Thresh, "0")
-    try assert(runQ322(dir) === local)
-    finally spark.conf.unset(Thresh)
+    assert(runQ322(dir, CorpusPrep.q322Distributed) === local)
     local
   }
 
   test("q322: distributed loop (threshold 0) ≡ local kernel on sf0.001") {
     val local = runQ322(sfDir)
     assert(local.size === 32)
-    spark.conf.set(Thresh, "0")
-    try assert(runQ322(sfDir) === local)
-    finally spark.conf.unset(Thresh)
+    assert(runQ322(sfDir, CorpusPrep.q322Distributed) === local)
   }
 
   test("q322: non-BMP count ties break in code-point order on both paths") {
@@ -80,43 +77,11 @@ class Round14OpsSpec extends AnyFunSuite {
     assert(e2.getMessage.contains(s"${Retrieval.MmrMaxRows}-row"), e2.getMessage)
   }
 
-  test("q322: a bad localTokenThreshold fails at construction, naming the key") {
-    Seq("1e6", "-1").foreach { bad =>
-      spark.conf.set(Thresh, bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          graft.SparkEntry.queries("q322_bpe_train")(spark, sfDir))
-        assert(e.getMessage.contains(Thresh) && e.getMessage.contains(s"'$bad'"),
-          e.getMessage)
-      } finally spark.conf.unset(Thresh)
-    }
-  }
-
   test("q322: a NULL-text document adds no tokens on either path") {
     // DuckDB's string_split(NULL) yields no tokens; the local kernel must
     // not throw on it and the distributed pass must not count it
     val docs = Seq((1L, "a b a b"), (2L, "b c"))
     assert(bothPathsAgree(docs :+ ((3L, null))) === bothPathsAgree(docs))
-  }
-
-  test("a bad localEdgeThreshold fails before any job, naming the key") {
-    val s = spark
-    import s.implicits._
-    val und = Seq((1L, 2L, 1L)).toDF("a", "b", "dist_q")
-    val kernels = Seq[(String, () => Any)](
-      "spark.graft.cc.localEdgeThreshold" ->
-        (() => TextDedup.connectedComponents(und.select("a", "b"))),
-      "spark.graft.msf.localEdgeThreshold" -> (() => Similarity.boruvkaMsf(und)))
-    for ((key, run) <- kernels; bad <- Seq("2.5e5", "-1")) {
-      spark.conf.set(key, bad)
-      try {
-        val (e, jobs) = graft.ExecutedPlans.jobsOf(spark)(
-          intercept[IllegalArgumentException](run()))
-        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),
-          e.getMessage)
-        assert(jobs === 0)
-      } finally spark.conf.unset(key)
-    }
   }
 
   test("q322: NULL-rule no-op rounds identical on both paths") {

@@ -406,25 +406,25 @@ class DerbyE2ESpec extends AnyFunSuite {
     assert(DerbyTarget.count("patient") === 0L)
   }
 
-  test("V2 truncate-and-append mode: overwrite rebuilds the table from scratch") {
+  test("overwrite is rejected before any statement; the mirror keeps its rows") {
     DerbyTarget.reset()
     val spark2 = spark
     import spark2.implicits._
-    // seed rows the overwrite must clear
     DerbyTarget.execute("INSERT INTO patient (resource) VALUES ('{\"id\":\"old1\"}')")
     DerbyTarget.execute("INSERT INTO patient (resource) VALUES ('{\"id\":\"old2\"}')")
-    val fresh = (0 until 5).map(i => ("insert", Option.empty[Int],
-        s"""{"id":"n$i"}"""))
+    val fresh = Seq(("insert", Option.empty[Int], """{"id":"n0"}"""))
       .toDF("action", "pk_id", "resource")
-    fresh.write.format("graft-jdbc-upsert")
-      .option("table", "patient")
-      .option("connector", classOf[GatedDerbyConnector].getName)
-      .option("dialect", "ansi")
-      .mode("overwrite")
-      .save()
+    val (_, jobs) = graft.ExecutedPlans.jobsOf(spark)(
+      intercept[org.apache.spark.sql.AnalysisException](
+        fresh.write.format("graft-jdbc-upsert")
+          .option("table", "patient")
+          .option("connector", classOf[GatedDerbyConnector].getName)
+          .option("dialect", "ansi")
+          .mode("overwrite")
+          .save()))
+    assert(jobs === 0)
     val rows = DerbyTarget.rows("patient").values.toSeq
-    assert(rows.size === 5, s"truncate must clear the seeded rows: $rows")
-    assert(rows.forall(_.contains(""""id":"n""")), rows)
+    assert(rows.size === 2 && rows.forall(_.contains(""""id":"old""")), rows)
   }
 
   test("V2 writer abort: a failing task commits nothing in the real engine") {

@@ -206,6 +206,6 @@ class RuntimeSpec extends AnyFunSuite {
       Left("missing env var PG_HOST"))
     val c = Scheduler.Config.fromEnv(full).toOption.get
     assert(Scheduler.Config.jdbcUrl(c) === "jdbc:postgresql://h:5432/d")
-    assert(c.pgBatchSize === 10000 && c.blazePageResourceCount === 5000)
+    assert(JdbcUpsert.DefaultBatchSize === 10000 && c.blazePageResourceCount === 5000)
   }
 }
