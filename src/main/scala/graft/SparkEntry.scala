@@ -19,6 +19,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     Reconcile.classify(ParityData.source(spark, dir), ParityData.target(spark, dir))
+      .select("resource_id", "src_version", "tgt_version", "action")
       .filter(col("action") =!= Reconcile.Noop)
   }
 

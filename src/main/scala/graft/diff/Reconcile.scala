@@ -58,31 +58,44 @@ object Reconcile {
   def validOnly(df: DataFrame): DataFrame =
     df.filter(col("resource_id").isNotNull && col("version_id").isNotNull)
 
-  /** Classify source vs target. Expects
-    * `source(resource_id, version_id, ...)` and
-    * `target(resource_id, version_id, ...)`; only those two columns of
-    * each side are read.
+  /** Classify source vs target — the one place that decides
+    * insert/update/delete/noop. Expects `source(resource_id, version_id,
+    * ...)` and `target(resource_id, version_id, ...)`; every other column
+    * of either side is carried through the join unchanged. A carried name
+    * must be unique to its side and must not be an output name
+    * (`src_version`, `tgt_version`, `action`); a clash fails, naming it.
     *
-    * Returns one row per distinct resource_id on either side with exactly
-    * the columns `(resource_id, src_version, tgt_version, action)`.
-    * [[graft.runtime.SyncPipeline.classifyWithPayloads]] is the form that
-    * also carries the payloads a write needs.
+    * Returns one row per distinct resource_id on either side with the
+    * columns `(resource_id, src_version, tgt_version, <source's other
+    * columns>, <target's other columns>, action)`; a side's columns are
+    * null where the id is absent from that side. For the sync that is
+    * `(resource_id, src_version, tgt_version, resource, pk_id, action)`:
+    * the source's payload for INSERT/UPDATE, the mirror's key for
+    * UPDATE/DELETE.
     */
   def classify(source: DataFrame, target: DataFrame): DataFrame = {
+    val key = Set("resource_id", "version_id")
+    val sNames = source.columns.toSeq.filterNot(key)
+    val tNames = target.columns.toSeq.filterNot(key)
+    val clash = (sNames.intersect(tNames) ++ (sNames ++ tNames).intersect(
+      Seq("s_id", "t_id", "src_version", "tgt_version", "action"))).distinct
+    require(clash.isEmpty, s"classify: carried columns clash: ${clash.mkString(", ")}")
+    val sCarried = sNames.map(col)
+    val tCarried = tNames.map(col)
     val s = source.select(
-      col("resource_id").as("s_id"), col("version_id").as("src_version"))
+      col("resource_id").as("s_id") +: col("version_id").as("src_version") +: sCarried: _*)
     val t = target.select(
-      col("resource_id").as("t_id"), col("version_id").as("tgt_version"))
+      col("resource_id").as("t_id") +: col("version_id").as("tgt_version") +: tCarried: _*)
     s.join(t, s("s_id") === t("t_id"), "full_outer")
-      .select(
+      .select(Seq(
         coalesce(col("s_id"), col("t_id")).as("resource_id"),
         col("src_version"),
-        col("tgt_version"),
+        col("tgt_version")) ++ sCarried ++ tCarried :+
         when(col("t_id").isNull, Insert)
           .when(col("s_id").isNull, Delete)
           .when(col("src_version") =!= col("tgt_version"), Update)
           .otherwise(Noop)
-          .as("action"))
+          .as("action"): _*)
   }
 
   /** Insert set only — a left-anti join (no need to materialize the full

@@ -1,46 +1,12 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
-/** Logical schemas of the engine's data model.
-  *
-  * Mirrors the reference's wire/storage shapes (see SURVEY.md §1):
-  *  - FHIR Bundle searchset envelope (reference `src/models.rs:13-29`)
-  *  - resource identity/version pair (reference `src/models.rs:31-34`,
-  *    extracted at `src/main.rs:37-46`)
-  *  - mirror-table row (reference `src/db_utils.rs:88-111`)
+/** The engine's data model: the reference's resource-type universe and
+  * mirror-table naming. The wire shape (a FHIR Bundle searchset page,
+  * reference `src/models.rs:13-29`) is read only by the `blaze` source
+  * ([[graft.source.v2.BlazeTableProvider]]); the mirror-table DDL
+  * (reference `src/db_utils.rs:88-111`) lives in [[graft.sink.JdbcUpsert]].
   */
 object Schemas {
-
-  /** `ResourceVersion` — the diff key. Reference `src/models.rs:31-34`. */
-  final case class ResourceVersion(resourceId: String, versionId: Long)
-
-  /** Target-side bookkeeping row. Reference `src/models.rs:36-39`. */
-  final case class PgVersion(pkId: Long, resourceId: String, versionId: Long)
-
-  /** Bundle searchset page, as a Spark schema. Reference `src/models.rs:13-29`.
-    * `entry[*].resource` is kept as raw JSON text: resource schemas are
-    * dynamic, so extraction is by JSON path (`get_json_object`), exactly as
-    * the reference pulls only `id` and `meta.versionId`.
-    */
-  val bundle: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("type", StringType),
-    StructField("total", LongType),
-    StructField("link", ArrayType(StructType(Seq(
-      StructField("relation", StringType),
-      StructField("url", StringType))))),
-    StructField("entry", ArrayType(StructType(Seq(
-      StructField("resource", StringType)))))
-  ))
-
-  /** Mirror-table logical schema (reference `src/db_utils.rs:88-111`). */
-  val mirrorTable: StructType = StructType(Seq(
-    StructField("id", IntegerType, nullable = false),
-    StructField("created_at", TimestampType),
-    StructField("last_updated_at", TimestampType),
-    StructField("resource", StringType, nullable = false)
-  ))
 
   /** The reference's hard-coded resource-type universe
     * (reference `src/main.rs:304-305`); table name = lowercase type

@@ -103,6 +103,7 @@ object ParityQueries {
     */
   private val q05: Q = (s, dir) =>
     Reconcile.classify(ParityData.source(s, dir), ParityData.target(s, dir))
+      .select("resource_id", "src_version", "tgt_version", "action")
       .orderBy("resource_id")
 
   private val q05Sql =

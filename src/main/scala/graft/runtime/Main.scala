@@ -59,7 +59,7 @@ object Main {
                    writeOptions: Map[String, String],
                    targetCount: String => Long,
                    sleep: Duration => Unit = d => Thread.sleep(d.toMillis)): Seq[SyncPipeline.SyncResult] = {
-    checkBlazeConnection(cfg.blazeBaseUrl, cfg.blazeNumConnectionAttempts,
+    checkBlazeConnection(cfg.blazeBaseUrl, Scheduler.BlazeNumConnectionAttempts,
         fetch, sleep) match {
       case Left(err) => throw new RuntimeException(
         s"Aborting sync run because connection to Blaze could not be established: $err")
@@ -138,7 +138,7 @@ object Main {
     val shuttingDown = Scheduler.installShutdownHook()
     Scheduler.loop(
       tick = Duration.ofSeconds(60),
-      target = cfg.targetTime,
+      target = Scheduler.TargetTime,
       now = () => java.time.LocalDateTime.now(),
       sleep = d => Thread.sleep(d.toMillis),
       shuttingDown = shuttingDown,
@@ -148,7 +148,7 @@ object Main {
         queryTables = queryTables,
         exec = exec,
         sourceFor = SyncPipeline.blazeV2Source(
-          spark, cfg.blazeBaseUrl, cfg.blazePageResourceCount),
+          spark, cfg.blazeBaseUrl, Scheduler.BlazePageResourceCount),
         snapshotFor = Snapshot.forJdbc(spark, Scheduler.Config.jdbcUrl(cfg),
           cfg.pgUsername, cfg.pgPassword),
         writeOptions = writeOptions,

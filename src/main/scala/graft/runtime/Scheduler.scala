@@ -8,8 +8,18 @@ import java.time.{Duration, LocalDateTime, LocalTime}
   */
 object Scheduler {
 
+  /** Resources per search page (reference `src/main.rs:360`). */
+  val BlazePageResourceCount = 5000
+
+  /** Blaze health-check attempts per sync run (reference `src/main.rs:361`). */
+  val BlazeNumConnectionAttempts = 20
+
+  /** Wall-clock time of the daily sync (reference `src/main.rs:362`). */
+  val TargetTime: LocalTime = LocalTime.of(3, 0)
+
   /** Engine config from environment — reference `src/main.rs:22-34,
-    * 352-365` (5 required vars + hard-coded constants).
+    * 352-365`: the 5 required vars and the PostgreSQL port; the
+    * reference's hard-coded values are the constants above.
     */
   final case class Config(
     blazeBaseUrl: String,
@@ -17,10 +27,7 @@ object Scheduler {
     pgUsername: String,
     pgPassword: String,
     pgDbName: String,
-    pgPort: Int = 5432,
-    blazePageResourceCount: Int = 5000,
-    blazeNumConnectionAttempts: Int = 20,
-    targetTime: LocalTime = LocalTime.of(3, 0))
+    pgPort: Int = 5432)
 
   object Config {
     /** Required env vars, same names as the reference (`src/main.rs:352-357`). */

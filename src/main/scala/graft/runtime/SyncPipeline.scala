@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.diff.Reconcile
 import graft.model.Schemas
 import graft.sink.v2.JdbcUpsertProvider
-import graft.source.BlazeSource
 
 /** The reference's core dataflow EP3 (`src/main.rs:176-300`) as one Spark
   * DAG per resource type:
@@ -18,6 +17,12 @@ import graft.source.BlazeSource
   * memory (its BTreeMap, `src/main.rs:49-75`, is the scalability ceiling —
   * SURVEY.md §4), writes are partition-parallel instead of single-writer,
   * and the whole classification happens in one distributed join.
+  *
+  * One module per step: the `blaze` DSv2 source
+  * ([[graft.source.v2.BlazeTableProvider]]) is the only reader of FHIR
+  * pages, [[Reconcile.classify]] the only place that decides
+  * insert/update/delete/noop, and the `graft-jdbc-upsert` sink
+  * ([[JdbcUpsertProvider.append]]) the only write path.
   */
 object SyncPipeline {
 
@@ -35,29 +40,6 @@ object SyncPipeline {
     val (id, ver) = Reconcile.extractVersion(col("resource"))
     Reconcile.validOnly(
       resources.select(col("resource"), id.as("resource_id"), ver.as("version_id")))
-  }
-
-  /** One full-outer classification carrying both write payloads: the
-    * source's raw `resource` (for INSERT/UPDATE) and the target's `pk_id`
-    * (for UPDATE/DELETE). One row per resource_id on either side, with
-    * `action ∈ {insert, update, delete, noop}` — the same CASE the
-    * reference's probe loop implements (`src/main.rs:227-248, 278-282`).
-    */
-  def classifyWithPayloads(src: DataFrame, snapshot: DataFrame): DataFrame = {
-    val s = src.select(col("resource_id").as("s_id"),
-      col("version_id").as("src_version"), col("resource"))
-    val t = snapshot.select(col("resource_id").as("t_id"),
-      col("version_id").as("tgt_version"), col("pk_id"))
-    s.join(t, col("s_id") === col("t_id"), "full_outer")
-      .select(
-        coalesce(col("s_id"), col("t_id")).as("resource_id"),
-        col("resource"),
-        col("pk_id"),
-        when(col("t_id").isNull, Reconcile.Insert)
-          .when(col("s_id").isNull, Reconcile.Delete)
-          .when(col("src_version") =!= col("tgt_version"), Reconcile.Update)
-          .otherwise(Reconcile.Noop)
-          .as("action"))
   }
 
   /** One type's sync as ONE Spark action: the whole classified diff goes
@@ -100,7 +82,7 @@ object SyncPipeline {
     val actions = Seq(Reconcile.Insert, Reconcile.Update, Reconcile.Delete,
       Reconcile.Noop).map(a => count_if(col("action") === a).as(a))
     JdbcUpsertProvider.append(
-      classifyWithPayloads(sourceVersions(resources), snapshot)
+      Reconcile.classify(sourceVersions(resources), snapshot)
         .observe(counts, actions.head, actions.tail: _*),
       table, writeOptions)
     val byAction = counts.get.map { case (a, n) => a -> n.asInstanceOf[Long] }
@@ -120,12 +102,12 @@ object SyncPipeline {
   /** All four types sequentially (reference `src/main.rs:319-326`; Spark
     * jobs are internally parallel, so sequential per-type is fine — each
     * sync saturates the cluster). `sourceFor`/`snapshotFor` are factories
-    * so the scan itself is pluggable — see [[blazeV2Source]] (the scale
-    * default) and [[blazeDriverSource]] (parity/fixture path).
+    * so tests can plug in fixture pages and snapshots; production passes
+    * [[blazeV2Source]].
     *
     * Each type is one [[syncOneV2]] call: one `graft-jdbc-upsert` write
     * under Spark's commit/abort protocol, e2e-proven on Derby
-    * (sync/heal/truncate/task-abort, `DerbyE2ESpec`) and on the
+    * (sync/heal/task-abort/malformed Bundle, `DerbyE2ESpec`) and on the
     * PG-semantics store (`SyncE2ESpec`).
     *
     * Keying contract: `sourceFor` receives the RESOURCE TYPE (it names a
@@ -145,10 +127,10 @@ object SyncPipeline {
         writeOptions, targetCount)
     }
 
-  /** Scale-path source factory: the DSv2 `blaze` format — one
-    * InputPartition per page, fetch + Bundle parse on EXECUTORS
-    * ([[graft.source.v2.BlazeTableProvider]]). This is the default for
-    * production sync: the driver never holds page bodies.
+  /** Source factory: the DSv2 `blaze` format — one InputPartition per
+    * page, fetch + Bundle parse on EXECUTORS
+    * ([[graft.source.v2.BlazeTableProvider]]); the driver never holds
+    * page bodies. `fetcherClass` swaps the HTTP client for fixture pages.
     */
   def blazeV2Source(spark: SparkSession, baseUrl: String, pageSize: Int,
                     fetcherClass: String =
@@ -159,13 +141,4 @@ object SyncPipeline {
       .option("pageSize", pageSize.toString)
       .option("fetcher", fetcherClass)
       .load()
-
-  /** Parity-path source factory: the driver-side next-link iterator
-    * ([[BlazeSource.scan]]) — exact reference pagination semantics, driver
-    * memory holds the fetched pages. For tests and strict-parity runs
-    * against servers without offset paging; NOT the scale path.
-    */
-  def blazeDriverSource(spark: SparkSession, baseUrl: String, pageSize: Int,
-                        fetch: String => String): String => DataFrame =
-    t => BlazeSource.scan(spark, baseUrl, t, pageSize, fetch)
 }

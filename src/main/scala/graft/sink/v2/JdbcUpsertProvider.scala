@@ -64,7 +64,8 @@ class DriverManagerConnector extends UpsertConnector {
   * table declares no `TRUNCATE` capability: a mirror changes only
   * through its diff.
   *
-  * Options: `table` (required), `dialect` (`postgres` default | `ansi`),
+  * Options: `table` (required), `dialect` (`postgres` default | `ansi`;
+  * any other value fails the write on the driver),
   * `batchsize` (default 10000 = reference `src/main.rs:359`),
   * `connector` (class name, default [[DriverManagerConnector]]) plus
   * whatever the connector reads (`url`, `user`, `password`).
@@ -115,8 +116,10 @@ object JdbcUpsertProvider {
 
   private[v2] def dialectFor(props: Map[String, String]): JdbcUpsert.Dialect =
     props.getOrElse("dialect", "postgres") match {
-      case "ansi" => JdbcUpsert.Ansi
-      case _      => JdbcUpsert.Postgres
+      case "postgres" => JdbcUpsert.Postgres
+      case "ansi"     => JdbcUpsert.Ansi
+      case v => throw new IllegalArgumentException(
+        s"'dialect' must be postgres or ansi, got '$v'")
     }
 }
 
@@ -133,10 +136,11 @@ private[v2] class UpsertTable(props: Map[String, String])
     // task starts, naming the key
     val batchSize = graft.util.NumericOption.int("batchsize",
       props.get("batchsize"), JdbcUpsert.DefaultBatchSize, min = 1)
+    val dialect = JdbcUpsertProvider.dialectFor(props)
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new UpsertBatchWrite(props, info.schema(), batchSize)
+          new UpsertBatchWrite(props, info.schema(), batchSize, dialect)
       }
     }
   }
@@ -144,10 +148,11 @@ private[v2] class UpsertTable(props: Map[String, String])
 
 private[v2] class UpsertBatchWrite(props: Map[String, String],
                                    inputSchema: StructType,
-                                   batchSize: Int) extends BatchWrite {
+                                   batchSize: Int,
+                                   dialect: JdbcUpsert.Dialect) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new UpsertDataWriterFactory(props, inputSchema, batchSize)
+    new UpsertDataWriterFactory(props, inputSchema, batchSize, dialect)
 
   // Attempt atomicity lives in each task's transaction (commit/abort on
   // the writer); there is no cross-task coordinator to run here — the
@@ -161,10 +166,11 @@ private[v2] case object UpsertCommit extends WriterCommitMessage
 
 private[v2] class UpsertDataWriterFactory(props: Map[String, String],
                                           inputSchema: StructType,
-                                          batchSize: Int)
+                                          batchSize: Int,
+                                          dialect: JdbcUpsert.Dialect)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new UpsertDataWriter(props, inputSchema, batchSize)
+    new UpsertDataWriter(props, inputSchema, batchSize, dialect)
 }
 
 /** One task attempt's writer: buffers each action up to `batchSize` rows
@@ -190,11 +196,11 @@ private[v2] class UpsertDataWriterFactory(props: Map[String, String],
   */
 private[v2] class UpsertDataWriter(props: Map[String, String],
                                    inputSchema: StructType,
-                                   batchSize: Int)
+                                   batchSize: Int,
+                                   dialect: JdbcUpsert.Dialect)
   extends DataWriter[InternalRow] {
 
   private val table = props("table")
-  private val dialect = JdbcUpsertProvider.dialectFor(props)
   private val aIdx = inputSchema.fieldIndex("action")
   private val pIdx = inputSchema.fieldIndex("pk_id")
   private val rIdx = inputSchema.fieldIndex("resource")

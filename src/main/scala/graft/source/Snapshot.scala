@@ -99,10 +99,13 @@ object Snapshot {
     } finally conn.close()
   }
 
+  /** Concurrent range queries per production snapshot read. */
+  val NumPartitions = 10
+
   /** Snapshot factory for the sync pipeline: table name → snapshot DF. */
-  def forJdbc(spark: SparkSession, url: String, user: String, password: String,
-              numPartitions: Int = 10): String => DataFrame = { table =>
-    read(spark, url, table, user, password, numPartitions,
+  def forJdbc(spark: SparkSession, url: String, user: String,
+              password: String): String => DataFrame = { table =>
+    read(spark, url, table, user, password, NumPartitions,
       jdbcBounds(url, user, password)(table))
   }
 }

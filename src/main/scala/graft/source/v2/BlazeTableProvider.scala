@@ -4,6 +4,8 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -32,11 +34,10 @@ class HttpPageFetcher extends PageFetcher {
     val resp = client.send(
       java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET().build(),
       java.net.http.HttpResponse.BodyHandlers.ofString())
-    // A non-2xx page MUST be an error, not data: a 503/429 body parses as
-    // a bundle with no entries, and an "empty" page would flow into the
-    // full-outer diff as mass DELETEs — a transient hiccup becoming data
-    // loss. Raising IOException routes it into fetchWithRetry's transient
-    // scope (status-coded failures ARE the dominant transient mode).
+    // A non-2xx page is a fetch failure, not a body to parse: raising
+    // IOException routes it into fetchWithRetry's transient scope
+    // (status-coded failures ARE the dominant transient mode), where a
+    // 503/429 heals on retry instead of failing readBundle.
     if (resp.statusCode() / 100 != 2)
       throw new java.io.IOException(
         s"HTTP ${resp.statusCode()} fetching $url: ${resp.body().take(200)}")
@@ -44,18 +45,24 @@ class HttpPageFetcher extends PageFetcher {
   }
 }
 
-/** DataSource V2 FHIR-search source (`format("blaze")`): one
-  * `InputPartition` PER PAGE, fetched and parsed on executors.
+/** DataSource V2 FHIR-search source (`format("blaze")`), the engine's
+  * only reader of FHIR pages: one `InputPartition` PER PAGE, fetched and
+  * parsed on executors.
   *
   * The reference walks an opaque next-link chain sequentially
-  * (`src/main.rs:261-269`) — inherently one-at-a-time, which
-  * [[graft.source.BlazeSource]] reproduces for parity. This source is the
-  * scale path: FHIR search supports offset paging
-  * (`_count` + `_getpagesoffset`), so after one `_count=0` probe for the
-  * total (`src/main.rs:290-292` — the same zero-row trick the reference
-  * uses for reconciliation), page URLs are enumerable up front and the
-  * fetch parallelizes across the cluster; ingest throughput scales with
-  * executors instead of one driver connection.
+  * (`src/main.rs:261-269`), one page at a time. FHIR search also supports
+  * offset paging (`_count` + `_getpagesoffset`), so after one `_count=0`
+  * probe for the total (`src/main.rs:290-292` — the same zero-row trick
+  * the reference uses for reconciliation), page URLs are enumerable up
+  * front and the fetch parallelizes across the cluster; ingest throughput
+  * scales with executors instead of one driver connection, and the driver
+  * never holds a page body.
+  *
+  * Every response must be a `Bundle`, and the probe's must carry a
+  * numeric `total`; anything else fails the scan naming the URL
+  * ([[BlazeTableProvider.readBundle]]). Read as "no entries", an
+  * OperationOutcome under a 2xx status would reach the full-outer diff
+  * as one DELETE per mirror row.
   *
   * Options: `baseUrl`, `resourceType`, `pageSize` (default 5000 =
   * reference `src/main.rs:360`), `fetcher` (class name, default
@@ -115,11 +122,37 @@ object BlazeTableProvider {
     throw new IllegalStateException("unreachable")
   }
 
-  /** One page's entries, parsed with Jackson (executor-side). */
-  def parseEntries(body: String): Iterator[String] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val mapper = new ObjectMapper()
-    val entries = mapper.readTree(body).path("entry")
+  private val mapper = new ObjectMapper()
+
+  /** `body`, fetched from `url`, parsed as the FHIR `Bundle` it must be.
+    * Anything else — an OperationOutcome, a body that is not JSON — fails
+    * with a message naming the URL.
+    */
+  def readBundle(url: String, body: String): JsonNode = {
+    def fail(cause: Throwable) = new IllegalStateException(
+      s"not a FHIR Bundle from $url: ${body.take(200)}", cause)
+    val node = try mapper.readTree(body)
+      catch { case e: JsonProcessingException => throw fail(e) }
+    if (node.path("resourceType").asText() != "Bundle") throw fail(null)
+    node
+  }
+
+  /** The probe's `total`: a Bundle without a numeric one fails, naming
+    * the URL, instead of planning zero pages.
+    */
+  def probeTotal(url: String, body: String): Long = {
+    val total = readBundle(url, body).path("total")
+    if (!total.isIntegralNumber)
+      throw new IllegalStateException(
+        s"Bundle from $url has no numeric total: ${body.take(200)}")
+    total.asLong()
+  }
+
+  /** One page's entries as raw resource JSON (executor-side). A Bundle
+    * without `entry` is an empty page.
+    */
+  def parseEntries(url: String, body: String): Iterator[String] = {
+    val entries = readBundle(url, body).path("entry")
     if (!entries.isArray) Iterator.empty
     else entries.elements().asScala.flatMap { e =>
       val r = e.path("resource")
@@ -134,7 +167,8 @@ private[v2] class BlazeTable(props: Map[String, String])
   // numeric options are parsed here, on the driver at `load()`: a bad
   // value fails the read before any request, naming the key
   private val pageSize =
-    NumericOption.int("pagesize", props.get("pagesize"), 5000, min = 1)
+    NumericOption.int("pagesize", props.get("pagesize"),
+      graft.runtime.Scheduler.BlazePageResourceCount, min = 1)
   private val retryAttempts =
     NumericOption.int("retries", props.get("retries"), 3, min = 1)
   private val retryBackoffMs =
@@ -201,11 +235,10 @@ private[v2] class BlazeTable(props: Map[String, String])
         * zero resource rows transferred.
         */
       private lazy val partitions: Array[InputPartition] = {
-        val probe = BlazeTableProvider.fetchWithRetry(
-          BlazeTableProvider.makeFetcher(fetcherClass),
-          s"$baseUrl/fhir/$resourceType?_count=0", retryAttempts, retryBackoffMs)
-        val total = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(probe).path("total").asLong(0L)
+        val probeUrl = s"$baseUrl/fhir/$resourceType?_count=0"
+        val total = BlazeTableProvider.probeTotal(probeUrl,
+          BlazeTableProvider.fetchWithRetry(BlazeTableProvider.makeFetcher(fetcherClass),
+            probeUrl, retryAttempts, retryBackoffMs))
         if (countPushed) {
           // single partition, single row: the final aggregate result
           Array(BlazeCountPartition(total))
@@ -258,7 +291,7 @@ private[v2] class BlazeReaderFactory(fetcherClass: String,
       // fetcher + parse lazily on first next(): executor-side IO, with
       // bounded in-reader retry before Spark's task retry gets involved
       private lazy val it: Iterator[String] = BlazeTableProvider
-        .parseEntries(BlazeTableProvider.fetchWithRetry(
+        .parseEntries(url, BlazeTableProvider.fetchWithRetry(
           BlazeTableProvider.makeFetcher(fetcherClass), url,
           retryAttempts, retryBackoffMs))
       private var current: String = _

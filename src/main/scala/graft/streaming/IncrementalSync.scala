@@ -74,7 +74,7 @@ object IncrementalSync {
     * (`src/main.rs:78-138`), now per micro-batch instead of per daily run,
     * each task's statements in one transaction. `writeOptions` reaches the
     * sink (`url`/`dialect`/`connector`/`batchsize`); a bad `batchsize`
-    * fails on the driver. Pass the result as `apply` to [[run]].
+    * or `dialect` fails on the driver. Pass the result as `apply` to [[run]].
     *
     * The snapshot is read before any write: the snapshot side reaches the
     * join through an Exchange (a shuffle, or a broadcast when it is

@@ -11,8 +11,9 @@ import scala.jdk.CollectionConverters._
   * must state the actual registry size, and queries/oracleSql must stay
   * key-identical (every declared query has its DuckDB twin). Also pins
   * `Tables.load` as the one parquet reader of `src/main`, `GraftSession`
-  * as the one session factory of `src/main` and `src/test`, and
-  * `Lineage` as the one reader of a `spark.graft.*` conf key.
+  * as the one session factory of `src/main` and `src/test`,
+  * `Lineage` as the one reader of a `spark.graft.*` conf key, and the
+  * `blaze` source as the one builder of FHIR search URLs.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -58,6 +59,15 @@ class DocConsistencySpec extends AnyFunSuite {
     val keys = sourcesMatching(Seq("src/main"), "graft/util/Lineage.scala",
       "\"spark\\.graft\\.")
     assert(keys.isEmpty, s"spark.graft.* conf keys outside util/Lineage.scala: $keys")
+  }
+
+  test("src/main builds FHIR search URLs only in source/v2/BlazeTableProvider.scala") {
+    // one page reader: a second one would drift from the blaze source's
+    // Bundle checks. Only string literals count, so a comment that
+    // describes the `_count=0` probe elsewhere does not trip the guard.
+    val builders = sourcesMatching(Seq("src/main"),
+      "graft/source/v2/BlazeTableProvider.scala", "\"[^\"\n]*_count=")
+    assert(builders.isEmpty, s"FHIR search URLs outside BlazeTableProvider.scala: $builders")
   }
 
   test("README states the registry's actual query count") {

@@ -21,7 +21,7 @@ class ReconcileSpec extends AnyFunSuite {
 
   private def actions(s: DataFrame, t: DataFrame): Map[String, String] =
     Reconcile.classify(s, t).collect()
-      .map(r => r.getString(0) -> r.getString(3)).toMap
+      .map(r => r.getString(0) -> r.getAs[String]("action")).toMap
 
   test("classify: insert / update / delete / noop") {
     val a = actions(
@@ -36,6 +36,27 @@ class ReconcileSpec extends AnyFunSuite {
       src("newer" -> 5L, "older" -> 1L),
       tgt((1L, "newer", 3L), (2L, "older", 3L)))
     assert(a === Map("newer" -> "update", "older" -> "update"))
+  }
+
+  test("classify carries the source's resource and the target's pk_id, null when absent") {
+    val s = Seq(("a", 1L, "ra"), ("b", 2L, "rb"), ("c", 3L, "rc"))
+      .toDF("resource_id", "version_id", "resource")
+    val out = Reconcile.classify(s, tgt((10L, "b", 1L), (11L, "c", 3L), (12L, "d", 4L)))
+    assert(out.columns.toSeq ===
+      Seq("resource_id", "src_version", "tgt_version", "resource", "pk_id", "action"))
+    val byId = out.collect().map(r => r.getString(0) ->
+      ((Option(r.getString(3)), Option(r.get(4)), r.getString(5)))).toMap
+    assert(byId === Map(
+      "a" -> ((Some("ra"), None, "insert")),
+      "b" -> ((Some("rb"), Some(10L), "update")),
+      "c" -> ((Some("rc"), Some(11L), "noop")),
+      "d" -> ((None, Some(12L), "delete"))))
+  }
+
+  test("classify rejects a carried column both sides share or an output name") {
+    val s = Seq(("a", 1L, 7L, "x")).toDF("resource_id", "version_id", "pk_id", "action")
+    val e = intercept[IllegalArgumentException](Reconcile.classify(s, tgt((10L, "a", 1L))))
+    assert(e.getMessage.contains("pk_id, action"), e.getMessage)
   }
 
   test("classify on empty sides") {

@@ -191,6 +191,22 @@ class EmptyFetcher extends graft.source.v2.PageFetcher {
     """{"resourceType":"Bundle","type":"searchset","total":0}"""
 }
 
+/** [[graft.source.v2.FixtureFetcher]] whose `_count=0` probe answers an
+  * OperationOutcome under a 2xx status. */
+class OutcomeProbeFetcher extends graft.source.v2.FixtureFetcher {
+  override def fetch(url: String): String =
+    if (url.contains("_count=0")) """{"resourceType":"OperationOutcome","issue":[]}"""
+    else super.fetch(url)
+}
+
+/** [[graft.source.v2.FixtureFetcher]] whose second page is an
+  * OperationOutcome. */
+class OutcomePageFetcher extends graft.source.v2.FixtureFetcher {
+  override def fetch(url: String): String =
+    if (url.contains("_getpagesoffset=10")) """{"resourceType":"OperationOutcome","issue":[]}"""
+    else super.fetch(url)
+}
+
 class DerbyE2ESpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -386,24 +402,46 @@ class DerbyE2ESpec extends AnyFunSuite {
     assert(r.reconciled)
   }
 
-  test("a bad sink batchsize fails on the driver, naming the key") {
+  test("a malformed Bundle fails the sync naming its URL; the mirror keeps its rows") {
     DerbyTarget.reset()
-    val spark2 = spark
-    import spark2.implicits._
-    val rows = Seq(("insert", Option.empty[Int], """{"id":"b1"}"""))
-      .toDF("action", "pk_id", "resource")
-    Seq("ten", "0").foreach { bad =>
-      val e = intercept[IllegalArgumentException](rows.write.format("graft-jdbc-upsert")
-        .option("table", "patient")
-        .option("connector", classOf[GatedDerbyConnector].getName)
-        .option("dialect", "ansi")
-        .option("batchsize", bad)
-        .mode("append")
-        .save())
-      assert(e.getMessage.contains("'batchsize'") && e.getMessage.contains(s"'$bad'"),
-        e.getMessage)
+    syncPatientV2()
+    val seeded = DerbyTarget.rows("patient")
+    assert(seeded.size === 23)
+    Seq(classOf[OutcomeProbeFetcher] -> "_count=0",
+        classOf[OutcomePageFetcher] -> "_getpagesoffset=10").foreach { case (fetcher, url) =>
+      val e = intercept[Exception](syncPatientV2(fetcher = fetcher.getName))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("not a FHIR Bundle") && msgs.contains(url), msgs)
+      assert(DerbyTarget.rows("patient") === seeded, s"$fetcher deleted mirror rows")
     }
-    assert(DerbyTarget.count("patient") === 0L)
+    // the pushed COUNT(*) reads the same probe
+    val e = intercept[IllegalStateException](SyncPipeline.blazeV2Source(spark,
+      "http://fixture", 10, classOf[OutcomeProbeFetcher].getName)("Patient").count())
+    assert(e.getMessage.contains("_count=0"), e.getMessage)
+  }
+
+  Seq("batchsize" -> Seq("ten", "0"), "dialect" -> Seq("derby")).foreach { case (key, bad) =>
+    test(s"a bad sink $key fails on the driver, naming the key") {
+      DerbyTarget.reset()
+      val spark2 = spark
+      import spark2.implicits._
+      val rows = Seq(("insert", Option.empty[Int], """{"id":"b1"}"""))
+        .toDF("action", "pk_id", "resource")
+      bad.foreach { v =>
+        val (e, jobs) = graft.ExecutedPlans.jobsOf(spark)(
+          intercept[IllegalArgumentException](rows.write.format("graft-jdbc-upsert")
+            .options(gated)
+            .option("table", "patient")
+            .option(key, v)
+            .mode("append")
+            .save()))
+        assert(e.getMessage.contains(s"'$key'") && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+        assert(jobs === 0)
+      }
+      assert(DerbyTarget.count("patient") === 0L)
+    }
   }
 
   test("overwrite is rejected before any statement; the mirror keeps its rows") {

@@ -2,11 +2,13 @@ package graft.runtime
 
 import java.time.Duration
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.source.BlazeSource
+import graft.source.v2.{CorpusFixtureFetcher, CorpusPages}
 
 /** Wiring tests for the composed daemon (reference `src/main.rs:343-411`)
   * and the default four-type sync.
@@ -23,13 +25,14 @@ class MainSpec extends AnyFunSuite {
   private def emptySnapshot =
     spark.createDataFrame(new java.util.ArrayList[Row](), snapshotSchema)
 
-  private def bundle(entries: Seq[String]): String = {
-    val entryJson = entries.map(r => s"""{"resource":$r}""").mkString(",")
-    s"""{"id":"b1","type":"searchset","total":${entries.size},"entry":[$entryJson]}"""
-  }
-
   private def res(id: String, v: Long): String =
     s"""{"id":"$id","meta":{"versionId":"$v"},"resourceType":"Patient"}"""
+
+  /** The `blaze` source over the [[CorpusPages]] fixture server. */
+  private val fixtureSource = SyncPipeline.blazeV2Source(spark, "http://b", 5000,
+    classOf[CorpusFixtureFetcher].getName)
+
+  private val health = Map("http://b/health" -> "ok")
 
   // ---- health check (reference src/db_utils.rs:35-59) ----
 
@@ -70,19 +73,16 @@ class MainSpec extends AnyFunSuite {
   // ---- composed sync (reference src/main.rs:303-339) ----
 
   test("composedSync: health gate, conditional DDL, four per-type syncs") {
-    val fixtures = Schemas4.types.map { t =>
-      s"http://b/fhir/$t?_count=5000&_history=current" ->
-        bundle(Seq(res(s"${t.toLowerCase}-1", 1)))
-    }.toMap + ("http://b/health" -> "ok")
+    CorpusPages.serve(Seq(res("r1", 1)))
 
     val ddl = scala.collection.mutable.Buffer[String]()
     StmtCollector.clear()
     val results = Main.composedSync(spark,
       Scheduler.Config("http://b", "h", "u", "p", "d"),
-      fetch = fixtures.apply,
+      fetch = health,
       queryTables = () => Set("patient"), // 3 of 4 missing → DDL runs
       exec = ddl += _,
-      sourceFor = SyncPipeline.blazeDriverSource(spark, "http://b", 5000, fixtures.apply),
+      sourceFor = fixtureSource,
       snapshotFor = _ => emptySnapshot,
       writeOptions = Map("connector" -> classOf[StmtCollectorConnector].getName),
       targetCount = _ => 1L,
@@ -97,18 +97,23 @@ class MainSpec extends AnyFunSuite {
     val stmts = StmtCollector.snapshot()
     assert(Schemas4.types.forall(t =>
       stmts.exists(_.startsWith(s"INSERT INTO ${t.toLowerCase}"))))
+    // runSync hands `sourceFor` the capitalized FHIR type, never the
+    // lowercase table name: every type's search URLs name the type
+    val fetched = CorpusPages.fetched.asScala.toSeq
+    assert(Schemas4.types.forall(t => fetched.exists(_.startsWith(s"http://b/fhir/$t?"))),
+      s"fetched: $fetched")
+    assert(!Schemas4.types.exists(t =>
+      fetched.exists(_.startsWith(s"http://b/fhir/${t.toLowerCase}?"))), s"fetched: $fetched")
   }
 
   test("composedSync skips DDL when all tables exist") {
-    val fixtures = Schemas4.types.map { t =>
-      s"http://b/fhir/$t?_count=5000&_history=current" -> bundle(Seq.empty)
-    }.toMap + ("http://b/health" -> "ok")
+    CorpusPages.serve(Seq.empty)
     val ddl = scala.collection.mutable.Buffer[String]()
     Main.composedSync(spark, Scheduler.Config("http://b", "h", "u", "p", "d"),
-      fetch = fixtures.apply,
+      fetch = health,
       queryTables = () => Schemas4.types.map(_.toLowerCase).toSet,
       exec = ddl += _,
-      sourceFor = SyncPipeline.blazeDriverSource(spark, "http://b", 5000, fixtures.apply),
+      sourceFor = fixtureSource,
       snapshotFor = _ => emptySnapshot,
       writeOptions = Map("connector" -> classOf[StmtCollectorConnector].getName),
       targetCount = _ => 0L,
@@ -135,8 +140,8 @@ class MainSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val acc = spark.sparkContext.longAccumulator("source-scans")
-    val raw = BlazeSource.parsePages(spark,
-      Seq(bundle(Seq(res("a", 1), res("b", 2), res("c", 3)))))
+    CorpusPages.serve(Seq(res("a", 1), res("b", 2), res("c", 3)))
+    val raw = fixtureSource("Patient")
     // every evaluation of the source relation bumps the accumulator once per row
     val counted = raw.as[String].map { r => acc.add(1); r }.toDF("resource")
 

@@ -2,10 +2,12 @@ package graft.runtime
 
 import java.time.{Duration, LocalDateTime, LocalTime}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.sink.JdbcUpsert
-import graft.source.BlazeSource
+import graft.source.v2.{CorpusFixtureFetcher, CorpusPages}
 
 /** JVM-static statement sink for local-mode sink tests. */
 object StmtCollector {
@@ -19,50 +21,39 @@ class RuntimeSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
 
-  // ---- BlazeSource ----
+  /** The `blaze` source over the [[CorpusPages]] fixture server. */
+  private def blaze(pageSize: Int) =
+    SyncPipeline.blazeV2Source(spark, "http://b", pageSize,
+      classOf[CorpusFixtureFetcher].getName)("Patient")
 
-  private def bundle(entries: Seq[String], next: Option[String],
-                     total: Int = 0): String = {
-    val entryJson = entries.map(r => s"""{"resource":$r}""").mkString(",")
-    val links = next.map(u => s"""{"relation":"next","url":"$u"}""")
-      .toSeq :+ """{"relation":"self","url":"ignored"}"""
-    s"""{"id":"b1","type":"searchset","total":$total,
-        |"link":[${links.mkString(",")}],
-        |"entry":[$entryJson]}""".stripMargin
-  }
+  private def fetched: Seq[String] = CorpusPages.fetched.asScala.toSeq
 
   private def res(id: String, v: Long): String =
     s"""{"id":"$id","meta":{"versionId":"$v"},"resourceType":"Patient"}"""
 
-  test("pages follows the next-link chain and stops when absent") {
-    val fixtures = Map(
-      "p1" -> bundle(Seq(res("a", 1)), Some("p2")),
-      "p2" -> bundle(Seq(res("b", 2)), Some("p3")),
-      "p3" -> bundle(Seq(res("c", 3)), None))
-    val fetched = scala.collection.mutable.Buffer[String]()
-    val bodies = BlazeSource.pages("p1", u => { fetched += u; fixtures(u) }).toSeq
-    assert(fetched.toSeq === Seq("p1", "p2", "p3"))
-    assert(bodies.size === 3)
-  }
+  // ---- the blaze source ----
 
-  test("parsePages explodes bundle entries into one resource row each") {
-    val bodies = Seq(
-      bundle(Seq(res("a", 1), res("b", 2)), Some("x")),
-      bundle(Seq(res("c", 3)), None))
-    val df = BlazeSource.parsePages(spark, bodies)
+  test("blaze pages explode into one resource row per Bundle entry") {
+    CorpusPages.serve(Seq(res("a", 1), res("b", 2), res("c", 3)))
+    val df = blaze(pageSize = 2)
     val ids = SyncPipeline.sourceVersions(df)
       .select("resource_id").collect().map(_.getString(0)).sorted
     assert(ids.toSeq === Seq("a", "b", "c"))
+    assert(fetched.count(_.contains("_getpagesoffset")) === 2)
   }
 
-  test("remoteCount reads Bundle total without rows") {
-    val body = bundle(Seq.empty, None, total = 42)
-    assert(BlazeSource.remoteCount("http://x", "Patient", _ => body) === 42L)
+  test("blaze COUNT(*) reads the probe's Bundle total, 42, with no page fetched") {
+    CorpusPages.serve((0 until 42).map(i => res(s"p$i", 1)))
+    assert(blaze(pageSize = 5000).count() === 42L)
+    assert(fetched === Seq("http://b/fhir/Patient?_count=0"))
   }
 
-  test("searchUrl carries the reference's pushdown params") {
-    assert(BlazeSource.searchUrl("http://b", "Patient", 5000) ===
-      "http://b/fhir/Patient?_count=5000&_history=current")
+  test("blaze page URLs carry the reference's pushdown params") {
+    CorpusPages.serve(Seq(res("a", 1)))
+    assert(blaze(pageSize = 5000).collect().length === 1)
+    val pages = fetched.filter(_.contains("_getpagesoffset"))
+    assert(pages === Seq(
+      "http://b/fhir/Patient?_count=5000&_getpagesoffset=0&_history=current"))
   }
 
   // ---- JdbcUpsert SQL + batching ----
@@ -179,8 +170,8 @@ class RuntimeSpec extends AnyFunSuite {
     )).toDF("pk_id", "resource_id", "version_id")
 
     // source: a@1 (new), b@2 (changed), c@3 (noop)
-    val body = bundle(Seq(res("a", 1), res("b", 2), res("c", 3)), None)
-    val resources = BlazeSource.parsePages(spark, Seq(body))
+    CorpusPages.serve(Seq(res("a", 1), res("b", 2), res("c", 3)))
+    val resources = blaze(pageSize = 5000)
 
     // the writer runs in tasks — collect through a JVM-static sink
     StmtCollector.clear()
@@ -206,6 +197,6 @@ class RuntimeSpec extends AnyFunSuite {
       Left("missing env var PG_HOST"))
     val c = Scheduler.Config.fromEnv(full).toOption.get
     assert(Scheduler.Config.jdbcUrl(c) === "jdbc:postgresql://h:5432/d")
-    assert(JdbcUpsert.DefaultBatchSize === 10000 && c.blazePageResourceCount === 5000)
+    assert(JdbcUpsert.DefaultBatchSize === 10000 && Scheduler.BlazePageResourceCount === 5000)
   }
 }

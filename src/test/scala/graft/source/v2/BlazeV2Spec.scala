@@ -26,14 +26,20 @@ class FixtureFetcher extends PageFetcher {
 
 /** Page server over an arbitrary corpus of raw resource JSON docs — set
   * by the test, read by name-instantiated fetchers (same JVM in
-  * local mode).
+  * local mode), which record every URL they fetch.
   */
 object CorpusPages {
   @volatile var docs: Array[String] = Array.empty
+  val fetched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def serve(corpus: Seq[String]): Unit = {
+    docs = corpus.toArray
+    fetched.clear()
+  }
 }
 
 class CorpusFixtureFetcher extends PageFetcher {
   override def fetch(url: String): String = {
+    CorpusPages.fetched.add(url)
     val docs = CorpusPages.docs
     val pageSize = "_count=(\\d+)".r.findFirstMatchIn(url).get.group(1).toInt
     if (pageSize == 0)
@@ -200,8 +206,8 @@ class BlazeV2Spec extends AnyFunSuite {
   test("HttpPageFetcher: non-2xx raises IOException (retryable), 2xx returns the body") {
     // A real localhost server (JDK built-in, zero egress): first request
     // per URL answers 503 with an OperationOutcome-ish body, then 200.
-    // Without the status guard the 503 body would parse as an entry-less
-    // bundle and flow downstream as mass DELETEs.
+    // Without the status guard the 503 would fail the scan as a body that
+    // is not a Bundle instead of healing on retry.
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     val hits = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
