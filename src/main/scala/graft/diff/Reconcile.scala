@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   * projection on top. The three action sets are then simple filters that
   * Catalyst collapses into the join, or can be produced independently as
   * anti/semi joins (often cheaper when only one class is needed).
+  *
+  * This object is the one module that decides sync actions: [[classify]]
+  * for the full diff, [[classifyCdc]] for a change batch (q309's replay).
+  * `DocConsistencySpec` fails on an action-valued `when` chain elsewhere.
   */
 object Reconcile {
 
@@ -58,9 +62,9 @@ object Reconcile {
   def validOnly(df: DataFrame): DataFrame =
     df.filter(col("resource_id").isNotNull && col("version_id").isNotNull)
 
-  /** Classify source vs target — the one place that decides
-    * insert/update/delete/noop. Expects `source(resource_id, version_id,
-    * ...)` and `target(resource_id, version_id, ...)`; every other column
+  /** Classify source vs target, the full diff. Expects
+    * `source(resource_id, version_id, ...)` and
+    * `target(resource_id, version_id, ...)`; every other column
     * of either side is carried through the join unchanged. A carried name
     * must be unique to its side and must not be an output name
     * (`src_version`, `tgt_version`, `action`); a clash fails, naming it.
@@ -96,6 +100,50 @@ object Reconcile {
           .when(col("src_version") =!= col("tgt_version"), Update)
           .otherwise(Noop)
           .as("action"): _*)
+  }
+
+  /** Newest version per key within one change batch. Tombstones
+    * (`resource IS NULL`) compete by version like any other change, so a
+    * reinsert-after-delete in the same batch resolves by version order. A
+    * tombstone and an upsert carrying the SAME version_id (a malformed
+    * feed, but it happens) must not resolve arbitrarily across runs: the
+    * ordering key is `(version_id, resource IS NOT NULL)`, so at equal
+    * versions the upsert deterministically wins — consistent with
+    * [[classify]], where a present source row at any version beats
+    * absence.
+    */
+  def latestPerKey(batch: DataFrame): DataFrame =
+    batch.groupBy("resource_id")
+      .agg(max_by(struct(col("version_id"), col("resource")),
+        struct(col("version_id"), col("resource").isNotNull)).as("lv"))
+      .select(col("resource_id"), col("lv.version_id").as("version_id"),
+        col("lv.resource").as("resource"))
+
+  /** Classify a change batch (`resource_id, version_id, resource`, one row
+    * per key — see [[latestPerKey]]) against the target snapshot
+    * (`resource_id, version_id, pk_id`): insert when absent, update on
+    * version mismatch (`!=`, not `<` — reference `src/main.rs:229-231`),
+    * delete on tombstone-for-present, noop otherwise (incl.
+    * tombstone-for-absent: a replayed delete is idempotent).
+    *
+    * Unlike [[classify]], absence from the batch means "unchanged", never
+    * "deleted": the left-outer join emits rows only for keys in the batch,
+    * and deletes must be explicit tombstones. The output carries
+    * `(resource_id, version_id, resource, pk_id, action)`, the columns
+    * [[graft.sink.v2.JdbcUpsertProvider.append]] consumes.
+    */
+  def classifyCdc(batchLatest: DataFrame, snapshot: DataFrame): DataFrame = {
+    val t = snapshot.select(col("resource_id").as("t_id"),
+      col("version_id").as("tgt_version"), col("pk_id"))
+    batchLatest.join(t, col("resource_id") === col("t_id"), "left_outer")
+      .select(col("resource_id"), col("version_id"), col("resource"),
+        col("pk_id"),
+        when(col("resource").isNull && col("t_id").isNotNull, Delete)
+          .when(col("resource").isNull, Noop)
+          .when(col("t_id").isNull, Insert)
+          .when(col("tgt_version") =!= col("version_id"), Update)
+          .otherwise(Noop)
+          .as("action"))
   }
 
   /** Insert set only — a left-anti join (no need to materialize the full

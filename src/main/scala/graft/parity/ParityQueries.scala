@@ -261,10 +261,8 @@ object ParityQueries {
        |       (SELECT count(*) FROM post) AS pg_total,
        |       (SELECT count(*) FROM src) = (SELECT count(*) FROM post) AS matched""".stripMargin
 
-  /** q309 — MULTI-BATCH CDC replay, the batch twin of the streaming
-    * path: [[graft.streaming.IncrementalSync.latestPerKey]] +
-    * [[graft.streaming.IncrementalSync.classifyCdc]] — the exact
-    * per-micro-batch functions `IncrementalSync.start` runs — folded
+  /** q309 — MULTI-BATCH CDC replay: [[Reconcile.latestPerKey]] +
+    * [[Reconcile.classifyCdc]], the change-batch classifier, folded
     * over four ordered batches of a synthetic change feed, starting
     * from an empty target. The feed derives from lineitem: key =
     * l_orderkey, version = ⌊l_quantity⌋ (collides across batches, so
@@ -280,11 +278,10 @@ object ParityQueries {
     * Scale shape: each batch is one groupBy (map-side combinable
     * max_by) + one broadcast-or-shuffle left join against the current
     * snapshot + a disjoint anti-join/union apply — the replay is B×
-    * the steady-state micro-batch cost, with per-batch lineage
-    * truncation so the plan never grows with B.
+    * the one-batch cost, with per-batch lineage truncation so the plan
+    * never grows with B.
     */
   private val q309: Q = (s, dir) => {
-    import graft.streaming.IncrementalSync
     val li = graft.source.Tables.spread(graft.source.Tables.lineitem(s, dir))
     val feed = graft.util.QueryCaches.tracked(li.select(
       col("l_orderkey").as("resource_id"),
@@ -298,9 +295,9 @@ object ParityQueries {
       col("id").as("version_id"), col("id").as("pk_id"))
     var counts: DataFrame = null
     for (k <- 0 to 3) {
-      val latest = IncrementalSync.latestPerKey(feed.filter(col("batch") === k))
+      val latest = Reconcile.latestPerKey(feed.filter(col("batch") === k))
       val cls = graft.util.QueryCaches.tracked(
-        IncrementalSync.classifyCdc(latest, state))
+        Reconcile.classifyCdc(latest, state))
       // counts stays a LAZY union: each batch's aggregate reads the
       // tracked cls cache (materialized by the state checkpoint below),
       // so the per-batch eager counts checkpoint was one scheduling
@@ -329,8 +326,8 @@ object ParityQueries {
 
   /** Oracle: the same four-batch fold unrolled — latest-per-key via a
     * row_number twin of max_by's (version, resource IS NOT NULL) order,
-    * the classify CASE mirroring [[graft.streaming.IncrementalSync
-    * .classifyCdc]]'s `when` chain, the apply as anti-filter + union.
+    * the classify CASE mirroring [[Reconcile.classifyCdc]]'s `when`
+    * chain, the apply as anti-filter + union.
     */
   private val q309Sql: String = {
     def batch(k: Int): String = {

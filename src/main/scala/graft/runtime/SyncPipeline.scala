@@ -20,7 +20,7 @@ import graft.sink.v2.JdbcUpsertProvider
   *
   * One module per step: the `blaze` DSv2 source
   * ([[graft.source.v2.BlazeTableProvider]]) is the only reader of FHIR
-  * pages, [[Reconcile.classify]] the only place that decides
+  * pages, [[Reconcile]] the only module that decides
   * insert/update/delete/noop, and the `graft-jdbc-upsert` sink
   * ([[JdbcUpsertProvider.append]]) the only write path.
   */
@@ -61,7 +61,8 @@ object SyncPipeline {
     *    shuffles both sides, so the snapshot scan finishes in a
     *    shuffle-map stage before the first write task starts, and a
     *    retried write task re-reads that shuffle output. (Losing it with
-    *    an executor re-runs the scan.)
+    *    an executor re-runs the scan.) The same holds for the page scan,
+    *    so a page the source rejects fails the sync before any write.
     *  - Counts are applied once per partition. The observed-metrics node
     *    sits in the write's result stage, with no exchange between it and
     *    the write, and Spark applies a result task's accumulator updates

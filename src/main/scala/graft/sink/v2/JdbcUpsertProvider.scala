@@ -56,8 +56,8 @@ class DriverManagerConnector extends UpsertConnector {
   * `commit()` flushes tails and commits, `abort()` (task failure /
   * speculation loser) closes without commit so the engine rolls the
   * attempt back ([[UpsertDataWriter]] states the guarantee's scope).
-  * It is the engine's one JDBC write path: the batch sync and the CDC
-  * stream both reach it through [[JdbcUpsertProvider.append]].
+  * It is the engine's one JDBC write path: the sync reaches it through
+  * [[JdbcUpsertProvider.append]].
   *
   * Mode: `append` only — it applies the classified actions. Spark's
   * analyzer rejects `overwrite` before any statement runs, because the
@@ -225,13 +225,13 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
 
   override def write(row: InternalRow): Unit = {
     row.getUTF8String(aIdx).toString match {
-      case "insert" =>
+      case Reconcile.Insert =>
         ins += row.getUTF8String(rIdx).toString
         if (ins.size >= batchSize) { exec(dialect.insertSql(table, ins.toSeq)); ins.clear() }
-      case "update" =>
+      case Reconcile.Update =>
         upd += ((row.getInt(pIdx), row.getUTF8String(rIdx).toString))
         if (upd.size >= batchSize) { exec(dialect.updateSql(table, upd.toSeq)); upd.clear() }
-      case "delete" =>
+      case Reconcile.Delete =>
         del += row.getInt(pIdx)
         if (del.size >= batchSize) { exec(dialect.deleteSql(table, del.toSeq)); del.clear() }
       case _ => () // noop rows are accepted and skipped

@@ -2,6 +2,7 @@ package graft.source
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.diff.Reconcile
 
 /** JDBC target-snapshot reader — the reference's O4
   * (`src/main.rs:49-75`: `SELECT id pk_id, resource::text FROM {table}`,
@@ -67,11 +68,10 @@ object Snapshot {
     * version text leniently and drop rows the reference would skip.
     */
   def fromRaw(raw: DataFrame): DataFrame =
-    raw.select(
-        col("pk_id").cast("int").as("pk_id"),
-        col("resource_id"),
-        col("version_text").try_cast("long").as("version_id"))
-      .filter(col("resource_id").isNotNull && col("version_id").isNotNull)
+    Reconcile.validOnly(raw.select(
+      col("pk_id").cast("int").as("pk_id"),
+      col("resource_id"),
+      col("version_text").try_cast("long").as("version_id")))
 
   /** Read one mirror table's `(pk_id, resource_id, version_id)` snapshot.
     * `bounds` is the (min, max) of the SERIAL pk — from [[boundsQuery]] via

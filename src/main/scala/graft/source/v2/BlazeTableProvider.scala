@@ -62,12 +62,18 @@ class HttpPageFetcher extends PageFetcher {
   * numeric `total`; anything else fails the scan naming the URL
   * ([[BlazeTableProvider.readBundle]]). Read as "no entries", an
   * OperationOutcome under a 2xx status would reach the full-outer diff
-  * as one DELETE per mirror row.
+  * as one DELETE per mirror row. For the same reason each page must hold
+  * exactly `min(pageSize, total − offset)` entries
+  * ([[BlazeTableProvider.parseEntries]]): a short page (a server that
+  * caps `_count`, an id deleted after the probe) fails the scan instead
+  * of deleting the rows it left out.
   *
   * Options: `baseUrl`, `resourceType`, `pageSize` (default 5000 =
   * reference `src/main.rs:360`), `fetcher` (class name, default
-  * [[HttpPageFetcher]]). Schema: `resource: STRING` — raw resource JSON,
-  * one row per Bundle entry, exactly the relation parity q01 declares.
+  * [[HttpPageFetcher]]); a fetch makes up to
+  * [[BlazeTableProvider.FetchAttempts]] attempts. Schema: `resource:
+  * STRING` — raw resource JSON, one row per Bundle entry, exactly the
+  * relation parity q01 declares.
   */
 class BlazeTableProvider extends TableProvider with DataSourceRegister {
 
@@ -85,6 +91,10 @@ class BlazeTableProvider extends TableProvider with DataSourceRegister {
 object BlazeTableProvider {
   val schema: StructType = StructType(Seq(StructField("resource", StringType)))
 
+  /** Attempts per fetch, and the first backoff between them. */
+  val FetchAttempts = 3
+  val FetchBackoffMs = 200L
+
   def makeFetcher(className: String): PageFetcher =
     Class.forName(className).getDeclaredConstructor().newInstance()
       .asInstanceOf[PageFetcher]
@@ -98,8 +108,9 @@ object BlazeTableProvider {
     * server still fails loudly (then Spark's task-level retry — and
     * ultimately the job — surfaces it).
     */
-  def fetchWithRetry(fetcher: PageFetcher, url: String, attempts: Int,
-                     backoffMs: Long, sleep: Long => Unit = Thread.sleep): String = {
+  def fetchWithRetry(fetcher: PageFetcher, url: String,
+                     attempts: Int = FetchAttempts, backoffMs: Long = FetchBackoffMs,
+                     sleep: Long => Unit = Thread.sleep): String = {
     var attempt = 1
     var delay = backoffMs
     while (true) {
@@ -149,11 +160,16 @@ object BlazeTableProvider {
   }
 
   /** One page's entries as raw resource JSON (executor-side). A Bundle
-    * without `entry` is an empty page.
+    * without `entry` is an empty page. The page must hold `expected`
+    * entries; any other count fails, naming the URL and both counts.
     */
-  def parseEntries(url: String, body: String): Iterator[String] = {
+  def parseEntries(url: String, body: String, expected: Int): Iterator[String] = {
     val entries = readBundle(url, body).path("entry")
-    if (!entries.isArray) Iterator.empty
+    val n = if (entries.isArray) entries.size else 0
+    if (n != expected)
+      throw new IllegalStateException(
+        s"page from $url has $n entries, expected $expected")
+    if (n == 0) Iterator.empty
     else entries.elements().asScala.flatMap { e =>
       val r = e.path("resource")
       if (r.isMissingNode || r.isNull) None else Some(mapper.writeValueAsString(r))
@@ -169,10 +185,6 @@ private[v2] class BlazeTable(props: Map[String, String])
   private val pageSize =
     NumericOption.int("pagesize", props.get("pagesize"),
       graft.runtime.Scheduler.BlazePageResourceCount, min = 1)
-  private val retryAttempts =
-    NumericOption.int("retries", props.get("retries"), 3, min = 1)
-  private val retryBackoffMs =
-    NumericOption.long("retrybackoffms", props.get("retrybackoffms"), 200L, min = 0L)
 
   override def name(): String =
     s"blaze:${props.getOrElse("resourcetype", "?")}"
@@ -182,13 +194,12 @@ private[v2] class BlazeTable(props: Map[String, String])
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan with Batch
-      with SupportsPushDownAggregates with SupportsPushDownLimit {
+      with SupportsPushDownAggregates {
       private val baseUrl = props("baseurl")
       private val resourceType = props("resourcetype")
       private val fetcherClass =
         props.getOrElse("fetcher", classOf[HttpPageFetcher].getName)
       private var countPushed = false
-      private var pushedLimit: Option[Int] = None
 
       private def isBareCountStar(agg: Aggregation): Boolean =
         agg.groupByExpressions.isEmpty &&
@@ -207,15 +218,6 @@ private[v2] class BlazeTable(props: Map[String, String])
       override def supportCompletePushDown(agg: Aggregation): Boolean =
         isBareCountStar(agg)
 
-      /** `limit(n)` plans only the pages that can contribute rows (the
-        * limit itself is re-applied by Spark — partial pushdown).
-        */
-      override def pushLimit(limit: Int): Boolean = {
-        pushedLimit = Some(limit)
-        true
-      }
-      override def isPartiallyPushed: Boolean = true
-
       override def build(): Scan = this
       override def readSchema(): StructType =
         if (countPushed) new StructType().add("count(*)", LongType)
@@ -223,8 +225,7 @@ private[v2] class BlazeTable(props: Map[String, String])
       override def toBatch: Batch = this
       override def description(): String =
         s"blaze:$resourceType" +
-          (if (countPushed) " PushedAggregates: [COUNT(*)]" else "") +
-          pushedLimit.map(l => s" PushedLimit: $l").getOrElse("")
+          (if (countPushed) " PushedAggregates: [COUNT(*)]" else "")
 
       override def planInputPartitions(): Array[InputPartition] = partitions
 
@@ -238,18 +239,18 @@ private[v2] class BlazeTable(props: Map[String, String])
         val probeUrl = s"$baseUrl/fhir/$resourceType?_count=0"
         val total = BlazeTableProvider.probeTotal(probeUrl,
           BlazeTableProvider.fetchWithRetry(BlazeTableProvider.makeFetcher(fetcherClass),
-            probeUrl, retryAttempts, retryBackoffMs))
+            probeUrl))
         if (countPushed) {
           // single partition, single row: the final aggregate result
           Array(BlazeCountPartition(total))
         } else {
-          val wanted = pushedLimit.map(l => math.min(total, l.toLong))
-            .getOrElse(total)
-          val pages = math.max(0L, (wanted + pageSize - 1) / pageSize).toInt
+          val pages = math.max(0L, (total + pageSize - 1) / pageSize).toInt
           (0 until pages).map { i =>
+            val offset = i.toLong * pageSize
             BlazePagePartition(
               s"$baseUrl/fhir/$resourceType?_count=$pageSize" +
-                s"&_getpagesoffset=${i.toLong * pageSize}&_history=current")
+                s"&_getpagesoffset=$offset&_history=current",
+              math.min(pageSize.toLong, total - offset).toInt)
               .asInstanceOf[InputPartition]
           }.toArray
         }
@@ -257,11 +258,12 @@ private[v2] class BlazeTable(props: Map[String, String])
 
       override def createReaderFactory(): PartitionReaderFactory =
         if (countPushed) new BlazeCountReaderFactory
-        else new BlazeReaderFactory(fetcherClass, retryAttempts, retryBackoffMs)
+        else new BlazeReaderFactory(fetcherClass)
     }
 }
 
-case class BlazePagePartition(url: String) extends InputPartition
+/** One page: its URL and the entry count it must hold. */
+case class BlazePagePartition(url: String, expected: Int) extends InputPartition
 
 /** Carries the probed total itself: the pushed COUNT(*) needs no executor
   * IO at all. */
@@ -281,19 +283,17 @@ private[v2] class BlazeCountReaderFactory extends PartitionReaderFactory {
   }
 }
 
-private[v2] class BlazeReaderFactory(fetcherClass: String,
-                                     retryAttempts: Int, retryBackoffMs: Long)
+private[v2] class BlazeReaderFactory(fetcherClass: String)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val url = partition.asInstanceOf[BlazePagePartition].url
+    val page = partition.asInstanceOf[BlazePagePartition]
     new PartitionReader[InternalRow] {
       // fetcher + parse lazily on first next(): executor-side IO, with
       // bounded in-reader retry before Spark's task retry gets involved
       private lazy val it: Iterator[String] = BlazeTableProvider
-        .parseEntries(url, BlazeTableProvider.fetchWithRetry(
-          BlazeTableProvider.makeFetcher(fetcherClass), url,
-          retryAttempts, retryBackoffMs))
+        .parseEntries(page.url, BlazeTableProvider.fetchWithRetry(
+          BlazeTableProvider.makeFetcher(fetcherClass), page.url), page.expected)
       private var current: String = _
       override def next(): Boolean = {
         if (it.hasNext) { current = it.next(); true } else false

@@ -12,8 +12,9 @@ import scala.jdk.CollectionConverters._
   * key-identical (every declared query has its DuckDB twin). Also pins
   * `Tables.load` as the one parquet reader of `src/main`, `GraftSession`
   * as the one session factory of `src/main` and `src/test`,
-  * `Lineage` as the one reader of a `spark.graft.*` conf key, and the
-  * `blaze` source as the one builder of FHIR search URLs.
+  * `Lineage` as the one reader of a `spark.graft.*` conf key, the
+  * `blaze` source as the one builder of FHIR search URLs, and
+  * `Reconcile` as the one module that decides sync actions.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -68,6 +69,15 @@ class DocConsistencySpec extends AnyFunSuite {
     val builders = sourcesMatching(Seq("src/main"),
       "graft/source/v2/BlazeTableProvider.scala", "\"[^\"\n]*_count=")
     assert(builders.isEmpty, s"FHIR search URLs outside BlazeTableProvider.scala: $builders")
+  }
+
+  test("src/main decides sync actions only in diff/Reconcile.scala") {
+    // a second when-chain over the action values drifts from the one
+    // classifier: its insert/update/delete rules go unguarded by ReconcileSpec
+    val action = """(Reconcile\s*\.\s*)?(Insert|Update|Delete|Noop)\b|"(insert|update|delete|noop)""""
+    val deciders = sourcesMatching(Seq("src/main"), "graft/diff/Reconcile.scala",
+      raw"""\bwhen\s*\([^\n]*,\s*($action)\s*\)|\botherwise\s*\(\s*($action)\s*\)""")
+    assert(deciders.isEmpty, s"action-valued when/otherwise outside diff/Reconcile.scala: $deciders")
   }
 
   test("README states the registry's actual query count") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{CollectMetricsExec, RowDataSourceScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanLike
-import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, V2TableWriteExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -207,6 +207,14 @@ class OutcomePageFetcher extends graft.source.v2.FixtureFetcher {
     else super.fetch(url)
 }
 
+/** [[graft.source.v2.FixtureFetcher]] whose second page holds 9 of its
+  * 10 entries, as from a server that caps `_count` or lost an id after
+  * the probe. */
+class ShortPageFetcher extends graft.source.v2.FixtureFetcher {
+  override def fetch(url: String): String =
+    super.fetch(url.replace("_count=10&_getpagesoffset=10", "_count=9&_getpagesoffset=10"))
+}
+
 class DerbyE2ESpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -376,6 +384,11 @@ class DerbyE2ESpec extends AnyFunSuite {
     val toSnapshot = pathTo(join.get)(_.isInstanceOf[RowDataSourceScanExec])
     assert(toSnapshot.isDefined, s"no JDBC snapshot scan under the join:\n$plan")
     assert(toSnapshot.get.exists(isExchange), s"the snapshot scan feeds the join directly:\n$plan")
+    // so does the page scan: a page the source rejects fails its
+    // shuffle-map stage before any write task commits
+    val toPages = pathTo(join.get)(_.isInstanceOf[BatchScanExec])
+    assert(toPages.isDefined, s"no blaze scan under the join:\n$plan")
+    assert(toPages.get.exists(isExchange), s"the blaze scan feeds the join directly:\n$plan")
   }
 
   test("V2 sync failure leaves the mirror unchanged; the next call reports full counts") {
@@ -419,6 +432,19 @@ class DerbyE2ESpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](SyncPipeline.blazeV2Source(spark,
       "http://fixture", 10, classOf[OutcomeProbeFetcher].getName)("Patient").count())
     assert(e.getMessage.contains("_count=0"), e.getMessage)
+  }
+
+  test("a short page fails the sync naming its URL; the mirror keeps its rows") {
+    DerbyTarget.reset()
+    syncPatientV2()
+    val seeded = DerbyTarget.rows("patient")
+    assert(seeded.size === 23)
+    val e = intercept[Exception](syncPatientV2(fetcher = classOf[ShortPageFetcher].getName))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("_count=10&_getpagesoffset=10") &&
+      msgs.contains("has 9 entries, expected 10"), msgs)
+    assert(DerbyTarget.rows("patient") === seeded, "a short page deleted mirror rows")
   }
 
   Seq("batchsize" -> Seq("ten", "0"), "dialect" -> Seq("derby")).foreach { case (key, bad) =>

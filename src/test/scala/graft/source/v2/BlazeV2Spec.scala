@@ -139,29 +139,17 @@ class BlazeV2Spec extends AnyFunSuite {
     assert(probes.size === 1, s"a page scan must probe once, got: $probes")
   }
 
-  Seq("pageSize" -> Seq("ten", "0"), "retries" -> Seq("2.5", "0"),
-      "retryBackoffMs" -> Seq("soon", "-1")).foreach { case (key, bad) =>
-    test(s"a bad '$key' fails at load on the driver, naming the key") {
-      bad.foreach { v =>
-        val e = intercept[IllegalArgumentException](spark.read.format("blaze")
-          .option("baseUrl", "http://fixture")
-          .option("resourceType", "Patient")
-          .option("fetcher", classOf[RecordingFetcher].getName)
-          .option(key, v)
-          .load())
-        assert(e.getMessage.contains(s"'${key.toLowerCase}'") &&
-          e.getMessage.contains(s"'$v'"), e.getMessage)
-      }
+  test("a bad 'pageSize' fails at load on the driver, naming the key") {
+    Seq("ten", "0").foreach { v =>
+      val e = intercept[IllegalArgumentException](spark.read.format("blaze")
+        .option("baseUrl", "http://fixture")
+        .option("resourceType", "Patient")
+        .option("fetcher", classOf[RecordingFetcher].getName)
+        .option("pageSize", v)
+        .load())
+      assert(e.getMessage.contains("'pagesize'") && e.getMessage.contains(s"'$v'"),
+        e.getMessage)
     }
-  }
-
-  test("limit pushdown plans only the contributing pages") {
-    RecordingFetcher.urls.clear()
-    assert(recordingDf.limit(5).collect().length === 5)
-    val pages = RecordingFetcher.urls.toArray(Array.empty[String]).toSeq
-      .filter(_.contains("_getpagesoffset"))
-    assert(pages.length === 1 && pages.head.contains("_getpagesoffset=0"),
-      s"limit(5) at pageSize 10 must fetch exactly page 0, got: $pages")
   }
 
   test("transient page failures are retried in-reader, not escalated to task retry") {
@@ -171,8 +159,6 @@ class BlazeV2Spec extends AnyFunSuite {
       .option("resourceType", "Patient")
       .option("pageSize", "10")
       .option("fetcher", classOf[FlakyFetcher].getName)
-      .option("retries", "3")
-      .option("retryBackoffMs", "1")
       .load()
     // collect (not count — count pushes down to the probe alone) so the
     // page readers run; succeeds on the 3rd in-reader attempt per URL
@@ -194,13 +180,11 @@ class BlazeV2Spec extends AnyFunSuite {
       .option("resourceType", "Patient")
       .option("pageSize", "10")
       .option("fetcher", classOf[FlakyFetcher].getName)
-      .option("retries", "2")
-      .option("retryBackoffMs", "1")
       .load()
     val e = intercept[Exception](df.count())
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString(" | ")
-    assert(msgs.contains("after 2 attempts"), s"expected bounded-retry failure, got: $msgs")
+    assert(msgs.contains("after 3 attempts"), s"expected bounded-retry failure, got: $msgs")
   }
 
   test("HttpPageFetcher: non-2xx raises IOException (retryable), 2xx returns the body") {
@@ -242,8 +226,6 @@ class BlazeV2Spec extends AnyFunSuite {
         .option("baseUrl", base)
         .option("resourceType", "Patient")
         .option("pageSize", "10")
-        .option("retries", "3")
-        .option("retryBackoffMs", "1")
         .load()
       assert(df.count() === 3)
     } finally server.stop(0)
