@@ -36,9 +36,9 @@ object GraftSession {
     *  - shuffle partitions = `cores`: the 200 default would schedule
     *    mostly-empty tasks at these data sizes;
     *  - UI off: no port to bind and no listener overhead on timed runs;
-    *  - a per-process warehouse under `/tmp`: `saveAsTable` targets
-    *    (`Bucketing.writeBucketed`, `StreamingLshDedup`) never land in the
-    *    working directory, and concurrent runs never share one;
+    *  - a per-process warehouse under `/tmp`: `Bucketing.writeBucketed`'s
+    *    `saveAsTable` never lands in the working directory, and
+    *    concurrent runs never share one;
     *  - log level `ERROR`: Bench's summary line must stay in the last
     *    2000 characters of output, clear of Spark warnings.
     */

@@ -346,7 +346,7 @@ object Behavioral {
     * is in ARRIVAL order (event_id), measured as the time overlap
     * between consecutive 1000-event arrival batches — batch k's max
     * event time minus batch k+1's min. This is the number that SIZES
-    * `withWatermark` for the streaming pipelines (EventStreams): the
+    * `withWatermark` for a streaming reader of the events: the
     * p95 overlap is the lateness bound that keeps ≤5% of boundaries
     * leaking late rows, and max is the no-loss bound. Exact integers
     * end-to-end: µs timestamps, floor-div batch ids, overlaps clamped

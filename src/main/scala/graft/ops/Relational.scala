@@ -304,8 +304,7 @@ object Relational {
       |FROM events
       |ORDER BY event_id""".stripMargin
 
-  /** q31 — tumbling event-time window, batch form (the streaming variant
-    * with watermarks lives in graft.streaming): groupBy(window(ts, 1h)).
+  /** q31 — tumbling event-time window, batch form: groupBy(window(ts, 1h)).
     * Exact integer cents for the sum (see q27).
     */
   private val q31: Q = (s, dir) =>

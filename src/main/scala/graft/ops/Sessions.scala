@@ -4,14 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
 
-/** Session-window analytics, batch form (SURVEY.md §2.2 streaming row: the
-  * batch-expressible twin of the streaming sessionization in
-  * [[graft.streaming.EventStreams]], sharing one oracle definition).
+/** Session-window analytics, batch form (SURVEY.md §2.2 streaming row).
   *
   * Spark plans `session_window` as a single shuffle on the group key plus
   * an in-partition merge of overlapping windows — same cost envelope as
-  * the gaps-and-islands formulation, but with the streaming-compatible
-  * operator, so the identical code runs incrementally with a watermark.
+  * the gaps-and-islands formulation.
   *
   * Gap semantics (both engines): an event extends the session iff
   * `ts - prev_ts < gap`; a gap of exactly `gap` starts a new session —
@@ -50,11 +47,10 @@ object Sessions {
 
   /** q90 — sliding (hopping) windows, batch form: `window(ts, 2h, 1h)` —
     * every event lands in exactly two epoch-aligned windows, planned as an
-    * Expand (2 rows/event) feeding one aggregate, the same operator the
-    * streaming `EventStreams.slidingCounts` runs incrementally with a
-    * watermark. Completes the windowed-aggregation oracle trio: tumbling
-    * q31, session q33, sliding q90. The oracle materializes the two
-    * covering window starts per event explicitly.
+    * Expand (2 rows/event) feeding one aggregate. Completes the
+    * windowed-aggregation oracle trio: tumbling q31, session q33,
+    * sliding q90. The oracle materializes the two covering window
+    * starts per event explicitly.
     */
   private val q90: Q = (s, dir) =>
     Tables.events(s, dir)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
 
@@ -109,25 +109,63 @@ object Sketches {
     * divisions are single correctly-rounded doubles ((K−1)·2⁶⁰ is a
     * power-of-two multiple of 255 — exactly representable).
     */
-  private val KmvK = 256
+  private[graft] val KmvK = 256
+
+  /** A KMV sketch: the ≤ [[KmvK]] smallest distinct key hashes, column `h`. */
+  private[graft] final case class KmvSketch(hashes: DataFrame)
+
+  /** The distinct 60-bit md5-prefix hashes `h` of `keyCol` cast to BIGINT. */
+  private def kmvHashes(df: DataFrame, keyCol: String): DataFrame =
+    df.select(col(keyCol).cast("long").as("key")).distinct()
+      .select(expr(
+        "CAST(conv(substring(md5(CAST(key AS STRING)), 1, 15), 16, 10) AS BIGINT)")
+        .as("h"))
+
+  /** The [[KmvK]] smallest distinct hashes of the union of `a` and `b`:
+    * min-K of a union is the min-K of the min-Ks, so the fold is
+    * associative, commutative and idempotent. */
+  private def kmvUnion(a: DataFrame, b: DataFrame): DataFrame =
+    a.unionByName(b).distinct().orderBy("h").limit(KmvK)
+
+  /** Distinct-count estimate from a sketch's fill `kCol` and largest
+    * hash `hCol`: exact below capacity, (K−1)·2⁶⁰/h_K at capacity. */
+  private def kmvEstimate(kCol: String, hCol: String): Column =
+    when(col(kCol) < KmvK, col(kCol).cast("double"))
+      .otherwise(expr(s"CAST(${KmvK - 1} AS DOUBLE) * " +
+        s"CAST(1152921504606846976 AS DOUBLE) / CAST($hCol AS DOUBLE)"))
+
+  private[graft] def emptySketch(spark: SparkSession): KmvSketch = {
+    import org.apache.spark.sql.types._
+    KmvSketch(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("h", LongType)))))
+  }
+
+  /** Fold one batch of keys (any relation with a castable `key` column)
+    * into the sketch. Re-delivered keys hash to held values and vanish in
+    * the distinct. The ≤K-row result is cached, not checkpointed: a
+    * fold's plan reads the previous state as one cached leaf, nothing
+    * runs before the caller's action, and that action builds each state
+    * once. (A lazy checkpoint still runs the shuffle stages at call time
+    * under AQE.)
+    */
+  private[graft] def mergeBatch(batch: DataFrame, sk: KmvSketch): KmvSketch =
+    KmvSketch(graft.util.QueryCaches.tracked(
+      kmvUnion(sk.hashes, kmvHashes(batch, "key"))))
+
+  /** One row (k_filled, est): the sketch's fill and its estimate. */
+  private[graft] def estimate(sk: KmvSketch): DataFrame =
+    sk.hashes.agg(count(lit(1)).as("k_filled"), max("h").as("hk"))
+      .select(col("k_filled"), kmvEstimate("k_filled", "hk").as("est"))
 
   private val q316: Q = (s, dir) => {
     def sketch(df: DataFrame, keyCol: String): DataFrame =
-      df.select(col(keyCol).cast("long").as("key")).distinct()
-        .select(expr(
-          "CAST(conv(substring(md5(CAST(key AS STRING)), 1, 15), 16, 10) AS BIGINT)")
-          .as("h"))
-        .orderBy("h").limit(KmvK)
+      kmvHashes(df, keyCol).orderBy("h").limit(KmvK)
     val sa = graft.util.QueryCaches.tracked(
       sketch(Tables.spread(Tables.orders(s, dir)), "o_custkey"))
     val sb = graft.util.QueryCaches.tracked(
       sketch(Tables.spread(Tables.customer(s, dir)), "c_custkey"))
-    val su = graft.util.QueryCaches.tracked(
-      sa.unionByName(sb).distinct().orderBy("h").limit(KmvK))
-    def est(kCol: String, hCol: String) =
-      when(col(kCol) < KmvK, col(kCol).cast("double"))
-        .otherwise(expr(s"CAST(${KmvK - 1} AS DOUBLE) * " +
-          s"CAST(1152921504606846976 AS DOUBLE) / CAST($hCol AS DOUBLE)"))
+    val su = graft.util.QueryCaches.tracked(kmvUnion(sa, sb))
     val aAgg = sa.agg(count(lit(1)).as("ka"), max("h").as("hka"))
     val bAgg = sb.agg(count(lit(1)).as("kb"), max("h").as("hkb"))
     val uAgg = su.agg(count(lit(1)).as("ku"))
@@ -146,8 +184,8 @@ object Sketches {
       .crossJoin(broadcast(iAgg)).crossJoin(broadcast(ea))
       .crossJoin(broadcast(eb)).crossJoin(broadcast(ei))
       .select(lit(KmvK).as("k"),
-        col("na").as("exact_a"), round(est("ka", "hka"), 2).as("est_a"),
-        col("nb").as("exact_b"), round(est("kb", "hkb"), 2).as("est_b"),
+        col("na").as("exact_a"), round(kmvEstimate("ka", "hka"), 2).as("est_a"),
+        col("nb").as("exact_b"), round(kmvEstimate("kb", "hkb"), 2).as("est_b"),
         col("inter_k"), col("ku").as("union_k"),
         round(col("inter_k").cast("double") / col("ku").cast("double"), 6)
           .as("jacc_est"),
@@ -637,33 +675,27 @@ object Sketches {
        |ORDER BY 1""".stripMargin
   }
 
-  /** q325 — batch-replay twin of [[graft.streaming.StreamingKmv]]
-    * (q309's discipline: the streaming kernel's EXACT fold pinned in
-    * the correctness gate, per batch, not just at the final state):
-    * the events stream's user keys fold through four ordered
-    * micro-batches of the carried min-K sketch; each batch emits the
-    * sketch fill level, the distinct-count estimate, and the exact
-    * distinct count so far. Small SFs hold the exact-below-K branch
-    * (fill < 256, est ≡ exact); sf1's ~5k users exercise the estimator
-    * — the same ladder as q316. State is [[StreamingKmv.mergeBatch]]
-    * itself (per-batch lineage truncation inside), so a drift between
-    * the streaming class and this declared query is impossible by
-    * construction. The oracle unrolls the identical four-batch min-K
-    * fold.
+  /** q325 — KMV replay: the events' user keys fold through four ordered
+    * batches of the carried min-K sketch ([[mergeBatch]], the same
+    * hash, capacity and estimator as q316); each batch emits the sketch
+    * fill level, the distinct-count estimate, and the exact distinct
+    * count so far. Small SFs hold the exact-below-K branch (fill < 256,
+    * est ≡ exact); sf1's 15 000 users exercise the estimator. Building
+    * the query runs no job; its action builds each ≤K-row state once.
+    * The oracle unrolls the identical four-batch min-K fold.
     */
   private val q325: Q = (s, dir) => {
-    import graft.streaming.StreamingKmv
     val feed = graft.util.QueryCaches.tracked(
       Tables.spread(Tables.events(s, dir))
         .select(col("user_id").as("key"),
           (col("event_id") % 4).cast("int").as("batch")))
-    var sk = StreamingKmv.emptySketch(s)
+    var sk = emptySketch(s)
     var out: DataFrame = null
     for (k <- 0 to 3) {
-      sk = StreamingKmv.mergeBatch(feed.filter(col("batch") === k), sk)
+      sk = mergeBatch(feed.filter(col("batch") === k), sk)
       val exact = feed.filter(col("batch") <= k)
         .agg(countDistinct("key").as("n_exact"))
-      val row = StreamingKmv.estimate(sk)
+      val row = estimate(sk)
         .crossJoin(broadcast(exact))
         .select(lit(k).as("batch"), col("k_filled"),
           round(col("est"), 2).as("est"), col("n_exact"))
@@ -673,7 +705,7 @@ object Sketches {
   }
 
   private val q325Sql: String = {
-    val k256 = graft.streaming.StreamingKmv.K
+    val k256 = KmvK
     def batch(k: Int): String = {
       val prevUnion =
         if (k == 0) "SELECT h FROM hk0"

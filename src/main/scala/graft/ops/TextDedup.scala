@@ -108,9 +108,7 @@ object TextDedup {
 
   /** Per-doc MinHash values as 8 columns (doc_id, h0..h7) over any
     * (doc_id, text) relation — the codegen'd explode → md5 → groupBy-min
-    * shape shared by candPairs, [[minhashSignatures]], and the streaming
-    * admission path ([[graft.streaming.StreamingLshDedup]]), so a
-    * micro-batch's signatures are bit-identical to the batch pipeline's.
+    * shape shared by candPairs and [[minhashSignatures]].
     */
   private[graft] def sigColsFor(docs: DataFrame): DataFrame = {
     val p = 2147483647L
@@ -129,10 +127,9 @@ object TextDedup {
     sigColsFor(Tables.spread(Tables.documents(s, dir)))
 
   /** 4 two-hash band keys per doc over any (doc_id, text) relation —
-    * [[bandRelation]]'s projection without its cache/partitioning (a
-    * streaming micro-batch is small and read once).
+    * [[bandRelation]]'s projection without its cache/partitioning.
     */
-  private[graft] def bandsFor(docs: DataFrame): DataFrame =
+  private def bandsFor(docs: DataFrame): DataFrame =
     sigColsFor(docs)
       .select(col("doc_id"), explode(array((0 until 4).map(b =>
         struct(lit(b).as("b"),
@@ -141,26 +138,11 @@ object TextDedup {
       .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
 
   /** Distinct 3-shingle sets per doc over any (doc_id, text) relation —
-    * [[shingleSets]]'s projection without its cache (streaming path).
+    * [[shingleSets]]'s projection without its cache.
     */
   private[graft] def shingleSetsFor(docs: DataFrame): DataFrame =
     docs.withColumn("words", split(col("text"), " "))
       .select(col("doc_id"), array_distinct(expr(shinglesExpr(3))).as("sh"))
-
-  /** Exact Jaccard over a (doc_a, doc_b) pair relation where each side may
-    * come from a DIFFERENT shingle-set relation (streaming: batch side vs
-    * corpus-index side).
-    */
-  private[graft] def jaccardScoredAcross(cand: DataFrame, setsA: DataFrame,
-      setsB: DataFrame): DataFrame = {
-    val inter = size(array_intersect(col("sha"), col("shb")))
-    cand
-      .join(setsA.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-      .join(setsB.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        round(inter.cast("double") /
-          (size(col("sha")) + size(col("shb")) - inter), 4).as("jaccard"))
-  }
 
   /** Signature relation (doc_id, mh: array<long>[8]) for estimator
     * audits (q78) — same values as the band pipeline, assembled into an
@@ -265,8 +247,15 @@ object TextDedup {
     * persisted shingle sets — the verification join both q41b and q143
     * run on candidates only, never on all pairs.
     */
-  private def jaccardScored(cand: DataFrame, sets: DataFrame): DataFrame =
-    jaccardScoredAcross(cand, sets, sets)
+  private def jaccardScored(cand: DataFrame, sets: DataFrame): DataFrame = {
+    val inter = size(array_intersect(col("sha"), col("shb")))
+    cand
+      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        round(inter.cast("double") /
+          (size(col("sha")) + size(col("shb")) - inter), 4).as("jaccard"))
+  }
 
   private[ops] def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     jaccardScored(candPairs(s, dir), shingleSets(s, dir))

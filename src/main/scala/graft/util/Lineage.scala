@@ -3,8 +3,8 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation for iterative dataflows (connected components,
-  * k-core peeling, eigencentrality power iteration, the streaming LSH
-  * index collapse). Iterative plans otherwise NEST: the optimizer
+  * k-core peeling, eigencentrality power iteration, the q309/q322
+  * batch folds). Iterative plans otherwise NEST: the optimizer
   * re-analyzes and re-codegens an O(iteration)-deep tree every round
   * (quadratic planning cost, unbounded lineage on failure recovery), so
   * each round's result is eagerly checkpointed down to its materialized
@@ -21,10 +21,6 @@ import org.apache.spark.sql.DataFrame
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` so GC'd
   *    checkpointed RDDs clean their files (reliable checkpoint files are
   *    not auto-deleted by default).
-  *
-  * One definition for every iterative kernel — extracted from
-  * TextDedup.connectedComponents so q233/q237 and StreamingLshDedup
-  * honor the same escape hatch.
   */
 object Lineage {
 

@@ -13,8 +13,9 @@ import scala.jdk.CollectionConverters._
   * `Tables.load` as the one parquet reader of `src/main`, `GraftSession`
   * as the one session factory of `src/main` and `src/test`,
   * `Lineage` as the one reader of a `spark.graft.*` conf key, the
-  * `blaze` source as the one builder of FHIR search URLs, and
-  * `Reconcile` as the one module that decides sync actions.
+  * `blaze` source as the one builder of FHIR search URLs,
+  * `Reconcile` as the one module that decides sync actions, and that
+  * `src/main` starts no Structured Streaming query.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -28,12 +29,13 @@ class DocConsistencySpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
   }
 
-  /** `.scala` files under `roots`, other than `allowed`, whose text matches `re`. */
+  /** `.scala` files under `roots`, other than `allowed` (none if empty),
+    * whose text matches `re`. */
   private def sourcesMatching(roots: Seq[String], allowed: String, re: String): Seq[String] =
     roots.flatMap { r =>
       val stream = Files.walk(Paths.get(r))
       try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && !p.endsWith(allowed))
+        .filter(p => p.toString.endsWith(".scala") && (allowed.isEmpty || !p.endsWith(allowed)))
         .filter(p => re.r.findFirstIn(read(p.toString)).isDefined)
         .map(_.toString).toSeq
       finally stream.close()
@@ -78,6 +80,13 @@ class DocConsistencySpec extends AnyFunSuite {
     val deciders = sourcesMatching(Seq("src/main"), "graft/diff/Reconcile.scala",
       raw"""\bwhen\s*\([^\n]*,\s*($action)\s*\)|\botherwise\s*\(\s*($action)\s*\)""")
     assert(deciders.isEmpty, s"action-valued when/otherwise outside diff/Reconcile.scala: $deciders")
+  }
+
+  test("src/main starts no Structured Streaming query") {
+    // the sync is a batch daemon on a daily timer; a stream runner no
+    // production path starts is code nothing runs
+    val streams = sourcesMatching(Seq("src/main"), "", """\b(writeStream|readStream)\b""")
+    assert(streams.isEmpty, s"Structured Streaming in src/main: $streams")
   }
 
   test("README states the registry's actual query count") {

@@ -1,7 +1,9 @@
 package graft.ops
 
 import java.sql.Timestamp
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -116,4 +118,79 @@ class BehavioralQualitySpec extends AnyFunSuite {
       assert((back0, back1) === ((q0, q1)))
     }
   }
+
+  // ---- q214's state model against a real stream ----
+
+  test("q214's trailing-window state model matches the real stream-stream join state") {
+    // The q214/q236 claim, executed: q214 budgets stream-state as "rows
+    // whose event time is inside the trailing watermark window of the
+    // running max event time". Here the q236-shaped join (clicks within
+    // the hour before a purchase, 2h watermarks) runs for real on a
+    // MemoryStream, and StreamingQueryProgress.stateOperators is
+    // asserted against that model with EXACT bounds:
+    //  - purchases retained  iff p_ts >= wm       (all earlier clicks arrived)
+    //  - clicks retained     iff c_ts >= wm - 1h  (may match a purchase 1h later)
+    // evaluated at the watermark the final batch evicted with (state
+    // cleanup in batch N uses the watermark computed after batch N-1).
+    val spark2 = spark
+    import spark2.implicits._
+    import BehavioralQualitySpec.Event
+    val input = MemoryStream[Event](spark2)
+    val events = input.toDF()
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("purchase_id"))
+      .withWatermark("p_ts", "2 hours")
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("c_ts", "2 hours")
+    val q = purchases.join(clicks,
+        col("user_id") === col("c_user") &&
+          col("c_ts") <= col("p_ts") &&
+          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
+      .select("purchase_id", "click_id")
+      .writeStream.format("memory").queryName("statebudget")
+      .outputMode("append").start()
+    val t0 = Timestamp.valueOf("2024-01-01 08:00:00").getTime
+    def mk(i: Int) = Event(i.toLong, new Timestamp(t0 + i * 30000L),
+      (i % 3).toLong, if (i % 2 == 0) "click" else "purchase")
+    def wmMs(p: StreamingQueryProgress): Long =
+      java.time.Instant.parse(p.eventTime.get("watermark")).toEpochMilli
+    try {
+      input.addData((0 until 180).map(mk): _*)
+      q.processAllAvailable()
+      input.addData((180 until 240).map(mk): _*)
+      q.processAllAvailable()
+      // sentinel at i=400 (11:20): advances the watermark to 09:20 —
+      // INSIDE the bulk, so the eviction frontier splits it nontrivially
+      input.addData(mk(400))
+      q.processAllAvailable()
+      // the next batch RUNS the eviction at that watermark; its progress
+      // reports the watermark it evicted WITH
+      input.addData(mk(401))
+      q.processAllAvailable()
+      val prog = q.lastProgress
+      val observed = prog.stateOperators.apply(0).numRowsTotal
+      val wmUsed = wmMs(prog)
+      assert(wmUsed > t0, "sentinel must have advanced the watermark")
+      assert(wmUsed < mk(239).ts.getTime, "frontier must split the bulk")
+
+      val all = ((0 until 240) ++ Seq(400, 401)).map(mk)
+      def model(wm: Long): Long =
+        all.count(e => e.event_type == "purchase" && e.ts.getTime >= wm) +
+          all.count(e => e.event_type == "click" && e.ts.getTime >= wm - 3600000L)
+      // boundary rows (ts exactly AT a frontier) may fall either side of
+      // Spark's internal </<= choice — the one exactness caveat
+      val boundary = all.count(e =>
+        (e.event_type == "purchase" && e.ts.getTime == wmUsed) ||
+        (e.event_type == "click" && e.ts.getTime == wmUsed - 3600000L))
+      assert(observed <= model(wmUsed) && observed >= model(wmUsed) - boundary,
+        s"state $observed outside [${model(wmUsed) - boundary}, ${model(wmUsed)}] " +
+        s"(wmUsed=$wmUsed, boundary=$boundary)")
+    } finally q.stop()
+  }
+}
+
+object BehavioralQualitySpec {
+  case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String)
 }

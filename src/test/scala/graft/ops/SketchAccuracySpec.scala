@@ -52,4 +52,63 @@ class SketchAccuracySpec extends AnyFunSuite {
     assert(math.abs(approx - exact) / exact < 0.05,
       s"HLL estimate $approx vs exact $exact")
   }
+
+  // ---- KMV: the min-K fold q316 and q325 share ----
+
+  private def hashesOf(sk: Sketches.KmvSketch): Set[Long] =
+    sk.hashes.collect().map(_.getLong(0)).toSet
+
+  private def fold(batches: Seq[Seq[Long]]): Sketches.KmvSketch = {
+    val spark2 = spark
+    import spark2.implicits._
+    batches.foldLeft(Sketches.emptySketch(spark)) { (sk, b) =>
+      Sketches.mergeBatch(b.toDF("key"), sk)
+    }
+  }
+
+  test("mergeBatch: min-K fold is associative, order-independent, idempotent") {
+    val b1 = (1L to 300L).toSeq
+    val b2 = (200L to 500L).toSeq   // overlaps b1
+    val b3 = Seq(7L, 9000L, 9001L)  // 7 repeats b1
+    val oneShot = fold(Seq(b1 ++ b2 ++ b3))
+    val folded = fold(Seq(b1, b2, b3))
+    val reordered = fold(Seq(b3, b1, b2))
+    val replayed = fold(Seq(b1, b2, b3, b2))
+    assert(hashesOf(folded) === hashesOf(oneShot))
+    assert(hashesOf(reordered) === hashesOf(oneShot))
+    assert(hashesOf(replayed) === hashesOf(oneShot))
+    // 502 distinct keys > K: the sketch sits exactly at capacity
+    assert(hashesOf(oneShot).size === Sketches.KmvK)
+    graft.util.QueryCaches.drain()
+  }
+
+  test("estimate: exact below capacity, calibrated at capacity") {
+    val small = fold(Seq((1L to 100L).toSeq))
+    val rs = Sketches.estimate(small).collect()(0)
+    assert(rs.getLong(0) === 100L)
+    assert(rs.getDouble(1) === 100.0, "below K the sketch IS the key set")
+    val big = fold(Seq((1L to 5000L).toSeq))
+    val rb = Sketches.estimate(big).collect()(0)
+    assert(rb.getLong(0) === Sketches.KmvK.toLong)
+    // deterministic md5 draw; KMV stderr ~ 1/sqrt(K-1) = 6.3%
+    assert(math.abs(rb.getDouble(1) - 5000.0) / 5000.0 < 0.25,
+      s"estimate ${rb.getDouble(1)} too far from 5000")
+    graft.util.QueryCaches.drain()
+  }
+
+  test("q325 runs no job before its action") {
+    Tables.events(spark, dir) // the schema catalog's one inference job
+    try {
+      val (q, jobs) = graft.ExecutedPlans.jobsOf(spark)(
+        graft.SparkEntry.queries("q325_kmv_replay")(spark, dir))
+      assert(jobs === 0, "building q325 must run no job")
+      val rows = q.collect()
+      assert(rows.map(_.getAs[Int]("batch")).toSeq === (0 to 3))
+      rows.foreach { r =>
+        // sf0.01 holds fewer than K users: the exact branch
+        assert(r.getAs[Long]("k_filled") === r.getAs[Long]("n_exact"))
+        assert(r.getAs[Double]("est") === r.getAs[Long]("n_exact").toDouble)
+      }
+    } finally graft.util.QueryCaches.drain()
+  }
 }

@@ -215,6 +215,13 @@ class ShortPageFetcher extends graft.source.v2.FixtureFetcher {
     super.fetch(url.replace("_count=10&_getpagesoffset=10", "_count=9&_getpagesoffset=10"))
 }
 
+/** [[graft.source.v2.FixtureFetcher]] behind a server that ignores
+  * `_getpagesoffset`: every page is the first page. */
+class OffsetIgnoringFetcher extends graft.source.v2.FixtureFetcher {
+  override def fetch(url: String): String =
+    super.fetch(url.replaceAll("_getpagesoffset=\\d+", "_getpagesoffset=0"))
+}
+
 class DerbyE2ESpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
@@ -434,17 +441,32 @@ class DerbyE2ESpec extends AnyFunSuite {
     assert(e.getMessage.contains("_count=0"), e.getMessage)
   }
 
-  test("a short page fails the sync naming its URL; the mirror keeps its rows") {
+  /** Seeds the 23-row Patient mirror, runs a sync through `fetcher` that
+    * must fail, checks the mirror kept its rows, and returns the
+    * failure's cause-chain messages. */
+  private def failedSyncMessages(fetcher: Class[_]): String = {
     DerbyTarget.reset()
     syncPatientV2()
     val seeded = DerbyTarget.rows("patient")
     assert(seeded.size === 23)
-    val e = intercept[Exception](syncPatientV2(fetcher = classOf[ShortPageFetcher].getName))
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    val e = intercept[Exception](syncPatientV2(fetcher = fetcher.getName))
+    assert(DerbyTarget.rows("patient") === seeded, s"$fetcher changed mirror rows")
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString(" | ")
+  }
+
+  test("a short page fails the sync naming its URL; the mirror keeps its rows") {
+    val msgs = failedSyncMessages(classOf[ShortPageFetcher])
     assert(msgs.contains("_count=10&_getpagesoffset=10") &&
       msgs.contains("has 9 entries, expected 10"), msgs)
-    assert(DerbyTarget.rows("patient") === seeded, "a short page deleted mirror rows")
+  }
+
+  test("an offset-ignoring server fails the sync naming its last page; the mirror keeps its rows") {
+    // 23 Patients at pageSize 10: the page at offset 20 expects 3 entries
+    // and gets page one's 10
+    val msgs = failedSyncMessages(classOf[OffsetIgnoringFetcher])
+    assert(msgs.contains("_count=10&_getpagesoffset=20") &&
+      msgs.contains("has 10 entries, expected 3"), msgs)
   }
 
   Seq("batchsize" -> Seq("ten", "0"), "dialect" -> Seq("derby")).foreach { case (key, bad) =>
