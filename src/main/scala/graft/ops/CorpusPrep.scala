@@ -598,9 +598,6 @@ object CorpusPrep {
         sum(coalesce(col("hit"), lit(0L))).as("n_leaked"))
   }
 
-  private[graft] def splitLeakageRaw(docs: DataFrame): DataFrame =
-    leakCounts(splitGrams(docs))
-
   private def splitLeakageOver(g: DataFrame): DataFrame =
     leakCounts(g)
       .select(col("doc_id"), col("split"), col("n_grams"), col("n_leaked"),
@@ -1267,10 +1264,10 @@ object CorpusPrep {
     * the vocabulary size in one two-level map-side-combinable
     * aggregation (pass k over corpus state k−1 returns round k−1's
     * accounting plus round k's rule: 33 passes). Each rewrite (the
-    * collected 1-row rule inlined as literals) is a LAZY lineage
-    * truncation ([[graft.util.Lineage.truncateLazy]]) whose blocks the
-    * next stats pass materializes inside its own job, so rewrites
-    * schedule nothing. Specs pin the two paths equal through
+    * collected 1-row rule inlined as literals) is a projection over the
+    * previous round's [[graft.util.Lineage]] cut, so cutting it runs no
+    * job: the next stats pass materializes its blocks inside its own
+    * job. Specs pin the two paths equal through
     * [[q322Distributed]]. The oracle unrolls the same 32-round fold
     * CTE-for-CTE (q309's unrolled-fold style).
     */
@@ -1408,19 +1405,19 @@ object CorpusPrep {
     bpeCurve(s, bpeTrainDistributed(bpeWords(s, dir)))
 
   private def bpeTrainDistributed(words: DataFrame): BpeCurve = {
-    // distributed loop: each round's rewrite is a LAZY truncation
-    // ([[graft.util.Lineage.truncateLazy]]) over the previous round
-    // — the plan cuts to a flat LogicalRDD immediately (per-round
-    // caches instead nest the cached plan per level and the
-    // AQE/listener plan strings grow geometrically — measured OOM at
-    // 32 rounds), but nothing schedules: round k's stats pass
-    // materializes round k's blocks inside its own job. The rewrite
+    // distributed loop: each round's rewrite is a [[graft.util.Lineage]]
+    // cut over the previous round's cut — the plan cuts to a flat
+    // LogicalRDD immediately (per-round caches instead nest the cached
+    // plan per level and the AQE/listener plan strings grow
+    // geometrically — measured OOM at 32 rounds), and a projection
+    // has no shuffle stage to run: round k's stats pass materializes
+    // round k's blocks inside its own job. The rewrite
     // MUST read a materialized attribute: folding the collected
     // rules into one nested expression instead re-evaluates the
     // whole fold inside every element_at (interpreted higher-order
     // functions have no common-subexpression elimination —
     // O(len²·K) per row, measured minutes per pass at sf0.1).
-    var docs = graft.util.Lineage.truncateLazy(words)
+    var docs = graft.util.Lineage.truncate(words)
     // pass over corpus state j: ONE action returning round j's
     // accounting (n_tokens = Σc over all positions, vocab = distinct
     // first-tokens = |g2 groups|) and round j+1's rule (the argmax
@@ -1455,7 +1452,7 @@ object CorpusPrep {
           Some((m.getString(1), m.getString(2), -m.getLong(0)))
         }
       rules(k).foreach { case (pa, pb, _) =>
-        docs = graft.util.Lineage.truncateLazy(docs.select(col("doc_id"),
+        docs = graft.util.Lineage.truncate(docs.select(col("doc_id"),
           bpeRewriteCol(col("w"), pa, pb).as("w")))
       }
     }

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
 

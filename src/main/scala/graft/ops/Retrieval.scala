@@ -13,9 +13,9 @@ import graft.source.Tables
   * Scale rules: every ranking is a bounded [[graft.functions.TopKByScore]]
   * aggregation (partial+final, shuffle volume independent of scored rows —
   * never a data-keyed ranking window); the fusion join touches only the
-  * ≤2k surviving candidates per query; MMR's greedy rounds iterate over a
-  * 20-candidate-per-query relation with eager lineage truncation
-  * ([[graft.util.Lineage]], the q233/q237 discipline). The per-query
+  * ≤2k surviving candidates per query; MMR's greedy rounds run on the
+  * driver over the collected ≤20-candidate-per-query relation
+  * ([[mmrGreedy]]'s doc states the bound). The per-query
   * candidate relations and the embedding projection are keyed-shared
   * ([[graft.util.QueryCaches]]) so a composed fuse+diversify job pays the
   * dense scoring pass once.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
 
@@ -1177,7 +1177,7 @@ object Similarity {
     * same BIGINT), same shape (5 bounded edge-join + partial-sum rounds
     * declared in one lazy plan over the persisted ≤3-out-degree edges;
     * each round references its predecessor ONCE, the case that needs no
-    * eager truncation). Output is the top-20 by mass via
+    * lineage cut). Output is the top-20 by mass via
     * TakeOrderedAndProject — at 100 TB the full rank vector never sorts
     * globally, the bounded head does.
     */
@@ -1271,10 +1271,12 @@ object Similarity {
     * unnecessary: a node labeled in round r has a labeled neighbor in
     * r−1 that stays labeled, so it ALWAYS receives votes in r+1 —
     * each round therefore references its predecessor exactly ONCE
-    * (votes join), the case [[graft.util.Lineage.truncateEvery2]]
-    * covers. Per round: one edge⋈label equi-join, a (node, label)
-    * partial+final count, a struct-max argmax, an anti-join against
-    * the anchor set — no window, no collect.
+    * (votes join), so the three rounds stay one linear plan with no
+    * lineage cut (q280's case; at sf0.1 the one plan runs 16 jobs where
+    * a cut per round ran 30, Probe count). Per round: one edge⋈label
+    * equi-join, a (node, label) partial+final count, a struct-max
+    * argmax, an anti-join against the anchor set — no window, no
+    * collect.
     */
   private val q281: Q = (s, dir) => {
     val sym = symKnnEdges(s, dir)
@@ -1284,8 +1286,8 @@ object Similarity {
       .select(col("vec_id").as("v"), col("label").cast("long").as("lab"))
     val seeds = graft.util.QueryCaches.tracked(
       nodes.join(labels, "v").filter(col("v") % 5 =!= 0))
-    var cur = graft.util.Lineage.truncate(seeds)
-    for (i <- 1 to 3) {
+    var cur = seeds
+    for (_ <- 1 to 3) {
       val votes = sym.join(cur.select(col("v").as("dst"), col("lab")), "dst")
         .groupBy(col("src"), col("lab")).agg(count(lit(1)).as("c"))
       val guesses = votes
@@ -1294,7 +1296,7 @@ object Similarity {
         .agg(max(struct(col("c"), (-col("lab")).as("nl"),
           col("lab").as("lab"))).as("m"))
         .select(col("src").as("v"), col("m.lab").as("lab"))
-      cur = graft.util.Lineage.truncateEvery2(seeds.unionByName(guesses), i)
+      cur = seeds.unionByName(guesses)
     }
     nodes.filter(col("v") % 5 === 0).join(labels, "v")
       .select(col("v"), col("lab").as("true_lab"))
@@ -1827,7 +1829,7 @@ object Similarity {
       s"CAST(round($d * $d * 1e9) AS BIGINT)"
     }.mkString(" + ")
 
-  private def pqCode(m: Int, dc: Int => String): String =
+  private def pqCode(dc: Int => String): String =
     s"""CASE WHEN ${dc(0)} <= ${dc(1)} AND ${dc(0)} <= ${dc(2)} AND ${dc(0)} <= ${dc(3)} THEN 0
        |  WHEN ${dc(1)} <= ${dc(2)} AND ${dc(1)} <= ${dc(3)} THEN 1
        |  WHEN ${dc(2)} <= ${dc(3)} THEN 2 ELSE 3 END""".stripMargin
@@ -1858,7 +1860,7 @@ object Similarity {
       s"${pqDist(m, c, i => s"CAST(embedding[$i] AS DOUBLE)")} AS d_${m}_$c")
       .mkString(",\n  ")
     val codes = (0 until 4).map(m =>
-      s"${pqCode(m, c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
+      s"${pqCode(c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
     val errs = (0 until 4)
       .map(m => s"least(d_${m}_0, d_${m}_1, d_${m}_2, d_${m}_3)")
       .mkString(" + ")
@@ -1909,7 +1911,7 @@ object Similarity {
       s"${pqDist(m, c, i => s"CAST(embedding[$i] AS DOUBLE)")} AS d_${m}_$c")
       .mkString(",\n  ")
     val assigned = (0 until 4).map(m =>
-      s"${pqCode(m, c => s"d_${m}_$c")} AS code$m,\n" +
+      s"${pqCode(c => s"d_${m}_$c")} AS code$m,\n" +
         s"  least(d_${m}_0, d_${m}_1, d_${m}_2, d_${m}_3) AS dq$m")
       .mkString(",\n  ")
     val unions = (0 until 4).map(m =>
@@ -1992,7 +1994,7 @@ object Similarity {
       s"${pqDist(m, c, i => s"CAST(embedding[$i] AS DOUBLE)")} AS d_${m}_$c")
       .mkString(",\n  ")
     val codes = (0 until 4).map(m =>
-      s"${pqCode(m, c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
+      s"${pqCode(c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
     val seedRows = (for (m <- 0 until 4; c <- 0 until 4; j <- 1 to 16)
       yield s"($m, $c, $j, ${pqCent(m, c, j - 1)})").mkString(", ")
     s"""WITH e0 AS (SELECT vec_id,
@@ -2157,7 +2159,7 @@ object Similarity {
       s"${pqDist(m, c, i => s"CAST(embedding[$i] AS DOUBLE)")} AS d_${m}_$c")
       .mkString(",\n  ")
     val codeCols = (0 until 4).map(m =>
-      s"${pqCode(m, c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
+      s"${pqCode(c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
     val adc = (0 until 4).map(m =>
       s"(CASE c.code$m WHEN 0 THEN q.d_${m}_0 WHEN 1 THEN q.d_${m}_1 " +
         s"WHEN 2 THEN q.d_${m}_2 ELSE q.d_${m}_3 END)").mkString(" + ")
@@ -2248,7 +2250,7 @@ object Similarity {
     val dcols = (for (m <- 0 until 4; c <- 0 until 4) yield
       s"${pqDist(m, c, i => s"a.v[$i]")} AS d_${m}_$c").mkString(",\n  ")
     val codeCols = (0 until 4).map(m =>
-      s"${pqCode(m, c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
+      s"${pqCode(c => s"d_${m}_$c")} AS code$m").mkString(",\n  ")
     val qdcols = (for (m <- 0 until 4; c <- 0 until 4) yield
       s"${pqDist(m, c, i => s"e.v[$i]")} AS d_${m}_$c").mkString(",\n  ")
     val adc = (0 until 4).map(m =>
@@ -2908,15 +2910,15 @@ object Similarity {
       var labels = graft.util.Lineage.truncate(
         sym.select(col("src").as("v")).distinct()
           .withColumn("lbl", col("v")))
-      // each round references `labels` exactly ONCE, so alternating
-      // truncation keeps the lazy tree ≤ 2 rounds deep (truncateEvery2)
-      for (i <- 1 to 3) {
-        labels = graft.util.Lineage.truncateEvery2(sym
+      // each round reads `labels` once; the cut runs the round's
+      // shuffle stages now and its final stage in the next round's
+      for (_ <- 1 to 3) {
+        labels = graft.util.Lineage.truncate(sym
           .join(labels.select(col("v").as("dst"), col("lbl").as("nl")), "dst")
           .groupBy(col("src"), col("nl")).agg(count(lit(1)).as("c"))
           .groupBy(col("src").as("v"))
           .agg(max_by(col("nl"),
-            struct(col("c"), (-col("nl")).as("t"))).as("lbl")), i)
+            struct(col("c"), (-col("nl")).as("t"))).as("lbl")))
       }
       labels
     }
@@ -3047,20 +3049,14 @@ object Similarity {
       // round, not three times (round-9 tail measurement)
       val keep = graft.util.QueryCaches.tracked(
         deg.filter(col("deg") >= 2).select("v"))
-      // Eager lineage truncation EVERY round (TextDedup.connectedComponents'
-      // discipline): the two semi-joins reference the previous round
-      // TWICE, so a lazy chain — even persisted — carries a 2^rounds
+      // Lineage cut EVERY round: the two semi-joins reference the
+      // previous round TWICE, so an uncut chain carries a 2^rounds
       // logical tree through analysis/codegen (this OOM'd the driver
-      // before truncation). The survivor edge set is bounded (≤3|V|),
-      // so each round materializes a small relation and the next round
-      // plans against just it. Note: q233 is the kernel that CANNOT use
-      // the alternating truncateEvery2 relaxation q237/LPA use — its
-      // per-round curve aggregates run their own actions against the
-      // current edge set, so an untruncated round is re-executed once
-      // per downstream count (measured 2.5× slower at sf0.1 when tried,
-      // round 9). Lineage.truncate honors the spark.graft.checkpointDir
-      // reliable-checkpoint escape on clusters (localCheckpoint blocks
-      // die with their executor).
+      // before truncation). The cut runs the semi-joins' shuffle stages
+      // now; its final stage runs once, in the first job that reads it
+      // (the next round's cut or the curve's action), and every later
+      // reader scans its blocks. The survivor edge set is bounded
+      // (≤3|V|), so each round plans against a small cut.
       edges = graft.util.Lineage.truncate(edges
         .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi"))
@@ -3110,7 +3106,7 @@ object Similarity {
     * Complements q181 (flow centrality) and q191 (raw in-degree): a hub
     * whose neighbors are themselves hubs outranks an equal-degree
     * periphery node here. Each round is one equi-join + partial+final
-    * sum over the bounded edge relation with eager lineage truncation
+    * sum over the bounded edge relation with a lineage cut per round
     * (the q233 lesson); top-10 is TakeOrdered, never a window.
     */
   private val q237: Q = (s, dir) => {
@@ -3119,10 +3115,10 @@ object Similarity {
       sym.select(col("src").as("v")).distinct()
         .withColumn("vq", lit(1000000L)))
     // av is referenced twice per round (sum + its max normalizer), so an
-    // untruncated round doubles the subtree — truncateEvery2 bounds that
-    // at one doubling (≤4 checkpoint-scan copies) while halving the
-    // per-round checkpoint jobs that dominate this kernel's cost
-    for (i <- 1 to 4) {
+    // uncut round would double the subtree: every round ends in a cut,
+    // which runs the round's shuffle stages now and leaves its final
+    // projection to the next round's first job
+    for (_ <- 1 to 4) {
       // av is consumed twice per round (its max normalizer rides a
       // broadcast subquery of the same action): persist it so the
       // edge-join + sum — the round's dominant cost at scale — runs
@@ -3131,10 +3127,10 @@ object Similarity {
         .join(v.select(col("v").as("dst"), col("vq").as("dvq")), "dst")
         .groupBy("src").agg(sum("dvq").as("av")))
       val mx = av.agg(max("av").as("mx"))
-      v = graft.util.Lineage.truncateEvery2(av.crossJoin(broadcast(mx))
+      v = graft.util.Lineage.truncate(av.crossJoin(broadcast(mx))
         .select(col("src").as("v"),
           expr("CAST(round(CAST(av AS DOUBLE) / CAST(mx AS DOUBLE) * 1e6)" +
-            " AS BIGINT)").as("vq")), i)
+            " AS BIGINT)").as("vq")))
     }
     v.orderBy(col("vq").desc, col("v")).limit(10)
       .select(col("v").as("vec_id"), col("vq").as("score_q"),
@@ -4191,9 +4187,9 @@ object Similarity {
       val newC = base.join(broadcast(far), col("vec_id") === col("fid"))
         .select(col("vec_id").as("cid"), col("vq").as("cv"))
       // centers is consumed TWICE next round (the union and dmin's
-      // cross) — without eager truncation the plan doubles per round
-      // (2⁴ recomputes of the whole chain; Probe-measured 7.6 s →
-      // 3.7 s at sf0.1). The ≤5-row checkpoint is the iterative rule.
+      // cross) — without a cut the plan doubles per round (2⁴
+      // recomputes of the whole chain; Probe-measured 7.6 s → 3.7 s at
+      // sf0.1). The ≤5-row cut is the iterative rule.
       centers = graft.util.Lineage.truncate(centers.unionByName(newC))
     }
     val cset = graft.util.QueryCaches.tracked(centers)
@@ -4270,7 +4266,7 @@ object Similarity {
     var beam = scoreOf(q.select(col("query_id")).crossJoin(broadcast(entry)))
       .withColumn("rank", lit(1))
     var frontier = beam.select("query_id", "doc_id")
-    for (hop <- 1 to 3) {
+    for (_ <- 1 to 3) {
       val expanded = frontier
         .join(edges.withColumnRenamed("src", "doc_id"), "doc_id")
         .select(col("query_id"), col("dst").as("doc_id")).distinct()
@@ -4282,11 +4278,11 @@ object Similarity {
         .select(col("query_id"), posexplode(col("tk")))
         .select(col("query_id"), col("col.id").as("doc_id"),
           col("col.score").as("cs"), (col("pos") + 1).cast("int").as("rank"))
-      // one truncation per hop (r13): checkpoint the new beam eagerly —
-      // it is the relation BOTH the next union and the frontier read —
-      // and leave the frontier as a lazy anti-join of two truncated
-      // relations (consumed once, depth bounded; a second eager
-      // checkpoint per hop bought nothing but a scheduling action).
+      // one cut per hop (r13): cut the new beam — it is the relation
+      // BOTH the next union and the frontier read — and leave the
+      // frontier as a lazy anti-join of two cut relations (consumed
+      // once, depth bounded; a second cut per hop bought nothing but a
+      // scheduling action).
       // r14 re-measured the 2-hops-per-checkpoint deferral (odd hops as
       // tracked lazy caches, boruvkaMsf's pattern): jobs 68 → 67 and
       // 4.9 → 5.3 s probe median — the cost here is the ~5 tiny

@@ -29,11 +29,6 @@ object TextDedup {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  /** The spark.graft.checkpointDir value last applied to the context —
-    * tracked here because `setCheckpointDir` appends a UUID subdir, so
-    * the context's dir never compares equal to the configured path.
-    */
-
   /** Word k-shingles as a SQL expression over a `words` array column.
     * Guarded: Spark's `sequence(1, n)` DESCENDS for n<1 (DuckDB's
     * generate_series returns empty), so short docs must short-circuit.
@@ -1445,18 +1440,18 @@ object TextDedup {
     val sym = e.toDF("src", "dst")
       .union(e.toDF("dst", "src").select("src", "dst"))
       .persist(MEMORY_AND_DISK)
-    // Eager checkpoint per round via graft.util.Lineage (executor-local
-    // by default, RELIABLE when `spark.graft.checkpointDir` is set — the
-    // cluster-safety escape every iterative kernel shares; rationale in
-    // Lineage's scaladoc).
+    // Every round's labels are a graft.util.Lineage cut. The cut's final
+    // stage runs in the next round's convergence probe, and it may still
+    // scan the `step` it was cut from (the streamed side of a broadcast
+    // join), so a step is released only after that probe.
     // Init already folds the first propagation round in: label(v) =
     // min(v, min neighbor) — one aggregation instead of distinct + a round.
-    def truncateLineage(df: DataFrame): DataFrame = graft.util.Lineage.truncate(df)
-    var labels = truncateLineage(sym.groupBy(col("src"))
+    var labels = graft.util.Lineage.truncate(sym.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("label"))
       .withColumnRenamed("src", "doc_id"))
     var converged = false
     var iter = 0
+    var prevStep: Option[DataFrame] = None
     while (!converged && iter < maxIters) {
       val neighborMin = sym
         .join(labels.select(col("doc_id").as("dst"), col("label").as("nl")), "dst")
@@ -1472,22 +1467,24 @@ object TextDedup {
       // Convergence is decidable BEFORE the jump: if propagation changed no
       // label we are at the min-propagation fixpoint, where labels are
       // already idempotent (label(label(v)) == label(v)) — the jump and its
-      // checkpoint are pure cost on the final round, so skip them and keep
-      // the previous (already checkpointed) labels.
+      // cut are pure cost on the final round, so skip them and keep the
+      // previous labels, which this probe has just materialized.
       converged = step.filter(col("label") =!= col("old")).isEmpty
+      prevStep.foreach(_.unpersist())
+      prevStep = Some(step)
       if (!converged) {
         // Pointer jumping: follow label -> label(label). Every label IS a
         // doc_id present in `labels` (it entered as some node's min), so
         // the lookup is a self-join on the same (persisted) relation.
-        labels = truncateLineage(step
+        labels = graft.util.Lineage.truncate(step
           .join(step.select(col("doc_id").as("label"), col("label").as("ll")),
             Seq("label"), "left")
           .select(col("doc_id"),
             least(col("label"), coalesce(col("ll"), col("label"))).as("label")))
       }
-      step.unpersist()
       iter += 1
     }
+    prevStep.foreach(_.unpersist())
     sym.unpersist()
     e.unpersist()
     if (!converged)

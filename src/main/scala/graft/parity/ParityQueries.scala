@@ -305,13 +305,12 @@ object ParityQueries {
       val c = cls.groupBy("action").agg(count(lit(1)).as("n"))
         .withColumn("batch", lit(k))
       counts = if (counts == null) c else counts.unionByName(c)
-      // r14: LAZY truncation — the plan still cuts per batch (never
-      // nests with B) but the per-batch scheduling action is gone; the
-      // final counts action materializes the state chain, each batch's
-      // RDD persisted at block level so its two consumers (the next
-      // batch's classify and this batch's aggregate via the cls cache)
-      // read it once-computed.
-      state = graft.util.Lineage.truncateLazy(
+      // The plan cuts per batch, so it never nests with B. The cut runs
+      // the batch's shuffle stages now, filling the cls cache on the
+      // way; its final stage, the anti-join + union, runs in the next
+      // batch's cut or the final counts action, and its blocks serve
+      // every later reader.
+      state = graft.util.Lineage.truncate(
         state.join(cls.filter(col("action").isin(Reconcile.Update,
             Reconcile.Delete)).select(col("resource_id").as("rid")),
             col("resource_id") === col("rid"), "left_anti")

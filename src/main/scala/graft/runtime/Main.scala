@@ -94,7 +94,7 @@ object Main {
     * (`src/db_utils.rs:6-32`: 5 s backoff; `src/main.rs:376` passes 10
     * attempts).
     */
-  def checkPgConnection(cfg: Scheduler.Config, attempts: Int = 10,
+  def checkPgConnection(attempts: Int = 10,
                         sleep: Duration => Unit = d => Thread.sleep(d.toMillis),
                         probe: () => Unit): Either[String, Unit] =
     Scheduler.retry(attempts, Duration.ofSeconds(5), sleep) { () =>
@@ -110,7 +110,7 @@ object Main {
     }
     val spark = graft.GraftSession.builder().appName("graft-fhir2sql").getOrCreate()
 
-    checkPgConnection(cfg, probe = () => withConnection(cfg)(_ => ())) match {
+    checkPgConnection(probe = () => withConnection(cfg)(_ => ())) match {
       case Left(err) => System.err.println(err); sys.exit(1)
       case Right(_) => ()
     }

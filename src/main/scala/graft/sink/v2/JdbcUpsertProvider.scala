@@ -137,31 +137,25 @@ private[v2] class UpsertTable(props: Map[String, String])
     val batchSize = graft.util.NumericOption.int("batchsize",
       props.get("batchsize"), JdbcUpsert.DefaultBatchSize, min = 1)
     val dialect = JdbcUpsertProvider.dialectFor(props)
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new UpsertBatchWrite(props, info.schema(), batchSize, dialect)
-      }
+    val inputSchema = info.schema()
+    new WriteBuilder with Write with BatchWrite {
+      override def build(): Write = this
+      override def toBatch: BatchWrite = this
+      // built from local values only: the factory ships to executors
+      // and must not capture this builder or its table
+      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+        new UpsertDataWriterFactory(props, inputSchema, batchSize, dialect)
+      // Attempt atomicity lives in each task's transaction (commit/abort
+      // on the writer); there is no cross-task coordinator to run here —
+      // the documented at-least-once + reconcile-detect posture of the
+      // JDBC sink.
+      override def commit(messages: Array[WriterCommitMessage]): Unit = ()
+      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
     }
   }
 }
 
-private[v2] class UpsertBatchWrite(props: Map[String, String],
-                                   inputSchema: StructType,
-                                   batchSize: Int,
-                                   dialect: JdbcUpsert.Dialect) extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new UpsertDataWriterFactory(props, inputSchema, batchSize, dialect)
-
-  // Attempt atomicity lives in each task's transaction (commit/abort on
-  // the writer); there is no cross-task coordinator to run here — the
-  // documented at-least-once + reconcile-detect posture of the JDBC sink.
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** Empty: [[UpsertBatchWrite.commit]] reads no task message. */
+/** Empty: the batch write's `commit` reads no task message. */
 private[v2] case object UpsertCommit extends WriterCommitMessage
 
 private[v2] class UpsertDataWriterFactory(props: Map[String, String],
@@ -250,10 +244,7 @@ private[v2] class UpsertDataWriter(props: Map[String, String],
   /** Task failed (or lost speculation): close WITHOUT commit — the open
     * transaction dies with the connection and the engine rolls it back.
     */
-  override def abort(): Unit = {
-    conn.foreach(_._2())
-    conn = None
-  }
+  override def abort(): Unit = close()
 
   override def close(): Unit = {
     conn.foreach(_._2())

@@ -2,18 +2,27 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for iterative dataflows (connected components,
-  * k-core peeling, eigencentrality power iteration, the q309/q322
-  * batch folds). Iterative plans otherwise NEST: the optimizer
+/** The one lineage cut for iterative dataflows (connected components,
+  * k-core peeling, power iteration, label propagation, the q309/q322
+  * batch folds). An iterative plan otherwise NESTS: the optimizer
   * re-analyzes and re-codegens an O(iteration)-deep tree every round
-  * (quadratic planning cost, unbounded lineage on failure recovery), so
-  * each round's result is eagerly checkpointed down to its materialized
-  * partitions.
+  * (quadratic planning cost, unbounded lineage on failure recovery).
+  *
+  * [[truncate]] is a lazy checkpoint: the plan is cut to a `LogicalRDD`
+  * at once, so per-round plans never nest. What runs, and when, under
+  * AQE:
+  *  - at call time, the cut runs the plan's shuffle and broadcast
+  *    stages (one job per Exchange); a plan with no Exchange, or a
+  *    projection over an earlier cut, runs nothing;
+  *  - the final stage waits for the first job that reads the cut; a
+  *    local cut keeps that job's blocks for every later reader;
+  *  - a reliable cut writes its files when the next action that reads
+  *    it ends, re-running the final stage to do so.
   *
   * Storage choice is the cluster-safety decision:
   *  - default: `localCheckpoint` — executor-local blocks, no write-through
   *    cost, correct in single-JVM/local mode;
-  *  - `spark.graft.checkpointDir` set: RELIABLE `checkpoint()` to that
+  *  - `spark.graft.checkpointDir` set: RELIABLE `checkpoint` to that
   *    dir — on a real cluster a lost executor takes its localCheckpoint
   *    blocks with it and the truncated lineage cannot recompute them, so
   *    cluster deployments must set the dir (HDFS/S3) and take the
@@ -21,6 +30,9 @@ import org.apache.spark.sql.DataFrame
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` so GC'd
   *    checkpointed RDDs clean their files (reliable checkpoint files are
   *    not auto-deleted by default).
+  *
+  * A caller that releases a cache the cut's plan reads must wait until
+  * an action has read the cut.
   */
 object Lineage {
 
@@ -29,41 +41,10 @@ object Lineage {
   // never compare equal.
   @volatile private var lastCheckpointDir: Option[String] = None
 
-  /** True when the last [[truncate]] or [[truncateLazy]] call took the
-    * reliable-checkpoint path — observable hook for the cluster-safety
-    * spec.
+  /** Cut `df`'s lineage: a lazy local checkpoint, or a lazy reliable one
+    * when `spark.graft.checkpointDir` is set.
     */
-  @volatile private[graft] var lastWasReliable: Boolean = false
-
-  /** Truncate on alternating rounds of an iterative kernel. A round that
-    * references its predecessor r times builds an r^k-size logical tree
-    * over k untruncated rounds — truncating every SECOND round bounds k
-    * at 2 (tree ≤ r² copies of a checkpoint scan, still tiny) while
-    * halving the checkpoint materializations, which on the 3–5-round
-    * graph kernels are mostly fixed per-round job overhead (round-8
-    * verdict item 4). Rounds are 1-based; even rounds truncate.
-    */
-  def truncateEvery2(df: DataFrame, round: Int): DataFrame =
-    if (round % 2 == 0) truncate(df) else df
-
-  /** LAZY truncation: the plan is cut to a `LogicalRDD` immediately (so
-    * per-round plans in a driver loop never nest — with AQE an
-    * InMemoryRelation chain renders its child plan per level and the
-    * listener-event plan strings grow geometrically), but nothing runs
-    * until the NEXT action over the result materializes it — a driver
-    * loop whose every round is anyway consumed by the next round's
-    * single action gets lineage truncation with zero extra scheduling
-    * actions (r14, q322). Same storage decision as [[truncate]]: local
-    * blocks by default, reliable checkpoint when
-    * `spark.graft.checkpointDir` is set (there the materializing action
-    * pays the write-through re-computation, as eager truncation does).
-    */
-  def truncateLazy(df: DataFrame): DataFrame = checkpoint(df, eager = false)
-
-  /** EAGER truncation: one job materializes `df` now, then the plan is cut. */
-  def truncate(df: DataFrame): DataFrame = checkpoint(df, eager = true)
-
-  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+  def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) =>
@@ -73,11 +54,9 @@ object Lineage {
             lastCheckpointDir = Some(dir)
           }
         }
-        lastWasReliable = true
-        df.checkpoint(eager)
+        df.checkpoint(eager = false)
       case None =>
-        lastWasReliable = false
-        df.localCheckpoint(eager)
+        df.localCheckpoint(eager = false)
     }
   }
 }

@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * as the one session factory of `src/main` and `src/test`,
   * `Lineage` as the one reader of a `spark.graft.*` conf key, the
   * `blaze` source as the one builder of FHIR search URLs,
-  * `Reconcile` as the one module that decides sync actions, and that
+  * `Reconcile` as the one module that decides sync actions,
+  * `Lineage` as the one place that cuts lineage, and that
   * `src/main` starts no Structured Streaming query.
   */
 class DocConsistencySpec extends AnyFunSuite {
@@ -62,6 +63,14 @@ class DocConsistencySpec extends AnyFunSuite {
     val keys = sourcesMatching(Seq("src/main"), "graft/util/Lineage.scala",
       "\"spark\\.graft\\.")
     assert(keys.isEmpty, s"spark.graft.* conf keys outside util/Lineage.scala: $keys")
+  }
+
+  test("src/main cuts lineage only in util/Lineage.scala") {
+    // one cut: a checkpoint of its own would skip the reliable-checkpoint
+    // escape that spark.graft.checkpointDir gives clusters
+    val cuts = sourcesMatching(Seq("src/main"), "graft/util/Lineage.scala",
+      """\b(localCheckpoint|checkpoint)\(""")
+    assert(cuts.isEmpty, s"lineage cuts outside util/Lineage.scala: $cuts")
   }
 
   test("src/main builds FHIR search URLs only in source/v2/BlazeTableProvider.scala") {

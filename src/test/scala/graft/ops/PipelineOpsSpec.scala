@@ -91,21 +91,33 @@ class PipelineOpsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
-  test("truncateLazy with a checkpoint dir: no job at call time, reliable files after an action") {
+  test("truncate with a checkpoint dir: no job at call time, reliable files after an action") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-lazy").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      graft.util.Lineage.lastWasReliable = false
       val (cut, jobs) = graft.ExecutedPlans.jobsOf(spark)(
-        graft.util.Lineage.truncateLazy(spark.range(100).toDF("id")))
-      assert(graft.util.Lineage.lastWasReliable)
-      assert(jobs === 0, "truncateLazy must not run a job")
+        graft.util.Lineage.truncate(spark.range(100).toDF("id")))
+      assert(jobs === 0, "truncate must not run a job on a plan with no Exchange")
       assert(cut.count() === 100L)
       val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       val nFiles = try stream.filter(java.nio.file.Files.isRegularFile(_)).count()
                    finally stream.close()
       assert(nFiles > 0, s"expected reliable checkpoint files under $dir")
     } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
+  test("truncate runs the plan's shuffle stage at call time; a projection over a cut runs none") {
+    // Under AQE a lazy checkpoint executes the plan to get its RDD, and
+    // that runs every shuffle stage: one Exchange here, so one job. Only
+    // the final stage waits for the action that reads the cut.
+    val (cut, jobs) = graft.ExecutedPlans.jobsOf(spark)(graft.util.Lineage
+      .truncate(spark.range(1000).groupBy((col("id") % 7).as("k")).count()))
+    assert(jobs === 1, "one job per shuffle stage at call time")
+    val (again, projJobs) = graft.ExecutedPlans.jobsOf(spark)(
+      graft.util.Lineage.truncate(cut.select((col("k") + 1).as("k1"))))
+    assert(projJobs === 0, "a projection over a cut has no stage to run")
+    assert(cut.count() === 7L)
+    assert(again.count() === 7L)
   }
 
   test("q233/q237 iterative rounds checkpoint RELIABLY when spark.graft.checkpointDir is set") {
@@ -119,8 +131,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       val out = graft.SparkEntry.queries("q233_kcore_curve")(
         spark, "/root/testdata/sf0.001").collect()
       assert(out.length === 5, "five peeling rounds")
-      assert(graft.util.Lineage.lastWasReliable,
-        "Lineage must have taken the reliable-checkpoint path")
       val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       val nFiles = try stream.filter(java.nio.file.Files.isRegularFile(_)).count()
                    finally stream.close()

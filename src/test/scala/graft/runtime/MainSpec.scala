@@ -63,8 +63,7 @@ class MainSpec extends AnyFunSuite {
   test("checkPgConnection retries with 5s backoff") {
     var calls = 0
     val slept = scala.collection.mutable.Buffer[Duration]()
-    val cfg = Scheduler.Config("http://b", "h", "u", "p", "d")
-    val r = Main.checkPgConnection(cfg, attempts = 4, sleep = slept += _,
+    val r = Main.checkPgConnection(attempts = 4, sleep = slept += _,
       probe = () => { calls += 1; if (calls < 2) throw new RuntimeException("conn") })
     assert(r === Right(()))
     assert(slept.toSeq === Seq(Duration.ofSeconds(5)))
