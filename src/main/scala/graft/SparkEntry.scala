@@ -23,23 +23,23 @@ object SparkEntry {
       .filter(col("action") =!= Reconcile.Noop)
   }
 
+  /** Every query module; each declares its queries once, in its `all`. */
+  private[graft] lazy val modules: Seq[Seq[Query]] = Seq(
+    parity.ParityQueries.all, ops.Relational.all, ops.Sessions.all,
+    ops.TextDedup.all, ops.Similarity.all, ops.TextStats.all,
+    ops.Multimodal.all, ops.AsOf.all, ops.Analytic.all, ops.Corpus.all,
+    ops.Behavioral.all, ops.Quality.all, ops.Layout.all,
+    ops.MerkleDiff.all, ops.CorpusPrep.all, ops.Stats.all,
+    ops.Retrieval.all, ops.Sketches.all, ops.Evaluation.all)
+
+  /** Name → query; a name declared by two modules fails here, naming it. */
+  private lazy val registry: Map[String, Query] = Query.byName(modules.flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    parity.ParityQueries.all ++ ops.Relational.all ++ ops.Sessions.all ++
-      ops.TextDedup.all ++ ops.Similarity.all ++ ops.TextStats.all ++
-      ops.Multimodal.all ++ ops.AsOf.all ++ ops.Analytic.all ++
-      ops.Corpus.all ++ ops.Behavioral.all ++ ops.Quality.all ++
-      ops.Layout.all ++ ops.MerkleDiff.all ++ ops.CorpusPrep.all ++
-      ops.Stats.all ++ ops.Retrieval.all ++ ops.Sketches.all ++
-      ops.Evaluation.all
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.plan }
 
   /** DuckDB oracle SQL, keyed identically to [[queries]]. */
-  def oracleSql: Map[String, String] =
-    parity.ParityQueries.oracle ++ ops.Relational.oracle ++
-      ops.Sessions.oracle ++ ops.TextDedup.oracle ++ ops.Similarity.oracle ++
-      ops.TextStats.oracle ++ ops.Multimodal.oracle ++ ops.AsOf.oracle ++
-      ops.Analytic.oracle ++ ops.Corpus.oracle ++ ops.Behavioral.oracle ++
-      ops.Quality.oracle ++ ops.Layout.oracle ++ ops.MerkleDiff.oracle ++
-      ops.CorpusPrep.oracle ++ ops.Stats.oracle ++ ops.Retrieval.oracle ++
-      ops.Sketches.oracle ++ ops.Evaluation.oracle
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracleSql }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.source.Tables
+import graft.Query
 
 /** Analytic widening of the relational suite (SURVEY.md §2.2): grouping
   * sets (q65), unpivot/melt (q66), window navigation (q67) and
@@ -1068,53 +1069,28 @@ object Analytic {
       |JOIN est_u eu ON eu.ta = p.ta AND eu.tb = p.tb
       |ORDER BY p.ta, p.tb""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q273_hll_set_algebra" -> q273,
-    "q211_join_card_est" -> q211,
-    "q222_table_stats" -> q222,
-    "q228_partition_sizing" -> q228,
-    "q238_runtime_filter_gain" -> q238,
-    "q203_retention_halflife" -> q203,
-    "q123_star_join" -> q123,
-    "q112_value_outliers" -> q112,
-    "q65_grouping_sets" -> q65,
-    "q82_setops_multiset" -> q82,
-    "q84_window_range_frame" -> q84,
-    "q85_percent_of_total" -> q85,
-    "q86_scalar_subquery" -> q86,
-    "q93_union_by_name" -> q93,
-    "q94_cohort_retention" -> q94,
-    "q95_percentile_disc" -> q95,
-    "q66_unpivot" -> q66,
-    "q67_window_nav" -> q67,
-    "q68_window_dist" -> q68,
-    "q69_argmax" -> q69,
-    "q73_range_bucket_join" -> q73,
-    "q77_salted_join" -> q77
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q273_hll_set_algebra" -> q273Sql,
-    "q211_join_card_est" -> q211Sql,
-    "q222_table_stats" -> q222Sql,
-    "q228_partition_sizing" -> q228Sql,
-    "q238_runtime_filter_gain" -> q238Sql,
-    "q203_retention_halflife" -> q203Sql,
-    "q123_star_join" -> q123Sql,
-    "q112_value_outliers" -> q112Sql,
-    "q65_grouping_sets" -> q65Sql,
-    "q82_setops_multiset" -> q82Sql,
-    "q84_window_range_frame" -> q84Sql,
-    "q85_percent_of_total" -> q85Sql,
-    "q86_scalar_subquery" -> q86Sql,
-    "q93_union_by_name" -> q93Sql,
-    "q94_cohort_retention" -> q94Sql,
-    "q95_percentile_disc" -> q95Sql,
-    "q66_unpivot" -> q66Sql,
-    "q67_window_nav" -> q67Sql,
-    "q68_window_dist" -> q68Sql,
-    "q69_argmax" -> q69Sql,
-    "q73_range_bucket_join" -> q73Sql,
-    "q77_salted_join" -> q77Sql
+  val all: Seq[Query] = Seq(
+    Query("q273_hll_set_algebra", q273, q273Sql),
+    Query("q211_join_card_est", q211, q211Sql),
+    Query("q222_table_stats", q222, q222Sql),
+    Query("q228_partition_sizing", q228, q228Sql),
+    Query("q238_runtime_filter_gain", q238, q238Sql),
+    Query("q203_retention_halflife", q203, q203Sql),
+    Query("q123_star_join", q123, q123Sql),
+    Query("q112_value_outliers", q112, q112Sql),
+    Query("q65_grouping_sets", q65, q65Sql),
+    Query("q82_setops_multiset", q82, q82Sql),
+    Query("q84_window_range_frame", q84, q84Sql),
+    Query("q85_percent_of_total", q85, q85Sql),
+    Query("q86_scalar_subquery", q86, q86Sql),
+    Query("q93_union_by_name", q93, q93Sql),
+    Query("q94_cohort_retention", q94, q94Sql),
+    Query("q95_percentile_disc", q95, q95Sql),
+    Query("q66_unpivot", q66, q66Sql),
+    Query("q67_window_nav", q67, q67Sql),
+    Query("q68_window_dist", q68, q68Sql),
+    Query("q69_argmax", q69, q69Sql),
+    Query("q73_range_bucket_join", q73, q73Sql),
+    Query("q77_salted_join", q77, q77Sql)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** As-of (point-in-time) join — an operator Spark lacks natively, built by
   * COMPOSING built-ins (preference (a) of the custom-operator ladder): for
@@ -96,6 +97,7 @@ object AsOf {
       |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
       |ORDER BY event_id""".stripMargin
 
-  val all: Map[String, Q] = Map("q52_asof_join" -> q52)
-  val oracle: Map[String, String] = Map("q52_asof_join" -> q52Sql)
+  val all: Seq[Query] = Seq(
+    Query("q52_asof_join", q52, q52Sql)
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Event-sequence analytics over the `events` stream table — the classic
   * product-analytics trio (funnel, transition matrix, temporal co-occurrence)
@@ -1157,45 +1158,25 @@ object Behavioral {
       |    AS DOUBLE) / CAST(1e9 AS DOUBLE)), 6) AS survival
       |FROM q ORDER BY day""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q282_kaplan_meier" -> q282,
-    "q248_markov_entropy" -> q248,
-    "q246_gap_fill" -> q246,
-    "q241_scd2_history" -> q241,
-    "q243_assoc_lift" -> q243,
-    "q236_watermark_join_loss" -> q236,
-    "q232_user_entropy" -> q232,
-    "q229_attribution_asof" -> q229,
-    "q227_late_event_curve" -> q227,
-    "q218_interarrival_profile" -> q218,
-    "q214_stream_state_budget" -> q214,
-    "q204_markov_stationary" -> q204,
-    "q209_arrival_disorder" -> q209,
-    "q122_funnel_windowed" -> q122,
-    "q96_funnel" -> q96,
-    "q97_transitions" -> q97,
-    "q102_overlap_pairs" -> q102,
-    "q119_cumulative_users" -> q119,
-    "q120_churn" -> q120)
-
-  val oracle: Map[String, String] = Map(
-    "q282_kaplan_meier" -> q282Sql,
-    "q248_markov_entropy" -> q248Sql,
-    "q246_gap_fill" -> q246Sql,
-    "q241_scd2_history" -> q241Sql,
-    "q243_assoc_lift" -> q243Sql,
-    "q236_watermark_join_loss" -> q236Sql,
-    "q232_user_entropy" -> q232Sql,
-    "q229_attribution_asof" -> q229Sql,
-    "q227_late_event_curve" -> q227Sql,
-    "q218_interarrival_profile" -> q218Sql,
-    "q214_stream_state_budget" -> q214Sql,
-    "q204_markov_stationary" -> q204Sql,
-    "q209_arrival_disorder" -> q209Sql,
-    "q122_funnel_windowed" -> q122Sql,
-    "q96_funnel" -> q96Sql,
-    "q97_transitions" -> q97Sql,
-    "q102_overlap_pairs" -> q102Sql,
-    "q119_cumulative_users" -> q119Sql,
-    "q120_churn" -> q120Sql)
+  val all: Seq[Query] = Seq(
+    Query("q282_kaplan_meier", q282, q282Sql),
+    Query("q248_markov_entropy", q248, q248Sql),
+    Query("q246_gap_fill", q246, q246Sql),
+    Query("q241_scd2_history", q241, q241Sql),
+    Query("q243_assoc_lift", q243, q243Sql),
+    Query("q236_watermark_join_loss", q236, q236Sql),
+    Query("q232_user_entropy", q232, q232Sql),
+    Query("q229_attribution_asof", q229, q229Sql),
+    Query("q227_late_event_curve", q227, q227Sql),
+    Query("q218_interarrival_profile", q218, q218Sql),
+    Query("q214_stream_state_budget", q214, q214Sql),
+    Query("q204_markov_stationary", q204, q204Sql),
+    Query("q209_arrival_disorder", q209, q209Sql),
+    Query("q122_funnel_windowed", q122, q122Sql),
+    Query("q96_funnel", q96, q96Sql),
+    Query("q97_transitions", q97, q97Sql),
+    Query("q102_overlap_pairs", q102, q102Sql),
+    Query("q119_cumulative_users", q119, q119Sql),
+    Query("q120_churn", q120, q120Sql)
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.source.Tables
+import graft.Query
 
 /** Corpus-level LLM-pipeline analytics — the operators a pre-training
   * data pipeline runs between raw ingest and shard writing: retrieval
@@ -1182,7 +1183,7 @@ object Corpus {
   }
 
   private def q118Sql =
-    s"""WITH pairs AS (${TextDedup.oracle("q41_dedup_minhash_lsh")}),
+    s"""WITH pairs AS (${TextDedup.q41Sql}),
        |deg AS (SELECT doc, count(*) AS degree FROM (
        |  SELECT doc_a AS doc FROM pairs
        |  UNION ALL SELECT doc_b FROM pairs) GROUP BY 1)
@@ -1439,69 +1440,37 @@ object Corpus {
       |              AND ps.target < (p.pfx + p.w) * 128
       |ORDER BY ps.j""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q302_systematic_sample" -> q302,
-    "q290_l_diversity" -> q290,
-    "q266_weighted_reservoir" -> q266,
-    "q260_gram_df_spectrum" -> q260,
-    "q255_k_anonymity" -> q255,
-    "q117_postings" -> q117,
-    "q118_degree_hist" -> q118,
-    "q70_tfidf" -> q70,
-    "q79_contamination" -> q79,
-    "q83_source_stats" -> q83,
-    "q87_dedup_incremental" -> q87,
-    "q186_dedup_bloom" -> q186,
-    "q226_bloom_fpp" -> q226,
-    "q193_budget_allocation" -> q193,
-    "q199_rank_fusion" -> q199,
-    "q88_equidepth_buckets" -> q88,
-    "q91_sequence_pack" -> q91,
-    "q169_pack_efficiency" -> q169,
-    "q92_weighted_sample" -> q92,
-    "q71_sessionize_gap" -> q71,
-    "q173_session_sequences" -> q173,
-    "q72_dedup_keep_best" -> q72,
-    "q74_embed_quantize" -> q74,
-    "q75_bm25" -> q75,
-    "q76_stratified_sample" -> q76,
-    "q130_mixture_sample" -> q130,
-    "q151_temp_mixture" -> q151,
-    "q157_epoch_plan" -> q157,
-    "q78_minhash_est" -> q78
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q302_systematic_sample" -> q302Sql,
-    "q290_l_diversity" -> q290Sql,
-    "q266_weighted_reservoir" -> q266Sql,
-    "q260_gram_df_spectrum" -> q260Sql,
-    "q255_k_anonymity" -> q255Sql,
-    "q117_postings" -> q117Sql,
-    "q118_degree_hist" -> q118Sql,
-    "q70_tfidf" -> q70Sql,
-    "q79_contamination" -> q79Sql,
-    "q83_source_stats" -> q83Sql,
-    "q87_dedup_incremental" -> q87Sql,
+  val all: Seq[Query] = Seq(
+    Query("q302_systematic_sample", q302, q302Sql),
+    Query("q290_l_diversity", q290, q290Sql),
+    Query("q266_weighted_reservoir", q266, q266Sql),
+    Query("q260_gram_df_spectrum", q260, q260Sql),
+    Query("q255_k_anonymity", q255, q255Sql),
+    Query("q117_postings", q117, q117Sql),
+    Query("q118_degree_hist", q118, q118Sql),
+    Query("q70_tfidf", q70, q70Sql),
+    Query("q79_contamination", q79, q79Sql),
+    Query("q83_source_stats", q83, q83Sql),
+    Query("q87_dedup_incremental", q87, q87Sql),
     // q186 computes EXACTLY q87's result (the bloom is a plan-level
     // pre-filter, not a semantic change) — one oracle, two plans
-    "q186_dedup_bloom" -> q87Sql,
-    "q226_bloom_fpp" -> q226Sql,
-    "q193_budget_allocation" -> q193Sql,
-    "q199_rank_fusion" -> q199Sql,
-    "q88_equidepth_buckets" -> q88Sql,
-    "q91_sequence_pack" -> q91Sql,
-    "q169_pack_efficiency" -> q169Sql,
-    "q92_weighted_sample" -> q92Sql,
-    "q71_sessionize_gap" -> q71Sql,
-    "q173_session_sequences" -> q173Sql,
-    "q72_dedup_keep_best" -> q72Sql,
-    "q74_embed_quantize" -> q74Sql,
-    "q75_bm25" -> q75Sql,
-    "q76_stratified_sample" -> q76Sql,
-    "q130_mixture_sample" -> q130Sql,
-    "q151_temp_mixture" -> q151Sql,
-    "q157_epoch_plan" -> q157Sql,
-    "q78_minhash_est" -> q78Sql
+    Query("q186_dedup_bloom", q186, q87Sql),
+    Query("q226_bloom_fpp", q226, q226Sql),
+    Query("q193_budget_allocation", q193, q193Sql),
+    Query("q199_rank_fusion", q199, q199Sql),
+    Query("q88_equidepth_buckets", q88, q88Sql),
+    Query("q91_sequence_pack", q91, q91Sql),
+    Query("q169_pack_efficiency", q169, q169Sql),
+    Query("q92_weighted_sample", q92, q92Sql),
+    Query("q71_sessionize_gap", q71, q71Sql),
+    Query("q173_session_sequences", q173, q173Sql),
+    Query("q72_dedup_keep_best", q72, q72Sql),
+    Query("q74_embed_quantize", q74, q74Sql),
+    Query("q75_bm25", q75, q75Sql),
+    Query("q76_stratified_sample", q76, q76Sql),
+    Query("q130_mixture_sample", q130, q130Sql),
+    Query("q151_temp_mixture", q151, q151Sql),
+    Query("q157_epoch_plan", q157, q157Sql),
+    Query("q78_minhash_est", q78, q78Sql)
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Corpus-preparation operators for the LLM-data-pipeline layer: blocked
   * fuzzy matching, RAG chunking, collocation mining, exact-substring
@@ -1547,51 +1548,28 @@ object CorpusPrep {
       |WHERE c.y = pm.maxy AND (pm.pmax IS NULL OR pm.pmax < c.y)
       |ORDER BY n_chars""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q288_pareto_skyline" -> q288,
-    "q279_bpe_merge_step" -> q279,
-    "q322_bpe_train" -> q322,
-    "q262_source_containment" -> q262,
-    "q240_dict_coverage" -> q240,
-    "q212_chunk_stitch" -> q212,
-    "q208_chunk_overhead" -> q208,
-    "q178_source_gram_overlap" -> q178,
-    "q106_fuzzy_match" -> q106,
-    "q107_chunk_split" -> q107,
-    "q108_pmi_colloc" -> q108,
-    "q109_substring_pairs" -> q109,
-    "q110_vocab_build" -> q110,
-    "q134_dup_passage" -> q134,
-    "q142_oov_audit" -> q142,
-    "q147_bpe_merge_pairs" -> q147,
-    "q149_gram_novelty" -> q149,
-    "q150_gram_containment" -> q150,
-    "q156_split_leakage" -> q156,
-    "q159_dsir_weight" -> q159,
-    "q164_leakage_by_source" -> q164,
-    "q165_leakage_pairs" -> q165)
-
-  val oracle: Map[String, String] = Map(
-    "q288_pareto_skyline" -> q288Sql,
-    "q279_bpe_merge_step" -> q279Sql,
-    "q322_bpe_train" -> q322Sql,
-    "q262_source_containment" -> q262Sql,
-    "q240_dict_coverage" -> q240Sql,
-    "q212_chunk_stitch" -> q212Sql,
-    "q178_source_gram_overlap" -> q178Sql,
-    "q106_fuzzy_match" -> q106Sql,
-    "q107_chunk_split" -> q107Sql,
-    "q208_chunk_overhead" -> q208Sql,
-    "q108_pmi_colloc" -> q108Sql,
-    "q109_substring_pairs" -> q109Sql,
-    "q110_vocab_build" -> q110Sql,
-    "q134_dup_passage" -> q134Sql,
-    "q142_oov_audit" -> q142Sql,
-    "q147_bpe_merge_pairs" -> q147Sql,
-    "q149_gram_novelty" -> q149Sql,
-    "q150_gram_containment" -> q150Sql,
-    "q156_split_leakage" -> q156Sql,
-    "q159_dsir_weight" -> q159Sql,
-    "q164_leakage_by_source" -> q164Sql,
-    "q165_leakage_pairs" -> q165Sql)
+  val all: Seq[Query] = Seq(
+    Query("q288_pareto_skyline", q288, q288Sql),
+    Query("q279_bpe_merge_step", q279, q279Sql),
+    Query("q322_bpe_train", q322, q322Sql),
+    Query("q262_source_containment", q262, q262Sql),
+    Query("q240_dict_coverage", q240, q240Sql),
+    Query("q212_chunk_stitch", q212, q212Sql),
+    Query("q208_chunk_overhead", q208, q208Sql),
+    Query("q178_source_gram_overlap", q178, q178Sql),
+    Query("q106_fuzzy_match", q106, q106Sql),
+    Query("q107_chunk_split", q107, q107Sql),
+    Query("q108_pmi_colloc", q108, q108Sql),
+    Query("q109_substring_pairs", q109, q109Sql),
+    Query("q110_vocab_build", q110, q110Sql),
+    Query("q134_dup_passage", q134, q134Sql),
+    Query("q142_oov_audit", q142, q142Sql),
+    Query("q147_bpe_merge_pairs", q147, q147Sql),
+    Query("q149_gram_novelty", q149, q149Sql),
+    Query("q150_gram_containment", q150, q150Sql),
+    Query("q156_split_leakage", q156, q156Sql),
+    Query("q159_dsir_weight", q159, q159Sql),
+    Query("q164_leakage_by_source", q164, q164Sql),
+    Query("q165_leakage_pairs", q165, q165Sql)
+  )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Large-scale model/score EVALUATION operators — the audit pass a
   * training-data pipeline runs over scores it just produced (quality
@@ -275,15 +276,9 @@ object Evaluation {
       |    AS avg_precision
       |FROM t""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q284_auc_centroid" -> q284,
-    "q289_ece_calibration" -> q289,
-    "q291_avg_precision" -> q291
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q284_auc_centroid" -> q284Sql,
-    "q289_ece_calibration" -> q289Sql,
-    "q291_avg_precision" -> q291Sql
+  val all: Seq[Query] = Seq(
+    Query("q284_auc_centroid", q284, q284Sql),
+    Query("q289_ece_calibration", q289, q289Sql),
+    Query("q291_avg_precision", q291, q291Sql)
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Data-layout operators: keys that make 100 TB *scannable*, not just
   * computable. A Z-order (Morton) sort key interleaves the bits of several
@@ -362,20 +363,13 @@ object Layout {
       |  SELECT 'rendezvous', n_docs, mv_rdv FROM summ)
       |ORDER BY scheme""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q176_batch_padding" -> q176,
-    "q182_shard_migration" -> q182,
-    "q104_zorder" -> q104,
-    "q111_rle_estimate" -> q111,
-    "q121_zorder_audit" -> q121,
-    "q148_shard_plan" -> q148,
-    "q170_shard_balance" -> q170)
-  val oracle: Map[String, String] = Map(
-    "q176_batch_padding" -> q176Sql,
-    "q182_shard_migration" -> q182Sql,
-    "q104_zorder" -> q104Sql,
-    "q111_rle_estimate" -> q111Sql,
-    "q121_zorder_audit" -> q121Sql,
-    "q148_shard_plan" -> q148Sql,
-    "q170_shard_balance" -> q170Sql)
+  val all: Seq[Query] = Seq(
+    Query("q176_batch_padding", q176, q176Sql),
+    Query("q182_shard_migration", q182, q182Sql),
+    Query("q104_zorder", q104, q104Sql),
+    Query("q111_rle_estimate", q111, q111Sql),
+    Query("q121_zorder_audit", q121, q121Sql),
+    Query("q148_shard_plan", q148, q148Sql),
+    Query("q170_shard_balance", q170, q170Sql)
+  )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.parity.ParityData
+import graft.Query
 
 /** Merkle-style bucketed reconciliation — the 100 TB refinement of the
   * reference's full-table diff (`/root/reference/src/main.rs:159-175`).
@@ -258,15 +259,10 @@ object MerkleDiff {
        |  AND s.version_id = t.version_id)
        |ORDER BY resource_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q105_bucket_diff" -> q105,
-    "q113_json_profile" -> q113,
-    "q114_bucket_delta" -> q114,
-    "q116_pruned_diff" -> q116)
-
-  val oracle: Map[String, String] = Map(
-    "q105_bucket_diff" -> q105Sql,
-    "q113_json_profile" -> q113Sql,
-    "q114_bucket_delta" -> q114Sql,
-    "q116_pruned_diff" -> q116Sql)
+  val all: Seq[Query] = Seq(
+    Query("q105_bucket_diff", q105, q105Sql),
+    Query("q113_json_profile", q113, q113Sql),
+    Query("q114_bucket_delta", q114, q114Sql),
+    Query("q116_pruned_diff", q116, q116Sql)
+  )
 }

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Multimodal-column plumbing (LLM-pipeline north star): media as opaque
   * `binary` columns + typed metadata, with the decode / feature-extract
@@ -252,16 +253,11 @@ object Multimodal {
       |                  (n_items + 255) // 256) * 67108864 AS DOUBLE) AS fill
       |FROM g ORDER BY format, wb, hb""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q194_gpu_batch_plan" -> q194,
-    "q50_multimodal_meta" -> q50,
-    "q58_frame_sample" -> q58,
-    "q80_resize_plan" -> q80,
-    "q81_feature_extract" -> q81)
-  val oracle: Map[String, String] = Map(
-    "q194_gpu_batch_plan" -> q194Sql,
-    "q50_multimodal_meta" -> q50Sql,
-    "q58_frame_sample" -> q58Sql,
-    "q80_resize_plan" -> q80Sql,
-    "q81_feature_extract" -> q81Sql)
+  val all: Seq[Query] = Seq(
+    Query("q194_gpu_batch_plan", q194, q194Sql),
+    Query("q50_multimodal_meta", q50, q50Sql),
+    Query("q58_frame_sample", q58, q58Sql),
+    Query("q80_resize_plan", q80, q80Sql),
+    Query("q81_feature_extract", q81, q81Sql)
+  )
 }

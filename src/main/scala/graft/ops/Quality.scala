@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Corpus-quality operators for the LLM-data-pipeline layer: bounded
   * per-group top-k, information-theoretic quality signals (entropy,
@@ -436,23 +437,14 @@ object Quality {
        |ORDER BY t.digit""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q318_benford_audit" -> q318,
-    "q286_kneser_ney" -> q286,
-    "q192_holdout_perplexity" -> q192,
-    "q98_topk_per_group" -> q98,
-    "q99_word_entropy" -> q99,
-    "q100_repetition" -> q100,
-    "q101_pattern_scan" -> q101,
-    "q103_bigram_lm" -> q103)
-
-  val oracle: Map[String, String] = Map(
-    "q318_benford_audit" -> q318Sql,
-    "q286_kneser_ney" -> q286Sql,
-    "q192_holdout_perplexity" -> q192Sql,
-    "q98_topk_per_group" -> q98Sql,
-    "q99_word_entropy" -> q99Sql,
-    "q100_repetition" -> q100Sql,
-    "q101_pattern_scan" -> q101Sql,
-    "q103_bigram_lm" -> q103Sql)
+  val all: Seq[Query] = Seq(
+    Query("q318_benford_audit", q318, q318Sql),
+    Query("q286_kneser_ney", q286, q286Sql),
+    Query("q192_holdout_perplexity", q192, q192Sql),
+    Query("q98_topk_per_group", q98, q98Sql),
+    Query("q99_word_entropy", q99, q99Sql),
+    Query("q100_repetition", q100, q100Sql),
+    Query("q101_pattern_scan", q101, q101Sql),
+    Query("q103_bigram_lm", q103, q103Sql)
+  )
 }

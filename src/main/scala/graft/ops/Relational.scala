@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.source.Tables
+import graft.Query
 
 /** Extension relational suite (SURVEY.md §2.2, q20–q32): the analytics
   * capabilities a FHIR mirror exists to serve, on the TPC-H-ish tables.
@@ -487,47 +488,25 @@ object Relational {
       |    event_type) AS INTEGER) AS etype_pos
       |FROM events ORDER BY event_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q34_approx_distinct" -> q34,
-    "q89_array_map_suite" -> q89,
-    "q59_quantiles" -> q59,
-    "q60_pivot" -> q60,
-    "q63_salted_agg" -> q63,
-    "q64_cube" -> q64,
-    "q20_join_inner" -> q20,
-    "q21_join_semi_anti" -> q21,
-    "q22_join_range" -> q22,
-    "q23_groupby_agg" -> q23,
-    "q24_distinct" -> q24,
-    "q25_rollup" -> q25,
-    "q26_window_rank" -> q26,
-    "q27_window_running" -> q27,
-    "q28_topk" -> q28,
-    "q29_setops" -> q29,
-    "q30_scalar_suite" -> q30,
-    "q31_window_tumbling" -> q31,
-    "q32_udtf_explode" -> q32
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q34_approx_distinct" -> q34Sql,
-    "q89_array_map_suite" -> q89Sql,
-    "q59_quantiles" -> q59Sql,
-    "q60_pivot" -> q60Sql,
-    "q63_salted_agg" -> q63Sql,
-    "q64_cube" -> q64Sql,
-    "q20_join_inner" -> q20Sql,
-    "q21_join_semi_anti" -> q21Sql,
-    "q22_join_range" -> q22Sql,
-    "q23_groupby_agg" -> q23Sql,
-    "q24_distinct" -> q24Sql,
-    "q25_rollup" -> q25Sql,
-    "q26_window_rank" -> q26Sql,
-    "q27_window_running" -> q27Sql,
-    "q28_topk" -> q28Sql,
-    "q29_setops" -> q29Sql,
-    "q30_scalar_suite" -> q30Sql,
-    "q31_window_tumbling" -> q31Sql,
-    "q32_udtf_explode" -> q32Sql
+  val all: Seq[Query] = Seq(
+    Query("q34_approx_distinct", q34, q34Sql),
+    Query("q89_array_map_suite", q89, q89Sql),
+    Query("q59_quantiles", q59, q59Sql),
+    Query("q60_pivot", q60, q60Sql),
+    Query("q63_salted_agg", q63, q63Sql),
+    Query("q64_cube", q64, q64Sql),
+    Query("q20_join_inner", q20, q20Sql),
+    Query("q21_join_semi_anti", q21, q21Sql),
+    Query("q22_join_range", q22, q22Sql),
+    Query("q23_groupby_agg", q23, q23Sql),
+    Query("q24_distinct", q24, q24Sql),
+    Query("q25_rollup", q25, q25Sql),
+    Query("q26_window_rank", q26, q26Sql),
+    Query("q27_window_running", q27, q27Sql),
+    Query("q28_topk", q28, q28Sql),
+    Query("q29_setops", q29, q29Sql),
+    Query("q30_scalar_suite", q30, q30Sql),
+    Query("q31_window_tumbling", q31, q31Sql),
+    Query("q32_udtf_explode", q32, q32Sql)
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Retrieval-ensemble operators — the stage a RAG / retrieval-training
   * pipeline runs AFTER the index lookups the ANN family (q45/q46/q53)
@@ -863,23 +864,13 @@ object Retrieval {
        |  round(CAST(n_hits AS DOUBLE) / CAST(3.0 AS DOUBLE), 6) AS recall_at_10
        |FROM a ORDER BY query_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q275_rrf_fusion" -> q275,
-    "q276_mmr_diversify" -> q276,
-    "q277_jl_distortion" -> q277,
-    "q278_jl_ann_recall" -> q278,
-    "q295_retrieval_pipeline" -> q295,
-    "q296_ndcg_fused" -> q296,
-    "q297_mrr_recall" -> q297
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q275_rrf_fusion" -> q275Sql,
-    "q276_mmr_diversify" -> q276Sql,
-    "q277_jl_distortion" -> q277Sql,
-    "q278_jl_ann_recall" -> q278Sql,
-    "q295_retrieval_pipeline" -> q295Sql,
-    "q296_ndcg_fused" -> q296Sql,
-    "q297_mrr_recall" -> q297Sql
+  val all: Seq[Query] = Seq(
+    Query("q275_rrf_fusion", q275, q275Sql),
+    Query("q276_mmr_diversify", q276, q276Sql),
+    Query("q277_jl_distortion", q277, q277Sql),
+    Query("q278_jl_ann_recall", q278, q278Sql),
+    Query("q295_retrieval_pipeline", q295, q295Sql),
+    Query("q296_ndcg_fused", q296, q296Sql),
+    Query("q297_mrr_recall", q297, q297Sql)
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Session-window analytics, batch form (SURVEY.md §2.2 streaming row).
   *
@@ -69,10 +70,8 @@ object Sessions {
       |      FROM events, unnest([0, 1]) AS t(k))
       |GROUP BY ws ORDER BY window_start""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q33_session_window" -> q33,
-    "q90_window_sliding" -> q90)
-  val oracle: Map[String, String] = Map(
-    "q33_session_window" -> q33Sql,
-    "q90_window_sliding" -> q90Sql)
+  val all: Seq[Query] = Seq(
+    Query("q33_session_window", q33, q33Sql),
+    Query("q90_window_sliding", q90, q90Sql)
+  )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Similarity search over the embedding column (LLM-pipeline north star).
   *
@@ -4379,131 +4380,67 @@ object Similarity {
        |WHERE f.vec_id < f.neighbor_id
        |ORDER BY vec_a, vec_b""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q319_conformal_knn" -> q319,
-    "q312_hdbscan_msf" -> q312,
-    "q321_hdbscan_clusters" -> q321,
-    "q311_dbscan_labels" -> q311,
-    "q308_boruvka_msf" -> q308,
-    "q307_mutual_knn" -> q307,
-    "q304_graph_ann_beam" -> q304,
-    "q285_boruvka_step" -> q285,
-    "q287_lof_outliers" -> q287,
-    "q293_pca_power" -> q293,
-    "q294_kcenter_coreset" -> q294,
-    "q270_result_redundancy" -> q270,
-    "q256_norm_audit" -> q256,
-    "q267_lpa_communities" -> q267,
-    "q268_modularity" -> q268,
-    "q233_kcore_curve" -> q233,
-    "q237_eigen_centrality" -> q237,
-    "q239_multiprobe_lsh" -> q239,
-    "q220_cluster_medoid" -> q220,
-    "q215_degree_assortativity" -> q215,
-    "q216_twohop_recall" -> q216,
-    "q168_pq_train_step" -> q168,
-    "q167_modal_agreement" -> q167,
-    "q166_label_cohesion" -> q166,
-    "q161_pq_distortion" -> q161,
-    "q160_knn_label_consistency" -> q160,
-    "q158_semantic_leakage" -> q158,
-    "q155_paraphrase_mining" -> q155,
-    "q152_trunc_recall" -> q152,
-    "q141_pq_adc_topk" -> q141,
-    "q174_ivfpq_search" -> q174,
-    "q175_ivfpq_recall" -> q175,
-    "q140_semdedup" -> q140,
-    "q136_knn_graph" -> q136,
-    "q181_pagerank" -> q181,
-    "q280_personalized_pagerank" -> q280,
-    "q281_label_propagation_ssl" -> q281,
-    "q184_hard_negatives" -> q184,
-    "q185_nprobe_sweep" -> q185,
-    "q188_centroid_drift" -> q188,
-    "q191_hub_audit" -> q191,
-    "q197_cluster_purity" -> q197,
-    "q198_knn_reciprocity" -> q198,
-    "q202_ivf_cell_balance" -> q202,
-    "q205_triangle_count" -> q205,
-    "q207_norm_profile" -> q207,
-    "q210_split_stratification" -> q210,
-    "q133_pq_assign" -> q133,
-    "q129_embed_dedup_clusters" -> q129,
-    "q128_quantizer_quality" -> q128,
-    "q127_ann_recall_trained" -> q127,
-    "q126_ann_ivf_trained" -> q126,
-    "q125_ann_recall" -> q125,
-    "q124_kmeans_step" -> q124,
-    "q115_centroid_separation" -> q115,
-    "q44_embed_neardup" -> q44,
-    "q45_simsearch_topk" -> q45,
-    "q46_simsearch_lsh" -> q46,
-    "q51_centroid_udaf" -> q51,
-    "q53_ann_ivf" -> q53,
-    "q57_embed_neardup_lsh" -> q57
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q307_mutual_knn" -> q307Sql,
-    "q304_graph_ann_beam" -> q304Sql,
-    "q285_boruvka_step" -> q285Sql,
-    "q308_boruvka_msf" -> q308Sql,
-    "q311_dbscan_labels" -> q311Sql,
-    "q312_hdbscan_msf" -> q312Sql,
-    "q321_hdbscan_clusters" -> q321Sql,
-    "q319_conformal_knn" -> q319Sql,
-    "q287_lof_outliers" -> q287Sql,
-    "q293_pca_power" -> q293Sql,
-    "q294_kcenter_coreset" -> q294Sql,
-    "q270_result_redundancy" -> q270Sql,
-    "q256_norm_audit" -> q256Sql,
-    "q267_lpa_communities" -> q267Sql,
-    "q268_modularity" -> q268Sql,
-    "q168_pq_train_step" -> q168Sql,
-    "q167_modal_agreement" -> q167Sql,
-    "q166_label_cohesion" -> q166Sql,
-    "q161_pq_distortion" -> q161Sql,
-    "q160_knn_label_consistency" -> q160Sql,
-    "q158_semantic_leakage" -> q158Sql,
-    "q155_paraphrase_mining" -> q155Sql,
-    "q152_trunc_recall" -> q152Sql,
-    "q141_pq_adc_topk" -> q141Sql,
-    "q174_ivfpq_search" -> q174Sql,
-    "q175_ivfpq_recall" -> q175Sql,
-    "q140_semdedup" -> q140Sql,
-    "q136_knn_graph" -> q136Sql,
-    "q181_pagerank" -> q181Sql,
-    "q280_personalized_pagerank" -> q280Sql,
-    "q281_label_propagation_ssl" -> q281Sql,
-    "q184_hard_negatives" -> q184Sql,
-    "q185_nprobe_sweep" -> q185Sql,
-    "q188_centroid_drift" -> q188Sql,
-    "q191_hub_audit" -> q191Sql,
-    "q197_cluster_purity" -> q197Sql,
-    "q198_knn_reciprocity" -> q198Sql,
-    "q202_ivf_cell_balance" -> q202Sql,
-    "q205_triangle_count" -> q205Sql,
-    "q207_norm_profile" -> q207Sql,
-    "q210_split_stratification" -> q210Sql,
-    "q215_degree_assortativity" -> q215Sql,
-    "q216_twohop_recall" -> q216Sql,
-    "q220_cluster_medoid" -> q220Sql,
-    "q233_kcore_curve" -> q233Sql,
-    "q237_eigen_centrality" -> q237Sql,
-    "q239_multiprobe_lsh" -> q239Sql,
-    "q133_pq_assign" -> q133Sql,
-    "q129_embed_dedup_clusters" -> q129Sql,
-    "q128_quantizer_quality" -> q128Sql,
-    "q127_ann_recall_trained" -> q127Sql,
-    "q126_ann_ivf_trained" -> q126Sql,
-    "q125_ann_recall" -> q125Sql,
-    "q124_kmeans_step" -> q124Sql,
-    "q115_centroid_separation" -> q115Sql,
-    "q44_embed_neardup" -> q44Sql,
-    "q45_simsearch_topk" -> q45Sql,
-    "q46_simsearch_lsh" -> q46Sql,
-    "q51_centroid_udaf" -> q51Sql,
-    "q53_ann_ivf" -> q53Sql,
-    "q57_embed_neardup_lsh" -> q57Sql
+  val all: Seq[Query] = Seq(
+    Query("q319_conformal_knn", q319, q319Sql),
+    Query("q312_hdbscan_msf", q312, q312Sql),
+    Query("q321_hdbscan_clusters", q321, q321Sql),
+    Query("q311_dbscan_labels", q311, q311Sql),
+    Query("q308_boruvka_msf", q308, q308Sql),
+    Query("q307_mutual_knn", q307, q307Sql),
+    Query("q304_graph_ann_beam", q304, q304Sql),
+    Query("q285_boruvka_step", q285, q285Sql),
+    Query("q287_lof_outliers", q287, q287Sql),
+    Query("q293_pca_power", q293, q293Sql),
+    Query("q294_kcenter_coreset", q294, q294Sql),
+    Query("q270_result_redundancy", q270, q270Sql),
+    Query("q256_norm_audit", q256, q256Sql),
+    Query("q267_lpa_communities", q267, q267Sql),
+    Query("q268_modularity", q268, q268Sql),
+    Query("q233_kcore_curve", q233, q233Sql),
+    Query("q237_eigen_centrality", q237, q237Sql),
+    Query("q239_multiprobe_lsh", q239, q239Sql),
+    Query("q220_cluster_medoid", q220, q220Sql),
+    Query("q215_degree_assortativity", q215, q215Sql),
+    Query("q216_twohop_recall", q216, q216Sql),
+    Query("q168_pq_train_step", q168, q168Sql),
+    Query("q167_modal_agreement", q167, q167Sql),
+    Query("q166_label_cohesion", q166, q166Sql),
+    Query("q161_pq_distortion", q161, q161Sql),
+    Query("q160_knn_label_consistency", q160, q160Sql),
+    Query("q158_semantic_leakage", q158, q158Sql),
+    Query("q155_paraphrase_mining", q155, q155Sql),
+    Query("q152_trunc_recall", q152, q152Sql),
+    Query("q141_pq_adc_topk", q141, q141Sql),
+    Query("q174_ivfpq_search", q174, q174Sql),
+    Query("q175_ivfpq_recall", q175, q175Sql),
+    Query("q140_semdedup", q140, q140Sql),
+    Query("q136_knn_graph", q136, q136Sql),
+    Query("q181_pagerank", q181, q181Sql),
+    Query("q280_personalized_pagerank", q280, q280Sql),
+    Query("q281_label_propagation_ssl", q281, q281Sql),
+    Query("q184_hard_negatives", q184, q184Sql),
+    Query("q185_nprobe_sweep", q185, q185Sql),
+    Query("q188_centroid_drift", q188, q188Sql),
+    Query("q191_hub_audit", q191, q191Sql),
+    Query("q197_cluster_purity", q197, q197Sql),
+    Query("q198_knn_reciprocity", q198, q198Sql),
+    Query("q202_ivf_cell_balance", q202, q202Sql),
+    Query("q205_triangle_count", q205, q205Sql),
+    Query("q207_norm_profile", q207, q207Sql),
+    Query("q210_split_stratification", q210, q210Sql),
+    Query("q133_pq_assign", q133, q133Sql),
+    Query("q129_embed_dedup_clusters", q129, q129Sql),
+    Query("q128_quantizer_quality", q128, q128Sql),
+    Query("q127_ann_recall_trained", q127, q127Sql),
+    Query("q126_ann_ivf_trained", q126, q126Sql),
+    Query("q125_ann_recall", q125, q125Sql),
+    Query("q124_kmeans_step", q124, q124Sql),
+    Query("q115_centroid_separation", q115, q115Sql),
+    Query("q44_embed_neardup", q44, q44Sql),
+    Query("q45_simsearch_topk", q45, q45Sql),
+    Query("q46_simsearch_lsh", q46, q46Sql),
+    Query("q51_centroid_udaf", q51, q51Sql),
+    Query("q53_ann_ivf", q53, q53Sql),
+    Query("q57_embed_neardup_lsh", q57, q57Sql)
   )
 }

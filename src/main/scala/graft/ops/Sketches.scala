@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Mergeable frequency sketches beyond the HLL family (q273) and the
   * deterministic Misra–Gries heavy-hitter aggregator (q171): the
@@ -737,19 +738,11 @@ object Sketches {
        |ORDER BY batch""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q283_cms_frequency" -> q283,
-    "q316_kmv_overlap" -> q316,
-    "q320_quantile_sketch" -> q320,
-    "q324_quantile_merge" -> q324,
-    "q325_kmv_replay" -> q325
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q283_cms_frequency" -> q283Sql,
-    "q316_kmv_overlap" -> q316Sql,
-    "q320_quantile_sketch" -> q320Sql,
-    "q324_quantile_merge" -> q324Sql,
-    "q325_kmv_replay" -> q325Sql
+  val all: Seq[Query] = Seq(
+    Query("q283_cms_frequency", q283, q283Sql),
+    Query("q316_kmv_overlap", q316, q316Sql),
+    Query("q320_quantile_sketch", q320, q320Sql),
+    Query("q324_quantile_merge", q324, q324Sql),
+    Query("q325_kmv_replay", q325, q325Sql)
   )
 }

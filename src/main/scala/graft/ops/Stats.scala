@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
 import graft.util.{MomentGuard, SqlArith}
+import graft.Query
 
 /** Distributed statistical modeling over exact integer sufficient
   * statistics — the q112 discipline (quantize once, aggregate BIGINT
@@ -2179,67 +2180,36 @@ object Stats {
        |ORDER BY r.event_type""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q317_theilsen_trend" -> q317,
-    "q306_gini_length" -> q306,
-    "q305_mannwhitney_drift" -> q305,
-    "q303_poisson_bootstrap" -> q303,
-    "q292_psi_drift" -> q292,
-    "q272_ks_matrix" -> q272,
-    "q271_cusum_changepoint" -> q271,
-    "q264_length_quality_corr" -> q264,
-    "q254_cramers_v" -> q254,
-    "q249_daily_autocorr" -> q249,
-    "q250_spearman_sources" -> q250,
-    "q245_hill_tail" -> q245,
-    "q235_quota_sample" -> q235,
-    "q231_shard_uniformity" -> q231,
-    "q230_winsorized_mean" -> q230,
-    "q224_ks_test" -> q224,
-    "q225_token_gini" -> q225,
-    "q221_histogram_quantiles" -> q221,
-    "q223_neyman_allocation" -> q223,
-    "q219_salt_rebalance" -> q219,
-    "q217_positional_drift" -> q217,
-    "q180_source_token_kl" -> q180,
-    "q195_zipf_fit" -> q195,
-    "q196_daily_anomaly" -> q196,
-    "q200_bootstrap_ci" -> q200,
-    "q201_skew_scout" -> q201,
-    "q131_ols_trend" -> q131,
-    "q132_corr_moments" -> q132,
-    "q135_mad_outliers" -> q135,
-    "q137_token_drift" -> q137)
-
-  val oracle: Map[String, String] = Map(
-    "q317_theilsen_trend" -> q317Sql,
-    "q306_gini_length" -> q306Sql,
-    "q305_mannwhitney_drift" -> q305Sql,
-    "q303_poisson_bootstrap" -> q303Sql,
-    "q292_psi_drift" -> q292Sql,
-    "q272_ks_matrix" -> q272Sql,
-    "q271_cusum_changepoint" -> q271Sql,
-    "q264_length_quality_corr" -> q264Sql,
-    "q254_cramers_v" -> q254Sql,
-    "q249_daily_autocorr" -> q249Sql,
-    "q250_spearman_sources" -> q250Sql,
-    "q245_hill_tail" -> q245Sql,
-    "q235_quota_sample" -> q235Sql,
-    "q231_shard_uniformity" -> q231Sql,
-    "q230_winsorized_mean" -> q230Sql,
-    "q224_ks_test" -> q224Sql,
-    "q225_token_gini" -> q225Sql,
-    "q221_histogram_quantiles" -> q221Sql,
-    "q223_neyman_allocation" -> q223Sql,
-    "q219_salt_rebalance" -> q219Sql,
-    "q217_positional_drift" -> q217Sql,
-    "q180_source_token_kl" -> q180Sql,
-    "q195_zipf_fit" -> q195Sql,
-    "q196_daily_anomaly" -> q196Sql,
-    "q200_bootstrap_ci" -> q200Sql,
-    "q201_skew_scout" -> q201Sql,
-    "q131_ols_trend" -> q131Sql,
-    "q132_corr_moments" -> q132Sql,
-    "q135_mad_outliers" -> q135Sql,
-    "q137_token_drift" -> q137Sql)
+  val all: Seq[Query] = Seq(
+    Query("q317_theilsen_trend", q317, q317Sql),
+    Query("q306_gini_length", q306, q306Sql),
+    Query("q305_mannwhitney_drift", q305, q305Sql),
+    Query("q303_poisson_bootstrap", q303, q303Sql),
+    Query("q292_psi_drift", q292, q292Sql),
+    Query("q272_ks_matrix", q272, q272Sql),
+    Query("q271_cusum_changepoint", q271, q271Sql),
+    Query("q264_length_quality_corr", q264, q264Sql),
+    Query("q254_cramers_v", q254, q254Sql),
+    Query("q249_daily_autocorr", q249, q249Sql),
+    Query("q250_spearman_sources", q250, q250Sql),
+    Query("q245_hill_tail", q245, q245Sql),
+    Query("q235_quota_sample", q235, q235Sql),
+    Query("q231_shard_uniformity", q231, q231Sql),
+    Query("q230_winsorized_mean", q230, q230Sql),
+    Query("q224_ks_test", q224, q224Sql),
+    Query("q225_token_gini", q225, q225Sql),
+    Query("q221_histogram_quantiles", q221, q221Sql),
+    Query("q223_neyman_allocation", q223, q223Sql),
+    Query("q219_salt_rebalance", q219, q219Sql),
+    Query("q217_positional_drift", q217, q217Sql),
+    Query("q180_source_token_kl", q180, q180Sql),
+    Query("q195_zipf_fit", q195, q195Sql),
+    Query("q196_daily_anomaly", q196, q196Sql),
+    Query("q200_bootstrap_ci", q200, q200Sql),
+    Query("q201_skew_scout", q201, q201Sql),
+    Query("q131_ols_trend", q131, q131Sql),
+    Query("q132_corr_moments", q132, q132Sql),
+    Query("q135_mad_outliers", q135, q135Sql),
+    Query("q137_token_drift", q137, q137Sql)
+  )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Deduplication suite for the LLM-data-pipeline layer (north star in
   * BASELINE.json; not present in the reference, which only mirrors rows —
@@ -182,7 +183,7 @@ object TextDedup {
        |    ON a.b = c.b AND a.bh = c.bh AND a.doc_id < c.doc_id),
        |sets AS (SELECT doc_id, list_distinct(shingles) AS sh FROM sh)""".stripMargin
 
-  private val q41Sql =
+  private[ops] val q41Sql =
     s"""WITH $minhashCtes
        |SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
        |FROM bands a JOIN bands c
@@ -2159,67 +2160,35 @@ object TextDedup {
       |FROM ct JOIN cg ON cg.chash = ct.chash
       |GROUP BY source ORDER BY source""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q298_span_dedup" -> q298,
-    "q299_prefix_filter_join" -> q299,
-    "q313_edit_distance_join" -> q313,
-    "q314_winnow_profile" -> q314,
-    "q315_moss_pairs" -> q315,
-    "q300_leakage_free_split" -> q300,
-    "q301_cdc_chunking" -> q301,
-    "q274_sorted_neighborhood" -> q274,
-    "q40_dedup_exact" -> q40,
-    "q41_dedup_minhash_lsh" -> q41,
-    "q41b_dedup_lsh_verified" -> q41b,
-    "q187_dedup_threshold_curve" -> q187,
-    "q189_minhash_calibration" -> q189,
-    "q323_weighted_minhash" -> q323,
-    "q42_dedup_simhash" -> q42,
-    "q43_dedup_ngram_jaccard" -> q43,
-    "q56_dedup_clusters" -> q56,
-    "q177_dup_quality_bias" -> q177,
-    "q179_lsh_cost_model" -> q179,
-    "q61_dedup_simhash_pairs" -> q61,
-    "q139_source_dup_matrix" -> q139,
-    "q143_band_tuning" -> q143,
-    "q144_dedup_survivorship" -> q144,
-    "q145_dedup_increment" -> q145,
-    "q146_corpus_manifest" -> q146,
-    "q251_admission_pipeline" -> q251,
-    "q258_cluster_density" -> q258,
-    "q269_simhash_spectrum" -> q269,
-    "q162_cluster_size_hist" -> q162
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q298_span_dedup" -> q298Sql,
-    "q299_prefix_filter_join" -> q299Sql,
-    "q313_edit_distance_join" -> q313Sql,
-    "q314_winnow_profile" -> q314Sql,
-    "q315_moss_pairs" -> q315Sql,
-    "q300_leakage_free_split" -> q300Sql,
-    "q301_cdc_chunking" -> q301Sql,
-    "q274_sorted_neighborhood" -> q274Sql,
-    "q40_dedup_exact" -> q40Sql,
-    "q41_dedup_minhash_lsh" -> q41Sql,
-    "q41b_dedup_lsh_verified" -> q41bSql,
-    "q187_dedup_threshold_curve" -> q187Sql,
-    "q189_minhash_calibration" -> q189Sql,
-    "q323_weighted_minhash" -> q323Sql,
-    "q42_dedup_simhash" -> q42Sql,
-    "q43_dedup_ngram_jaccard" -> q43Sql,
-    "q56_dedup_clusters" -> q56Sql,
-    "q177_dup_quality_bias" -> q177Sql,
-    "q179_lsh_cost_model" -> q179Sql,
-    "q61_dedup_simhash_pairs" -> q61Sql,
-    "q139_source_dup_matrix" -> q139Sql,
-    "q143_band_tuning" -> q143Sql,
-    "q144_dedup_survivorship" -> q144Sql,
-    "q145_dedup_increment" -> q145Sql,
-    "q146_corpus_manifest" -> q146Sql,
-    "q251_admission_pipeline" -> q251Sql,
-    "q258_cluster_density" -> q258Sql,
-    "q269_simhash_spectrum" -> q269Sql,
-    "q162_cluster_size_hist" -> q162Sql
+  val all: Seq[Query] = Seq(
+    Query("q298_span_dedup", q298, q298Sql),
+    Query("q299_prefix_filter_join", q299, q299Sql),
+    Query("q313_edit_distance_join", q313, q313Sql),
+    Query("q314_winnow_profile", q314, q314Sql),
+    Query("q315_moss_pairs", q315, q315Sql),
+    Query("q300_leakage_free_split", q300, q300Sql),
+    Query("q301_cdc_chunking", q301, q301Sql),
+    Query("q274_sorted_neighborhood", q274, q274Sql),
+    Query("q40_dedup_exact", q40, q40Sql),
+    Query("q41_dedup_minhash_lsh", q41, q41Sql),
+    Query("q41b_dedup_lsh_verified", q41b, q41bSql),
+    Query("q187_dedup_threshold_curve", q187, q187Sql),
+    Query("q189_minhash_calibration", q189, q189Sql),
+    Query("q323_weighted_minhash", q323, q323Sql),
+    Query("q42_dedup_simhash", q42, q42Sql),
+    Query("q43_dedup_ngram_jaccard", q43, q43Sql),
+    Query("q56_dedup_clusters", q56, q56Sql),
+    Query("q177_dup_quality_bias", q177, q177Sql),
+    Query("q179_lsh_cost_model", q179, q179Sql),
+    Query("q61_dedup_simhash_pairs", q61, q61Sql),
+    Query("q139_source_dup_matrix", q139, q139Sql),
+    Query("q143_band_tuning", q143, q143Sql),
+    Query("q144_dedup_survivorship", q144, q144Sql),
+    Query("q145_dedup_increment", q145, q145Sql),
+    Query("q146_corpus_manifest", q146, q146Sql),
+    Query("q251_admission_pipeline", q251, q251Sql),
+    Query("q258_cluster_density", q258, q258Sql),
+    Query("q269_simhash_spectrum", q269, q269Sql),
+    Query("q162_cluster_size_hist", q162, q162Sql)
   )
 }

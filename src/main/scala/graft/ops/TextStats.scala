@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.source.Tables
+import graft.Query
 
 /** Text-analysis suite for the LLM-pipeline layer: quality scoring,
   * language ID, token statistics, document fingerprinting — all per-row
@@ -1040,51 +1041,27 @@ object TextStats {
       |    AS info_gain_bits
       |FROM nn CROSS JOIN cond CROSS JOIN marg""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q252_repetition_filter" -> q252,
-    "q253_bigram_entropy" -> q253,
-    "q247_langid_margin" -> q247,
-    "q244_negative_sampling" -> q244,
-    "q234_token_burstiness" -> q234,
-    "q213_simpson_diversity" -> q213,
-    "q183_filter_funnel" -> q183,
-    "q190_token_fertility" -> q190,
-    "q206_lang_confusion" -> q206,
-    "q171_heavy_hitters" -> q171,
-    "q172_vocab_growth" -> q172,
-    "q47_textstats" -> q47,
-    "q48_langid" -> q48,
-    "q49_fingerprint" -> q49,
-    "q54_quality_filter" -> q54,
-    "q55_token_count" -> q55,
-    "q62_det_sample" -> q62,
-    "q138_curriculum_order" -> q138,
-    "q153_length_filter" -> q153,
-    "q154_split_manifest" -> q154,
-    "q163_quality_token_curve" -> q163
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q252_repetition_filter" -> q252Sql,
-    "q253_bigram_entropy" -> q253Sql,
-    "q247_langid_margin" -> q247Sql,
-    "q244_negative_sampling" -> q244Sql,
-    "q234_token_burstiness" -> q234Sql,
-    "q213_simpson_diversity" -> q213Sql,
-    "q183_filter_funnel" -> q183Sql,
-    "q190_token_fertility" -> q190Sql,
-    "q206_lang_confusion" -> q206Sql,
-    "q171_heavy_hitters" -> q171Sql,
-    "q172_vocab_growth" -> q172Sql,
-    "q47_textstats" -> q47Sql,
-    "q48_langid" -> q48Sql,
-    "q49_fingerprint" -> q49Sql,
-    "q54_quality_filter" -> q54Sql,
-    "q55_token_count" -> q55Sql,
-    "q62_det_sample" -> q62Sql,
-    "q138_curriculum_order" -> q138Sql,
-    "q153_length_filter" -> q153Sql,
-    "q154_split_manifest" -> q154Sql,
-    "q163_quality_token_curve" -> q163Sql
+  val all: Seq[Query] = Seq(
+    Query("q252_repetition_filter", q252, q252Sql),
+    Query("q253_bigram_entropy", q253, q253Sql),
+    Query("q247_langid_margin", q247, q247Sql),
+    Query("q244_negative_sampling", q244, q244Sql),
+    Query("q234_token_burstiness", q234, q234Sql),
+    Query("q213_simpson_diversity", q213, q213Sql),
+    Query("q183_filter_funnel", q183, q183Sql),
+    Query("q190_token_fertility", q190, q190Sql),
+    Query("q206_lang_confusion", q206, q206Sql),
+    Query("q171_heavy_hitters", q171, q171Sql),
+    Query("q172_vocab_growth", q172, q172Sql),
+    Query("q47_textstats", q47, q47Sql),
+    Query("q48_langid", q48, q48Sql),
+    Query("q49_fingerprint", q49, q49Sql),
+    Query("q54_quality_filter", q54, q54Sql),
+    Query("q55_token_count", q55, q55Sql),
+    Query("q62_det_sample", q62, q62Sql),
+    Query("q138_curriculum_order", q138, q138Sql),
+    Query("q153_length_filter", q153, q153Sql),
+    Query("q154_split_manifest", q154, q154Sql),
+    Query("q163_quality_token_curve", q163, q163Sql)
   )
 }

@@ -3,6 +3,7 @@ package graft.parity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.diff.Reconcile
+import graft.Query
 
 /** Parity query suite (SURVEY.md §2.1, q01–q11): the reference's dataflow
   * semantics as declared Spark plans, each with a DuckDB oracle twin.
@@ -370,37 +371,20 @@ object ParityQueries {
        |ORDER BY batch, action""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q309_cdc_replay" -> q309,
-    "q01_scan" -> q01,
-    "q02_project_extract" -> q02,
-    "q03_filter_valid" -> q03,
-    "q04_snapshot" -> q04,
-    "q05_diff_fullouter" -> q05,
-    "q05a_inserts" -> q05a,
-    "q05b_updates" -> q05b,
-    "q05c_deletes" -> q05c,
-    "q07_update_join" -> q07,
-    "q08_insert" -> q08,
-    "q09_delete_semi" -> q09,
-    "q10_count" -> q10,
-    "q11_reconcile" -> q11
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q309_cdc_replay" -> q309Sql,
-    "q01_scan" -> q01Sql,
-    "q02_project_extract" -> q02Sql,
-    "q03_filter_valid" -> q03Sql,
-    "q04_snapshot" -> q04Sql,
-    "q05_diff_fullouter" -> q05Sql,
-    "q05a_inserts" -> q05aSql,
-    "q05b_updates" -> q05bSql,
-    "q05c_deletes" -> q05cSql,
-    "q07_update_join" -> q07Sql,
-    "q08_insert" -> q08Sql,
-    "q09_delete_semi" -> q09Sql,
-    "q10_count" -> q10Sql,
-    "q11_reconcile" -> q11Sql
+  val all: Seq[Query] = Seq(
+    Query("q309_cdc_replay", q309, q309Sql),
+    Query("q01_scan", q01, q01Sql),
+    Query("q02_project_extract", q02, q02Sql),
+    Query("q03_filter_valid", q03, q03Sql),
+    Query("q04_snapshot", q04, q04Sql),
+    Query("q05_diff_fullouter", q05, q05Sql),
+    Query("q05a_inserts", q05a, q05aSql),
+    Query("q05b_updates", q05b, q05bSql),
+    Query("q05c_deletes", q05c, q05cSql),
+    Query("q07_update_join", q07, q07Sql),
+    Query("q08_insert", q08, q08Sql),
+    Query("q09_delete_semi", q09, q09Sql),
+    Query("q10_count", q10, q10Sql),
+    Query("q11_reconcile", q11, q11Sql)
   )
 }

@@ -1,6 +1,6 @@
 package graft.source
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table layout — the storage-side half of the 100 TB join story.
   *
@@ -19,17 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bucketing {
 
   /** Write `df` as a parquet table bucketed AND sorted by `key` —
-    * sorted buckets let the join skip its per-task sort too.
+    * sorted buckets let the join skip its per-task sort too. Two tables
+    * written with the same `key` and `buckets` equi-join on `key` as a
+    * SortMergeJoin with zero Exchange operators (pinned in `BucketingSpec`).
     */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, key).sortBy(key)
       .saveAsTable(table)
-
-  /** Equi-join two same-bucketed tables on `key`: plans as SortMergeJoin
-    * with zero Exchange operators (pinned in `BucketingSpec`).
-    */
-  def colocatedJoin(spark: SparkSession, left: String, right: String,
-                    key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
 }

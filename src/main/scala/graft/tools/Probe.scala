@@ -16,14 +16,13 @@ import org.apache.spark.sql.SparkSession
   *    `===== <name> =====` header and runs no action (the plan-audit mode;
   *    a builder that runs jobs while it constructs the DataFrame still
   *    runs them, so the plan is the final one the action would run);
-  *  - `SPARK_GRAFT_PROBE_COUNT=1` adds jobs, stages, tasks and task time
-  *    per timed run, and `SPARK_GRAFT_PROBE_TIMELINE=1` then lists every
-  *    job and stage (the per-stage attribution of a composed query), each
-  *    job with its driver idle time before it, or `overlap`;
-  *  - `SPARK_GRAFT_PROBE_NODRAIN=1` skips the between-rep cache drain:
-  *    reps then measure the steady state a long-lived composed session
-  *    would see (shared relations stay primed) instead of the drained
-  *    per-query Bench protocol.
+  *  - each timed run prints its jobs, stages, tasks and task time,
+  *    counted after its clock stops; `SPARK_GRAFT_PROBE_TIMELINE=1` also
+  *    lists every job and stage (the per-stage attribution of a composed
+  *    query), each job with its driver idle time before it, or `overlap`.
+  *
+  * The session runs `local[<host cores>]` unless `SPARK_GRAFT_CPUS` says
+  * otherwise, so reps are not oversubscribed on a small host.
   *
   * Conf experiments go through the launcher, e.g.
   * `SPARK_GRAFT_EXTRA_OPTS=-Dspark.sql.adaptive.enabled=false
@@ -38,7 +37,8 @@ object Probe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = graft.GraftSession.local(graft.GraftSession.cores(default = 32))
+    val spark = graft.GraftSession.local(
+      graft.GraftSession.cores(default = Runtime.getRuntime.availableProcessors()))
     if (reps == 0) plans(spark, sfDir, names) else timed(spark, sfDir, reps, names)
     spark.stop()
   }
@@ -51,7 +51,6 @@ object Probe {
     }
 
   private def timed(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String]): Unit = {
-    val drain = !sys.env.get("SPARK_GRAFT_PROBE_NODRAIN").contains("1")
     // Headless substitute for the Spark UI's Jobs/Stages pages: count the
     // jobs, stages, and tasks each run schedules and sum executor task
     // time. jobs×fixed-scheduling-cost dominating wall-clock identifies
@@ -107,10 +106,10 @@ object Probe {
     def once(name: String): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = try graft.SparkEntry.queries(name)(spark, sfDir).count()
-              finally if (drain) graft.util.QueryCaches.drain()
+              finally graft.util.QueryCaches.drain()
       ((System.nanoTime() - t0) / 1e9, n)
     }
-    def onceCounted(name: String): (Double, Long) = {
+    def counted(name: String): (Double, Long) = {
       val before = counters.snap()
       counters.timeline.clear()
       counters.lastEnd = 0L
@@ -127,13 +126,12 @@ object Probe {
       }
       r
     }
-    val counted = sys.env.get("SPARK_GRAFT_PROBE_COUNT").contains("1")
     names.foreach { n =>
       once(n) // warmup
-      val rs = (1 to reps).map(_ => if (counted) onceCounted(n) else once(n))
+      val rs = (1 to reps).map(_ => counted(n))
       val ts = rs.map(_._1)
       println(f"[probe] $n%-28s median=${graft.Bench.median(ts)}%8.3f s  rows=${rs.head._2}  samples=${
-        ts.map(t => f"$t%.3f").mkString(", ")}" + (if (drain) "" else " (nodrain)"))
+        ts.map(t => f"$t%.3f").mkString(", ")}")
     }
     graft.Bench.calibrateOnce(spark) // probe JIT warm
     val calib = graft.Bench.median((1 to 3).map(_ => graft.Bench.calibrateOnce(spark)))

@@ -47,7 +47,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, factorS) = args
     val factor = replicas(factorS)
-    val spark = graft.GraftSession.local(graft.GraftSession.cores(default = 32))
+    val spark = graft.GraftSession.local(
+      graft.GraftSession.cores(default = Runtime.getRuntime.availableProcessors()))
 
     def tbl(name: String): DataFrame = graft.source.Tables.load(spark, srcDir, name)
     def write(df: DataFrame, name: String): Unit =

@@ -15,8 +15,9 @@ import scala.jdk.CollectionConverters._
   * `Lineage` as the one reader of a `spark.graft.*` conf key, the
   * `blaze` source as the one builder of FHIR search URLs,
   * `Reconcile` as the one module that decides sync actions,
-  * `Lineage` as the one place that cuts lineage, and that
-  * `src/main` starts no Structured Streaming query.
+  * `Lineage` as the one place that cuts lineage, that
+  * `src/main` starts no Structured Streaming query, and that each query's
+  * oracle SQL is declared once, in its `Query`.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -89,6 +90,12 @@ class DocConsistencySpec extends AnyFunSuite {
     val deciders = sourcesMatching(Seq("src/main"), "graft/diff/Reconcile.scala",
       raw"""\bwhen\s*\([^\n]*,\s*($action)\s*\)|\botherwise\s*\(\s*($action)\s*\)""")
     assert(deciders.isEmpty, s"action-valued when/otherwise outside diff/Reconcile.scala: $deciders")
+  }
+
+  test("src/main declares each query's oracle SQL once, in its Query") {
+    // a second name-keyed map beside a module's `all` can drift from it
+    val maps = sourcesMatching(Seq("src/main"), "", raw"\bval oracle\b")
+    assert(maps.isEmpty, s"oracle maps beside the Query lists: $maps")
   }
 
   test("src/main starts no Structured Streaming query") {

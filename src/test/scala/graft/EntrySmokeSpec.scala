@@ -23,15 +23,16 @@ class EntrySmokeSpec extends AnyFunSuite {
   }
 
   test("query names are unique across suite maps (no map-merge shadowing)") {
-    val fromModules = Seq(
-      parity.ParityQueries.all, ops.Relational.all, ops.Sessions.all,
-      ops.TextDedup.all, ops.Similarity.all, ops.TextStats.all,
-      ops.Multimodal.all, ops.AsOf.all, ops.Analytic.all, ops.Corpus.all,
-      ops.Behavioral.all, ops.Quality.all, ops.Layout.all,
-      ops.MerkleDiff.all, ops.CorpusPrep.all, ops.Stats.all,
-      ops.Retrieval.all, ops.Sketches.all, ops.Evaluation.all)
-    val total = fromModules.map(_.size).sum
+    val total = SparkEntry.modules.map(_.size).sum
     assert(total === SparkEntry.queries.size,
       "a suite map shadowed another's query name during ++ merge")
+  }
+
+  test("a registry with a query name declared twice fails, naming it") {
+    val e = intercept[IllegalArgumentException] {
+      Query.byName(Seq(Query("a", (s, _) => s.range(1).toDF(), "SELECT 1"),
+        Query("a", (s, _) => s.range(2).toDF(), "SELECT 2")))
+    }
+    assert(e.getMessage.endsWith("declared more than once: a"), e.getMessage)
   }
 }

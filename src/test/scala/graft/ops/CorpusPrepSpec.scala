@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession
+import graft.{SparkEntry, SparkTestSession}
 
 class CorpusPrepSpec extends AnyFunSuite
   with org.scalatest.BeforeAndAfterEach {
@@ -76,7 +76,7 @@ class CorpusPrepSpec extends AnyFunSuite
   }
 
   test("q113 profile surfaces the corpus dirt: ids and versions partially absent/non-numeric") {
-    val rows = MerkleDiff.all("q113_json_profile")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q113_json_profile")(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val (nRows, idPresent, _) = rows("$.id")
     val (_, verPresent, verNumeric) = rows("$.meta.versionId")
@@ -150,7 +150,7 @@ class CorpusPrepSpec extends AnyFunSuite
   // ---- fuzzy + vocab via the declared queries on real fixtures ----
 
   test("q106 pairs are within distance 2 and canonically ordered") {
-    val rows = CorpusPrep.all("q106_fuzzy_match")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q106_fuzzy_match")(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getLong(0) < r.getLong(1)))
@@ -158,7 +158,7 @@ class CorpusPrepSpec extends AnyFunSuite
   }
 
   test("q110 vocabulary ids are contiguous from 1 in df-descending order") {
-    val rows = CorpusPrep.all("q110_vocab_build")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q110_vocab_build")(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getLong(2)).toSeq === (1L to rows.length).toSeq)

@@ -37,7 +37,7 @@ class BucketingSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Bucketing.colocatedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
+      val joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected merge join in:\n$plan")
       assert(!plan.contains("Exchange"),
