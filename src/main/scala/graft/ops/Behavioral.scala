@@ -343,20 +343,6 @@ object Behavioral {
        |FROM p10 ORDER BY event_type""".stripMargin
   }
 
-  /** q209 — arrival-disorder profile: how out-of-order the event stream
-    * is in ARRIVAL order (event_id), measured as the time overlap
-    * between consecutive 1000-event arrival batches — batch k's max
-    * event time minus batch k+1's min. This is the number that SIZES
-    * `withWatermark` for a streaming reader of the events: the
-    * p95 overlap is the lateness bound that keeps ≤5% of boundaries
-    * leaking late rows, and max is the no-loss bound. Exact integers
-    * end-to-end: µs timestamps, floor-div batch ids, overlaps clamped
-    * at 0, percentiles via the exact `percentile_disc` twins over the
-    * ≤|n|/1000-row boundary relation. Scale shape: one partial+final
-    * (batch) min/max aggregate, a self-equi-join on batch+1, a tiny
-    * percentile aggregate — arrival disorder over 100 TB of events
-    * costs one scan.
-    */
   /** Boundary-overlap kernel shared by q209 (disorder profile) and q214
     * (state budget): per consecutive 1000-event arrival-batch pair, the
     * time overlap `max(batch k) − min(batch k+1)` clamped at 0. */
@@ -371,6 +357,20 @@ object Behavioral {
         greatest(lit(0L), col("a.max_us") - col("b.min_us")).as("overlap_us"))
   }
 
+  /** q209 — arrival-disorder profile: how out-of-order the event stream
+    * is in ARRIVAL order (event_id), measured as the time overlap
+    * between consecutive 1000-event arrival batches — batch k's max
+    * event time minus batch k+1's min. This is the number that SIZES
+    * `withWatermark` for a streaming reader of the events: the
+    * p95 overlap is the lateness bound that keeps ≤5% of boundaries
+    * leaking late rows, and max is the no-loss bound. Exact integers
+    * end-to-end: µs timestamps, floor-div batch ids, overlaps clamped
+    * at 0, percentiles via the exact `percentile_disc` twins over the
+    * ≤|n|/1000-row boundary relation. Scale shape: one partial+final
+    * (batch) min/max aggregate, a self-equi-join on batch+1, a tiny
+    * percentile aggregate — arrival disorder over 100 TB of events
+    * costs one scan.
+    */
   private val q209: Q = (s, dir) => {
     arrivalOverlaps(s, dir).createOrReplaceTempView("ov_q209")
     s.sql(

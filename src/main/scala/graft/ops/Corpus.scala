@@ -670,8 +670,8 @@ object Corpus {
     * shingle with the small eval side broadcast, partial-aggregated count
     * per pair. At 100 TB the eval split stays broadcast-sized by
     * construction; hot-shingle fan-out is absorbed by map-side partial
-    * aggregation (and would get q43's prefix filtering if the eval split
-    * ever outgrew broadcast).
+    * aggregation (and would get [[TextDedup.prefixJoin]]'s prefix
+    * filtering if the eval split ever outgrew broadcast).
     */
   private val q79: Q = (s, dir) => {
     // The cached relation is the FLAT (doc_id, hashed shingle) token
@@ -1011,6 +1011,21 @@ object Corpus {
       |FROM documents d, b
       |GROUP BY 1 ORDER BY bucket""".stripMargin
 
+  /** The packed-chunk relation (lang, chunk_id, n_docs, sum_tokens)
+    * shared by q91 (the manifest) and q169 (the efficiency audit). */
+  private def packedChunks(s: SparkSession, dir: String): DataFrame = {
+    val toks = Tables.documents(s, dir)
+      .withColumn("tokens", size(split(col("text"), " ")))
+    val gp = GlobalRank.prefixSum(toks, "gp", col("tokens"),
+      Seq(col("lang"), col("doc_id")))
+    val langOff = gp.groupBy("lang").agg(min("gp").as("lang_off"))
+    gp.join(broadcast(langOff), Seq("lang"))
+      .withColumn("chunk_id", expr("(gp - lang_off) div 2000"))
+      .groupBy("lang", "chunk_id")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("tokens").cast("long")).as("sum_tokens"))
+  }
+
   /** q91 — sequence packing: concatenate-then-chunk assignment of docs
     * into fixed 2000-token training sequences, per language shard —
     * `chunk = exclusive_prefix div budget`, the streaming-pack every LLM
@@ -1027,21 +1042,6 @@ object Corpus {
     * languages). The offset table is |langs| rows — broadcast. No
     * skewed-key window anywhere; all-integer outputs.
     */
-  /** The packed-chunk relation (lang, chunk_id, n_docs, sum_tokens)
-    * shared by q91 (the manifest) and q169 (the efficiency audit). */
-  private def packedChunks(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(s, dir)
-      .withColumn("tokens", size(split(col("text"), " ")))
-    val gp = GlobalRank.prefixSum(toks, "gp", col("tokens"),
-      Seq(col("lang"), col("doc_id")))
-    val langOff = gp.groupBy("lang").agg(min("gp").as("lang_off"))
-    gp.join(broadcast(langOff), Seq("lang"))
-      .withColumn("chunk_id", expr("(gp - lang_off) div 2000"))
-      .groupBy("lang", "chunk_id")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("tokens").cast("long")).as("sum_tokens"))
-  }
-
   private val q91: Q = (s, dir) =>
     packedChunks(s, dir).orderBy("lang", "chunk_id")
 
@@ -1295,7 +1295,8 @@ object Corpus {
     * every gram-keyed operator in this inventory: where the df-caps of
     * q109/q150 should sit (how much mass the cap drops), how skewed the
     * postings lists q117/GramPostings carry are, and whether
-    * prefix-filter token ordering (q43) has the rare-token head it
+    * prefix-filter token ordering ([[TextDedup.prefixJoin]], q43/q299)
+    * has the rare-token head it
     * needs. Buckets are EXACT integer bit-lengths (`length(bin(df))` on
     * both engines — no float log anywhere near a power-of-two
     * boundary). Dataflow: distinct (doc, gram) → per-gram df

@@ -55,12 +55,6 @@ object CorpusPrep {
       |  AND levenshtein(a.p_name, b.p_name) <= 2
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** q107 — RAG chunking: split each document into overlapping word windows
-    * (40 tokens, stride 30) — the retrieval-corpus prep every embedding
-    * pipeline runs before vectorizing. Entirely map-side: the start offsets
-    * come from `sequence`, the chunk from `slice`, all inside one codegen
-    * stage; output size is rows × ceil(len/stride), no shuffle at all.
-    */
   /** Chunking kernel: overlapping word windows of `win` tokens every
     * `stride` tokens (callers want `stride < win` for overlap). One row per
     * (doc, window); no shuffle.
@@ -76,6 +70,12 @@ object CorpusPrep {
         size(slice(col("words"), col("col") + 1, lit(win))).cast("long").as("n_tokens"),
         array_join(slice(col("words"), col("col") + 1, lit(win)), " ").as("chunk_text"))
 
+  /** q107 — RAG chunking: split each document into overlapping word windows
+    * (40 tokens, stride 30) — the retrieval-corpus prep every embedding
+    * pipeline runs before vectorizing. Entirely map-side: the start offsets
+    * come from `sequence`, the chunk from `slice`, all inside one codegen
+    * stage; output size is rows × ceil(len/stride), no shuffle at all.
+    */
   private val q107: Q = (s, dir) =>
     chunk(Tables.spread(Tables.documents(s, dir)), win = 40, stride = 30)
       .orderBy("doc_id", "chunk_idx")
@@ -143,18 +143,6 @@ object CorpusPrep {
       |WHERE cb.cb >= 5
       |ORDER BY pmi DESC, w1, w2""".stripMargin
 
-  /** q109 — exact-substring contamination pairs (the 13-gram exact dedup of
-    * Lee et al.'s "Deduplicating Training Data Makes Language Models
-    * Better"): document pairs sharing at least one 13-token run, with the
-    * shared-gram count. Shape at scale: explode to distinct (doc, gram),
-    * drop grams with document frequency outside [2, 50] — df=1 grams can't
-    * pair, and the cap bounds every posting list so the within-gram
-    * self-join never goes quadratic on boilerplate — then equi-join on the
-    * gram and count per pair. No all-pairs comparison anywhere.
-    */
-  /** Substring-pair kernel: distinct (doc, k-gram) postings, df-capped at
-    * `maxDf`, self-joined on the gram.
-    */
   /** Rolling-polynomial k-gram hash over a per-word hash array, UNROLLED
     * so it stays inside whole-stage codegen (no higher-order-function
     * lambdas — the r5 bench lesson): acc = (acc·31 + wh[i+j]) mod 2^50
@@ -203,6 +191,9 @@ object CorpusPrep {
       .agg(count(lit(1)).as("shared_grams"))
   }
 
+  /** Substring-pair kernel: distinct (doc, k-gram) postings, df-capped at
+    * `maxDf`, self-joined on the gram.
+    */
   private[ops] def substringPairs(docs: DataFrame, k: Int, maxDf: Int): DataFrame =
     // The postings relation feeds the df aggregate AND both sides of the
     // pair join — persist it once (drained by Bench/Verify after the
@@ -219,6 +210,15 @@ object CorpusPrep {
       .repartition(col("gram"))
       .distinct()), maxDf)
 
+  /** q109 — exact-substring contamination pairs (the 13-gram exact dedup of
+    * Lee et al.'s "Deduplicating Training Data Makes Language Models
+    * Better"): document pairs sharing at least one 13-token run, with the
+    * shared-gram count. Shape at scale: explode to distinct (doc, gram),
+    * drop grams with document frequency outside [2, 50] — df=1 grams can't
+    * pair, and the cap bounds every posting list so the within-gram
+    * self-join never goes quadratic on boilerplate — then equi-join on the
+    * gram and count per pair. No all-pairs comparison anywhere.
+    */
   private val q109: Q = (s, dir) =>
     substringPairsOver(
       graft.util.QueryCaches.tracked(GramPostings.postings13(s, dir)),
@@ -248,16 +248,6 @@ object CorpusPrep {
       |FROM gk a JOIN gk b ON a.gram = b.gram AND a.doc_id < b.doc_id
       |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin
 
-  /** q110 — tokenizer-vocabulary build: per-token document frequency,
-    * pruned to `min_df ≤ df ≤ 80% of docs` (the scikit/`min_df`/`max_df`
-    * convention), with contiguous ids assigned by (df desc, token). The df
-    * aggregation is one map-side-combinable shuffle on the token; id
-    * assignment is a GLOBAL rank over the pruned vocabulary, computed
-    * scale-safely by [[GlobalRank]] (range-partition on (df desc, token) +
-    * per-range local ranks + broadcast cumulative offsets) — min_df=5 at
-    * corpus scale still leaves an enormous token tail, so no
-    * single-partition ranking window may appear in the plan.
-    */
   /** Shared df-pruned vocabulary relation (token, df) — q110 ranks it
     * into contiguous ids, q142 audits its corpus coverage. One df
     * aggregation (map-side combinable on the token) + the 1-row corpus
@@ -273,6 +263,16 @@ object CorpusPrep {
       .select(col("token"), col("df"))
   }
 
+  /** q110 — tokenizer-vocabulary build: per-token document frequency,
+    * pruned to `min_df ≤ df ≤ 80% of docs` (the scikit/`min_df`/`max_df`
+    * convention), with contiguous ids assigned by (df desc, token). The df
+    * aggregation is one map-side-combinable shuffle on the token; id
+    * assignment is a GLOBAL rank over the pruned vocabulary, computed
+    * scale-safely by [[GlobalRank]] (range-partition on (df desc, token) +
+    * per-range local ranks + broadcast cumulative offsets) — min_df=5 at
+    * corpus scale still leaves an enormous token tail, so no
+    * single-partition ranking window may appear in the plan.
+    */
   private val q110: Q = (s, dir) =>
     GlobalRank.rowNumber(prunedVocab(s, dir), "token_id",
         Seq(col("df").desc, col("token")))
@@ -540,37 +540,13 @@ object CorpusPrep {
       |WHERE shared_grams * 2 >= least(ta.n, tb.n)
       |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** q156 — holdout decontamination audit: for every val/test document
-    * under q154's stable digest-mod split, the fraction of its distinct
-    * 13-grams that also occur in ANY train document (Lee et al. 2022 /
-    * GPT-3 appendix-C decontamination, run split-aware). A holdout doc
-    * with high leakage inflates eval scores without measuring
-    * generalization — this is the audit a corpus ships BEFORE its
-    * benchmark numbers mean anything. Composes q154's split discipline
-    * with q109's gram kernel; leakage is directional (train → holdout),
-    * so unlike q109/q150 no pair relation ever materializes.
-    *
-    * Scale shape: the (doc, gram) postings persist partitioned on the
-    * gram ([[hashedGrams]] + the q109 cache discipline); the split
-    * bucket is derived map-side from doc_id INSIDE the cached relation
-    * (one md5 per posting at build, no doc-table join-back). The train
-    * side reduces to a distinct gram set and the holdout side is ~2% of
-    * postings by construction; both cluster on the gram, so the
-    * membership probe is one exchange-reusing equi-join, never a
-    * pair join — cost linear in corpus size. Per-doc leak rate is one
-    * IEEE divide of two exact BIGINTs (q149's discipline).
-    */
-  /** Per-holdout-doc leak counts (doc_id, split, n_grams, n_leaked),
-    * unsorted — the shared core of q156 (per-doc rates) and q164 (the
-    * by-source rollup).
-    */
-  /** Distinct (doc_id, gram, split-bucket) postings, gram-partitioned and
-    * persisted — the one cache q156/q164/q165 all read.
-    */
   private def withSplitBucket(g: DataFrame): DataFrame =
     g.withColumn("bucket", expr(
       "CAST(conv(substring(md5(cast(doc_id AS string)), 1, 4), 16, 10) AS INT) % 100"))
 
+  /** Distinct (doc_id, gram, split-bucket) postings, gram-partitioned and
+    * persisted — the one cache q156/q164/q165 all read.
+    */
   private[graft] def splitGrams(docs: DataFrame): DataFrame =
     graft.util.QueryCaches.tracked(withSplitBucket(
       hashedGrams(docs, k = 13)
@@ -585,7 +561,10 @@ object CorpusPrep {
     graft.util.QueryCaches.tracked(
       withSplitBucket(GramPostings.postings13(s, dir)))
 
-  /** Per-holdout-doc leak counts over a prepared [[splitGrams]] relation. */
+  /** Per-holdout-doc leak counts (doc_id, split, n_grams, n_leaked) over
+    * a prepared [[splitGrams]] relation, unsorted — the shared core of
+    * q156 (per-doc rates) and q164 (the by-source rollup).
+    */
   private def leakCounts(g: DataFrame): DataFrame = {
     // distinct grams seen by ANY train doc; the marker column makes the
     // left join's hit test null-safe on both engines
@@ -609,6 +588,26 @@ object CorpusPrep {
   private[graft] def splitLeakage(docs: DataFrame): DataFrame =
     splitLeakageOver(splitGrams(docs))
 
+  /** q156 — holdout decontamination audit: for every val/test document
+    * under q154's stable digest-mod split, the fraction of its distinct
+    * 13-grams that also occur in ANY train document (Lee et al. 2022 /
+    * GPT-3 appendix-C decontamination, run split-aware). A holdout doc
+    * with high leakage inflates eval scores without measuring
+    * generalization — this is the audit a corpus ships BEFORE its
+    * benchmark numbers mean anything. Composes q154's split discipline
+    * with q109's gram kernel; leakage is directional (train → holdout),
+    * so unlike q109/q150 no pair relation ever materializes.
+    *
+    * Scale shape: the (doc, gram) postings persist partitioned on the
+    * gram ([[hashedGrams]] + the q109 cache discipline); the split
+    * bucket is derived map-side from doc_id INSIDE the cached relation
+    * (one md5 per posting at build, no doc-table join-back). The train
+    * side reduces to a distinct gram set and the holdout side is ~2% of
+    * postings by construction; both cluster on the gram, so the
+    * membership probe is one exchange-reusing equi-join, never a
+    * pair join — cost linear in corpus size. Per-doc leak rate is one
+    * IEEE divide of two exact BIGINTs (q149's discipline).
+    */
   private val q156: Q = (s, dir) =>
     splitLeakageOver(splitGramsFor(s, dir))
 

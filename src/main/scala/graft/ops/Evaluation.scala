@@ -23,28 +23,6 @@ object Evaluation {
 
   private val vd = "CAST(embedding AS array<double>)"
 
-  /** q284 — exact tie-aware AUC (Mann–Whitney) of a centroid-similarity
-    * score predicting class membership, computed entirely from integer
-    * rank algebra.
-    *
-    * Score: dot(vq, cv) where vq is the embedding quantized once to
-    * BIGINT 2²⁰ths (the q277/q278 discipline) and cv the class-0
-    * centroid mean re-quantized to the same grid — an exact BIGINT fold
-    * in any aggregation order, so both engines rank identically.
-    * (The +2²¹·n0 shift before the integer division keeps the numerator
-    * positive: Spark's `div` truncates toward zero while DuckDB's `//`
-    * floors, and the two only agree on non-negative operands.)
-    *
-    * AUC: with midrank2 = 2·(exclusive prefix count) + tie-size + 1
-    * (twice the Mann–Whitney midrank, kept integral), the statistic is
-    *   AUC = (Σ_pos midrank2 − n_pos·(n_pos+1)) / (2·n_pos·n_neg)
-    * — ties contribute the correct ½ credit with zero floats until the
-    * single final division. The prefix count runs over the DISTINCT-score
-    * relation through [[GlobalRank.prefixSum]] (no global-sort window).
-    * BIGINT bounds: sum_midrank2 ≤ 2n² — exact to n ≈ 2·10⁹ scored rows;
-    * past that, cast the two final sums to DECIMAL(38,0) (DuckDB's
-    * HUGEINT sums already are 128-bit).
-    */
   /** (label, score) relation shared by the threshold-free ranking and
     * calibration audits (q284 AUC, q289 ECE, q291 AP): every row scored
     * by the exact-integer dot product against the class-0 centroid.
@@ -80,6 +58,28 @@ object Evaluation {
             .as("score"))
     }
 
+  /** q284 — exact tie-aware AUC (Mann–Whitney) of a centroid-similarity
+    * score predicting class membership, computed entirely from integer
+    * rank algebra.
+    *
+    * Score: dot(vq, cv) where vq is the embedding quantized once to
+    * BIGINT 2²⁰ths (the q277/q278 discipline) and cv the class-0
+    * centroid mean re-quantized to the same grid — an exact BIGINT fold
+    * in any aggregation order, so both engines rank identically.
+    * (The +2²¹·n0 shift before the integer division keeps the numerator
+    * positive: Spark's `div` truncates toward zero while DuckDB's `//`
+    * floors, and the two only agree on non-negative operands.)
+    *
+    * AUC: with midrank2 = 2·(exclusive prefix count) + tie-size + 1
+    * (twice the Mann–Whitney midrank, kept integral), the statistic is
+    *   AUC = (Σ_pos midrank2 − n_pos·(n_pos+1)) / (2·n_pos·n_neg)
+    * — ties contribute the correct ½ credit with zero floats until the
+    * single final division. The prefix count runs over the DISTINCT-score
+    * relation through [[GlobalRank.prefixSum]] (no global-sort window).
+    * BIGINT bounds: sum_midrank2 ≤ 2n² — exact to n ≈ 2·10⁹ scored rows;
+    * past that, cast the two final sums to DECIMAL(38,0) (DuckDB's
+    * HUGEINT sums already are 128-bit).
+    */
   private val q284: Q = (s, dir) => {
     val scored = centroidScores(s, dir)
     val g = scored.groupBy("score").agg(

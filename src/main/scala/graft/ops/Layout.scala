@@ -146,6 +146,18 @@ object Layout {
       |    CAST(sum(s1) AS BIGINT) FROM cz)
       |ORDER BY ordering""".stripMargin
 
+  /** The (doc → shard) manifest shared by q148 (sorted emission) and
+    * q170 (the balance audit). */
+  private def shardPlan(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.spread(Tables.documents(s, dir))
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    GlobalRank.prefixSum(docs, "chars_before", col("n_chars"),
+        Seq(col("lang"), col("doc_id")))
+      .withColumn("shard_id", expr("CAST(chars_before div 50000 AS BIGINT)"))
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+        col("chars_before"), col("shard_id"))
+  }
+
   /** q148 — size-bounded shard packing: lay the corpus out in (lang,
     * doc_id) order and pack documents into ~50k-character shards by
     * cumulative mass — `shard_id = ⌊chars_before / 50000⌋`. This is the
@@ -162,18 +174,6 @@ object Layout {
     * per-range local running sums under a bounded-partition window,
     * broadcast per-range cumulative offsets). All-integer end to end.
     */
-  /** The (doc → shard) manifest shared by q148 (sorted emission) and
-    * q170 (the balance audit). */
-  private def shardPlan(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.spread(Tables.documents(s, dir))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    GlobalRank.prefixSum(docs, "chars_before", col("n_chars"),
-        Seq(col("lang"), col("doc_id")))
-      .withColumn("shard_id", expr("CAST(chars_before div 50000 AS BIGINT)"))
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        col("chars_before"), col("shard_id"))
-  }
-
   private val q148: Q = (s, dir) =>
     shardPlan(s, dir).orderBy("lang", "doc_id")
 

@@ -185,23 +185,6 @@ object Retrieval {
        |WHERE rank <= 10
        |ORDER BY query_id, rank""".stripMargin
 
-  /** q276 — maximal marginal relevance diversification (Carbonell &
-    * Goldstein, SIGIR'98): greedily re-rank each query's cosine top-20
-    * into 5 picks maximizing `λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s)` with
-    * λ=0.7 — the de-duplicating re-rank that keeps a near-identical
-    * second copy of the best hit from wasting a result slot (and, in a
-    * training pipeline, keeps retrieved context sets diverse). Greedy MMR
-    * is inherently sequential in k: the candidates and their
-    * 380-pair-per-query sim relation are built data-parallel, then the 5
-    * rounds (penalty = max sim to the selected set, argmax per query) run
-    * on the driver ([[mmrGreedy]]) over one collect of each relation, at
-    * most [[MmrMaxRows]] rows; every query advances in the same round.
-    * Determinism: relevance and sims are quantized to BIGINT millionths
-    * BEFORE the λ-combination (`7·rel_q − 3·sim_q`, integers end-to-end —
-    * the q112 discipline), ties broken by smallest doc_id; the oracle's
-    * rounds are `AS MATERIALIZED` (each round's selected set is referenced
-    * twice).
-    */
   /** Candidate-pair cosine sims (query_id, ca, cb, sim_q) for a
     * per-query candidate relation — MMR's penalty input, bounded at
     * |cand/query|² directed pairs per query. Shared by q276 and q295.
@@ -284,6 +267,23 @@ object Retrieval {
     picks.toSeq.toDF("query_id", "doc_id", "score_q", "r")
   }
 
+  /** q276 — maximal marginal relevance diversification (Carbonell &
+    * Goldstein, SIGIR'98): greedily re-rank each query's cosine top-20
+    * into 5 picks maximizing `λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s)` with
+    * λ=0.7 — the de-duplicating re-rank that keeps a near-identical
+    * second copy of the best hit from wasting a result slot (and, in a
+    * training pipeline, keeps retrieved context sets diverse). Greedy MMR
+    * is inherently sequential in k: the candidates and their
+    * 380-pair-per-query sim relation are built data-parallel, then the 5
+    * rounds (penalty = max sim to the selected set, argmax per query) run
+    * on the driver ([[mmrGreedy]]) over one collect of each relation, at
+    * most [[MmrMaxRows]] rows; every query advances in the same round.
+    * Determinism: relevance and sims are quantized to BIGINT millionths
+    * BEFORE the λ-combination (`7·rel_q − 3·sim_q`, integers end-to-end —
+    * the q112 discipline), ties broken by smallest doc_id; the oracle's
+    * rounds are `AS MATERIALIZED` (each round's selected set is referenced
+    * twice).
+    */
   private val q276: Q = (s, dir) => {
     val cand = graft.util.QueryCaches.tracked(
       denseTop(s, dir).select(col("query_id"), col("doc_id"),

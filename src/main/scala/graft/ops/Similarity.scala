@@ -298,19 +298,6 @@ object Similarity {
        |WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin
 
-  /** q53 — IVF (inverted-file) ANN, the coarse-quantizer scale path beyond
-    * q46's hyperplane LSH: assign every vector to its nearest of 8 coarse
-    * cells, probe each query's 2 nearest cells, re-rank candidates exactly.
-    *
-    * Scale shape: the "trained" quantizer (here: the first 8 vectors, a
-    * deterministic stand-in for k-means centroids) is a tiny broadcast
-    * relation — assignment is a broadcast join + map-side argmax
-    * (`max_by` over a (cos, -cell) struct = partial-aggregated, shuffle
-    * carries one row per vector). Probing touches only the candidates in
-    * nprobe/ncells of the corpus; the per-query top-5 is the bounded
-    * [[graft.functions.TopKTagged]] aggregation. No all-pairs scoring
-    * anywhere — the brute-force q45 becomes a probed subset scan.
-    */
   /** Embedding relation (vec_id, v: double[64]) shared by the IVF family. */
   private def embVecs(s: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.embeddings(s, dir)).select(col("vec_id"), expr(vd).as("v"))
@@ -402,6 +389,19 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
+  /** q53 — IVF (inverted-file) ANN, the coarse-quantizer scale path beyond
+    * q46's hyperplane LSH: assign every vector to its nearest of 8 coarse
+    * cells, probe each query's 2 nearest cells, re-rank candidates exactly.
+    *
+    * Scale shape: the "trained" quantizer (here: the first 8 vectors, a
+    * deterministic stand-in for k-means centroids) is a tiny broadcast
+    * relation — assignment is a broadcast join + map-side argmax
+    * (`max_by` over a (cos, -cell) struct = partial-aggregated, shuffle
+    * carries one row per vector). Probing touches only the candidates in
+    * nprobe/ncells of the corpus; the per-query top-5 is the bounded
+    * [[graft.functions.TopKTagged]] aggregation. No all-pairs scoring
+    * anywhere — the brute-force q45 becomes a probed subset scan.
+    */
   private val q53: Q = (s, dir) => {
     val e = embVecs(s, dir)
     ivfTopK(e, seedCentroids(e))
@@ -520,12 +520,6 @@ object Similarity {
        |FROM counts CROSS JOIN tot
        |ORDER BY cell""".stripMargin
 
-  /** q57 — embedding near-duplicates within LSH buckets: q44's semantics
-    * with the label block replaced by the seeded hyperplane bucket — the
-    * concrete 100 TB path q44's doc promises. Pair generation is an
-    * equi-join on the 2^p-way bucket id, so block sizes are bounded by the
-    * hash (add planes to shrink them), never by a data-dependent label.
-    */
   /** Sort-free LSH-bucketed near-dup pairs — q57 adds the oracle's total
     * ORDER BY; q129 consumes the pairs as cluster edges.
     */
@@ -544,24 +538,15 @@ object Similarity {
       .filter(col("cos_sim") >= 0.35)
   }
 
+  /** q57 — embedding near-duplicates within LSH buckets: q44's semantics
+    * with the label block replaced by the seeded hyperplane bucket — the
+    * concrete 100 TB path q44's doc promises. Pair generation is an
+    * equi-join on the 2^p-way bucket id, so block sizes are bounded by the
+    * hash (add planes to shrink them), never by a data-dependent label.
+    */
   private val q57: Q = (s, dir) =>
     bucketNearDupPairs(s, dir).orderBy("vec_a", "vec_b")
 
-  /** q136 — bounded k-NN graph over the whole corpus: every vector's top-3
-    * in-bucket neighbors by cosine — the adjacency structure behind
-    * graph-based semantic dedup (q129 consumes threshold edges of the same
-    * join), diversity sampling, and label propagation. Pair generation is
-    * q57's hash-bounded equi-join on the 2^p-way hyperplane bucket (both
-    * directions here, since each vector ranks its own neighbors; bucket
-    * signatures computed once via the tracked cache). Per-vector top-k is
-    * the bounded [[graft.functions.TopKByScore]] partial+final aggregation
-    * — the shuffle after scoring carries at most k rows per (vector,
-    * map task), never a ranking window over every scored pair. Recall
-    * tunes the documented q46/q57 way: more planes shrink blocks, probing
-    * neighbor buckets raises recall at linear extra cost. Vectors alone in
-    * their bucket have no in-bucket neighbors and are absent by definition
-    * on both engines.
-    */
   /** Shared sort-free kNN kernel: q136 adds the declared ORDER BY; q160
     * (label consistency), q181 (PageRank), and q191 (hubness) consume
     * the edges. Keyed-shared: the in-bucket pair join is the expensive
@@ -593,6 +578,21 @@ object Similarity {
         col("col.score").as("cos_sim"), (col("pos") + 1).cast("int").as("rank"))
   }
 
+  /** q136 — bounded k-NN graph over the whole corpus: every vector's top-3
+    * in-bucket neighbors by cosine — the adjacency structure behind
+    * graph-based semantic dedup (q129 consumes threshold edges of the same
+    * join), diversity sampling, and label propagation. Pair generation is
+    * q57's hash-bounded equi-join on the 2^p-way hyperplane bucket (both
+    * directions here, since each vector ranks its own neighbors; bucket
+    * signatures computed once via the tracked cache). Per-vector top-k is
+    * the bounded [[graft.functions.TopKByScore]] partial+final aggregation
+    * — the shuffle after scoring carries at most k rows per (vector,
+    * map task), never a ranking window over every scored pair. Recall
+    * tunes the documented q46/q57 way: more planes shrink blocks, probing
+    * neighbor buckets raises recall at linear extra cost. Vectors alone in
+    * their bucket have no in-bucket neighbors and are absent by definition
+    * on both engines.
+    */
   private val q136: Q = (s, dir) => knnNeighbors(s, dir).orderBy("vec_id", "rank")
 
   private val q136Sql =
@@ -604,14 +604,6 @@ object Similarity {
        |WHERE rank <= 3
        |ORDER BY vec_id, rank""".stripMargin
 
-  /** q129 — embedding-dedup cluster resolution: the survivor-selection
-    * stage over q57's verified near-dup pairs, the same composition q56
-    * runs on the text side — connected components (min-label propagation
-    * with pointer jumping, [[TextDedup.connectedComponents]]) over the
-    * cos ≥ 0.4 edge set (a tighter bar than q57's 0.35 retrieval threshold); `is_canonical` marks the vector each cluster
-    * keeps. Same scale shape as q56: edges persisted once, two narrow
-    * equi-joins + a groupBy-min per O(log d) round.
-    */
   /** Resolved embedding duplicate clusters (doc_id, label) — the
     * semantic twin of [[TextDedup.lexicalClusters]], shared through the
     * same keyed registry so q129 and q167 pay the CC pipeline once per
@@ -623,6 +615,14 @@ object Similarity {
         .filter(col("cos_sim") >= 0.4).select("vec_a", "vec_b"))
     }
 
+  /** q129 — embedding-dedup cluster resolution: the survivor-selection
+    * stage over q57's verified near-dup pairs, the same composition q56
+    * runs on the text side — connected components (min-label propagation
+    * with pointer jumping, [[TextDedup.connectedComponents]]) over the
+    * cos ≥ 0.4 edge set (a tighter bar than q57's 0.35 retrieval threshold); `is_canonical` marks the vector each cluster
+    * keeps. Same scale shape as q56: edges persisted once, two narrow
+    * equi-joins + a groupBy-min per O(log d) round.
+    */
   private val q129: Q = (s, dir) =>
     embedClusters(s, dir)
       .select(col("doc_id").as("vec_id"), col("label").as("cluster_id"),
@@ -651,27 +651,18 @@ object Similarity {
     * Scale shape: candidates only from the bucket equi-join (never
     * all-pairs); the shingle-set relation persists partitioned on doc_id
     * so both pair-join sides read one exchange; the Jaccard verify runs
-    * on candidates only. If BOTH docs have no shingles (< 3 words) the
-    * ratio is undefined and the pair drops on both engines (Spark NaN
-    * and DuckDB NULL both fail `< 0.2`) — a one-sided empty set scores
-    * 0 and is kept, identically.
+    * on candidates only ([[TextDedup.jaccardScored]], which keeps
+    * `cos_sim`). If BOTH docs have no shingles (< 3 words) the ratio is
+    * undefined: both engines score it NULL, which fails `< 0.2`, so the
+    * pair drops. A one-sided empty set scores 0 and is kept, identically.
     */
-  private val q155: Q = (s, dir) => {
-    val pairs = bucketNearDupPairs(s, dir)
-    val sets = Tables.documents(s, dir).repartition(col("doc_id"))
-      .withColumn("words", split(col("text"), " "))
-      .select(col("doc_id"), array_distinct(expr(TextDedup.shinglesExpr(3))).as("sh"))
-      .transform(graft.util.QueryCaches.tracked)
-    val inter = size(array_intersect(col("sha"), col("shb")))
-    pairs
-      .join(sets.select(col("doc_id").as("vec_a"), col("sh").as("sha")), "vec_a")
-      .join(sets.select(col("doc_id").as("vec_b"), col("sh").as("shb")), "vec_b")
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"), col("cos_sim"),
-        round(inter.cast("double") /
-          (size(col("sha")) + size(col("shb")) - inter), 4).as("jaccard"))
+  private val q155: Q = (s, dir) =>
+    TextDedup.jaccardScored(
+      bucketNearDupPairs(s, dir)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"), col("cos_sim")),
+      TextDedup.shingleSets(s, dir))
       .filter(col("jaccard") < 0.2)
       .orderBy("doc_a", "doc_b")
-  }
 
   private val q155Sql =
     s"""WITH $bucketPairCtes,
@@ -721,18 +712,6 @@ object Similarity {
       |FROM embeddings, unnest(generate_series(1, 64)) AS t(i)
       |GROUP BY label, i ORDER BY label, dim""".stripMargin
 
-  /** q115 — centroid-separation matrix: pairwise Euclidean distance
-    * between per-label centroids, the cluster-quality audit run before
-    * trusting labels for blocking (q44) or IVF routing (q53). Everything
-    * reduces BEFORE any pairing: vectors → per-(label, dim) integer sums
-    * (one shuffle over (label, dim) keys, partial map-side combine), so
-    * the pairwise stage sees `labels × dims` rows, never vectors — at
-    * 100 TB the quadratic term is over the handful of labels only.
-    * Determinism: per-element values are quantized to ints before the sum;
-    * means are exact-int ratios; each dim's squared difference is
-    * re-quantized before the cross-dim sum — no float-order sensitivity
-    * anywhere (SURVEY §5).
-    */
   /** Per-(label, dim) exact integer sums and the derived centroid mean —
     * q115's reduction discipline, shared with q166's cohesion audit.
     */
@@ -826,6 +805,18 @@ object Similarity {
       |       JOIN cnt cb ON cb.label = s.label AND cb.half = 1
       |ORDER BY s.label""".stripMargin
 
+  /** q115 — centroid-separation matrix: pairwise Euclidean distance
+    * between per-label centroids, the cluster-quality audit run before
+    * trusting labels for blocking (q44) or IVF routing (q53). Everything
+    * reduces BEFORE any pairing: vectors → per-(label, dim) integer sums
+    * (one shuffle over (label, dim) keys, partial map-side combine), so
+    * the pairwise stage sees `labels × dims` rows, never vectors — at
+    * 100 TB the quadratic term is over the handful of labels only.
+    * Determinism: per-element values are quantized to ints before the sum;
+    * means are exact-int ratios; each dim's squared difference is
+    * re-quantized before the cross-dim sum — no float-order sensitivity
+    * anywhere (SURVEY §5).
+    */
   private val q115: Q = (s, dir) => {
     val cent = labelDimMeans(s, dir)
     val a = cent.select(col("label").as("label_a"), col("dim"), col("mean").as("ma"))
@@ -979,14 +970,6 @@ object Similarity {
       |FROM m JOIN sd ON m.cell = sd.cell AND m.dim = sd.dim
       |GROUP BY m.cell ORDER BY cell""".stripMargin
 
-  /** q125 — ANN recall audit: per query, how many of the EXACT top-5
-    * neighbors (q45's brute force, the ground truth) the IVF index (q53)
-    * actually returned — recall@5, the accuracy number that decides
-    * nprobe/ncells before an index ships. Pure composition: both result
-    * relations are tiny (queries × 5 rows), the join is on (query_id,
-    * vec_id), and the expensive inputs are the already-bounded pipelines
-    * themselves. Recall is an exact small-integer ratio.
-    */
   /** Recall@5 of an ANN result against the exact brute-force top-5. */
   private def recallAudit(s: SparkSession, dir: String, ann: DataFrame): DataFrame = {
     val exact = q45(s, dir).filter(col("rank") <= 5)
@@ -1001,6 +984,14 @@ object Similarity {
       .orderBy("query_id")
   }
 
+  /** q125 — ANN recall audit: per query, how many of the EXACT top-5
+    * neighbors (q45's brute force, the ground truth) the IVF index (q53)
+    * actually returned — recall@5, the accuracy number that decides
+    * nprobe/ncells before an index ships. Pure composition: both result
+    * relations are tiny (queries × 5 rows), the join is on (query_id,
+    * vec_id), and the expensive inputs are the already-bounded pipelines
+    * themselves. Recall is an exact small-integer ratio.
+    */
   private val q125: Q = (s, dir) => recallAudit(s, dir, q53(s, dir))
 
   /** q127 — recall audit of the TRAINED index (q126): the number that
@@ -1009,10 +1000,6 @@ object Similarity {
     */
   private val q127: Q = (s, dir) => recallAudit(s, dir, q126(s, dir))
 
-  /** Recall-audit SQL over a composed [[ivfCteBlock]] — the exact ground
-    * truth (ex_-prefixed CTEs, no name collision with the IVF chain) left-
-    * joined to the index's ranked `ann0`.
-    */
   /** Exact brute-force cosine top-5 ground truth (ex_-prefixed CTEs, no
     * name collision with any index chain) — shared by [[recallSql]] and
     * q175Sql. */
@@ -1030,6 +1017,10 @@ object Similarity {
       |    ORDER BY cos_sim DESC, vec_id) AS rank FROM ex_scored) t
       |  WHERE rank <= 5)""".stripMargin
 
+  /** Recall-audit SQL over a composed [[ivfCteBlock]] — the exact ground
+    * truth (ex_-prefixed CTEs, no name collision with the IVF chain) left-
+    * joined to the index's ranked `ann0`.
+    */
   private def recallSql(centDefs: String): String = {
     s"""WITH $exactTop5Cte,
        |${ivfCteBlock(centDefs)},
@@ -2390,27 +2381,6 @@ object Similarity {
        |FROM f LEFT JOIN t ON t.query_id = f.query_id AND t.vec_id = f.vec_id
        |GROUP BY 1 ORDER BY f.query_id""".stripMargin
 
-  /** q158 — SEMANTIC holdout leakage: the embedding-side twin of q156's
-    * lexical decontamination audit. Vectors split 98/1/1 train/val/test
-    * by the q154 digest-mod discipline (stable: assignment depends only
-    * on vec_id, so the holdout stays clean across re-ingests); for every
-    * val/test vector, does any TRAIN vector sit within cosine ≥ 0.35 in
-    * its hyperplane bucket? q156's 13-gram audit cannot see paraphrased
-    * contamination — an eval item rewritten in different words; this is
-    * the audit that catches it (and the split-aware application of the
-    * q155 paraphrase lesson).
-    *
-    * Scale shape: directional holdout × train (q145's new-vs-old
-    * discipline — candidate volume scales with the ~2% holdout side,
-    * never corpus²); candidates come only from q57's hash-bounded
-    * hyperplane-bucket equi-join (add planes to shrink blocks); bucket
-    * signatures and split buckets are computed once in a shared tracked
-    * cache. The LEFT join keeps zero-candidate holdout vectors visible
-    * (max cosine coalesced to −2, below any true cosine); the in-join
-    * cosine is guarded so a no-match NULL row can never fold into a
-    * score on either engine (Spark NaN ≠ DuckDB NULL was the q44
-    * zero-norm lesson).
-    */
   /** q158 kernel over any (vec_id, embedding) relation — extracted so the
     * spec can plant a verbatim train→holdout copy (identical vectors have
     * identical hyperplane signs, so the collision is guaranteed) and a
@@ -2440,6 +2410,27 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** q158 — SEMANTIC holdout leakage: the embedding-side twin of q156's
+    * lexical decontamination audit. Vectors split 98/1/1 train/val/test
+    * by the q154 digest-mod discipline (stable: assignment depends only
+    * on vec_id, so the holdout stays clean across re-ingests); for every
+    * val/test vector, does any TRAIN vector sit within cosine ≥ 0.35 in
+    * its hyperplane bucket? q156's 13-gram audit cannot see paraphrased
+    * contamination — an eval item rewritten in different words; this is
+    * the audit that catches it (and the split-aware application of the
+    * q155 paraphrase lesson).
+    *
+    * Scale shape: directional holdout × train (q145's new-vs-old
+    * discipline — candidate volume scales with the ~2% holdout side,
+    * never corpus²); candidates come only from q57's hash-bounded
+    * hyperplane-bucket equi-join (add planes to shrink blocks); bucket
+    * signatures and split buckets are computed once in a shared tracked
+    * cache. The LEFT join keeps zero-candidate holdout vectors visible
+    * (max cosine coalesced to −2, below any true cosine); the in-join
+    * cosine is guarded so a no-match NULL row can never fold into a
+    * score on either engine (Spark NaN ≠ DuckDB NULL was the q44
+    * zero-norm lesson).
+    */
   private val q158: Q = (s, dir) =>
     semanticLeakage(Tables.spread(Tables.embeddings(s, dir)), planesFor(s, dir))
 
@@ -2883,24 +2874,6 @@ object Similarity {
         .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
     }
 
-  /** q267 — label-propagation communities over the kNN graph: three
-    * SYNCHRONOUS rounds of "adopt the most frequent neighbor label,
-    * ties to the smallest" starting from self-labels — the community-
-    * detection complement of [[TextDedup.connectedComponents]] (CC
-    * answers "connected at all?", LPA answers "densely knit with
-    * whom?"; near-dup components merge through single bridge edges,
-    * communities do not). Synchronous update + the total (count desc,
-    * label asc) tie-break makes every round a DETERMINISTIC function
-    * of the previous one, so both engines converge identically —
-    * asynchronous LPA's order-dependence is exactly what a
-    * distributed, cross-engine-verified implementation cannot ship.
-    * Per round: one edge⋈label equi-join, a (node, label) count, and
-    * a max_by((c, −label)) argmax — never a ranking window — with
-    * [[graft.util.Lineage]] truncation (the q233/q237 discipline; the
-    * oracle's rounds are AS MATERIALIZED for the same reason). Output:
-    * community sizes after round 3. Third consumer of the keyed-shared
-    * undirected edge relation.
-    */
   /** LPA label relation (v, lbl) after three synchronous rounds —
     * keyed-shared so q267 (community sizes) and q268 (modularity) pay
     * the propagation once per composed session.
@@ -2924,6 +2897,24 @@ object Similarity {
       labels
     }
 
+  /** q267 — label-propagation communities over the kNN graph: three
+    * SYNCHRONOUS rounds of "adopt the most frequent neighbor label,
+    * ties to the smallest" starting from self-labels — the community-
+    * detection complement of [[TextDedup.connectedComponents]] (CC
+    * answers "connected at all?", LPA answers "densely knit with
+    * whom?"; near-dup components merge through single bridge edges,
+    * communities do not). Synchronous update + the total (count desc,
+    * label asc) tie-break makes every round a DETERMINISTIC function
+    * of the previous one, so both engines converge identically —
+    * asynchronous LPA's order-dependence is exactly what a
+    * distributed, cross-engine-verified implementation cannot ship.
+    * Per round: one edge⋈label equi-join, a (node, label) count, and
+    * a max_by((c, −label)) argmax — never a ranking window — with
+    * [[graft.util.Lineage]] truncation (the q233/q237 discipline; the
+    * oracle's rounds are AS MATERIALIZED for the same reason). Output:
+    * community sizes after round 3. Third consumer of the keyed-shared
+    * undirected edge relation.
+    */
   private val q267: Q = (s, dir) =>
     lpaLabels(s, dir).groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"))
@@ -3433,6 +3424,23 @@ object Similarity {
        |  CAST(count(*) AS INTEGER) AS picked_by
        |FROM picked GROUP BY 1, 2, 3 ORDER BY a, b""".stripMargin
 
+  /** Spark-side Borůvka round cap — [[boruvkaCtesAfterUnd]]'s default
+    * unroll count is THIS value, so the two engines' caps cannot drift
+    * (round-12 ADVICE item 1).
+    */
+  private[ops] val BoruvkaRounds = 16
+
+  /** Final select shared by q308Sql/q312Sql over [[boruvkaCtesAfterUnd]]'s
+    * `msf` + `resid` CTEs: the MSF edges, plus the loud-truncation
+    * sentinel row when crossing edges remain after the unrolled rounds.
+    */
+  private val boruvkaMsfSelect: String =
+    """SELECT a, b, dist_q FROM msf
+      |UNION ALL
+      |SELECT CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b,
+      |  n AS dist_q FROM resid WHERE n > 0
+      |ORDER BY a, b""".stripMargin
+
   /** q308 — Borůvka run to CONVERGENCE: the full minimum spanning
     * forest of the weighted kNN graph (q285 is one round; the MSF is
     * the single-link dendrogram every hierarchical-clustering /
@@ -3453,23 +3461,6 @@ object Similarity {
     * per round is the crossing-edge emptiness probe (bounded metadata,
     * q293's discipline).
     */
-  /** Spark-side Borůvka round cap — [[boruvkaCtesAfterUnd]]'s default
-    * unroll count is THIS value, so the two engines' caps cannot drift
-    * (round-12 ADVICE item 1).
-    */
-  private[ops] val BoruvkaRounds = 16
-
-  /** Final select shared by q308Sql/q312Sql over [[boruvkaCtesAfterUnd]]'s
-    * `msf` + `resid` CTEs: the MSF edges, plus the loud-truncation
-    * sentinel row when crossing edges remain after the unrolled rounds.
-    */
-  private val boruvkaMsfSelect: String =
-    """SELECT a, b, dist_q FROM msf
-      |UNION ALL
-      |SELECT CAST(-1 AS BIGINT) AS a, CAST(-1 AS BIGINT) AS b,
-      |  n AS dist_q FROM resid WHERE n > 0
-      |ORDER BY a, b""".stripMargin
-
   private val q308: Q = (s, dir) => {
     val und = knnNeighbors(s, dir).select(
       least(col("vec_id"), col("neighbor_id")).as("a"),
@@ -3642,17 +3633,6 @@ object Similarity {
        |  WHERE la.c <> lb.c)""".stripMargin
   }
 
-  /** q312 — HDBSCAN's backbone: the minimum spanning forest under
-    * MUTUAL-REACHABILITY distance mrd(a,b) = max(kdist(a), kdist(b),
-    * d(a,b)) (Campello et al., PAKDD'13) over the shared kNN edge set,
-    * with q287's exact kdist (max top-3 distance, floored to one
-    * quantum). The core-distance max smooths density: sparse-region
-    * points can't chain through a single lucky close pair, which is
-    * exactly why HDBSCAN condenses this MSF rather than q308's raw
-    * one. Composition cost over q308 is two narrow equi-joins of the
-    * ≤3-out-degree relation against the |V|-row kdist aggregate; the
-    * Borůvka kernel and its scale story are [[boruvkaMsf]]'s.
-    */
   /** The mutual-reachability edge relation shared by q312 (its MSF) and
     * q321 (the cluster extraction over that MSF): kNN edges reweighted
     * to mrd(a,b) = max(kdist(a), kdist(b), d(a,b)).
@@ -3675,6 +3655,17 @@ object Similarity {
       .distinct()
   }
 
+  /** q312 — HDBSCAN's backbone: the minimum spanning forest under
+    * MUTUAL-REACHABILITY distance mrd(a,b) = max(kdist(a), kdist(b),
+    * d(a,b)) (Campello et al., PAKDD'13) over the shared kNN edge set,
+    * with q287's exact kdist (max top-3 distance, floored to one
+    * quantum). The core-distance max smooths density: sparse-region
+    * points can't chain through a single lucky close pair, which is
+    * exactly why HDBSCAN condenses this MSF rather than q308's raw
+    * one. Composition cost over q308 is two narrow equi-joins of the
+    * ≤3-out-degree relation against the |V|-row kdist aggregate; the
+    * Borůvka kernel and its scale story are [[boruvkaMsf]]'s.
+    */
   private val q312: Q = (s, dir) =>
     boruvkaMsf(mutualReachEdges(s, dir)).orderBy("a", "b")
 

@@ -869,19 +869,6 @@ object Stats {
       |  (hi - lo) / 1024.0 AS max_err_bound
       |FROM est CROSS JOIN ex ORDER BY p""".stripMargin
 
-  /** q223 — Neyman (σ-proportional) stratified sampling allocation: for
-    * a 1000-sample budget estimating the mean event value, each event
-    * type's share is proportional to N_h·σ_h (the variance-optimal
-    * design), floored and topped up by q193's Hamilton largest-remainder
-    * so Σ alloc = budget EXACTLY. The σ_h come from exact quantized
-    * BIGINT moments ([[graft.util.MomentGuard]] per-row envelope +
-    * aggregate certificate); the weight w = N·σ collapses to a BIGINT
-    * through ONE shared IEEE floor expression; base/remainder are exact
-    * integer div/mod (guarded product), and the remainder rank is the
-    * bounded |types|² triangle join — never a window. This is how a
-    * 100 TB profiling job decides how many rows to pull from each
-    * stratum before it pulls any.
-    */
   /** Neyman allocation relation (event_type, n_events, wq, base,
     * rem_rank, alloc) — shared by q223 (the plan) and q235 (its
     * execution). */
@@ -928,6 +915,19 @@ object Stats {
           .as("alloc"))
   }
 
+  /** q223 — Neyman (σ-proportional) stratified sampling allocation: for
+    * a 1000-sample budget estimating the mean event value, each event
+    * type's share is proportional to N_h·σ_h (the variance-optimal
+    * design), floored and topped up by q193's Hamilton largest-remainder
+    * so Σ alloc = budget EXACTLY. The σ_h come from exact quantized
+    * BIGINT moments ([[graft.util.MomentGuard]] per-row envelope +
+    * aggregate certificate); the weight w = N·σ collapses to a BIGINT
+    * through ONE shared IEEE floor expression; base/remainder are exact
+    * integer div/mod (guarded product), and the remainder rank is the
+    * bounded |types|² triangle join — never a window. This is how a
+    * 100 TB profiling job decides how many rows to pull from each
+    * stratum before it pulls any.
+    */
   private val q223: Q = (s, dir) => neymanAlloc(s, dir).orderBy("event_type")
 
   /** Oracle CTE chain ending in `alloc` — shared by q223Sql/q235Sql. */

@@ -190,13 +190,6 @@ object TextStats {
       |  list_min(list_transform(shingles, x -> md5(x))) AS fp_minshingle
       |FROM sh ORDER BY doc_id""".stripMargin
 
-  /** q54 — composite quality score + keep/drop decision: the "training-set
-    * admission filter" face of q47's raw statistics. Weighted blend of
-    * type-token ratio, stopword-band distance, length saturation, and
-    * punctuation penalty; pure per-row arithmetic (one codegen stage over
-    * the scan — the 100 TB filter-pass shape). Weights are illustrative;
-    * the operator under test is the deterministic scoring dataflow.
-    */
   /** Per-document composite quality score (shared by q54's admission
     * filter and q138's curriculum ordering): one codegen stage over the
     * scan, no shuffle.
@@ -221,6 +214,13 @@ object TextStats {
           lit(0.2) * least(col("n_tokens") / 50.0, lit(1.0)) +
           lit(0.2) * (lit(1.0) - least(col("punct_ratio") * 5, lit(1.0))))
 
+  /** q54 — composite quality score + keep/drop decision: the "training-set
+    * admission filter" face of q47's raw statistics. Weighted blend of
+    * type-token ratio, stopword-band distance, length saturation, and
+    * punctuation penalty; pure per-row arithmetic (one codegen stage over
+    * the scan — the 100 TB filter-pass shape). Weights are illustrative;
+    * the operator under test is the deterministic scoring dataflow.
+    */
   private val q54: Q = (s, dir) =>
     qualityScored(s, dir)
       .select(col("doc_id"), col("quality"),

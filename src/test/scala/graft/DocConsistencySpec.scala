@@ -16,8 +16,10 @@ import scala.jdk.CollectionConverters._
   * `blaze` source as the one builder of FHIR search URLs,
   * `Reconcile` as the one module that decides sync actions,
   * `Lineage` as the one place that cuts lineage, that
-  * `src/main` starts no Structured Streaming query, and that each query's
-  * oracle SQL is declared once, in its `Query`.
+  * `src/main` starts no Structured Streaming query, that each query's
+  * oracle SQL is declared once, in its `Query`, that shingle sets are
+  * intersected only in `TextDedup`'s one verification join, and that
+  * every scaladoc block in `src/main` attaches to a definition.
   */
 class DocConsistencySpec extends AnyFunSuite {
 
@@ -103,6 +105,23 @@ class DocConsistencySpec extends AnyFunSuite {
     // production path starts is code nothing runs
     val streams = sourcesMatching(Seq("src/main"), "", """\b(writeStream|readStream)\b""")
     assert(streams.isEmpty, s"Structured Streaming in src/main: $streams")
+  }
+
+  test("src/main intersects shingle sets only in TextDedup's verification join") {
+    // a second join-back scores Jaccard its own way; the one helper holds
+    // the empty-set guard (two empty sets score NULL, not DIVIDE_BY_ZERO)
+    val pattern = """array_intersect\(col\(""".r
+    val sites = sourcesMatching(Seq("src/main"), "", pattern.regex)
+      .map(p => p -> pattern.findAllIn(read(p)).size)
+    assert(sites.map(_._1).forall(_.endsWith("graft/ops/TextDedup.scala")) &&
+      sites.map(_._2).sum == 1, s"array_intersect(col( sites, want 1 in TextDedup.scala: $sites")
+  }
+
+  test("src/main has no scaladoc block that attaches to nothing") {
+    // a `/** ... */` directly followed by another `/**` documents nothing:
+    // scaladoc keeps only the last block before a definition
+    val orphans = sourcesMatching(Seq("src/main"), "", raw"\*/\s*/\*\*")
+    assert(orphans.isEmpty, s"scaladoc blocks followed directly by another: $orphans")
   }
 
   test("README states the registry's actual query count") {

@@ -82,8 +82,8 @@ class SkewStressSpec extends AnyFunSuite {
     val blocked = TextDedup.jaccardBlocked(spark, SkewFixture.dir)
     val blockPairs = blocked.groupBy("lang", "lb").count()
       .agg(sum(expr("count * (count - 1) / 2"))).head.getDouble(0).toLong
-    val cands = TextDedup.jaccardPrefixCandidates(blocked, t = 0.1).count()
-    val found = TextDedup.jaccardPrefixJoin(blocked, t = 0.1)
+    val cands = TextDedup.prefixCandidates(blocked, Seq("lang", "lb"), 1, 10).count()
+    val found = TextDedup.prefixJoin(blocked, Seq("lang", "lb"), 1, 10)
       .filter(col("doc_b") >= 5000L && col("doc_b") - 5000L === col("doc_a")).count()
     // A planted pair is only in scope when the appended word didn't push
     // the copy across an n_chars/100 block boundary — blocking is part of

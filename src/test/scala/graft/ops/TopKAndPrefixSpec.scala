@@ -110,11 +110,28 @@ class TopKAndPrefixSpec extends AnyFunSuite {
       s"one bucket must not swallow half the corpus: $counts")
   }
 
-  // ---- q43 prefix filtering: lossless vs brute force ----
+  // ---- q43/q299 prefix filtering: lossless vs brute force ----
 
   test("property: prefix-filtered Jaccard join equals brute-force within blocks") {
     val spark2 = spark
     import spark2.implicits._
+    // kernel output vs every pair of one block with a defined J ≥ num/den
+    def check(corpus: Seq[(Long, Seq[String])], blockCols: Seq[String], num: Int, den: Int,
+        mustFind: Seq[(Long, Long)], clue: String): Unit = {
+      val sets = corpus.map { case (id, ws) => (id, "en", id % 2, ws.distinct) }
+        .toDF("doc_id", "lang", "lb", "sh")
+      val got = TextDedup.prefixJoin(sets, blockCols, num, den).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+      val expect = (for {
+        (a, wa) <- corpus; (b, wb) <- corpus
+        if a < b && (blockCols.isEmpty || a % 2 == b % 2)
+        inter = (wa.toSet & wb.toSet).size
+        union = wa.distinct.size + wb.distinct.size - inter
+        if union > 0 && den * inter >= num * union
+      } yield (a, b, wa.distinct.size.toLong, wb.distinct.size.toLong, inter.toLong)).toSet
+      assert(mustFind.toSet.subsetOf(expect.map(p => (p._1, p._2))), s"$clue: fixture lost a pair")
+      assert(got === expect, clue)
+    }
     // small vocab forces overlap; random sets with skewed token frequency
     val word = Gen.frequency(
       (8, Gen.const("the")), (8, Gen.const("of")), // hot tokens → suffix
@@ -122,25 +139,31 @@ class TopKAndPrefixSpec extends AnyFunSuite {
         "fanout", "graft", "hashing", "ivf", "jaccard")))
     val docGen = Gen.choose(2, 12).flatMap(n => Gen.listOfN(n, word))
     val corpusGen = Gen.listOfN(30, docGen)
+    // fixed docs 100-105: J(100,102) = 2/5 and J(101,103) = 4/5 exactly
+    // (same block each), and 104 has an empty set
+    val fixed = Seq(100L -> Seq("x1", "x2", "x3", "x4"), 101L -> Seq("y1", "y2", "y3", "y4", "y5"),
+      102L -> Seq("x1", "x2", "x5"), 103L -> Seq("y1", "y2", "y3", "y4"), 104L -> Nil)
     (0 until 5).foreach { i =>
       val corpus = corpusGen(Gen.Parameters.default, Seed(19L + i)).get
-      val blocked = corpus.zipWithIndex.map { case (ws, id) =>
-        // single block: the worst case for candidate counts
-        (id.toLong, "en", 0L, ws.distinct)
-      }.toDF("doc_id", "lang", "lb", "sh")
-      val t = 0.4
-      val got = TextDedup.jaccardPrefixJoin(blocked, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      // brute force over all pairs
-      val sets = corpus.map(_.distinct.toSet)
-      val expect = (for {
-        a <- sets.indices; b <- sets.indices if a < b
-        inter = (sets(a) & sets(b)).size
-        jac = inter.toDouble / (sets(a).size + sets(b).size - inter)
-        if jac >= t
-      } yield (a.toLong, b.toLong,
-        BigDecimal(jac).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
-      assert(got === expect, s"seed ${19L + i}")
+        .zipWithIndex.map { case (ws, id) => id.toLong -> ws } ++ fixed
+      // q43's shape: blocked, here two blocks (lb = doc_id % 2)
+      check(corpus, Seq("lang", "lb"), 2, 5, Seq(100L -> 102L, 101L -> 103L), s"2/5 seed ${19L + i}")
+      // q299's shape: unblocked 4/5, with one-token edits of every doc so
+      // that pairs near the threshold exist
+      val edited = corpus.map { case (id, ws) => (id + 1000L) -> (ws.drop(1) :+ s"e$id") }
+      check(corpus ++ edited, Nil, 4, 5, Seq(101L -> 103L), s"4/5 seed ${19L + i}")
     }
+  }
+
+  test("a candidate pair of two empty shingle sets scores NULL Jaccard, not an error") {
+    val spark2 = spark
+    import spark2.implicits._
+    // two documents of fewer than 3 words: both shingle sets are empty,
+    // so J = 0/0; DuckDB answers NULL and a plain `/` throws under ANSI
+    val sets = Seq((1L, Seq.empty[String]), (2L, Seq.empty[String]), (3L, Seq("a b c")))
+      .toDF("doc_id", "sh")
+    val cand = Seq((1L, 2L, 0.9), (1L, 3L, 0.5)).toDF("doc_a", "doc_b", "cos_sim")
+    val got = TextDedup.jaccardScored(cand, sets).orderBy("doc_a", "doc_b").collect()
+    assert(got.map(_.toSeq) === Seq(Seq(1L, 2L, 0.9, null), Seq(1L, 3L, 0.5, 0.0)))
   }
 }
