@@ -225,7 +225,7 @@ object TextDedup {
   /** Distinct 3-shingle sets per doc, persisted and partitioned by doc_id
     * so alias-aware partitioning serves every pair-join side from the
     * cache (the heavy shingle arrays shuffle once, at build). Shared by
-    * [[verifiedPairs]], q143's per-config verification and q155.
+    * [[verifiedPairs]], q143's per-config verification, q155 and q299.
     */
   private[ops] def shingleSets(s: SparkSession, dir: String): DataFrame =
     shingleSetsFor(Tables.documents(s, dir).repartition(col("doc_id")))
@@ -1743,23 +1743,17 @@ object TextDedup {
     * candidate, no probabilistic recall (word sets are too coarse on a
     * closed vocabulary — measured 32 191 J≥0.8 unigram-set pairs at
     * sf0.001 vs 27 shingle-set pairs, a quadratic blowup). It is
-    * [[prefixJoin]] with no block and `num/den = 4/5`: a prefix of
-    * n − ⌈4n/5⌉ + 1 shingles, the length bound 5·min(na,nb) ≥ 4·max(na,nb)
-    * and the exact test 5·|a∩b| ≥ 4·(na+nb−|a∩b|). Completeness is pinned
-    * by the spec's brute-force reference at sf0.001.
+    * [[prefixJoin]] over [[shingleSets]] with no block and
+    * `num/den = 4/5`: a prefix of n − ⌈4n/5⌉ + 1 shingles, the length
+    * bound 5·min(na,nb) ≥ 4·max(na,nb) and the exact test
+    * 5·|a∩b| ≥ 4·(na+nb−|a∩b|). Completeness is pinned by the spec's
+    * brute-force reference at sf0.001.
     */
-  private val q299: Q = (s, dir) => {
-    // spread BEFORE shingling (r13): the single-file scan is one task, so
-    // an unspread pipeline shingles, explodes, and — worst — runs every
-    // verification serially; the cached relation inherits the scan's
-    // partitioning, so the fix must land upstream of the cache
-    val sets = graft.util.QueryCaches.tracked(
-      shingleSetsFor(Tables.spread(Tables.documents(s, dir))))
-    prefixJoin(sets, Nil, 4, 5)
+  private val q299: Q = (s, dir) =>
+    prefixJoin(shingleSets(s, dir), Nil, 4, 5)
       .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("inter"),
         jaccard(6).as("jac"))
       .orderBy("doc_a", "doc_b")
-  }
 
   private val q299Sql =
     s"""WITH ${minhashCtes},
